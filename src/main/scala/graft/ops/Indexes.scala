@@ -271,14 +271,6 @@ object Indexes {
     s"lsh_b${bBits}_L${lTables}_s${seed}_$layout"
   }
 
-  /** Deterministic index location for a corpus dir + content fingerprint +
-    * LSH parameters. */
-  def lshIndexPath(sfDir: String, fp: String, bBits: Int, lTables: Int,
-                   seed: Long, partitionByBucket: Boolean = true): String = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"$indexRoot/$tag/${lshFamily(bBits, lTables, seed, partitionByBucket)}$fp"
-  }
-
   /** Grace period before a superseded index generation is reclaimed.
     * Mark-then-sweep with an age gate instead of delete-on-supersede: a
     * generation another live session is mid-query on stays readable until
@@ -298,13 +290,13 @@ object Indexes {
     new scala.util.DynamicVariable[Option[Long]](None)
   private[graft] def withGcGrace[T](ms: Long)(body: => T): T =
     gcGraceOverride.withValue(Some(ms))(body)
-  private def gcGraceMs: Long = gcGraceOverride.value.getOrElse(gcGraceMsDefault)
 
   /** The effective (possibly test-overridden) grace window — shared with
     * the other mark-then-sweep reclaimers in the engine (the durable-e2e
     * run-dir GC), so one knob and one [[withGcGrace]] hook govern every
     * sweep. */
-  private[graft] def effectiveGcGraceMs: Long = gcGraceMs
+  private[graft] def effectiveGcGraceMs: Long =
+    gcGraceOverride.value.getOrElse(gcGraceMsDefault)
 
   /** Run-dir GC gets its OWN, much larger default grace (ADVICE r12: the
     * 15-min index knob made it easy for a sweep to reclaim a concurrent
@@ -319,100 +311,6 @@ object Indexes {
       .getOrElse(math.max(gcGraceMsDefault, 6L * 60L * 60L * 1000L))
   private[graft] def effectiveRunDirGcGraceMs: Long =
     gcGraceOverride.value.getOrElse(runDirGcGraceMsDefault)
-
-  /** Reclaim superseded generations of one index family: siblings of `path`
-    * whose name shares `familyPrefix` but carries a DIFFERENT fingerprint
-    * suffix (including `.tmp-*` leftovers of crashed builds), and whose
-    * mtime is older than [[gcGraceMs]]. Runs once per successful build, so
-    * repeated corpus/model regeneration keeps one generation per family
-    * (plus any inside the grace window) instead of growing the index root
-    * without bound. */
-  private[graft] def gcSiblings(spark: SparkSession, path: String,
-                         familyPrefix: String): Unit = {
-    gcLegacyVersionRoots(spark) // once per JVM: retire superseded vN roots
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val parent = p.getParent
-    if (parent != null && fs.exists(parent)) {
-      val cutoff = System.currentTimeMillis() - gcGraceMs
-      val family = fs.listStatus(parent)
-        .filter(_.getPath.getName.startsWith(familyPrefix))
-      // Pass 0 — the family manifest's CURRENT generation (and the
-      // fingerprint root its lineage names) are LIVE by definition,
-      // whatever their mtime: a compacted dest placed inside the family
-      // dir would otherwise be reclaimed on the dir's own age — the
-      // mtime-vs-supersession bug retireGenerations' scaladoc records
-      // fixing — silently undoing a flip in-flight readers just
-      // resolved (review catch; manifest-managed retirement is
-      // [[retireGenerations]]' supersession-gated job, never this
-      // sweep's).
-      val manifestDir = new org.apache.hadoop.fs.Path(parent,
-        manifestDirName(familyPrefix))
-      val spared: Set[String] =
-        if (!fs.exists(manifestDir)) Set.empty
-        else manifestEntries(fs, manifestDir).lastOption.toSeq.flatMap {
-          case (_, ptr) =>
-            val (gen, lin) = readPointerLines(fs, ptr)
-            gen +: lin.toSeq
-        }.map(g => new org.apache.hadoop.fs.Path(g).toUri.getPath).toSet
-      // Pass 1 — generations and orphaned `.tmp-*` build dirs: aged and
-      // not current → reclaim. Delete-tombstone sidecars are EXCLUDED
-      // here: `<gen>.tombstones` shares the family prefix, so the plain
-      // prefix match would reclaim an aged sidecar while its generation
-      // lives — silently resurrecting every deleted row after the grace
-      // period (round-12 latent-bug catch).
-      family.foreach { st =>
-        val name = st.getPath.getName
-        if (!name.endsWith(".tombstones") && name != p.getName &&
-            st.getModificationTime < cutoff &&
-            !spared.contains(st.getPath.toUri.getPath))
-          fs.delete(st.getPath, true)
-      }
-      // Pass 2 — sidecars: a sidecar lives exactly as long as its OWN
-      // generation directory, so reclamation keys on the orphan check —
-      // AND on the same mtime grace as pass 1 (ADVICE r12: a bare
-      // point-in-time existence probe can race a [[commitIndexDir]]
-      // rename that an object store implements as copy+delete, or a
-      // commit in flight — sweeping a LIVE generation's sidecar during
-      // that visibility window silently resurrects every deleted row; a
-      // young sidecar is never orphaned-for-longer-than-grace, so the
-      // age gate closes the race at the cost of aged garbage living one
-      // extra sweep). Runs after pass 1 so a superseded generation and
-      // its sidecar are reclaimed in the same sweep.
-      family.foreach { st =>
-        val name = st.getPath.getName
-        if (name.endsWith(".tombstones") &&
-            st.getModificationTime < cutoff &&
-            !fs.exists(new org.apache.hadoop.fs.Path(parent,
-              name.stripSuffix(".tombstones"))))
-          fs.delete(st.getPath, true)
-      }
-    }
-  }
-
-  /** Publish a finished index build atomically: the build wrote to a
-    * session-unique `<dest>.tmp-<nonce>` directory; one rename makes it
-    * visible, so a reader can NEVER observe a half-written generation at
-    * `dest`, and two sessions racing on the same missing index are safe —
-    * the loser finds `dest` already present (or its rename refused) and
-    * discards its own tmp. Builds are deterministic (same corpus, same
-    * params ⇒ same bytes), so either winner serves both. */
-  private[graft] def commitIndexDir(spark: SparkSession, tmp: String,
-                                    dest: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dest), spark.sparkContext.hadoopConfiguration)
-    val (tmpP, destP) =
-      (new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(dest))
-    if (fs.exists(destP) || !fs.rename(tmpP, destP)) fs.delete(tmpP, true)
-    // a rename racing a just-committed dest can land tmp INSIDE it (hadoop
-    // local rename moves src into an existing dst directory) — scrub that
-    val nested = new org.apache.hadoop.fs.Path(destP, tmpP.getName)
-    if (fs.exists(nested)) fs.delete(nested, true)
-  }
-
-  private[graft] def tmpBuildPath(dest: String): String =
-    s"$dest.tmp-${java.util.UUID.randomUUID().toString.take(8)}"
 
   /** Build the banded-LSH index: per vector, `lTables` rows of
     * (vec_id, t, key) where `key` is the table's `bBits`-bit sign bucket —
@@ -501,12 +399,10 @@ object Indexes {
   def appendLshIndexIdempotent(emb: DataFrame, batchId: Long, path: String,
                                bBits: Int = 4, lTables: Int = 16,
                                dim: Int = 64, seed: Long = 42L): Unit =
-    lshRows(emb, bBits, lTables, dim, seed)
+    Stores.overwritePartitions(lshRows(emb, bBits, lTables, dim, seed)
       .withColumn("batch_id", lit(batchId))
       .repartition(col("t"), col("key"))
-      .sortWithinPartitions(col("t"), col("key"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(path)
+      .sortWithinPartitions(col("t"), col("key")), path, "batch_id")
 
   /** The canonical two-level bucketed layout from raw (vec_id, t, key)
     * rows ([[PartDirBits]]): dirs keyed by the key's top bits (bounded
@@ -523,7 +419,7 @@ object Indexes {
 
   /** COMPACT an append-grown bucketed LSH index into a fresh canonical
     * generation at `dest` — the missing lifecycle verb between
-    * [[appendLshIndex]] and [[gcSiblings]]: every append lands one more
+    * [[appendLshIndex]] and [[Stores.gcSiblings]]: every append lands one more
     * small file inside each touched (t, pkey) directory, so probe cost
     * creeps up with append count (footer-per-file, not rows) until a
     * compaction folds the accumulated files back into the
@@ -541,13 +437,13 @@ object Indexes {
     * silently re-bucketed pkey and every later probe would return empty).
     *
     * Write-once semantics: `dest` must be a NEW path (tmp build + atomic
-    * [[commitIndexDir]] rename; a pre-existing dest wins any race and the
+    * [[Stores.compact]] rename; a pre-existing dest wins any race and the
     * loser's tmp is discarded). The caller owns the reader flip and the
     * old generation's retirement — same contract as every committed
-    * generation here ([[gcGraceMs]] protects in-flight readers). Probe
+    * generation here ([[effectiveGcGraceMs]] protects in-flight readers). Probe
     * results are bit-identical pre/post compaction (IndexesSpec). */
-  def compactLshIndex(spark: SparkSession, src: String, dest: String): Unit = {
-    val tmp = tmpBuildPath(dest)
+  def compactLshIndex(spark: SparkSession, src: String,
+                      dest: String): Unit = Stores.compact(spark, dest) { tmp =>
     // readLshIndex folds src's delete tombstones, so the new generation
     // is physically delete-free and carries NO sidecar — compaction is
     // where logical deletes become physical (no sidecar ⇒ identical plan
@@ -581,7 +477,6 @@ object Indexes {
         .repartition(col("t"), col("key"))
         .sortWithinPartitions(col("t"), col("key"))
         .write.mode("overwrite").parquet(tmp)
-    commitIndexDir(spark, tmp, dest)
   }
 
   /** REBUCKET any LSH generation into the canonical two-level
@@ -595,8 +490,7 @@ object Indexes {
     * Tombstones fold (the new generation is physically delete-free);
     * write-once tmp build + atomic commit, same as every compactor. */
   def rebucketLshIndex(spark: SparkSession, src: String, dest: String,
-                       bBits: Int): Unit = {
-    val tmp = tmpBuildPath(dest)
+                       bBits: Int): Unit = Stores.compact(spark, dest) { tmp =>
     val folded = readLshIndex(spark, src)
       .select(col("vec_id"), col("t"), col("key"))
     val maxRow = folded.agg(max(col("key")).cast("long")).collect()(0)
@@ -606,7 +500,6 @@ object Indexes {
           s"bBits=$bBits — band-width mismatch with the index's own build " +
           "parameters")
     writeBucketedLshRows(folded, tmp, "overwrite", bBits)
-    commitIndexDir(spark, tmp, dest)
   }
 
   /** Distributed kNN-GRAPH construction — [[bandedNearDupPairsIndexed]]
@@ -727,7 +620,7 @@ object Indexes {
     * Joins on the delete batch and affected set stay unhinted — AQE
     * broadcasts them only while they actually fit ([[knnGraphIncremental]]'s
     * convention). The index is read through [[readLshIndex]], so rows
-    * already tombstoned by [[tombstoneLshIndex]] are excluded even if
+    * already tombstoned (a `vec_id` [[Stores.tombstone]]) are excluded even if
     * the caller passes an empty `deletedIds` (the two delete channels
     * compose; anti-joining an id through both is idempotent). */
   def knnGraphDelete(emb: DataFrame, indexPath: String,
@@ -778,23 +671,12 @@ object Indexes {
                      j: Int, bBits: Int, lTables: Int = 8): String = {
     val idxPath = ensureLshIndex(spark, emb, sfDir, bBits, lTables,
       partitionByBucket = false)
-    val tag = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val family = s"knng_j${j}_b${bBits}_L${lTables}_"
-    val path = s"$indexRoot/$tag/$family${corpusFingerprint(emb)}"
-    val mdir = familyManifestDir(sfDir, family)
-    if (!manifestServes(spark, mdir, path) && !successExists(spark, path)) {
-      val tmp = tmpBuildPath(path)
+    Stores.ensure(spark, sfDir, s"knng_j${j}_b${bBits}_L${lTables}_",
+        corpusFingerprint(emb)) { tmp =>
       knnGraphIndexed(emb, idxPath, j)
         .repartition(col("vec_a")).sortWithinPartitions(col("vec_a"))
         .write.mode("overwrite").parquet(tmp)
-      commitIndexDir(spark, tmp, path)
-      // publish the NEW generation BEFORE the sweep: gcSiblings spares
-      // whatever the family manifest currently serves, so the flip must
-      // land first or the aged superseded generation would be spared too
-      resolveThroughManifest(spark, mdir, path)
-      gcSiblings(spark, path, family)
     }
-    resolveThroughManifest(spark, mdir, path)
   }
 
   /** The index's tombstoned ids as a driver set (bounded by delete
@@ -804,12 +686,9 @@ object Indexes {
     * folded, and the review caught that entry points + re-rank otherwise
     * served recorded deletes the bucket probes already hide. */
   private def tombstonedIds(spark: SparkSession, indexPath: String): Set[Long] = {
-    val ts = tombstonePath(indexPath)
-    if (!hasParquetFiles(spark, ts)) Set.empty
-    else {
-      import spark.implicits._
-      val ids = graft.engine.Tables.parquetCached(spark, ts).select(col("vec_id")).distinct()
-        .as[Long].take(MaxBatchProbeRows + 1)
+    import spark.implicits._
+    Stores.deleted(spark, indexPath, "vec_id").fold(Set.empty[Long]) { del =>
+      val ids = del.as[Long].take(MaxBatchProbeRows + 1)
       require(ids.length <= MaxBatchProbeRows,
         "tombstone sidecar exceeds MaxBatchProbeRows — compact the index " +
           "(fold deletes physically) before graph serving")
@@ -1089,84 +968,16 @@ object Indexes {
       Seq("cos" -> true, "vec_id" -> false), k)
   }
 
-  /** Tombstone sidecar for an LSH index generation: a plain parquet of
-    * deleted vec_ids NEXT TO the index dir (never inside the partitioned
-    * layout — a foreign file in a (t, key)/(t, pkey) directory would break
-    * schema inference and partition listing). */
-  private def tombstonePath(indexPath: String): String = s"$indexPath.tombstones"
-
-  /** Record a delete batch against an existing vector index WITHOUT
-    * rewriting it: a full physical delete is a corpus-index-proportional
-    * rewrite (every partition file containing a deleted row), so deletes
-    * accumulate as a tombstone sidecar that [[readLshIndex]] folds at
-    * read time and [[compactLshIndex]]/[[compactCellIndex]] fold
-    * physically at the next generation — the standard LSM/iceberg-style
-    * delete lifecycle. FAMILY-GENERIC despite the name: any
-    * vec_id-keyed index table (flat/bucketed LSH, IVF inverted lists,
-    * IVF-PQ code lists) shares the sidecar convention, so one delete
-    * batch covers every index generation it is recorded against.
-    * Append-atomic like [[appendLshIndex]]: each batch is one parquet
-    * append job. */
-  def tombstoneLshIndex(spark: SparkSession, indexPath: String,
-                        deletedIds: DataFrame): Unit =
-    deletedIds.select(col("vec_id")).distinct()
-      .coalesce(1)
-      .write.mode("append").parquet(tombstonePath(indexPath))
-
-  /** [[tombstoneLshIndex]]'s exactly-once twin for streaming delete
-    * ingest: the batch's ids land in a `batch_id` partition of the
-    * sidecar via dynamic overwrite, so a replayed micro-batch rewrites
-    * its own partition instead of appending duplicate files (duplicates
-    * were already SEMANTICALLY harmless — the read-side anti-join
-    * dedups — but the sidecar would grow per replay). A store uses ONE
-    * tombstone channel, not both: the plain append and the partitioned
-    * layout do not mix in one directory. */
-  def tombstoneLshIndexIdempotent(spark: SparkSession, indexPath: String,
-                                  deletedIds: DataFrame, batchId: Long): Unit =
-    deletedIds.select(col("vec_id")).distinct()
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1)
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(tombstonePath(indexPath))
-
-  /** Read a vector-index generation with its delete tombstones folded:
-    * the visible rows are exactly a rebuild on the surviving corpus
-    * (signatures/cells are per-vector; deletion removes rows, never
-    * changes one). FAMILY-GENERIC ([[tombstoneLshIndex]]); EVERY probe
-    * path reads through this — LSH point/batch, IVF, PQ, IVF-PQ,
-    * filtered, near-dup pair generation, semantic dedup, and the kNN
-    * graph family — so a recorded delete disappears from the whole ANN
-    * surface at once. No sidecar ⇒ the plain read, byte-identical plan
-    * (partition filters still push below the anti-join, so pruned
-    * probes stay pruned). The anti-join stays unhinted: tombstone
-    * volume is bounded by delete traffic since the last compaction,
-    * which a production deployment bounds by compaction cadence — AQE
-    * broadcasts while it fits. */
-  /** Sidecar presence = actual parquet files, NOT the _SUCCESS marker:
-    * the idempotent (dynamic-partition-overwrite) tombstone channel
-    * commits WITHOUT a root _SUCCESS, and gating on the marker silently
-    * skipped the fold — deleted vectors resurfaced in the first
-    * CDC-stream spec run. Glob covers every channel layout: flat files,
-    * batch_id dirs, and the two-level (sb, batch_id) streaming window
-    * stores. */
-  private[graft] def hasParquetFiles(spark: SparkSession, dir: String): Boolean = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    fs.exists(p) &&
-      (fs.globStatus(new org.apache.hadoop.fs.Path(p, "*.parquet")).nonEmpty ||
-       fs.globStatus(new org.apache.hadoop.fs.Path(p, "*/*.parquet")).nonEmpty ||
-       fs.globStatus(new org.apache.hadoop.fs.Path(p, "*/*/*.parquet")).nonEmpty)
-  }
-
-  def readLshIndex(spark: SparkSession, indexPath: String): DataFrame = {
-    val idx = graft.engine.Tables.parquetCached(spark, indexPath)
-    val ts = tombstonePath(indexPath)
-    if (hasParquetFiles(spark, ts))
-      idx.join(graft.engine.Tables.parquetCached(spark, ts).select(col("vec_id")).distinct(),
-        Seq("vec_id"), "left_anti")
-    else idx
-  }
+  /** Read a vector-index generation with its `vec_id` delete sidecar
+    * folded ([[Stores.live]]): FAMILY-GENERIC — flat/bucketed LSH, IVF
+    * inverted lists, IVF-PQ and PQ code tables share the vec_id channel,
+    * and EVERY probe path reads through this (LSH point/batch, IVF, PQ,
+    * IVF-PQ, filtered, near-dup pairs, semantic dedup, the kNN graph
+    * family), so one recorded delete ([[Stores.tombstone]] on `vec_id`)
+    * disappears from the whole ANN surface at once. No sidecar ⇒ the
+    * plain read, identical plan. */
+  def readLshIndex(spark: SparkSession, indexPath: String): DataFrame =
+    Stores.live(spark, indexPath, "vec_id")
 
   /** Index OBSERVABILITY: per-table bucket-occupancy statistics of a
     * banded LSH generation — the monitoring twin of the round-11 scale
@@ -1207,152 +1018,113 @@ object Indexes {
     *    (footer-per-file, not rows); past `maxFiles` the store compacts
     *    into a fresh generation at `dest` via the layout's own compactor
     *    — ONE trigger dispatching across every maintained family:
-    *    [[graft.ops.TextAnalysis.compactInvertedIndex]] for inverted
-    *    retrieval stores (detected structurally by the postings/
-    *    subdir), [[compactCellIndex]] for cell-partitioned stores,
-    *    [[compactPositionedWindows]] for sb-bucketed window stores,
-    *    [[compactLshIndex]] otherwise; probes bit-identical pre/post,
-    *    each compactor's existing contract. Deletes fold physically as
-    *    a side effect, retiring the tombstone sidecar.
-    *  - IMBALANCE: max/mean bucket occupancy. Compaction cannot fix a
-    *    hot bucket — that needs re-deriving the band width
+    *    the first [[layouts]] row whose marker matches the store;
+    *    probes bit-identical pre/post, each compactor's existing
+    *    contract. Deletes fold physically as a side effect, retiring the
+    *    tombstone sidecar. An unrecognized layout is DECLINED, never
+    *    guessed at.
+    *  - IMBALANCE: max/mean bucket occupancy over the layout's bucket
+    *    columns (delete sidecar folded). Compaction cannot fix a hot
+    *    bucket — that needs re-deriving the band width
     *    ([[graft.ops.Similarity.scaledBandBits]]) and re-bucketing the
     *    corpus — so past `maxImbalance` the decision only ADVISES a
-    *    reband (the caller owns the rebuild; this operator never
-    *    re-buckets implicitly, the [[compactLshIndex]] no-silent-rebucket
-    *    rule).
+    *    reband, and only for bucket-KEY families (the caller owns the
+    *    rebuild; this operator never re-buckets implicitly, the
+    *    [[compactLshIndex]] no-silent-rebucket rule).
     * Returns what it saw and did; when it compacts, the caller owns the
     * reader flip + old-generation retirement (every compactor's
-    * write-once contract). */
+    * write-once contract) unless `manifestDir` is given. */
   def compactionPolicy(spark: SparkSession, src: String, dest: String,
                        maxFiles: Int = 64,
                        maxImbalance: Double = 8.0,
                        manifestDir: Option[String] = None): CompactionDecision = {
-    def countParquet(dir: String): Long = {
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-      val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
-      var n = 0L
-      while (it.hasNext) if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-      n
-    }
-    val nFiles = countParquet(src)
-    // family dispatch: the policy is ONE trigger for every maintained
-    // store, each compacting through its own layout-preserving verb.
-    // The inverted retrieval store is detected structurally (postings/
-    // subdir) BEFORE any read — its root is not a single parquet table.
-    val fsRoot = org.apache.hadoop.fs.FileSystem.get(
+    val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(src), spark.sparkContext.hadoopConfiguration)
-    val isInverted =
-      fsRoot.exists(new org.apache.hadoop.fs.Path(s"$src/postings"))
-    // the minhash BASE is also structural: two derived subtables under
-    // one committed root, never a single parquet table
-    val isMinhash = !isInverted &&
-      fsRoot.exists(new org.apache.hadoop.fs.Path(s"$src/sets")) &&
-      fsRoot.exists(new org.apache.hadoop.fs.Path(s"$src/bands"))
-    val idx =
-      if (isInverted) graft.engine.Tables.parquetCached(spark, s"$src/postings")
-      else if (isMinhash) readMinhashTable(spark, s"$src/bands")
-      else {
-        val raw = graft.engine.Tables.parquetCached(spark, src)
-        // fold on the store's OWN delete key (review catch: window/doc
-        // stores tombstone on doc_id, vector stores on vec_id — a
-        // key-mismatched fold throws at analysis)
-        val ts = s"$src.tombstones"
-        if (raw.columns.contains("vec_id") && !raw.columns.contains("doc_id"))
-          readLshIndex(spark, src)
-        else if (raw.columns.contains("doc_id") && hasParquetFiles(spark, ts))
-          raw.join(graft.engine.Tables.parquetCached(spark, ts).select(col("doc_id")).distinct(),
-            Seq("doc_id"), "left_anti")
-        else raw
-      }
-    // ONE policy, EVERY maintained family (r14 VERDICT #2) — dispatch by
-    // structure first (postings/, sets/+bands/), then by layout marker
-    // columns, most specific first. `None` = decline (r13 ADVICE: never
-    // guess a compactor).
-    val cols = idx.columns.toSet
-    val family: Option[String] =
-      if (isInverted) Some("inverted")
-      else if (isMinhash) Some("minhash")
-      else if (cols("cell")) Some("cell")
-      else if (cols("sb")) Some("poswin")
-      else if (cols("t") && cols("key")) Some("lsh")
-      else if (cols("vb") && cols("variant")) Some("fuzzy")
-      else if (cols("vec_a") && cols("vec_b")) Some("knng")
-      else if (cols("vec_id") && cols("c0")) Some("pq")
-      else if (cols("doc_id") && cols("s") && cols("pos")) Some("poswin")
-      else if (cols("doc_id") &&
-        (cols("simhash") || cols("sh") || cols("h"))) Some("docflat")
-      else if (cols("name") && (cols("ahash_hex") || cols("ehash_hex")))
-        Some("docflat")
-      else None
-    val bucketCols: Seq[org.apache.spark.sql.Column] = family match {
-      case Some("inverted")        => Seq(col("tb"))
-      case Some("minhash")         => Seq(col("band"), col("key"))
-      case Some("lsh")             => Seq(col("t"), col("key"))
-      case Some("fuzzy")           => Seq(col("vb"))
-      case Some("cell")            => Seq(col("cell"))
-      case Some("poswin") if cols("sb") => Seq(col("sb"))
-      case _                       => Seq.empty
+    var nFiles = 0L
+    val it = fs.listFiles(new org.apache.hadoop.fs.Path(src), true)
+    while (it.hasNext) if (it.next().getPath.getName.endsWith(".parquet")) nFiles += 1
+    // multi-table stores are recognized by their subdirs BEFORE any read —
+    // their root is not a single parquet table
+    val subdirs = Seq("postings", "sets", "bands")
+      .filter(d => fs.exists(new org.apache.hadoop.fs.Path(s"$src/$d")))
+    val marks: Seq[String] =
+      if (subdirs.nonEmpty) subdirs.map(_ + "/")
+      else graft.engine.Tables.parquetCached(spark, src).columns.toSeq
+    val layout = layouts.find(_.marker(marks.toSet))
+    val imbalance = layout.filter(_.buckets.nonEmpty).fold(1.0) { l =>
+      val stats =
+        if (l.table.isEmpty) Stores.live(spark, src, l.key)
+        else readMinhashTable(spark, s"$src/${l.table}")
+      val row = stats.groupBy(l.buckets.map(col): _*).agg(count(lit(1)).as("c"))
+        .agg((max(col("c")).cast("double") * count(lit(1)).cast("double") /
+          sum(col("c")).cast("double")).as("imb")).collect()(0)
+      if (row.isNullAt(0)) 1.0 else row.getDouble(0)
     }
-    val imbalance =
-      if (bucketCols.isEmpty) 1.0
-      else {
-        val row = idx.groupBy(bucketCols: _*).agg(count(lit(1)).as("c"))
-          .agg((max(col("c")).cast("double") * count(lit(1)).cast("double") /
-            sum(col("c")).cast("double")).as("imb")).collect()(0)
-        if (row.isNullAt(0)) 1.0 else row.getDouble(0)
-      }
-    if (family.isEmpty)
+    if (layout.isEmpty)
       return CompactionDecision(nFiles, imbalance, compacted = false,
         rebandAdvised = false, dest = None,
         declined = Some(s"unrecognized store layout (columns: " +
-          s"${idx.columns.mkString(", ")}) — no postings/, sets/+bands/, " +
+          s"${marks.mkString(", ")}) — no postings/, sets/+bands/, " +
           "t/key, cell, sb, vec_a/vec_b, code, or doc-keyed marker; " +
           "refusing to guess a compactor"))
     val compact = nFiles > maxFiles
     if (compact) {
-      family.get match {
-        case "inverted" =>
-          graft.ops.TextAnalysis.compactInvertedIndex(spark, src, dest)
-        case "minhash"  => compactMinhashIndex(spark, src, dest)
-        case "cell"     => compactCellIndex(spark, src, dest)
-        case "poswin"   => compactPositionedWindows(spark, src, dest)
-        case "lsh"      => compactLshIndex(spark, src, dest)
-        case "fuzzy"    =>
-          graft.ops.TextAnalysis.compactFuzzyTermIndex(spark, src, dest)
-        case "knng"     => compactKnnGraph(spark, src, dest)
-        case "pq"       => compactPqIndex(spark, src, dest)
-        case "docflat"  => compactDocFlatIndex(spark, src, dest)
-      }
-      // the READER FLIP, wired (r13 VERDICT #4): a manifest-addressed
-      // store publishes its new generation atomically and retires
-      // superseded generations under the standing grace — probes that
-      // resolve [[currentGeneration]] flip with it, in-flight readers of
-      // the old generation finish inside the grace window.
+      layout.get.compactor(spark, src, dest)
+      // the READER FLIP: a manifest-addressed store publishes its new
+      // generation atomically and retires superseded generations under
+      // the standing grace. The compacted generation inherits src's
+      // fingerprint LINEAGE (src's own root if src was itself a
+      // compaction), so the next ensure recognizes the flipped generation
+      // as serving its fingerprint instead of republishing the
+      // uncompacted store.
       manifestDir.foreach { m =>
-        // propagate the FINGERPRINT ROOT across the compaction (ADVICE
-        // r14): the compacted generation inherits src's lineage (src's
-        // own root if src was itself a compaction), so the next ensure*
-        // call recognizes the flipped generation as serving its
-        // fingerprint instead of republishing the uncompacted store.
-        val fs = org.apache.hadoop.fs.FileSystem.get(
+        val mfs = org.apache.hadoop.fs.FileSystem.get(
           new java.net.URI(m), spark.sparkContext.hadoopConfiguration)
-        val root = lineageOf(fs, new org.apache.hadoop.fs.Path(m), src)
+        val root = lineageOf(mfs, new org.apache.hadoop.fs.Path(m), src)
           .getOrElse(src)
         publishGeneration(spark, m, dest, lineage = Some(root))
         retireGenerations(spark, m)
       }
     }
     CompactionDecision(nFiles, imbalance, compact,
-      // fixed-fan-out layouts (term/variant buckets, window-hash
-      // buckets) expect skew to track term/window frequency — a reband
-      // cannot fix them, so the advisory is a bucket-KEY-family dial
-      // only (LSH band keys, IVF cells, minhash bands)
-      rebandAdvised = Set("lsh", "cell", "minhash").contains(family.get) &&
-        imbalance > maxImbalance,
+      rebandAdvised = layout.get.reband && imbalance > maxImbalance,
       dest = if (compact) Some(dest) else None)
   }
+
+  /** One store layout [[compactionPolicy]] recognizes: its `marker` over
+    * the store's column names (plus `postings/`, `sets/`, `bands/` for
+    * the multi-table stores), the delete `key` its occupancy stats fold
+    * on (a multi-table store's stats read its `table` subdir through the
+    * shared `doc_id` base sidecar), the bucket columns occupancy is
+    * measured over (empty: no stats), and the layout-preserving
+    * compactor. `reband` marks bucket-KEY families (LSH band keys, IVF
+    * cells, minhash bands) whose skew a new band width can fix — term,
+    * variant and window-hash buckets track frequency, so a reband cannot
+    * help them. Rows are tried in order, most specific first. */
+  private final case class Layout(marker: Set[String] => Boolean, key: String,
+                                  buckets: Seq[String],
+                                  compactor: (SparkSession, String, String) => Unit,
+                                  table: String = "", reband: Boolean = false)
+
+  private lazy val layouts: Seq[Layout] = Seq(
+    Layout(_("postings/"), "doc_id", Seq("tb"),
+      TextAnalysis.compactInvertedIndex, table = "postings"),
+    Layout(m => m("sets/") && m("bands/"), "doc_id", Seq("band", "key"),
+      compactMinhashIndex, table = "bands", reband = true),
+    Layout(_("cell"), "vec_id", Seq("cell"), compactCellIndex, reband = true),
+    Layout(_("sb"), "doc_id", Seq("sb"), compactPositionedWindows),
+    Layout(m => m("t") && m("key"), "vec_id", Seq("t", "key"), compactLshIndex,
+      reband = true),
+    Layout(m => m("vb") && m("variant"), "term", Seq("vb"),
+      TextAnalysis.compactFuzzyTermIndex),
+    Layout(m => m("vec_a") && m("vec_b"), "vec_id", Nil, compactKnnGraph),
+    Layout(m => m("vec_id") && m("c0"), "vec_id", Nil, compactPqIndex),
+    Layout(m => m("doc_id") && m("s") && m("pos"), "doc_id", Nil,
+      compactPositionedWindows),
+    Layout(m => m("doc_id") && (m("simhash") || m("sh") || m("h")), "doc_id",
+      Nil, compactDocFlatIndex),
+    Layout(m => m("name") && (m("ahash_hex") || m("ehash_hex")), "name", Nil,
+      compactDocFlatIndex))
 
   /** GENERATION MANIFEST — the atomic READER FLIP every compactor's
     * scaladoc previously punted to the caller ("the caller owns the
@@ -1365,7 +1137,7 @@ object Indexes {
     * tmp-then-rename (one atomic metadata op on HDFS/local; on
     * rename-as-copy object stores the pointer file is a single small
     * object, so the PUT itself is the atomic op — the same caveat
-    * [[commitIndexDir]] carries, but manifest-sized instead of
+    * [[Stores.compact]] carries, but manifest-sized instead of
     * store-sized, which is exactly why production table formats flip
     * pointers rather than directories). A reader that resolved the old
     * generation mid-flip keeps reading it — generations are write-once
@@ -1373,10 +1145,10 @@ object Indexes {
     * shape.
     *
     * [[retireGenerations]] deletes superseded generation DIRS (and their
-    * `.tombstones` sidecars) whose pointer is both superseded by ≥
+    * delete sidecars) whose pointer is both superseded by ≥
     * `keep` newer generations and older than the grace window
     * ([[effectiveGcGraceMs]] unless overridden) — in-flight readers
-    * finish inside the grace, the [[gcSiblings]] rationale. The pointer
+    * finish inside the grace, the [[Stores.gcSiblings]] rationale. The pointer
     * files themselves stay (a complete, tiny flip history — the
     * manifest's audit log); only the data dirs go. Returns the retired
     * generation paths. */
@@ -1405,7 +1177,7 @@ object Indexes {
     val out = fs.create(tmp, true)
     // pointer content: line 1 = generation path; OPTIONAL line 2 = the
     // fingerprint path this generation descends from (its lineage — the
-    // [[resolveThroughManifest]] republish guard's key). A lineage-less
+    // [[Stores.resolveThroughManifest]] republish guard's key). A lineage-less
     // pointer (pre-r15 format, or a bare publishGeneration call) reads
     // back as lineage == its own path.
     val content = generationPath + lineage.map("\n" + _).getOrElse("")
@@ -1489,7 +1261,7 @@ object Indexes {
         val supersededAt = supersededAtOf(gen)
         if (fs.exists(genP) && supersededAt < cutoff) {
           fs.delete(genP, true)
-          val ts = new org.apache.hadoop.fs.Path(s"$gen.tombstones")
+          val ts = new org.apache.hadoop.fs.Path(Stores.sidecarOf(gen))
           if (fs.exists(ts)) fs.delete(ts, true)
           if (prunePointers)
             entries.zip(gens).foreach { case ((_, p), g) =>
@@ -1505,7 +1277,7 @@ object Indexes {
     * [[publishGeneration]]'s race note); legacy suffix-less `gen-<seq>`
     * names parse the same. Hidden `.gen-*.tmp` files never match the
     * prefix filter. */
-  private def manifestEntries(fs: org.apache.hadoop.fs.FileSystem,
+  private[graft] def manifestEntries(fs: org.apache.hadoop.fs.FileSystem,
                               dir: org.apache.hadoop.fs.Path)
       : Seq[(Long, org.apache.hadoop.fs.Path)] =
     Option(fs.listStatus(dir)).getOrElse(Array.empty).toSeq
@@ -1524,7 +1296,7 @@ object Indexes {
 
   /** (generation path, lineage) — see [[publishGeneration]]'s content
     * format. Lineage is None for pre-lineage pointers. */
-  private def readPointerLines(fs: org.apache.hadoop.fs.FileSystem,
+  private[graft] def readPointerLines(fs: org.apache.hadoop.fs.FileSystem,
                                p: org.apache.hadoop.fs.Path)
       : (String, Option[String]) = {
     val in = fs.open(p)
@@ -1577,16 +1349,15 @@ object Indexes {
     * one-file-per-append accumulation back to one vec_id-sorted file per
     * cell directory. Same write-once contract: `dest` is a new
     * generation, committed atomically; the caller flips readers. */
-  def compactCellIndex(spark: SparkSession, src: String, dest: String): Unit = {
-    val tmp = tmpBuildPath(dest)
-    // readLshIndex (family-generic) folds src's delete tombstones — the
-    // new generation is physically delete-free, same as the LSH compactor
-    readLshIndex(spark, src)
-      .repartition(col("cell"))
-      .sortWithinPartitions(col("vec_id"))
-      .write.mode("overwrite").partitionBy("cell").parquet(tmp)
-    commitIndexDir(spark, tmp, dest)
-  }
+  def compactCellIndex(spark: SparkSession, src: String, dest: String): Unit =
+    Stores.compact(spark, dest) { tmp =>
+      // readLshIndex (family-generic) folds src's delete tombstones — the
+      // new generation is physically delete-free, same as the LSH compactor
+      readLshIndex(spark, src)
+        .repartition(col("cell"))
+        .sortWithinPartitions(col("vec_id"))
+        .write.mode("overwrite").partitionBy("cell").parquet(tmp)
+    }
 
   /** Compact a FLAT doc_id-keyed store (simhash signatures, shingle
     * sets, window-hash and positioned-window REPORT tables — r14 VERDICT
@@ -1595,20 +1366,13 @@ object Indexes {
     * family-wide contract). Trivially layout-preserving: these stores
     * have no partition dirs; their consumers scan them whole. */
   def compactDocFlatIndex(spark: SparkSession, src: String,
-                          dest: String): Unit = {
-    val tmp = tmpBuildPath(dest)
+                          dest: String): Unit = Stores.compact(spark, dest) { tmp =>
     val raw = graft.engine.Tables.parquetCached(spark, src)
     // the store's own key: doc_id for the text families, name for the
-    // image-hash store (one sidecar convention, one compactor)
+    // image/audio-hash stores (one sidecar convention, one compactor)
     val keyCol = if (raw.columns.contains("doc_id")) "doc_id" else "name"
-    val ts = tombstonePath(src)
-    val folded =
-      if (hasParquetFiles(spark, ts))
-        raw.join(graft.engine.Tables.parquetCached(spark, ts).select(col(keyCol)).distinct(),
-          Seq(keyCol), "left_anti")
-      else raw
-    val sortCols = Seq(keyCol, "pos").filter(raw.columns.contains)
-      .map(col)
+    val folded = Stores.live(spark, src, keyCol)
+    val sortCols = Seq(keyCol, "pos").filter(raw.columns.contains).map(col)
     if (raw.columns.contains("batch_id"))
       // STREAMING (batch_id-partitioned) stores fold their lineage into
       // generation batch 0 and KEEP the layout (the [[compactLshIndex]]
@@ -1622,154 +1386,55 @@ object Indexes {
         .repartition(col(keyCol))
         .sortWithinPartitions(sortCols: _*)
         .write.mode("overwrite").parquet(tmp)
-    commitIndexDir(spark, tmp, dest)
   }
 
-  /** Committed PERCEPTUAL-HASH store for an image corpus (r15 — the
-    * image twin of [[ensureSimhashIndex]]): decoding is the expensive
-    * pass (ImageIO over every payload), the serving state is 16 bytes
-    * of aHash + dims per image, so the decode runs ONCE per corpus
-    * fingerprint and every near-dup/cluster query serves from the
-    * committed (name, width, height, ahash_hex) table. Fingerprinted
-    * over the image FILES (binaryFile inputs are regular scan inputs),
-    * manifest-resolved like every maintained family; the name-keyed
-    * delete sidecar folds at read ([[readImageHashIndex]]) and
-    * physically at [[compactDocFlatIndex]] (the policy dispatches this
-    * layout through its ahash marker). */
+  /** Committed PERCEPTUAL-HASH store for an image corpus: decoding is the
+    * expensive pass (ImageIO over every payload), the serving state is a
+    * few bytes of hashes + dims per image, so the decode runs ONCE per
+    * corpus fingerprint and every near-dup/cluster query serves from the
+    * committed (name, width, height, *hash_hex) table. Fingerprinted over
+    * the image FILES (binaryFile inputs are regular scan inputs). Deletes
+    * are `name`-keyed ([[Stores.tombstone]] / [[Stores.live]]); the
+    * policy compacts the layout through [[compactDocFlatIndex]]. */
   def ensureImageHashIndex(spark: SparkSession, imagesDir: String): String = {
     val images = spark.read.format("binaryFile").load(imagesDir)
-    val tag = imagesDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val path = s"$indexRoot/$tag/imghash_${corpusFingerprint(images)}"
-    val mdir = familyManifestDir(imagesDir, "imghash_")
-    if (!manifestServes(spark, mdir, path) && !successExists(spark, path)) {
-      val tmp = tmpBuildPath(path)
+    Stores.ensure(spark, imagesDir, "imghash_", corpusFingerprint(images)) { tmp =>
       Multimodal.imagePHashes(images).toDF()
         .repartition(col("name")).sortWithinPartitions(col("name"))
         .write.mode("overwrite").parquet(tmp)
-      commitIndexDir(spark, tmp, path)
-      // publish the NEW generation BEFORE the sweep: gcSiblings spares
-      // whatever the family manifest currently serves, so the flip must
-      // land first or the aged superseded generation would be spared too
-      resolveThroughManifest(spark, mdir, path)
-      gcSiblings(spark, path, "imghash_")
     }
-    resolveThroughManifest(spark, mdir, path)
-  }
-
-  /** Name-keyed delete verbs for the image-hash store — the LSM delete
-    * lifecycle applied to the image family (sidecar naming as
-    * [[tombstoneLshIndex]]; the key is the image name, the store's
-    * identity column). */
-  def tombstoneImageHashIndex(spark: SparkSession, indexPath: String,
-                              deletedNames: DataFrame): Unit =
-    deletedNames.select(col("name")).distinct()
-      .coalesce(1)
-      .write.mode("append").parquet(tombstonePath(indexPath))
-
-  def readImageHashIndex(spark: SparkSession, indexPath: String): DataFrame = {
-    val idx = graft.engine.Tables.parquetCached(spark, indexPath)
-    val ts = tombstonePath(indexPath)
-    if (hasParquetFiles(spark, ts))
-      idx.join(graft.engine.Tables.parquetCached(spark, ts).select(col("name")).distinct(),
-        Seq("name"), "left_anti")
-    else idx
   }
 
   /** Exactly-once streaming APPEND for an explicitly-managed image-hash
     * store: the micro-batch's payloads decode to hash rows that land in
-    * a `batch_id=<id>` partition via dynamic overwrite, so a replayed
-    * batch rewrites its own partition (the
-    * [[appendLshIndexIdempotent]] contract applied to the image
-    * family). Readers ignore the extra batch_id column; compaction
-    * folds the lineage into generation batch 0 keeping the layout. */
+    * a `batch_id=<id>` partition ([[Stores.appendBatch]]), so a replayed
+    * batch rewrites its own partition. Readers ignore the extra batch_id
+    * column; compaction folds the lineage into generation batch 0
+    * keeping the layout. */
   def appendImageHashIndexIdempotent(named: DataFrame, batchId: Long,
                                      path: String): Unit =
-    Multimodal.imagePHashesNamed(named).toDF()
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1)
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(path)
+    Stores.appendBatch(Multimodal.imagePHashesNamed(named).toDF().coalesce(1),
+      batchId, path)
 
-  /** [[tombstoneImageHashIndex]]'s exactly-once twin for streaming
-    * delete ingest ([[tombstoneLshIndexIdempotent]] contract; one store
-    * uses ONE tombstone channel, never both). */
-  def tombstoneImageHashIndexIdempotent(spark: SparkSession,
-                                        indexPath: String,
-                                        deletedNames: DataFrame,
-                                        batchId: Long): Unit =
-    deletedNames.select(col("name")).distinct()
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1)
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(tombstonePath(indexPath))
-
-  /** Committed PERCEPTUAL-HASH store for an AUDIO corpus — the
-    * [[ensureImageHashIndex]] contract for sound: the javax.sound PCM
-    * decode is the expensive pass, the serving state is 16 bytes of
-    * energy-envelope hash + format fields per recording
-    * ([[Multimodal.energyHash64]]), so the decode runs ONCE per corpus
-    * fingerprint and every near-dup/cluster query serves from the
-    * committed (name, channels, n_samples, ehash_hex) table.
-    * Manifest-resolved, name-keyed delete sidecar, compaction via the
-    * shared docflat policy (the `ehash_hex` layout marker). */
+  /** The [[ensureImageHashIndex]] contract for an AUDIO corpus: the
+    * javax.sound PCM decode is the expensive pass, the serving state is
+    * a few bytes of energy-envelope hashes + format fields per recording
+    * ([[Multimodal.energyHash64]]), committed as (name, channels,
+    * n_samples, ehash_hex, …). */
   def ensureAudioHashIndex(spark: SparkSession, audioDir: String): String = {
     val audio = spark.read.format("binaryFile").load(audioDir)
-    val tag = audioDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val path = s"$indexRoot/$tag/audhash_${corpusFingerprint(audio)}"
-    val mdir = familyManifestDir(audioDir, "audhash_")
-    if (!manifestServes(spark, mdir, path) && !successExists(spark, path)) {
-      val tmp = tmpBuildPath(path)
+    Stores.ensure(spark, audioDir, "audhash_", corpusFingerprint(audio)) { tmp =>
       Multimodal.audioPHashes(audio).toDF()
         .repartition(col("name")).sortWithinPartitions(col("name"))
         .write.mode("overwrite").parquet(tmp)
-      commitIndexDir(spark, tmp, path)
-      // publish BEFORE the sweep (the ensureImageHashIndex ordering rule)
-      resolveThroughManifest(spark, mdir, path)
-      gcSiblings(spark, path, "audhash_")
     }
-    resolveThroughManifest(spark, mdir, path)
   }
 
-  /** Name-keyed delete verbs for the audio-hash store (the
-    * [[tombstoneImageHashIndex]] lifecycle — one sidecar convention
-    * across the multimodal stores). */
-  def tombstoneAudioHashIndex(spark: SparkSession, indexPath: String,
-                              deletedNames: DataFrame): Unit =
-    deletedNames.select(col("name")).distinct()
-      .coalesce(1)
-      .write.mode("append").parquet(tombstonePath(indexPath))
-
-  def readAudioHashIndex(spark: SparkSession, indexPath: String): DataFrame = {
-    val idx = graft.engine.Tables.parquetCached(spark, indexPath)
-    val ts = tombstonePath(indexPath)
-    if (hasParquetFiles(spark, ts))
-      idx.join(graft.engine.Tables.parquetCached(spark, ts).select(col("name")).distinct(),
-        Seq("name"), "left_anti")
-    else idx
-  }
-
-  /** Exactly-once streaming APPEND for an explicitly-managed audio-hash
-    * store ([[appendImageHashIndexIdempotent]] contract: batch_id
-    * dynamic-partition overwrite, replay rewrites its own partition). */
+  /** [[appendImageHashIndexIdempotent]] for the audio-hash store. */
   def appendAudioHashIndexIdempotent(named: DataFrame, batchId: Long,
                                      path: String): Unit =
-    Multimodal.audioPHashesNamed(named).toDF()
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1)
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(path)
-
-  /** [[tombstoneAudioHashIndex]]'s exactly-once twin for streaming
-    * delete ingest (one store uses ONE tombstone channel, never both). */
-  def tombstoneAudioHashIndexIdempotent(spark: SparkSession,
-                                        indexPath: String,
-                                        deletedNames: DataFrame,
-                                        batchId: Long): Unit =
-    deletedNames.select(col("name")).distinct()
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1)
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(tombstonePath(indexPath))
+    Stores.appendBatch(Multimodal.audioPHashesNamed(named).toDF().coalesce(1),
+      batchId, path)
 
   // ---- committed DSIR bucket-count model store -----------------------------
 
@@ -1780,7 +1445,7 @@ object Indexes {
     * tag names the predicate family (e.g. `src0`); callers own its
     * uniqueness exactly as they own LSH's seed. */
   private def dsirModelFamily(predTag: String, buckets: Int): String =
-    s"dsirm_${predTag.replaceAll("[^A-Za-z0-9._-]", "_")}_b${buckets}_"
+    s"dsirm_${Stores.pathSegment(predTag)}_b${buckets}_"
 
   /** The trained WIDTH stamped into every model-store row as a constant
     * column (format v6): the path-based append/read APIs carry no width
@@ -1797,7 +1462,7 @@ object Indexes {
     * with no count rows yet (missing path, or a schema-only store an
     * all-filtered first micro-batch leaves behind). */
   private def dsirStoreWidths(spark: SparkSession, path: String): Array[Long] =
-    if (!hasParquetFiles(spark, path)) Array.empty
+    if (!Stores.hasParquetFiles(spark, path)) Array.empty
     else graft.engine.Tables.parquetCached(spark, path)
       .select(col("buckets")).distinct()
       .collect().map(_.getLong(0)).sorted
@@ -1844,22 +1509,12 @@ object Indexes {
     * identical integers in, identical IEEE doubles out). */
   def ensureDsirModelStore(spark: SparkSession, docs: DataFrame,
                            sfDir: String, isTarget: Column, predTag: String,
-                           buckets: Int = Selection.DefaultBuckets): String = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val family = dsirModelFamily(predTag, buckets)
-    val path = s"$indexRoot/$tag/$family${corpusFingerprint(docs)}"
-    val mdir = familyManifestDir(sfDir, family)
-    if (!manifestServes(spark, mdir, path) && !successExists(spark, path)) {
-      val tmp = tmpBuildPath(path)
+                           buckets: Int = Selection.DefaultBuckets): String =
+    Stores.ensure(spark, sfDir, dsirModelFamily(predTag, buckets),
+        corpusFingerprint(docs)) { tmp =>
       stampDsirWidth(Selection.bucketCounts(docs, isTarget, buckets), buckets)
         .coalesce(1).write.mode("overwrite").parquet(tmp)
-      commitIndexDir(spark, tmp, path)
-      // publish BEFORE the sweep (the ensureImageHashIndex ordering rule)
-      resolveThroughManifest(spark, mdir, path)
-      gcSiblings(spark, path, family)
     }
-    resolveThroughManifest(spark, mdir, path)
-  }
 
   /** Append one ingest batch's bucket counts to a committed model store —
     * a batch-sized pass, a ≤ `buckets`-row write; the read path merges by
@@ -1886,11 +1541,9 @@ object Indexes {
   def appendDsirModelStoreIdempotent(newDocs: DataFrame, isTarget: Column,
                                      batchId: Long, path: String,
                                      buckets: Int = Selection.DefaultBuckets): Unit =
-    stampDsirWidth(Selection.bucketCounts(newDocs, isTarget, buckets), buckets)
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1)
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(path)
+    Stores.appendBatch(stampDsirWidth(
+      Selection.bucketCounts(newDocs, isTarget, buckets), buckets).coalesce(1),
+      batchId, path)
 
   /** Merged per-bucket counts of a model store generation: base + every
     * appended batch summed per bucket — exact integers, so the merge is
@@ -1934,16 +1587,20 @@ object Indexes {
     * stream at a compacted destination would let a replayed batch land
     * beside its own counts already folded into batch 0 — counted twice,
     * silently. Flip the stream to a compacted path only from a FRESH
-    * checkpoint over drained input. */
+    * checkpoint over drained input. Write-once like every compactor:
+    * `dest` commits atomically from a tmp build ([[Stores.compact]]), so
+    * a crash mid-write never leaves a partial generation at the path the
+    * caller publishes next. */
   def compactDsirModelStore(spark: SparkSession, src: String,
-                            dest: String): Unit =
+                            dest: String): Unit = Stores.compact(spark, dest) { tmp =>
     // the width travels WITH the compaction (read it off the source, not
     // a caller parameter — compaction is layout hygiene, not retraining)
     mergedDsirCounts(spark, src)
       .withColumn("buckets", lit(storedDsirWidth(spark, src)))
       .withColumn("batch_id", lit(0L))
       .coalesce(1)
-      .write.mode("overwrite").partitionBy("batch_id").parquet(dest)
+      .write.mode("overwrite").partitionBy("batch_id").parquet(tmp)
+  }
 
   /** Publish a WRITE-ONCE merged-counts snapshot of a maintained model
     * store through a generation manifest — the torn-read fence for
@@ -1961,7 +1618,7 @@ object Indexes {
     *
     * Cost per micro-batch: one ≤ `buckets`-row write + one pointer
     * rename — model-sized, corpus-independent. Superseded SNAPSHOT dirs
-    * retire inline through [[retireDsirSnapshots]]: the PROVEN
+    * retire inline through [[retireStoreSnapshots]]: the PROVEN
     * [[retireGenerations]] supersession rule (grace from the successor
     * POINTER's mtime, rollback republishes survive, unpublished crash
     * orphans can never count as supersessors — the r19 third-pass
@@ -2028,13 +1685,6 @@ object Indexes {
         retireStoreSnapshots(spark, storePath, manifestDir)
         Some(gen)
     }
-
-  /** The DSIR name for [[retireStoreSnapshots]] — kept so the fence's
-    * first caller reads in its own vocabulary. */
-  private[graft] def retireDsirSnapshots(spark: SparkSession,
-                                         storePath: String,
-                                         manifestDir: String): Seq[String] =
-    retireStoreSnapshots(spark, storePath, manifestDir)
 
   /** The snapshot sweep [[publishStoreSnapshot]] runs per publish
     * — MANIFEST-DRIVEN, not dir-mtime-driven (self-review r19 third
@@ -2107,40 +1757,30 @@ object Indexes {
                                batch: DataFrame, sfDir: String,
                                isTarget: Column, predTag: String,
                                buckets: Int = Selection.DefaultBuckets): String = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
     // a DISTINCT top-level prefix (dsirmlc_, not dsirm_lc_): a plain
     // store tagged predTag = "lc_x" would otherwise render the same
     // family string as a lifecycle store tagged "x", and gcSiblings
     // sweeps by family prefix — the lshFamily no-collision rule
-    // (self-review r18 catch)
-    val family = s"dsirmlc_${predTag.replaceAll("[^A-Za-z0-9._-]", "_")}_b${buckets}_"
-    val path = s"$indexRoot/$tag/$family${corpusFingerprint(base)}"
-    val mdir = familyManifestDir(sfDir, family)
-    if (!manifestServes(spark, mdir, path) && !successExists(spark, path)) {
-      val tmp = tmpBuildPath(path)
+    val family = s"dsirmlc_${Stores.pathSegment(predTag)}_b${buckets}_"
+    Stores.ensure(spark, sfDir, family, corpusFingerprint(base)) { tmp =>
       stampDsirWidth(Selection.bucketCounts(base, isTarget, buckets), buckets)
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       appendDsirModelStore(batch, isTarget, tmp, buckets)
-      commitIndexDir(spark, tmp, path)
-      resolveThroughManifest(spark, mdir, path)
-      gcSiblings(spark, path, family)
     }
-    resolveThroughManifest(spark, mdir, path)
   }
 
   /** Compact the flat PQ code table (vec_id, c0..c{m-1}): the sidecar is
-    * the family-generic vec_id channel ([[tombstoneLshIndex]]'s scaladoc
+    * the family-generic vec_id channel ([[readLshIndex]]'s scaladoc
     * names PQ code lists explicitly), so the fold IS [[readLshIndex]];
     * rewrite vec_id-clustered so the ADC scan stays footer-prunable on
     * the id column. */
-  def compactPqIndex(spark: SparkSession, src: String, dest: String): Unit = {
-    val tmp = tmpBuildPath(dest)
-    readLshIndex(spark, src)
-      .repartition(col("vec_id"))
-      .sortWithinPartitions(col("vec_id"))
-      .write.mode("overwrite").parquet(tmp)
-    commitIndexDir(spark, tmp, dest)
-  }
+  def compactPqIndex(spark: SparkSession, src: String, dest: String): Unit =
+    Stores.compact(spark, dest) { tmp =>
+      readLshIndex(spark, src)
+        .repartition(col("vec_id"))
+        .sortWithinPartitions(col("vec_id"))
+        .write.mode("overwrite").parquet(tmp)
+    }
 
   /** Compact the kNN adjacency store (vec_a, vec_b, …): a delete hides a
     * node from BOTH endpoints (the graph serving ops' tombstonedIds
@@ -2148,27 +1788,19 @@ object Indexes {
     * folding only vec_a would leave edges INTO deleted nodes for the
     * beam expansion to walk. Rewrite keeps the vec_a-clustered
     * adjacency-lookup layout [[ensureKnnGraph]] builds. */
-  def compactKnnGraph(spark: SparkSession, src: String, dest: String): Unit = {
-    val tmp = tmpBuildPath(dest)
-    val raw = graft.engine.Tables.parquetCached(spark, src)
-    val ts = tombstonePath(src)
-    val folded =
-      if (hasParquetFiles(spark, ts)) {
-        val del = graft.engine.Tables.parquetCached(spark, ts).select(col("vec_id")).distinct()
-        raw
-          .join(del.withColumnRenamed("vec_id", "vec_a"),
-            Seq("vec_a"), "left_anti")
-          .join(del.withColumnRenamed("vec_id", "vec_b"),
-            Seq("vec_b"), "left_anti")
-      } else raw
-    // anti-joins reorder the join keys to the front; restore the
-    // source's column order so the generation is schema-identical
-    folded.select(raw.columns.map(col).toSeq: _*)
-      .repartition(col("vec_a"))
-      .sortWithinPartitions(col("vec_a"), col("vec_b"))
-      .write.mode("overwrite").parquet(tmp)
-    commitIndexDir(spark, tmp, dest)
-  }
+  def compactKnnGraph(spark: SparkSession, src: String, dest: String): Unit =
+    Stores.compact(spark, dest) { tmp =>
+      val raw = graft.engine.Tables.parquetCached(spark, src)
+      val folded = Stores.deleted(spark, src, "vec_id").fold(raw)(del => raw
+        .join(del.withColumnRenamed("vec_id", "vec_a"), Seq("vec_a"), "left_anti")
+        .join(del.withColumnRenamed("vec_id", "vec_b"), Seq("vec_b"), "left_anti"))
+      // anti-joins reorder the join keys to the front; restore the
+      // source's column order so the generation is schema-identical
+      folded.select(raw.columns.map(col).toSeq: _*)
+        .repartition(col("vec_a"))
+        .sortWithinPartitions(col("vec_a"), col("vec_b"))
+        .write.mode("overwrite").parquet(tmp)
+    }
 
   /** Compact a minhash BASE generation (`sets/` + `bands/` + the shared
     * doc_id sidecar at `<base>/tombstones`): both derived tables fold
@@ -2180,8 +1812,7 @@ object Indexes {
     * publishes under ONE atomic rename so a reader can never see a
     * folded sets/ beside an unfolded bands/. */
   def compactMinhashIndex(spark: SparkSession, src: String,
-                          dest: String): Unit = {
-    val tmp = tmpBuildPath(dest)
+                          dest: String): Unit = Stores.compact(spark, dest) { tmp =>
     def rewrite(table: String, bucketCols: Seq[String]): Unit = {
       val folded = readMinhashTable(spark, s"$src/$table")
       if (folded.columns.contains("batch_id"))
@@ -2196,7 +1827,6 @@ object Indexes {
     }
     rewrite("sets", Seq("doc_id"))
     rewrite("bands", Seq("band", "key"))
-    commitIndexDir(spark, tmp, dest)
   }
 
   /** Driver-side replica of [[Similarity.bucketFromPlanes]] for ONE vector:
@@ -2327,102 +1957,24 @@ object Indexes {
     * than probed, and a REGENERATED corpus (same directory, new files) maps
     * to a fresh path instead of silently probing the stale index.
     *
-    * CONCURRENCY: builds land via [[commitIndexDir]] (tmp dir + atomic
+    * CONCURRENCY: builds land via [[Stores.ensure]] (tmp dir + atomic
     * rename), so a reader never sees a partial index and racing builders
     * resolve to one committed generation; superseded generations survive
-    * [[gcGraceMs]] past their replacement, so another session's in-flight
+    * [[effectiveGcGraceMs]] past their replacement, so another session's in-flight
     * read of the old generation completes before reclamation. */
   def ensureLshIndex(spark: SparkSession, emb: DataFrame, sfDir: String,
                      bBits: Int = 4, lTables: Int = 16, dim: Int = 64,
                      seed: Long = 42L, partitionByBucket: Boolean = true): String = {
-    val path = lshIndexPath(sfDir, corpusFingerprint(emb), bBits, lTables, seed,
-      partitionByBucket)
-    val mdir = familyManifestDir(sfDir,
-      lshFamily(bBits, lTables, seed, partitionByBucket))
-    if (!manifestServes(spark, mdir, path) && !successExists(spark, path)) {
-      val tmp = tmpBuildPath(path)
+    // the probe path resolves THROUGH the family manifest: each newly
+    // built fingerprint generation is published as a pointer flip, and
+    // the serving path is [[currentGeneration]] — the same reader contract
+    // a compaction flip uses, so a corpus-less serving process and this
+    // corpus-keyed build path read one door
+    Stores.ensure(spark, sfDir, lshFamily(bBits, lTables, seed, partitionByBucket),
+        corpusFingerprint(emb)) { tmp =>
       writeLshIndex(emb, tmp, bBits, lTables, dim, seed, partitionByBucket)
-      commitIndexDir(spark, tmp, path)
-      // publish the NEW generation BEFORE the sweep: gcSiblings spares
-      // whatever the family manifest currently serves, so the flip must
-      // land first or the aged superseded generation would be spared too
-      resolveThroughManifest(spark, mdir, path)
-      gcSiblings(spark, path, lshFamily(bBits, lTables, seed, partitionByBucket))
     }
-    // the probe path resolves THROUGH the family manifest (r13 VERDICT
-    // #4): each newly-built fingerprint generation is published as a
-    // pointer flip, and the serving path is [[currentGeneration]] — the
-    // same reader contract a compaction flip uses, so a corpus-less
-    // serving process and this corpus-keyed build path read one door.
-    // Steady state (single writer, one corpus per sfDir — the gcSiblings
-    // lifecycle's standing assumption) resolves to exactly `path`.
-    resolveThroughManifest(spark, mdir, path)
   }
-
-  /** The manifest a family's write-once generations flip through:
-    * `manifest_<family>` beside the generation dirs — the `manifest_`
-    * prefix keeps it OUTSIDE every [[gcSiblings]] family glob (those
-    * match `<family><fingerprint>`). */
-  private[graft] def familyManifestDir(sfDir: String, familyPrefix: String): String = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"$indexRoot/$tag/${manifestDirName(familyPrefix)}"
-  }
-
-  /** The ONE formula for a family's manifest dir name — shared by
-    * [[familyManifestDir]] (the ensure*-side resolver) and
-    * [[gcSiblings]]' pass-0 spare (ADVICE r15: an inline re-derivation
-    * would silently stop sparing the live generation if the convention
-    * ever changed in one place but not the other). */
-  private def manifestDirName(familyPrefix: String): String =
-    s"manifest_${familyPrefix.stripSuffix("_")}"
-
-  /** Publish `path` to the family manifest if the manifest does not
-    * already serve this fingerprint, then serve the manifest's answer —
-    * the ensure*-side half of the generation-manifest contract. Falls
-    * back to `path` only on an empty manifest race (another process
-    * retired every pointer).
-    *
-    * LINEAGE GUARD (ADVICE r14): "serves this fingerprint" means the
-    * current generation either IS `path` or DESCENDS from it — every
-    * pointer records the fingerprint path its generation derives from
-    * (its lineage, propagated across compactions by
-    * [[compactionPolicy]]), and a compacted generation keeps its
-    * ancestor's lineage. Without the guard, the first ensure* call after
-    * a compaction flip saw currentGeneration != path and republished the
-    * uncompacted store — silently undoing the flip and feeding the
-    * freshly-compacted generation to grace retirement. A current
-    * generation with a DIFFERENT lineage (a new corpus fingerprint, or a
-    * rollback to an older one) still publishes: that is a real flip. */
-  private[graft] def resolveThroughManifest(spark: SparkSession,
-                                            manifestDir: String,
-                                            path: String): String = {
-    if (!manifestServes(spark, manifestDir, path))
-      publishGeneration(spark, manifestDir, path, lineage = Some(path))
-    currentGeneration(spark, manifestDir).getOrElse(path)
-  }
-
-  /** Does the family manifest currently serve `path`'s fingerprint —
-    * i.e. the current generation IS `path`, or descends from it via
-    * compaction lineage, AND its directory still exists? (LIVENESS: a
-    * current generation whose directory is GONE — external cleanup
-    * raced the grace, a tmp-dir dest was reaped — must not brick
-    * serving; the resolver republishes the fingerprint path instead.)
-    *
-    * Doubles as the ensure* BUILD-SKIP predicate (review catch): after
-    * a compaction flip plus grace retirement of the fingerprint
-    * directory, successExists(path) is false — without this check
-    * every later ensure* re-ran the full corpus build (an ImageIO
-    * decode pass, a re-shingle) only for the manifest answer to shadow
-    * it immediately. */
-  private[graft] def manifestServes(spark: SparkSession, manifestDir: String,
-                                    path: String): Boolean =
-    currentGenerationEntry(spark, manifestDir).exists { case (gen, lin) =>
-      (gen == path || lin.getOrElse(gen) == path) && {
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(gen), spark.sparkContext.hadoopConfiguration)
-        fs.exists(new org.apache.hadoop.fs.Path(gen))
-      }
-    }
 
   /** BATCHED multi-query ANN over the same stored LSH index as
     * [[lshTopKIndexed]] — the production vector-store access pattern: the
@@ -2591,8 +2143,7 @@ object Indexes {
     * written once per corpus fingerprint, and the ADC query path reads ONLY
     * this narrow table for candidate scoring. */
   def ensurePqIndex(spark: SparkSession, emb: DataFrame, codebooks: DataFrame,
-                    sfDir: String, nSub: Int = 8, dim: Int = 64): String = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
+                    sfDir: String, nSub: Int = 8, dim: Int = 64): String =
     // BOTH inputs fingerprint into the path: the codebooks are an
     // independent committed fixture, so retraining them must rotate the
     // code table too — codes scored against a different model are garbage.
@@ -2602,28 +2153,17 @@ object Indexes {
     // manifest every call and exposed the other model's aged generation
     // to gcSiblings while it was still actively ensured. One model ⇒ one
     // manifest + one gc scope.
-    val family = s"pq_m${nSub}_cb${corpusFingerprint(codebooks)}_"
-    val path = s"$indexRoot/$tag/$family${corpusFingerprint(emb)}"
-    val mdir = familyManifestDir(sfDir, family)
-    if (!manifestServes(spark, mdir, path) && !successExists(spark, path)) {
+    Stores.ensure(spark, sfDir, s"pq_m${nSub}_cb${corpusFingerprint(codebooks)}_",
+        corpusFingerprint(emb)) { tmp =>
       val subDim = dim / nSub
       val cbs = collectCodebooks(codebooks)
       val codeCols = (0 until nSub).map { m =>
         Similarity.pqCodeExpr(
           slice(col("embedding"), m * subDim + 1, subDim), cbs(m)).as(s"c$m")
       }
-      val tmp = tmpBuildPath(path)
       emb.select(col("vec_id") +: codeCols: _*)
         .write.mode("overwrite").parquet(tmp)
-      commitIndexDir(spark, tmp, path)
-      // publish the NEW generation BEFORE the sweep: gcSiblings spares
-      // whatever the family manifest currently serves, so the flip must
-      // land first or the aged superseded generation would be spared too
-      resolveThroughManifest(spark, mdir, path)
-      gcSiblings(spark, path, family)
     }
-    resolveThroughManifest(spark, mdir, path)
-  }
 
   private def collectCodebooks(codebooks: DataFrame): Map[Int, Array[Array[Double]]] =
     memoModel(codebooks, "pq")(Similarity.collectCodebooks(codebooks))
@@ -2737,36 +2277,28 @@ object Indexes {
   def ensureMinhashIndex(spark: SparkSession, docs: DataFrame, sfDir: String,
                          numHashes: Int = 16, bandRows: Int = 2,
                          shingleN: Int = 3): (String, String) = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val fp = corpusFingerprint(docs)
-    val base = s"$indexRoot/$tag/minhash_k${numHashes}_r${bandRows}_n${shingleN}_$fp"
-    val (sets, bands) = (s"$base/sets", s"$base/bands")
-    val mdir = familyManifestDir(sfDir,
-      s"minhash_k${numHashes}_r${bandRows}_n${shingleN}_")
-    if (!manifestServes(spark, mdir, base) &&
-        (!successExists(spark, sets) || !successExists(spark, bands))) {
-      // both derived tables build under ONE tmp base and publish with one
-      // rename — a reader can never see sets/ without its matching bands/
-      val tmp = tmpBuildPath(base)
-      val s = Dedup.shingleSets(docs, shingleN).persist()
-      s.write.mode("overwrite").parquet(s"$tmp/sets")
-      Dedup.lshBandKeys(Dedup.minhashSignaturesFromSets(s, numHashes),
-          numHashes, bandRows)
-        .repartition(col("band"), col("key"))
-        .write.mode("overwrite").parquet(s"$tmp/bands")
-      s.unpersist()
-      commitIndexDir(spark, tmp, base)
-      // publish the NEW generation BEFORE the sweep: gcSiblings spares
-      // whatever the family manifest currently serves, so the flip must
-      // land first or the aged superseded generation would be spared too
-      resolveThroughManifest(spark, mdir, base)
-      gcSiblings(spark, base,
-        s"minhash_k${numHashes}_r${bandRows}_n${shingleN}_")
+    // both derived tables build under ONE tmp base and publish with one
+    // rename — a reader can never see sets/ without its matching bands/;
+    // the manifest points at the BASE, so a compaction flip can never
+    // split them either
+    val served = Stores.ensure(spark, sfDir,
+        s"minhash_k${numHashes}_r${bandRows}_n${shingleN}_", corpusFingerprint(docs),
+        committed = Seq("sets", "bands")) { tmp =>
+      writeMinhashTables(docs, tmp, numHashes, bandRows, shingleN)
     }
-    // the manifest points at the BASE; both subtables resolve with it,
-    // so a compaction flip can never split them
-    val served = resolveThroughManifest(spark, mdir, base)
     (s"$served/sets", s"$served/bands")
+  }
+
+  /** The (sets/, bands/) pair of a fresh minhash base at `dir`. */
+  private def writeMinhashTables(docs: DataFrame, dir: String, numHashes: Int,
+                                 bandRows: Int, shingleN: Int): Unit = {
+    val s = Dedup.shingleSets(docs, shingleN).persist()
+    s.write.mode("overwrite").parquet(s"$dir/sets")
+    Dedup.lshBandKeys(Dedup.minhashSignaturesFromSets(s, numHashes),
+        numHashes, bandRows)
+      .repartition(col("band"), col("key"))
+      .write.mode("overwrite").parquet(s"$dir/bands")
+    s.unpersist()
   }
 
   /** The minhash families' delete sidecar lives at the committed BASE dir
@@ -2778,29 +2310,23 @@ object Indexes {
     s"${new org.apache.hadoop.fs.Path(setsOrBandsPath).getParent.toString}/tombstones"
 
   /** Record deleted documents against a minhash index generation — the
-    * TEXT twin of [[tombstoneLshIndex]], same LSM lifecycle: logical at
+    * TEXT twin of [[Stores.tombstone]], same LSM lifecycle: logical at
     * read ([[readMinhashTable]]), physical at the next compaction or
     * rebuild. `setsPath` (or the bands path) names the generation; the
     * sidecar covers both tables. */
   def tombstoneMinhashIndex(spark: SparkSession, setsPath: String,
                             deletedIds: DataFrame): Unit =
-    deletedIds.select(col("doc_id")).distinct()
-      .coalesce(1)
-      .write.mode("append").parquet(minhashTombstonePath(setsPath))
+    Stores.writeTombstones(minhashTombstonePath(setsPath),
+      deletedIds.select(col("doc_id")).distinct(), batchId = None)
 
   /** Read a minhash-derived table (`sets/` or `bands/`) with the
     * generation's delete tombstones folded — visible rows are exactly a
     * rebuild on the surviving corpus (signatures are per-document;
     * deletion removes rows, never changes one). No sidecar ⇒ the plain
     * read, identical plan. */
-  def readMinhashTable(spark: SparkSession, tablePath: String): DataFrame = {
-    val idx = graft.engine.Tables.parquetCached(spark, tablePath)
-    val ts = minhashTombstonePath(tablePath)
-    if (hasParquetFiles(spark, ts))
-      idx.join(graft.engine.Tables.parquetCached(spark, ts).select(col("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-    else idx
-  }
+  def readMinhashTable(spark: SparkSession, tablePath: String): DataFrame =
+    Stores.live(spark, tablePath, "doc_id",
+      sidecar = Some(minhashTombstonePath(tablePath)))
 
   /** LSH candidate pairs from the stored band-key table — output-identical
     * to [[Dedup.lshCandidatePairsFromSigs]] over the same corpus.
@@ -2999,24 +2525,11 @@ object Indexes {
     * alias to one index ([[minhashNearDupsIncremental]]'s raw-scan caveat,
     * handled here instead of pushed to callers). */
   def ensureShingleSets(spark: SparkSession, docs: DataFrame, sfDir: String,
-                        shingleN: Int, label: String): String = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val lbl = labelSegment(label)
-    val path =
-      s"$indexRoot/$tag/shingles_n${shingleN}_${lbl}_${corpusFingerprint(docs)}"
-    val mdir = familyManifestDir(sfDir, s"shingles_n${shingleN}_${lbl}_")
-    if (!manifestServes(spark, mdir, path) && !successExists(spark, path)) {
-      val tmp = tmpBuildPath(path)
+                        shingleN: Int, label: String): String =
+    Stores.ensure(spark, sfDir, s"shingles_n${shingleN}_${labelSegment(label)}_",
+        corpusFingerprint(docs)) { tmp =>
       Dedup.shingleSets(docs, shingleN).write.mode("overwrite").parquet(tmp)
-      commitIndexDir(spark, tmp, path)
-      // publish the NEW generation BEFORE the sweep: gcSiblings spares
-      // whatever the family manifest currently serves, so the flip must
-      // land first or the aged superseded generation would be spared too
-      resolveThroughManifest(spark, mdir, path)
-      gcSiblings(spark, path, s"shingles_n${shingleN}_${lbl}_")
     }
-    resolveThroughManifest(spark, mdir, path)
-  }
 
   /** Materialized positional window-hash table (doc_id, pos, h) for one
     * corpus slice + window width ([[Dedup.windowHashes]]) — the serving
@@ -3025,24 +2538,11 @@ object Indexes {
     * then scan → frequency aggregate → islands merge. Same `label`
     * rationale as [[ensureShingleSets]]. */
   def ensureWindowHashes(spark: SparkSession, docs: DataFrame, sfDir: String,
-                         k: Int, label: String): String = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val lbl = labelSegment(label)
-    val path =
-      s"$indexRoot/$tag/winhash_k${k}_${lbl}_${corpusFingerprint(docs)}"
-    val mdir = familyManifestDir(sfDir, s"winhash_k${k}_${lbl}_")
-    if (!manifestServes(spark, mdir, path) && !successExists(spark, path)) {
-      val tmp = tmpBuildPath(path)
+                         k: Int, label: String): String =
+    Stores.ensure(spark, sfDir, s"winhash_k${k}_${labelSegment(label)}_",
+        corpusFingerprint(docs)) { tmp =>
       Dedup.windowHashes(docs, k).write.mode("overwrite").parquet(tmp)
-      commitIndexDir(spark, tmp, path)
-      // publish the NEW generation BEFORE the sweep: gcSiblings spares
-      // whatever the family manifest currently serves, so the flip must
-      // land first or the aged superseded generation would be spared too
-      resolveThroughManifest(spark, mdir, path)
-      gcSiblings(spark, path, s"winhash_k${k}_${lbl}_")
     }
-    resolveThroughManifest(spark, mdir, path)
-  }
 
   /** Materialized POSITIONED window table (doc_id, ntok, pos, s) for one
     * corpus slice + window width
@@ -3068,25 +2568,12 @@ object Indexes {
     * there. The two families intentionally do not share a unit. */
   def ensurePositionedWindows(spark: SparkSession, docs: DataFrame,
                               sfDir: String, windowN: Int,
-                              label: String): String = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val lbl = labelSegment(label)
-    val path =
-      s"$indexRoot/$tag/poswin_n${windowN}_${lbl}_${corpusFingerprint(docs)}"
-    val mdir = familyManifestDir(sfDir, s"poswin_n${windowN}_${lbl}_")
-    if (!manifestServes(spark, mdir, path) && !successExists(spark, path)) {
-      val tmp = tmpBuildPath(path)
+                              label: String): String =
+    Stores.ensure(spark, sfDir, s"poswin_n${windowN}_${labelSegment(label)}_",
+        corpusFingerprint(docs)) { tmp =>
       Decontamination.positionedWindows(docs, windowN)
         .write.mode("overwrite").parquet(tmp)
-      commitIndexDir(spark, tmp, path)
-      // publish the NEW generation BEFORE the sweep: gcSiblings spares
-      // whatever the family manifest currently serves, so the flip must
-      // land first or the aged superseded generation would be spared too
-      resolveThroughManifest(spark, mdir, path)
-      gcSiblings(spark, path, s"poswin_n${windowN}_${lbl}_")
     }
-    resolveThroughManifest(spark, mdir, path)
-  }
 
   /** Partition-dir bits for the SERVING copy of the positioned-window
     * store: 2^6 = 64 dirs (the TermBuckets precedent) keyed on the top
@@ -3114,59 +2601,21 @@ object Indexes {
     * partitionByBucket). */
   def ensurePositionedWindowsServing(spark: SparkSession, docs: DataFrame,
                                      sfDir: String, windowN: Int,
-                                     label: String): String = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val lbl = labelSegment(label)
-    val path =
-      s"$indexRoot/$tag/poswinsrv_n${windowN}_${lbl}_${corpusFingerprint(docs)}"
-    val mdir = familyManifestDir(sfDir, s"poswinsrv_n${windowN}_${lbl}_")
-    if (!manifestServes(spark, mdir, path) && !successExists(spark, path)) {
-      val tmp = tmpBuildPath(path)
-      Decontamination.positionedWindows(docs, windowN)
-        .select(col("doc_id"), col("pos"), col("s"))
-        .withColumn("sb", shiftright(col("s"), 48 - PosWinDirBits))
-        .repartition(col("sb"))
-        .sortWithinPartitions(col("s"), col("doc_id"), col("pos"))
+                                     label: String): String =
+    Stores.ensure(spark, sfDir, s"poswinsrv_n${windowN}_${labelSegment(label)}_",
+        corpusFingerprint(docs)) { tmp =>
+      servingWindows(docs, windowN)
         .write.mode("overwrite").partitionBy("sb").parquet(tmp)
-      commitIndexDir(spark, tmp, path)
-      // publish the NEW generation BEFORE the sweep: gcSiblings spares
-      // whatever the family manifest currently serves, so the flip must
-      // land first or the aged superseded generation would be spared too
-      resolveThroughManifest(spark, mdir, path)
-      gcSiblings(spark, path, s"poswinsrv_n${windowN}_${lbl}_")
     }
-    resolveThroughManifest(spark, mdir, path)
-  }
 
-  /** Delete lifecycle for the positioned-window stores (round 13 — the
-    * one store the r13 serving layout introduced without the family-wide
-    * tombstone rule): a doc_id sidecar at `<path>.tombstones`, folded at
-    * read by [[graft.ops.TextAnalysis.phraseSearch]] (anti-join below
-    * the pruned probe) and physically by [[compactPositionedWindows]].
-    * Same CONTENT-ADDRESSING CAVEAT as every family: never tombstone the
-    * write-once fingerprint-keyed generations the ensure* verbs manage —
-    * deletes target explicitly-managed production stores. Append-atomic;
-    * the idempotent twin is the streaming channel (one store uses ONE
-    * channel, never both). */
-  def tombstonePositionedWindows(spark: SparkSession, storePath: String,
-                                 docIds: DataFrame): Unit =
-    docIds.select(col("doc_id")).distinct()
-      .coalesce(1)
-      .write.mode("append").parquet(tombstonePath(storePath))
-
-  /** [[tombstonePositionedWindows]]'s exactly-once twin for streaming
-    * delete ingest — batch_id-partitioned dynamic overwrite, so a
-    * replayed micro-batch rewrites its own partition (the
-    * [[tombstoneLshIndexIdempotent]] contract). */
-  def tombstonePositionedWindowsIdempotent(spark: SparkSession,
-                                           storePath: String,
-                                           docIds: DataFrame,
-                                           batchId: Long): Unit =
-    docIds.select(col("doc_id")).distinct()
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1)
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(tombstonePath(storePath))
+  /** The serving layout's rows: (doc_id, pos, s, sb), clustered into one
+    * s-sorted run per sb dir. */
+  private def servingWindows(docs: DataFrame, windowN: Int): DataFrame =
+    Decontamination.positionedWindows(docs, windowN)
+      .select(col("doc_id"), col("pos"), col("s"))
+      .withColumn("sb", shiftright(col("s"), 48 - PosWinDirBits))
+      .repartition(col("sb"))
+      .sortWithinPartitions(col("s"), col("doc_id"), col("pos"))
 
   /** Fold a positioned-window store's delete sidecar PHYSICALLY into a
     * fresh generation — the compaction verb where logical deletes become
@@ -3182,15 +2631,9 @@ object Indexes {
     * identically pre/post (spec-asserted). Write-once: `dest` is a new
     * generation committed atomically. */
   def compactPositionedWindows(spark: SparkSession, src: String,
-                               dest: String): Unit = {
-    val tmp = tmpBuildPath(dest)
-    val ts = tombstonePath(src)
+                               dest: String): Unit = Stores.compact(spark, dest) { tmp =>
     val rows0 = graft.engine.Tables.parquetCached(spark, src)
-    val rows =
-      if (hasParquetFiles(spark, ts))
-        rows0.join(graft.engine.Tables.parquetCached(spark, ts).select(col("doc_id")).distinct(),
-          Seq("doc_id"), "left_anti")
-      else rows0
+    val rows = Stores.live(spark, src, "doc_id")
     if (rows0.columns.contains("batch_id"))
       rows.withColumn("batch_id", lit(0L))
         .repartition(col("sb"))
@@ -3202,7 +2645,6 @@ object Indexes {
         .write.mode("overwrite").partitionBy("sb").parquet(tmp)
     else
       rows.write.mode("overwrite").parquet(tmp)
-    commitIndexDir(spark, tmp, dest)
   }
 
   /** Idempotent streaming append of a doc batch's positioned windows to
@@ -3232,20 +2674,14 @@ object Indexes {
     // sb= serving store AND a doc-ordered report store both reject
     // (review catch: the first guard only checked sb=, letting the
     // report layout take nested partition dirs beside flat part files)
-    require(!hasParquetFiles(spark, storePath) || hasBatch,
+    require(!Stores.hasParquetFiles(spark, storePath) || hasBatch,
       s"appendPositionedWindowsIdempotent: $storePath holds a non-streaming " +
         "layout (flat sb= serving files or a doc-ordered report store) — " +
         "appending batch partitions would mix layouts; compact through " +
         "compactPositionedWindows from a streaming source, or start a " +
         "fresh streaming store")
-    Decontamination.positionedWindows(docs, windowN)
-      .select(col("doc_id"), col("pos"), col("s"))
-      .withColumn("sb", shiftright(col("s"), 48 - PosWinDirBits))
-      .withColumn("batch_id", lit(batchId))
-      .repartition(col("sb"))
-      .sortWithinPartitions(col("s"), col("doc_id"), col("pos"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("sb", "batch_id").parquet(storePath)
+    Stores.overwritePartitions(servingWindows(docs, windowN)
+      .withColumn("batch_id", lit(batchId)), storePath, "sb", "batch_id")
   }
 
   /** Append a new batch's derived dedup state to an EXISTING minhash index
@@ -3311,15 +2747,11 @@ object Indexes {
                                    shingleN: Int = 3): Unit = {
     val sets = Dedup.shingleSets(newDocs, shingleN).persist()
     try {
-      sets.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(setsPath)
-      Dedup.lshBandKeys(Dedup.minhashSignaturesFromSets(sets, numHashes),
-          numHashes, bandRows)
+      Stores.appendBatch(sets, batchId, setsPath)
+      Stores.overwritePartitions(Dedup.lshBandKeys(
+          Dedup.minhashSignaturesFromSets(sets, numHashes), numHashes, bandRows)
         .withColumn("batch_id", lit(batchId))
-        .repartition(col("band"), col("key"))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(bandsPath)
+        .repartition(col("band"), col("key")), bandsPath, "batch_id")
     } finally sets.unpersist()
   }
 
@@ -3347,34 +2779,13 @@ object Indexes {
                                   batch: DataFrame, sfDir: String,
                                   numHashes: Int = 16, bandRows: Int = 2,
                                   shingleN: Int = 3): (String, String) = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val fp = corpusFingerprint(base)
-    val dir =
-      s"$indexRoot/$tag/minhash_lc_k${numHashes}_r${bandRows}_n${shingleN}_$fp"
-    val (sets, bands) = (s"$dir/sets", s"$dir/bands")
-    val mdir = familyManifestDir(sfDir,
-      s"minhash_lc_k${numHashes}_r${bandRows}_n${shingleN}_")
-    if (!manifestServes(spark, mdir, dir) &&
-        (!successExists(spark, sets) || !successExists(spark, bands))) {
-      val tmp = tmpBuildPath(dir)
-      val s = Dedup.shingleSets(base, shingleN).persist()
-      s.write.mode("overwrite").parquet(s"$tmp/sets")
-      Dedup.lshBandKeys(Dedup.minhashSignaturesFromSets(s, numHashes),
-          numHashes, bandRows)
-        .repartition(col("band"), col("key"))
-        .write.mode("overwrite").parquet(s"$tmp/bands")
-      s.unpersist()
+    val served = Stores.ensure(spark, sfDir,
+        s"minhash_lc_k${numHashes}_r${bandRows}_n${shingleN}_", corpusFingerprint(base),
+        committed = Seq("sets", "bands")) { tmp =>
+      writeMinhashTables(base, tmp, numHashes, bandRows, shingleN)
       appendMinhashIndex(batch, s"$tmp/sets", s"$tmp/bands",
         numHashes, bandRows, shingleN)
-      commitIndexDir(spark, tmp, dir)
-      // publish the NEW generation BEFORE the sweep: gcSiblings spares
-      // whatever the family manifest currently serves, so the flip must
-      // land first or the aged superseded generation would be spared too
-      resolveThroughManifest(spark, mdir, dir)
-      gcSiblings(spark, dir,
-        s"minhash_lc_k${numHashes}_r${bandRows}_n${shingleN}_")
     }
-    val served = resolveThroughManifest(spark, mdir, dir)
     (s"$served/sets", s"$served/bands")
   }
 
@@ -3382,49 +2793,19 @@ object Indexes {
     * 60-bit majority vote is write-once corpus state; near-dup banding
     * reads 16 bytes per doc. */
   def ensureSimhashIndex(spark: SparkSession, docs: DataFrame,
-                         sfDir: String): String = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val path = s"$indexRoot/$tag/simhash_${corpusFingerprint(docs)}"
-    val mdir = familyManifestDir(sfDir, "simhash_")
-    if (!manifestServes(spark, mdir, path) && !successExists(spark, path)) {
-      val tmp = tmpBuildPath(path)
+                         sfDir: String): String =
+    Stores.ensure(spark, sfDir, "simhash_", corpusFingerprint(docs)) { tmp =>
       Dedup.simhash(docs).write.mode("overwrite").parquet(tmp)
-      commitIndexDir(spark, tmp, path)
-      // publish the NEW generation BEFORE the sweep: gcSiblings spares
-      // whatever the family manifest currently serves, so the flip must
-      // land first or the aged superseded generation would be spared too
-      resolveThroughManifest(spark, mdir, path)
-      gcSiblings(spark, path, "simhash_")
     }
-    resolveThroughManifest(spark, mdir, path)
-  }
-
-  /** Doc-keyed delete verbs for the simhash signature table — the fourth
-    * index family on the shared LSM delete lifecycle (sidecar naming as
-    * [[tombstoneLshIndex]], doc_id key as [[tombstoneMinhashIndex]]). */
-  def tombstoneSimhashIndex(spark: SparkSession, indexPath: String,
-                            deletedIds: DataFrame): Unit =
-    deletedIds.select(col("doc_id")).distinct()
-      .coalesce(1)
-      .write.mode("append").parquet(tombstonePath(indexPath))
-
-  def readSimhashIndex(spark: SparkSession, indexPath: String): DataFrame = {
-    val idx = graft.engine.Tables.parquetCached(spark, indexPath)
-    val ts = tombstonePath(indexPath)
-    if (hasParquetFiles(spark, ts))
-      idx.join(graft.engine.Tables.parquetCached(spark, ts).select(col("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-    else idx
-  }
 
   /** SimHash near-dup pairs off the stored signature table —
     * output-identical to [[Dedup.simhashNearDups]] because both delegate to
     * the SAME banding/join/hamming implementation
-    * ([[Dedup.simhashNearDupsFromSigs]]). Tombstone-aware
-    * ([[readSimhashIndex]]). */
+    * ([[Dedup.simhashNearDupsFromSigs]]). Tombstone-aware (`doc_id`
+    * sidecar). */
   def simhashNearDupsIndexed(spark: SparkSession, indexPath: String,
                              maxHamming: Int = 3, bands: Int = 4): DataFrame =
-    Dedup.simhashNearDupsFromSigs(readSimhashIndex(spark, indexPath),
+    Dedup.simhashNearDupsFromSigs(Stores.live(spark, indexPath, "doc_id"),
       maxHamming, bands)
 
   // ---- IVF inverted lists ---------------------------------------------------
@@ -3615,25 +2996,14 @@ object Indexes {
                        centroids: DataFrame, codebooks: DataFrame,
                        sfDir: String, nCells: Int, nSub: Int = 8,
                        dim: Int = 64): String = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
     // model fingerprints are FAMILY identity (the [[ensurePqIndex]]
     // ADVICE-r15 rule): each (centroids, codebooks) pair gets its own
     // manifest + gc scope instead of flapping a structural-only pointer
     val family = s"ivfpq_k${nCells}_m${nSub}_cc${corpusFingerprint(centroids)}" +
       s"_cb${corpusFingerprint(codebooks)}_"
-    val path = s"$indexRoot/$tag/$family${corpusFingerprint(emb)}"
-    val mdir = familyManifestDir(sfDir, family)
-    if (!manifestServes(spark, mdir, path) && !successExists(spark, path)) {
-      val tmp = tmpBuildPath(path)
+    Stores.ensure(spark, sfDir, family, corpusFingerprint(emb)) { tmp =>
       writeIvfPqIndex(emb, centroids, codebooks, tmp, nSub, dim)
-      commitIndexDir(spark, tmp, path)
-      // publish the NEW generation BEFORE the sweep: gcSiblings spares
-      // whatever the family manifest currently serves, so the flip must
-      // land first or the aged superseded generation would be spared too
-      resolveThroughManifest(spark, mdir, path)
-      gcSiblings(spark, path, family)
     }
-    resolveThroughManifest(spark, mdir, path)
   }
 
   /** Build the IVFADC table at `path` (see [[ensureIvfPqIndex]] for the
@@ -3938,29 +3308,11 @@ object Indexes {
     * query corpus), so retraining the model must rotate the inverted
     * lists. */
   def ensureIvfIndex(spark: SparkSession, emb: DataFrame, centroids: DataFrame,
-                     sfDir: String, nCells: Int): String = {
+                     sfDir: String, nCells: Int): String =
     // centroid fingerprint is FAMILY identity (the [[ensurePqIndex]]
     // ADVICE-r15 rule): each trained model owns its manifest + gc scope
-    val family = s"ivf_k${nCells}_cc${corpusFingerprint(centroids)}_"
-    val tag = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val path = s"$indexRoot/$tag/$family${corpusFingerprint(emb)}"
-    val mdir = familyManifestDir(sfDir, family)
-    if (!manifestServes(spark, mdir, path) && !successExists(spark, path)) {
-      val tmp = tmpBuildPath(path)
+    Stores.ensure(spark, sfDir, s"ivf_k${nCells}_cc${corpusFingerprint(centroids)}_",
+        corpusFingerprint(emb)) { tmp =>
       writeIvfIndex(emb, centroids, tmp)
-      commitIndexDir(spark, tmp, path)
-      // publish the NEW generation BEFORE the sweep: gcSiblings spares
-      // whatever the family manifest currently serves, so the flip must
-      // land first or the aged superseded generation would be spared too
-      resolveThroughManifest(spark, mdir, path)
-      gcSiblings(spark, path, family)
     }
-    resolveThroughManifest(spark, mdir, path)
-  }
-
-  private[graft] def successExists(spark: SparkSession, path: String): Boolean = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    fs.exists(new org.apache.hadoop.fs.Path(path, "_SUCCESS"))
-  }
 }

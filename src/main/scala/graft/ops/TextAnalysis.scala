@@ -318,9 +318,8 @@ object TextAnalysis {
     * (detected by the absent `sb` column) but scans linearly — kept for
     * ad-hoc probes against an already-materialized report state.
     *
-    * DELETES (the family-wide rule, round 13): a doc_id tombstone sidecar
-    * at `<path>.tombstones`
-    * ([[graft.ops.Indexes.tombstonePositionedWindows]]) folds here as an
+    * DELETES (the family-wide rule, round 13): a doc_id delete sidecar
+    * ([[graft.ops.Stores.tombstone]] on `doc_id`) folds here as an
     * anti-join BELOW the grouping (partition filters still push below
     * it, so the pruned probe stays pruned) and folds physically at
     * [[graft.ops.Indexes.compactPositionedWindows]] — a deleted
@@ -413,12 +412,8 @@ object TextAnalysis {
       } else
         graft.engine.Tables.parquetCached(spark, posWinPath).where(col("s").isin(hs.distinct: _*))
     // the delete fold: tombstoned docs' windows never become anchors
-    val tsPath = s"$posWinPath.tombstones"
-    if (graft.ops.Indexes.hasParquetFiles(spark, tsPath))
-      probed.join(
-        graft.engine.Tables.parquetCached(spark, tsPath).select(col("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-    else probed
+    Stores.deleted(spark, posWinPath, "doc_id")
+      .fold(probed)(del => probed.join(del, Seq("doc_id"), "left_anti"))
   }
 
   /** MAINTAINED INVERTED INDEX — the retrieval structure that takes BM25
@@ -452,11 +447,11 @@ object TextAnalysis {
     *  - `scalars` (n_docs, total_dl) — 1-row partials.
     *
     * DELETES (round-13, closing the one index family without the unified
-    * lifecycle): a (doc_id, dl) tombstone sidecar at `<path>.tombstones`
-    * — [[tombstoneInvertedIndex]] / the idempotent streaming twin — is
-    * folded by every probe ([[bm25TopKIndexed]]/Batch anti-join the
-    * probed postings and subtract the sidecar's (1, dl) partials from
-    * the scalars; df is a count over surviving probed postings, so it
+    * lifecycle): a (doc_id, dl) delete sidecar
+    * ([[graft.ops.Stores.sidecarOf]]) — [[tombstoneInvertedIndex]] /
+    * the idempotent streaming twin — is folded by every probe
+    * ([[bm25TopKIndexed]]/Batch anti-join the probed postings and
+    * subtract the sidecar's (1, dl) partials from the scalars; df is a count over surviving probed postings, so it
     * corrects itself) and folded PHYSICALLY by
     * [[compactInvertedIndex]]. */
   def writeInvertedIndex(docs: DataFrame, path: String): Unit =
@@ -491,10 +486,9 @@ object TextAnalysis {
           .parquet(s"$path/postings")
         writeDerivedStores(spark, path, 0L, dynamic = false)
       case Some(b) =>
-        post.repartition(col("tb"))
-          .sortWithinPartitions(col("term"), col("doc_id"))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id", "tb").parquet(s"$path/postings")
+        Stores.overwritePartitions(post.repartition(col("tb"))
+          .sortWithinPartitions(col("term"), col("doc_id")),
+          s"$path/postings", "batch_id", "tb")
         // an EMPTY first batch on a fresh path writes no postings files —
         // skip the derived-store read-back rather than fail schema inference
         val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -515,11 +509,9 @@ object TextAnalysis {
     * doclens read-back rather than a second postings pass). */
   private def writeDerivedStores(spark: SparkSession, path: String,
                                  batch: Long, dynamic: Boolean): Unit = {
-    def save(df: DataFrame, sub: String, parts: Seq[String]): Unit = {
-      val w0 = df.write.mode("overwrite")
-      val w = if (dynamic) w0.option("partitionOverwriteMode", "dynamic") else w0
-      w.partitionBy(parts: _*).parquet(s"$path/$sub")
-    }
+    def save(df: DataFrame, sub: String, parts: Seq[String]): Unit =
+      if (dynamic) Stores.overwritePartitions(df, s"$path/$sub", parts: _*)
+      else df.write.mode("overwrite").partitionBy(parts: _*).parquet(s"$path/$sub")
     val post = graft.engine.Tables.parquetCached(spark, s"$path/postings")
       .where(col("batch_id") === batch)
     save(post.groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))
@@ -539,9 +531,6 @@ object TextAnalysis {
       .withColumn("batch_id", lit(batch)).coalesce(1),
       "scalars", Seq("batch_id"))
   }
-
-  private def invTombstonePath(indexPath: String): String =
-    s"$indexPath.tombstones"
 
   // Pinned store schemas: a plain `read.parquet(base)` infers schema
   // from footers AND lists every partition dir (a driver JOB past
@@ -603,16 +592,12 @@ object TextAnalysis {
     * sidecar files exist (probes keep their byte-identical delete-free
     * plans). */
   private[graft] def invertedTombstones(spark: SparkSession,
-                                        indexPath: String): Option[DataFrame] = {
-    val ts = invTombstonePath(indexPath)
-    if (graft.ops.Indexes.hasParquetFiles(spark, ts))
-      Some(graft.engine.Tables.parquetCached(spark, ts).select(col("doc_id"), col("dl")).distinct())
-    else None
-  }
+                                        indexPath: String): Option[DataFrame] =
+    Stores.deleted(spark, indexPath, "doc_id", "dl")
 
   /** Record a delete batch against an inverted-index generation WITHOUT
     * rewriting it — the retrieval twin of
-    * [[graft.ops.Indexes.tombstoneLshIndex]], closing the one index
+    * [[graft.ops.Stores.tombstone]], closing the one index
     * family that previously served deleted documents until a full
     * rebuild. The doc's dl is captured HERE from the doclens store (one
     * narrow, doc_id-footer-pruned scan per delete batch), so probe-time
@@ -628,20 +613,18 @@ object TextAnalysis {
     * production stores. */
   def tombstoneInvertedIndex(spark: SparkSession, indexPath: String,
                              docIds: DataFrame): Unit =
-    invTombstoneRows(spark, indexPath, docIds).coalesce(1)
-      .write.mode("append").parquet(invTombstonePath(indexPath))
+    Stores.writeTombstones(Stores.sidecarOf(indexPath),
+      invTombstoneRows(spark, indexPath, docIds), batchId = None)
 
   /** [[tombstoneInvertedIndex]]'s exactly-once twin for streaming delete
     * ingest — batch_id-partitioned dynamic overwrite, so a replayed
     * micro-batch rewrites its own partition (the
-    * [[graft.ops.Indexes.tombstoneLshIndexIdempotent]] contract; one
-    * store uses ONE tombstone channel, never both). */
+    * [[graft.ops.Stores.tombstone]] contract; one store uses ONE
+    * tombstone channel, never both). */
   def tombstoneInvertedIndexIdempotent(spark: SparkSession, indexPath: String,
                                        docIds: DataFrame, batchId: Long): Unit =
-    invTombstoneRows(spark, indexPath, docIds)
-      .withColumn("batch_id", lit(batchId)).coalesce(1)
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(invTombstonePath(indexPath))
+    Stores.writeTombstones(Stores.sidecarOf(indexPath),
+      invTombstoneRows(spark, indexPath, docIds), Some(batchId))
 
   private def invTombstoneRows(spark: SparkSession, indexPath: String,
                                docIds: DataFrame): DataFrame =
@@ -649,29 +632,14 @@ object TextAnalysis {
       .join(docIds.select(col("doc_id")).distinct(), Seq("doc_id"), "left_semi")
       .select(col("doc_id"), col("dl"))
 
-  /** Write-once build-if-missing for the registered query path — the
-    * [[graft.ops.Indexes.ensureMinhashIndex]] lifecycle (fingerprint-
-    * keyed, tmp build + atomic commit, sibling GC). */
+  /** Write-once build-if-missing for the registered query path
+    * ([[Stores.ensure]]); built once `postings/` has committed. */
   def ensureInvertedIndex(spark: SparkSession, docs: DataFrame,
-                          sfDir: String): String = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val base = s"${graft.ops.Indexes.indexRoot}/$tag/" +
-      s"inverted_b${TermBuckets}_${graft.ops.Indexes.corpusFingerprint(docs)}"
-    val mdir = graft.ops.Indexes.familyManifestDir(sfDir,
-      s"inverted_b${TermBuckets}_")
-    if (!graft.ops.Indexes.manifestServes(spark, mdir, base) &&
-        !graft.ops.Indexes.successExists(spark, s"$base/postings")) {
-      val tmp = graft.ops.Indexes.tmpBuildPath(base)
+                          sfDir: String): String =
+    Stores.ensure(spark, sfDir, s"inverted_b${TermBuckets}_",
+        Indexes.corpusFingerprint(docs), committed = Seq("postings")) { tmp =>
       writeInvertedIndex(docs, tmp)
-      graft.ops.Indexes.commitIndexDir(spark, tmp, base)
-      // flip before the sweep (see graft.ops.Indexes.gcSiblings pass 0)
-      graft.ops.Indexes.resolveThroughManifest(spark, mdir, base)
-      graft.ops.Indexes.gcSiblings(spark, base, s"inverted_b${TermBuckets}_")
     }
-    // resolve through the family manifest — the generation-manifest
-    // reader contract ([[graft.ops.Indexes.resolveThroughManifest]])
-    graft.ops.Indexes.resolveThroughManifest(spark, mdir, base)
-  }
 
   /** The ONE fixed-point BM25 contribution expression all scoring paths
     * share (review catch: three verbatim copies enforced the bit-identity
@@ -702,8 +670,7 @@ object TextAnalysis {
     * answer identically pre/post (spec-asserted). Write-once: `dest` is
     * a new generation committed atomically. */
   def compactInvertedIndex(spark: SparkSession, src: String,
-                           dest: String): Unit = {
-    val tmp = graft.ops.Indexes.tmpBuildPath(dest)
+                           dest: String): Unit = Stores.compact(spark, dest) { tmp =>
     val ts = invertedTombstones(spark, src)
     def fold(df: DataFrame): DataFrame =
       ts.fold(df)(t => df.join(t.select(col("doc_id")), Seq("doc_id"), "left_anti"))
@@ -718,7 +685,6 @@ object TextAnalysis {
     // written (read-back, not recompute), so every derived store agrees
     // with the surviving corpus exactly
     writeDerivedStores(spark, tmp, 0L, dynamic = false)
-    graft.ops.Indexes.commitIndexDir(spark, tmp, dest)
   }
 
   /** BM25 top-`k` served from the inverted index — ZERO corpus scans:
@@ -1387,35 +1353,21 @@ object TextAnalysis {
     * time (see [[fuzzyTerms]]'s tombstonesFrom), so compaction here is
     * layout maintenance only; probes answer identically pre/post. */
   def compactFuzzyTermIndex(spark: SparkSession, src: String,
-                            dest: String): Unit = {
-    val tmp = graft.ops.Indexes.tmpBuildPath(dest)
+                            dest: String): Unit = Stores.compact(spark, dest) { tmp =>
     graft.engine.Tables.parquetCached(spark, src)
       .repartition(col("vb"))
       .sortWithinPartitions(col("variant"), col("term"))
       .write.mode("overwrite").partitionBy("vb").parquet(tmp)
-    graft.ops.Indexes.commitIndexDir(spark, tmp, dest)
   }
 
   /** Write-once build-if-missing for the registered query path (the
     * [[ensureInvertedIndex]] lifecycle). */
   def ensureFuzzyTermIndex(spark: SparkSession, docs: DataFrame,
-                           sfDir: String): String = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val base = s"${graft.ops.Indexes.indexRoot}/$tag/" +
-      s"fuzzy_b${TermBuckets}_${graft.ops.Indexes.corpusFingerprint(docs)}"
-    val mdir = graft.ops.Indexes.familyManifestDir(sfDir,
-      s"fuzzy_b${TermBuckets}_")
-    if (!graft.ops.Indexes.manifestServes(spark, mdir, base) &&
-        !graft.ops.Indexes.successExists(spark, base)) {
-      val tmp = graft.ops.Indexes.tmpBuildPath(base)
+                           sfDir: String): String =
+    Stores.ensure(spark, sfDir, s"fuzzy_b${TermBuckets}_",
+        Indexes.corpusFingerprint(docs)) { tmp =>
       writeFuzzyTermIndex(docs, tmp)
-      graft.ops.Indexes.commitIndexDir(spark, tmp, base)
-      // flip before the sweep (see graft.ops.Indexes.gcSiblings pass 0)
-      graft.ops.Indexes.resolveThroughManifest(spark, mdir, base)
-      graft.ops.Indexes.gcSiblings(spark, base, s"fuzzy_b${TermBuckets}_")
     }
-    graft.ops.Indexes.resolveThroughManifest(spark, mdir, base)
-  }
 
   /** Fuzzy term matching served from the deletion-neighborhood index —
     * the "did-you-mean" / typo-tolerant vocabulary lookup a query front

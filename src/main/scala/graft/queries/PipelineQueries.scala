@@ -1146,8 +1146,9 @@ object PipelineQueries {
     * end-to-end (the non-hashable float fold is what [[graft.ops.PageRank]]
     * designs away; see its scaladoc). Edge derivation is bounded per order
     * (≤ lines-per-order² pairs), never a corpus cross join. */
-  /** Committed co-purchase edge store — the index-family lifecycle
-    * (write-once, corpus-fingerprint-keyed, atomic commit): the
+  /** Committed co-purchase edge store — the store lifecycle
+    * ([[graft.ops.Stores.ensure]]: write-once, fingerprint-keyed,
+    * manifest-published, superseded generations swept): the
     * per-order self-join + distinct runs ONCE per corpus generation;
     * every ranking invocation reads the src-clustered edge parquet.
     * Derivation cost is bounded per order (≤ lines² pairs), never a
@@ -1155,19 +1156,13 @@ object PipelineQueries {
   private def ensureCoPurchaseEdges(s: SparkSession, d: String): String = {
     val li = lineitem(s, d).select(col("l_orderkey").as("ok"),
       col("l_partkey").as("pk"))
-    val tag = d.replaceAll("[^A-Za-z0-9._-]", "_")
-    val path = s"${graft.ops.Indexes.indexRoot}/$tag/copurch_" +
-      graft.ops.Indexes.corpusFingerprint(li)
-    if (!graft.ops.Indexes.successExists(s, path)) {
-      val tmp = graft.ops.Indexes.tmpBuildPath(path)
+    graft.ops.Stores.ensure(s, d, "copurch_", graft.ops.Indexes.corpusFingerprint(li)) { tmp =>
       val b = li.select(col("ok"), col("pk").as("pk_b"))
       li.join(b, "ok").where(col("pk") =!= col("pk_b"))
         .select(col("pk").as("src"), col("pk_b").as("dst")).distinct()
         .repartition(col("src")).sortWithinPartitions(col("src"), col("dst"))
         .write.mode("overwrite").parquet(tmp)
-      graft.ops.Indexes.commitIndexDir(s, tmp, path)
     }
-    path
   }
 
   def pagerank(s: SparkSession, d: String): DataFrame = {
@@ -1313,24 +1308,19 @@ object PipelineQueries {
       (col("o_custkey") + 1000000000L).as("src"))
     val li = lineitem(s, d).select(col("l_orderkey").as("ok"),
       col("l_partkey").as("dst"))
-    val tag = d.replaceAll("[^A-Za-z0-9._-]", "_")
     // the committed edges derive from BOTH orders and lineitem (ADVICE
-    // r14): the path concatenates both fingerprints, so a lineitem
-    // regeneration under unchanged orders files rotates the path instead
-    // of serving stale edges — the single-input ensureCoPurchaseEdges
-    // precedent does not carry over to a two-table derivation.
-    val path = s"${graft.ops.Indexes.indexRoot}/$tag/purch_" +
-      graft.ops.Indexes.corpusFingerprint(or) + "_" +
-      graft.ops.Indexes.corpusFingerprint(li)
-    if (!graft.ops.Indexes.successExists(s, path)) {
-      val tmp = graft.ops.Indexes.tmpBuildPath(path)
+    // r14): the generation name concatenates both fingerprints, so a
+    // lineitem regeneration under unchanged orders files rotates the path
+    // instead of serving stale edges — the single-input
+    // ensureCoPurchaseEdges precedent does not carry over to a two-table
+    // derivation.
+    graft.ops.Stores.ensure(s, d, "purch_", graft.ops.Indexes.corpusFingerprint(or) +
+        "_" + graft.ops.Indexes.corpusFingerprint(li)) { tmp =>
       or.join(li, "ok")
         .select(col("src"), col("dst")).distinct()
         .repartition(col("src")).sortWithinPartitions(col("src"), col("dst"))
         .write.mode("overwrite").parquet(tmp)
-      graft.ops.Indexes.commitIndexDir(s, tmp, path)
     }
-    path
   }
 
   def hits(s: SparkSession, d: String): DataFrame = {
@@ -2903,7 +2893,7 @@ object PipelineQueries {
                            (build: String => Unit): String = {
     val fs = demoFs(s, path)
     if (!fs.exists(demoMarker(path))) {
-      for (stale <- Seq(path, s"$path.tombstones", s"${path}_prevgraph"))
+      for (stale <- Seq(path, graft.ops.Stores.sidecarOf(path), s"${path}_prevgraph"))
         fs.delete(new org.apache.hadoop.fs.Path(stale), true)
       build(path)
       fs.create(demoMarker(path), true).close()
@@ -2911,7 +2901,7 @@ object PipelineQueries {
       // permanent demo-state group per fixture generation — the same
       // leak class the run-dir GC closes): aged `family`-prefixed
       // entries reclaim unless they belong to the CURRENT generation
-      // (its own name prefixes its _prevgraph / .tombstones
+      // (its own name prefixes its _prevgraph / delete-sidecar
       // companions). Shares the grace knob + test hook.
       val p = new org.apache.hadoop.fs.Path(path)
       val parent = p.getParent
@@ -2992,7 +2982,7 @@ object PipelineQueries {
         partitionByBucket = false)
       graft.ops.Indexes.knnGraphIndexed(emb, p, j = 3)
         .write.mode("overwrite").parquet(s"${p}_prevgraph")
-      graft.ops.Indexes.tombstoneLshIndex(s, p, deleted)
+      graft.ops.Stores.tombstone(p, deleted, "vec_id")
     }
     graft.ops.Indexes.knnGraphDelete(emb, path, deleted,
         graft.engine.Tables.parquetCached(s, s"${path}_prevgraph"), j = 3)
@@ -5274,8 +5264,8 @@ object PipelineQueries {
     * shape (decode-once, serve-many). */
   def imageNearDups(s: SparkSession, d: String): DataFrame =
     graft.ops.Dedup.hammingNearDups64(
-        graft.ops.Indexes.readImageHashIndex(s,
-          graft.ops.Indexes.ensureImageHashIndex(s, imageFixtureDir)),
+        graft.ops.Stores.live(s,
+          graft.ops.Indexes.ensureImageHashIndex(s, imageFixtureDir), "name"),
         "name", "ahash_hex", maxHamming = 6, bands = 8)
       .select(col("id_a").as("name_a"), col("id_b").as("name_b"),
         col("hamming"))
@@ -5305,8 +5295,8 @@ object PipelineQueries {
     * else within 6. Oracle: the same split brute-forced over the
     * frozen manifest. */
   def imageNearDupsIncr(s: SparkSession, d: String): DataFrame = {
-    val sigs = graft.ops.Indexes.readImageHashIndex(s,
-      graft.ops.Indexes.ensureImageHashIndex(s, imageFixtureDir))
+    val sigs = graft.ops.Stores.live(s,
+      graft.ops.Indexes.ensureImageHashIndex(s, imageFixtureDir), "name")
     graft.ops.Dedup.hammingNearDups64Incr(
         sigs.where(col("name").startsWith("genv_")),
         sigs.where(!col("name").startsWith("genv_")),
@@ -5345,8 +5335,8 @@ object PipelineQueries {
     * manifest's frozen dhash_hex. */
   def imageNearDupsDhash(s: SparkSession, d: String): DataFrame =
     graft.ops.Dedup.hammingNearDups64(
-        graft.ops.Indexes.readImageHashIndex(s,
-          graft.ops.Indexes.ensureImageHashIndex(s, imageFixtureDir)),
+        graft.ops.Stores.live(s,
+          graft.ops.Indexes.ensureImageHashIndex(s, imageFixtureDir), "name"),
         "name", "dhash_hex", maxHamming = 6, bands = 8)
       .select(col("id_a").as("name_a"), col("id_b").as("name_b"),
         col("hamming"))
@@ -5376,8 +5366,8 @@ object PipelineQueries {
     * manifest's analytic rhash_hex. */
   def imageNearDupsRotated(s: SparkSession, d: String): DataFrame =
     graft.ops.Dedup.hammingNearDups64(
-        graft.ops.Indexes.readImageHashIndex(s,
-          graft.ops.Indexes.ensureImageHashIndex(s, imageFixtureDir)),
+        graft.ops.Stores.live(s,
+          graft.ops.Indexes.ensureImageHashIndex(s, imageFixtureDir), "name"),
         "name", "rhash_hex", maxHamming = 6, bands = 8)
       .select(col("id_a").as("name_a"), col("id_b").as("name_b"),
         col("hamming"))
@@ -5414,8 +5404,8 @@ object PipelineQueries {
     * identical 7-term least. */
   def imageNearDupsRotNear(s: SparkSession, d: String): DataFrame =
     graft.ops.Dedup.hammingNearDups64Cross(
-        graft.ops.Indexes.readImageHashIndex(s,
-          graft.ops.Indexes.ensureImageHashIndex(s, imageFixtureDir)),
+        graft.ops.Stores.live(s,
+          graft.ops.Indexes.ensureImageHashIndex(s, imageFixtureDir), "name"),
         "name", "ahash_hex",
         Seq("ahash_hex", "r90_hex", "r180_hex", "r270_hex"),
         maxHamming = 6, bands = 8)
@@ -5456,8 +5446,8 @@ object PipelineQueries {
     * over the manifest's frozen per-rotation hashes with the identical
     * 7-term least. */
   def imageNearDupsRotIncr(s: SparkSession, d: String): DataFrame = {
-    val sigs = graft.ops.Indexes.readImageHashIndex(s,
-      graft.ops.Indexes.ensureImageHashIndex(s, imageFixtureDir))
+    val sigs = graft.ops.Stores.live(s,
+      graft.ops.Indexes.ensureImageHashIndex(s, imageFixtureDir), "name")
     graft.ops.Dedup.hammingNearDups64CrossIncr(
         sigs.where(col("name").startsWith("genv_")),
         sigs.where(!col("name").startsWith("genv_")),
@@ -5503,8 +5493,8 @@ object PipelineQueries {
     * recursive reach CTE — neither the decoder, the banding, nor the
     * pointer jumping is trusted, only reproduced. */
   def imageDupClusters(s: SparkSession, d: String): DataFrame = {
-    val sigs = graft.ops.Indexes.readImageHashIndex(s,
-      graft.ops.Indexes.ensureImageHashIndex(s, imageFixtureDir))
+    val sigs = graft.ops.Stores.live(s,
+      graft.ops.Indexes.ensureImageHashIndex(s, imageFixtureDir), "name")
     val pairs = graft.ops.Dedup.hammingNearDups64(
       sigs, "name", "ahash_hex", maxHamming = 6, bands = 8)
     val ids = sigs.where(length(col("ahash_hex")) === 16)
@@ -5587,8 +5577,7 @@ object PipelineQueries {
   private def storeStreamEquiv(s: SparkSession, fixtureDir: String,
       hashCol: String, deleteDuring: String, deleteDown: String,
       stream: (DataFrame, String, String) =>
-        org.apache.spark.sql.streaming.StreamingQuery,
-      readIndex: (SparkSession, String) => DataFrame): DataFrame = {
+        org.apache.spark.sql.streaming.StreamingQuery): DataFrame = {
     import org.apache.spark.sql.types._
     import s.implicits._
     val landing = java.nio.file.Files.createTempDirectory("sse_l").toString
@@ -5615,7 +5604,7 @@ object PipelineQueries {
     q1.processAllAvailable(); q1.stop()
     land(Seq("delete" -> deleteDown)) // lands while the stream is DOWN
     val q2 = start(); q2.processAllAvailable(); q2.stop()
-    graft.ops.Dedup.hammingNearDups64(readIndex(s, store),
+    graft.ops.Dedup.hammingNearDups64(graft.ops.Stores.live(s, store, "name"),
         "name", hashCol, maxHamming = 6, bands = 8)
       .select(col("id_a").as("name_a"), col("id_b").as("name_b"),
         col("hamming"))
@@ -5625,8 +5614,7 @@ object PipelineQueries {
   def imageStoreStreamEquiv(s: SparkSession, d: String): DataFrame =
     storeStreamEquiv(s, imageFixtureDir, "ahash_hex",
       deleteDuring = "gen_00.png", deleteDown = "genv_01.png",
-      stream = graft.streaming.EventStreams.imageHashCdcStream,
-      readIndex = graft.ops.Indexes.readImageHashIndex)
+      stream = graft.streaming.EventStreams.imageHashCdcStream)
 
   val imageStoreStreamEquivSql: String =
     s"""WITH m AS (SELECT name, ahash_hex
@@ -5650,8 +5638,7 @@ object PipelineQueries {
   def audioStoreStreamEquiv(s: SparkSession, d: String): DataFrame =
     storeStreamEquiv(s, audioFixtureDir, "ehash_hex",
       deleteDuring = "gen_00.wav", deleteDown = "genq_00.wav",
-      stream = graft.streaming.EventStreams.audioHashCdcStream,
-      readIndex = graft.ops.Indexes.readAudioHashIndex)
+      stream = graft.streaming.EventStreams.audioHashCdcStream)
 
 
   val audioStoreStreamEquivSql: String =
@@ -5691,8 +5678,8 @@ object PipelineQueries {
     * serve-many. The oracle never runs a decoder: ground-truth hashes
     * come from the generator formula's analytic manifest. */
   def audioPHash(s: SparkSession, d: String): DataFrame = {
-    val ph = graft.ops.Indexes.readAudioHashIndex(s,
-      graft.ops.Indexes.ensureAudioHashIndex(s, audioFixtureDir))
+    val ph = graft.ops.Stores.live(s,
+      graft.ops.Indexes.ensureAudioHashIndex(s, audioFixtureDir), "name")
     ph.join(ph.groupBy(col("ehash_hex"))
         .agg(min(col("name")).as("dup_rep"), count(lit(1)).as("group_size")),
       Seq("ehash_hex"))
@@ -5720,8 +5707,8 @@ object PipelineQueries {
     * blocking's completeness is hash-verified, not assumed. */
   def audioNearDups(s: SparkSession, d: String): DataFrame =
     graft.ops.Dedup.hammingNearDups64(
-        graft.ops.Indexes.readAudioHashIndex(s,
-          graft.ops.Indexes.ensureAudioHashIndex(s, audioFixtureDir)),
+        graft.ops.Stores.live(s,
+          graft.ops.Indexes.ensureAudioHashIndex(s, audioFixtureDir), "name"),
         "name", "ehash_hex", maxHamming = 6, bands = 8)
       .select(col("id_a").as("name_a"), col("id_b").as("name_b"),
         col("hamming"))
@@ -5756,8 +5743,8 @@ object PipelineQueries {
     * canonical hashes. */
   def audioNearDupsResampled(s: SparkSession, d: String): DataFrame =
     graft.ops.Dedup.hammingNearDups64(
-        graft.ops.Indexes.readAudioHashIndex(s,
-          graft.ops.Indexes.ensureAudioHashIndex(s, audioFixtureDir)),
+        graft.ops.Stores.live(s,
+          graft.ops.Indexes.ensureAudioHashIndex(s, audioFixtureDir), "name"),
         "name", "cehash_hex", maxHamming = 6, bands = 8)
       .select(col("id_a").as("name_a"), col("id_b").as("name_b"),
         col("hamming"))
@@ -5793,8 +5780,8 @@ object PipelineQueries {
     * hash-verified, not assumed. */
   def audioNearDupsXrate(s: SparkSession, d: String): DataFrame =
     graft.ops.Dedup.hammingNearDups64Multi(
-        graft.ops.Indexes.readAudioHashIndex(s,
-          graft.ops.Indexes.ensureAudioHashIndex(s, audioFixtureDir)),
+        graft.ops.Stores.live(s,
+          graft.ops.Indexes.ensureAudioHashIndex(s, audioFixtureDir), "name"),
         "name", Seq("x4k_hex", "x6k_hex"), maxHamming = 6, bands = 8)
       .select(col("id_a").as("name_a"), col("id_b").as("name_b"),
         col("hamming"))
@@ -5838,8 +5825,8 @@ object PipelineQueries {
     * split brute-forced over the frozen manifest with the identical
     * CASE-guarded min. */
   def audioNearDupsXrateIncr(s: SparkSession, d: String): DataFrame = {
-    val sigs = graft.ops.Indexes.readAudioHashIndex(s,
-      graft.ops.Indexes.ensureAudioHashIndex(s, audioFixtureDir))
+    val sigs = graft.ops.Stores.live(s,
+      graft.ops.Indexes.ensureAudioHashIndex(s, audioFixtureDir), "name")
     val isBatch = col("name").startsWith("genx_01") ||
       col("name").startsWith("genxs_01")
     graft.ops.Dedup.hammingNearDups64MultiIncr(
@@ -5874,8 +5861,8 @@ object PipelineQueries {
     * corpus. Oracle: the same split brute-forced over the frozen
     * manifest. */
   def audioNearDupsIncr(s: SparkSession, d: String): DataFrame = {
-    val sigs = graft.ops.Indexes.readAudioHashIndex(s,
-      graft.ops.Indexes.ensureAudioHashIndex(s, audioFixtureDir))
+    val sigs = graft.ops.Stores.live(s,
+      graft.ops.Indexes.ensureAudioHashIndex(s, audioFixtureDir), "name")
     val isBatch = col("name").startsWith("genv_") ||
       col("name").startsWith("genr_") || col("name").startsWith("gene_")
     graft.ops.Dedup.hammingNearDups64Incr(
@@ -5914,8 +5901,8 @@ object PipelineQueries {
     * audio corpus; the oracle closes brute-forced pairs with a
     * recursive reach CTE. */
   def audioDupClusters(s: SparkSession, d: String): DataFrame = {
-    val sigs = graft.ops.Indexes.readAudioHashIndex(s,
-      graft.ops.Indexes.ensureAudioHashIndex(s, audioFixtureDir))
+    val sigs = graft.ops.Stores.live(s,
+      graft.ops.Indexes.ensureAudioHashIndex(s, audioFixtureDir), "name")
     val pairs = graft.ops.Dedup.hammingNearDups64(
       sigs, "name", "ehash_hex", maxHamming = 6, bands = 8)
     val ids = sigs.where(length(col("ehash_hex")) === 16)

@@ -357,7 +357,7 @@ object EventStreams {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark = batch.sparkSession
         val model =
-          if (graft.ops.Indexes.hasParquetFiles(spark, modelStorePath))
+          if (graft.ops.Stores.hasParquetFiles(spark, modelStorePath))
             graft.ops.Indexes.readDsirModel(spark, modelStorePath, buckets)
           else graft.ops.Selection.neutralModel(buckets)
         gateBatch(batch.toDF(), model, buckets, minWeightQ, batchId, outPath)
@@ -370,11 +370,9 @@ object EventStreams {
   private def gateBatch(batch: DataFrame, model: Array[(Long, Double)],
                         buckets: Int, minWeightQ: Long, batchId: Long,
                         outPath: String): Unit =
-    graft.ops.Selection.dsirScoredStateless(batch, model, buckets)
-      .where(col("s") >= minWeightQ)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(outPath)
+    graft.ops.Stores.appendBatch(
+      graft.ops.Selection.dsirScoredStateless(batch, model, buckets)
+        .where(col("s") >= minWeightQ), batchId, outPath)
 
   /** [[dsirModelMaintenanceStream]] with the READER FENCE (r18 VERDICT
     * #4): after each batch's idempotent count append lands, the merged
@@ -460,14 +458,9 @@ object EventStreams {
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.ops.Indexes.minhashNearDupsIncremental(
+        graft.ops.Stores.appendBatch(graft.ops.Indexes.minhashNearDupsIncremental(
             batch.sparkSession, batch.toDF(), setsPath, bandsPath, threshold,
-            cacheBatchSets = false)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outPath)
+            cacheBatchSets = false), batchId, outPath)
       }
       .start()
 
@@ -519,12 +512,8 @@ object EventStreams {
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.ops.LineDedup.cleanDocsAgainst(batch.toDF(), boiler)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outPath)
+        graft.ops.Stores.appendBatch(
+          graft.ops.LineDedup.cleanDocsAgainst(batch.toDF(), boiler), batchId, outPath)
       }
       .start()
   }
@@ -586,9 +575,7 @@ object EventStreams {
           // `return` — a non-local return from a foreachBatch closure
           // throws at stream runtime.
           if (!b.isEmpty) {
-          b.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(embPath)
+          graft.ops.Stores.appendBatch(b, batchId, embPath)
           graft.ops.Indexes.appendLshIndexIdempotent(b, batchId, indexPath,
             bBits, lTables, dim, seed)
           val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -605,11 +592,10 @@ object EventStreams {
             else s.read.parquet(s"$graphPath/gen=${prevGens.max}")
           val embAll = s.read.parquet(embPath)
             .select(col("vec_id"), col("embedding"))
-          graft.ops.Indexes.knnGraphIncremental(embAll, indexPath,
-              b.select(col("vec_id")), prev, j)
-            .withColumn("gen", lit(batchId))
-            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-            .partitionBy("gen").parquet(graphPath)
+          graft.ops.Stores.overwritePartitions(
+            graft.ops.Indexes.knnGraphIncremental(embAll, indexPath,
+              b.select(col("vec_id")), prev, j).withColumn("gen", lit(batchId)),
+            graphPath, "gen")
           gens().filter(_ < batchId - 2).foreach(g =>
             fs.delete(new org.apache.hadoop.fs.Path(s"$graphPath/gen=$g"), true))
           }
@@ -669,7 +655,7 @@ object EventStreams {
       // postings files, not fs.exists (review catch: a dir left by a
       // crashed first append read as "store exists" and let a
       // delete-only batch fall into a missing-doclens read)
-      hasStore = s => graft.ops.Indexes.hasParquetFiles(s,
+      hasStore = s => graft.ops.Stores.hasParquetFiles(s,
         s"$indexPath/postings"),
       append = (adds, bid) =>
         graft.ops.TextAnalysis.appendInvertedIndexIdempotent(adds, bid,
@@ -683,9 +669,9 @@ object EventStreams {
     * review catch: two verbatim copies had already drifted on the
     * store-existence and re-add-guard checks): add/delete split, the
     * same-id/first-batch/re-add contracts, then the two store verbs the
-    * caller binds. Tombstone presence uses [[graft.ops.Indexes
-    * .hasParquetFiles]] so BOTH sidecar channel layouts (flat append
-    * files / batch_id dirs) arm the re-add guard. Guard-not-`return`:
+    * caller binds. The re-add guard reads [[graft.ops.Stores.deleted]],
+    * so BOTH sidecar channel layouts (flat append files / batch_id dirs)
+    * arm it. Guard-not-`return`:
     * a non-local return from a foreachBatch closure throws at stream
     * runtime. */
   private def cdcDocStream(changes: DataFrame, checkpoint: String,
@@ -729,11 +715,8 @@ object EventStreams {
           if (store || hasAdds || hasDels) {
             require(store || hasAdds,
               s"CDC batch $batchId deletes from a store that does not exist yet")
-            val ts = s"$storePath.tombstones"
-            if (hasAdds && graft.ops.Indexes.hasParquetFiles(s, ts)) {
-              val clash = adds.select(col(idCol))
-                .join(s.read.parquet(ts).select(col(idCol)), Seq(idCol),
-                  "left_semi")
+            if (hasAdds) graft.ops.Stores.deleted(s, storePath, idCol).foreach { dead =>
+              val clash = adds.select(col(idCol)).join(dead, Seq(idCol), "left_semi")
               require(clash.isEmpty,
                 s"CDC batch $batchId re-adds tombstoned $idCol(s) " +
                   s"${clash.limit(5).collect().map(_.get(0)).mkString(", ")} — " +
@@ -762,12 +745,11 @@ object EventStreams {
                          checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
     cdcChangeStream(changes, checkpoint, storePath, "name", Seq("content"),
-      hasStore = s => graft.ops.Indexes.hasParquetFiles(s, storePath),
+      hasStore = s => graft.ops.Stores.hasParquetFiles(s, storePath),
       append = (adds, bid) =>
         graft.ops.Indexes.appendImageHashIndexIdempotent(adds, bid, storePath),
       tombstone = (s, dels, bid) =>
-        graft.ops.Indexes.tombstoneImageHashIndexIdempotent(s, storePath,
-          dels, bid))
+        graft.ops.Stores.tombstone(storePath, dels, "name", Some(bid)))
 
   /** CDC-STYLE audio-hash-store maintenance — [[imageHashCdcStream]]'s
     * twin for sound: (op, name, content) change batches, adds DECODE
@@ -784,12 +766,11 @@ object EventStreams {
                          checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
     cdcChangeStream(changes, checkpoint, storePath, "name", Seq("content"),
-      hasStore = s => graft.ops.Indexes.hasParquetFiles(s, storePath),
+      hasStore = s => graft.ops.Stores.hasParquetFiles(s, storePath),
       append = (adds, bid) =>
         graft.ops.Indexes.appendAudioHashIndexIdempotent(adds, bid, storePath),
       tombstone = (s, dels, bid) =>
-        graft.ops.Indexes.tombstoneAudioHashIndexIdempotent(s, storePath,
-          dels, bid))
+        graft.ops.Stores.tombstone(storePath, dels, "name", Some(bid)))
 
   /** CDC-STYLE phrase-store maintenance — [[invertedIndexCdcStream]]'s
     * twin for the positioned-window SERVING store, closing the round-13
@@ -798,8 +779,7 @@ object EventStreams {
     * ([[graft.ops.Indexes.appendPositionedWindowsIdempotent]] — sb outer,
     * so [[graft.ops.TextAnalysis.phraseSearch]]'s static pruning serves
     * a streaming store unchanged), deletes as idempotent doc_id
-    * tombstones ([[graft.ops.Indexes
-    * .tombstonePositionedWindowsIdempotent]]). Every phrase probe then
+    * tombstones ([[graft.ops.Stores.tombstone]]). Every phrase probe then
     * equals one over a from-scratch build on (all adds so far − all
     * deletes so far), spec-asserted per prefix and across a checkpoint
     * restart. Same loud contracts as the inverted CDC twin: add+delete
@@ -812,13 +792,12 @@ object EventStreams {
                                  checkpoint: String, windowN: Int)
       : org.apache.spark.sql.streaming.StreamingQuery =
     cdcDocStream(changes, checkpoint, storePath,
-      hasStore = s => graft.ops.Indexes.hasParquetFiles(s, storePath),
+      hasStore = s => graft.ops.Stores.hasParquetFiles(s, storePath),
       append = (adds, bid) =>
         graft.ops.Indexes.appendPositionedWindowsIdempotent(adds, bid,
           storePath, windowN),
       tombstone = (s, dels, bid) =>
-        graft.ops.Indexes.tombstonePositionedWindowsIdempotent(s, storePath,
-          dels, bid))
+        graft.ops.Stores.tombstone(storePath, dels, "doc_id", Some(bid)))
 
   /** CDC-STYLE kNN-graph maintenance — [[knnGraphMaintenanceStream]]
     * generalized to MIXED change batches: rows are (op, vec_id,
@@ -826,7 +805,7 @@ object EventStreams {
     * the full change-data-capture ingest shape. Per micro-batch: adds
     * land idempotently (embedding store + banded index, batch_id
     * partitions), deletes land as idempotent index tombstones
-    * ([[graft.ops.Indexes.tombstoneLshIndexIdempotent]]), and the graph
+    * ([[graft.ops.Stores.tombstone]] on `vec_id`), and the graph
     * refresh COMPOSES the two maintenance operators — incremental for
     * the adds' changed neighbourhood (its index read folds tombstones,
     * so earlier batches' deleted vectors never resurface as candidates),
@@ -885,14 +864,9 @@ object EventStreams {
           // emits content under fresh ids; the tombstone-collision half is
           // CHECKED here (the sidecar is small), the live-collision half
           // is the documented id-uniqueness contract.
-          if (hasAdds && hasIndex) {
-            val ts = s"$indexPath.tombstones"
-            val tsPath = new org.apache.hadoop.fs.Path(ts)
-            if (fs.exists(tsPath) && fs.globStatus(
-                new org.apache.hadoop.fs.Path(tsPath, "*/*.parquet")).nonEmpty) {
-              val clash = adds.select(col("vec_id"))
-                .join(s.read.parquet(ts).select(col("vec_id")), Seq("vec_id"),
-                  "left_semi")
+          if (hasAdds && hasIndex)
+            graft.ops.Stores.deleted(s, indexPath, "vec_id").foreach { dead =>
+              val clash = adds.select(col("vec_id")).join(dead, Seq("vec_id"), "left_semi")
               require(clash.isEmpty,
                 s"CDC batch $batchId re-adds tombstoned vec_id(s) " +
                   s"${clash.limit(5).as[Long].collect().mkString(", ")} — " +
@@ -900,15 +874,12 @@ object EventStreams {
                   "under a fresh id, or compact the store to retire the " +
                   "tombstones first")
             }
-          }
           if (hasAdds) {
-            adds.withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id").parquet(embPath)
+            graft.ops.Stores.appendBatch(adds, batchId, embPath)
             graft.ops.Indexes.appendLshIndexIdempotent(adds, batchId, indexPath,
               bBits, lTables, dim, seed)
           }
-          graft.ops.Indexes.tombstoneLshIndexIdempotent(s, indexPath, dels, batchId)
+          graft.ops.Stores.tombstone(indexPath, dels, "vec_id", Some(batchId))
           val gfs = org.apache.hadoop.fs.FileSystem.get(
             new java.net.URI(graphPath), s.sparkContext.hadoopConfiguration)
           val gPath = new org.apache.hadoop.fs.Path(graphPath)
@@ -925,10 +896,9 @@ object EventStreams {
             .select(col("vec_id"), col("embedding"))
           val afterAdds = graft.ops.Indexes.knnGraphIncremental(embAll,
             indexPath, adds.select(col("vec_id")), prev, j)
-          graft.ops.Indexes.knnGraphDelete(embAll, indexPath, dels, afterAdds, j)
-            .withColumn("gen", lit(batchId))
-            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-            .partitionBy("gen").parquet(graphPath)
+          graft.ops.Stores.overwritePartitions(
+            graft.ops.Indexes.knnGraphDelete(embAll, indexPath, dels, afterAdds, j)
+              .withColumn("gen", lit(batchId)), graphPath, "gen")
           gens().filter(_ < batchId - 2).foreach(g =>
             gfs.delete(new org.apache.hadoop.fs.Path(s"$graphPath/gen=$g"), true))
           }

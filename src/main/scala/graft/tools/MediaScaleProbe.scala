@@ -131,8 +131,8 @@ object MediaScaleProbe {
         results += ((label, n, time3(() => body())))
         println(s"  $label n=$n pairs=${body()}")
       }
-      val imgSigs = graft.ops.Indexes.readImageHashIndex(spark, imgIdx)
-      val audSigs = graft.ops.Indexes.readAudioHashIndex(spark, audIdx)
+      val imgSigs = graft.ops.Stores.live(spark, imgIdx, "name")
+      val audSigs = graft.ops.Stores.live(spark, audIdx, "name")
       probe("image_near_dups", () => graft.ops.Dedup.hammingNearDups64(
         imgSigs, "name", "ahash_hex", 6, 8).count())
       probe("image_near_dups_incr", () => graft.ops.Dedup.hammingNearDups64Incr(

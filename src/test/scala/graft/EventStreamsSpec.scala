@@ -1026,7 +1026,7 @@ class EventStreamsSpec extends AnyFunSuite {
       val want = graft.ops.Multimodal.imagePHashesNamed(
           live.toSeq.sorted.map(n => (n, fixture(n))).toDF("name", "content"))
         .toDF().collect().map(r => r.getString(0) -> r.getString(3)).toSet
-      val got = graft.ops.Indexes.readImageHashIndex(spark, store)
+      val got = graft.ops.Stores.live(spark, store, "name")
         .collect().map(r => r.getString(0) -> r.getString(3)).toSet
       assert(got === want, clue)
       // the near-dup probe over the maintained store equals the rebuild
@@ -1036,7 +1036,7 @@ class EventStreamsSpec extends AnyFunSuite {
           "name", "ahash_hex", 6, 8)
         .collect().map(r => (r.getString(0), r.getString(1))).toSet
       val pg = graft.ops.Dedup.hammingNearDups64(
-          graft.ops.Indexes.readImageHashIndex(spark, store),
+          graft.ops.Stores.live(spark, store, "name"),
           "name", "ahash_hex", 6, 8)
         .collect().map(r => (r.getString(0), r.getString(1))).toSet
       assert(pg === pw, s"$clue (pairs)")
@@ -1092,7 +1092,7 @@ class EventStreamsSpec extends AnyFunSuite {
       val want = graft.ops.Multimodal.audioPHashesNamed(
           live.toSeq.sorted.map(n => (n, fixture(n))).toDF("name", "content"))
         .toDF().collect().map(r => r.getString(0) -> r.getString(3)).toSet
-      val got = graft.ops.Indexes.readAudioHashIndex(spark, store)
+      val got = graft.ops.Stores.live(spark, store, "name")
         .collect().map(r => r.getString(0) -> r.getString(3)).toSet
       assert(got === want, clue)
       // the near-dup probe over the maintained store equals the rebuild
@@ -1102,7 +1102,7 @@ class EventStreamsSpec extends AnyFunSuite {
           "name", "ehash_hex", 6, 8)
         .collect().map(r => (r.getString(0), r.getString(1))).toSet
       val pg = graft.ops.Dedup.hammingNearDups64(
-          graft.ops.Indexes.readAudioHashIndex(spark, store),
+          graft.ops.Stores.live(spark, store, "name"),
           "name", "ehash_hex", 6, 8)
         .collect().map(r => (r.getString(0), r.getString(1))).toSet
       assert(pg === pw, s"$clue (pairs)")

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Indexes
 
-/** The index-generation GC (Indexes.gcSiblings) had a purpose-built test
+/** The index-generation GC (Stores.gcSiblings) had a purpose-built test
   * hook (`gcGraceMs`) but no spec driving it — the mark-then-sweep contract
   * was documentation only. Asserted here on a throwaway index root tag:
   * a superseded generation and an orphaned crashed-build tmp dir older than
@@ -77,8 +77,8 @@ class IndexGcSpec extends AnyFunSuite {
     val p1 = Indexes.ensureLshIndex(spark, writeCorpus(s"$base/data", 0),
       sfTag, bBits = 3, lTables = 2, dim = 8, partitionByBucket = false)
     // tombstone the LIVE generation, then age the sidecar past the grace
-    Indexes.tombstoneLshIndex(spark, p1,
-      spark.range(0, 4).selectExpr("id as vec_id"))
+    graft.ops.Stores.tombstone(p1,
+      spark.range(0, 4).selectExpr("id as vec_id"), "vec_id")
     val sidecar = Paths.get(s"$p1.tombstones")
     assert(Files.exists(sidecar))
     val old = FileTime.fromMillis(System.currentTimeMillis() - 3600 * 1000L)

@@ -319,12 +319,12 @@ class IndexesSpec extends AnyFunSuite {
     val stable = spark.read.parquet(s"$dir/embeddings.parquet")
     val dest = s"$dir/idx_${Indexes.corpusFingerprint(stable)}"
     // two sessions interleave: both observed `dest` missing, both built
-    val tmpA = Indexes.tmpBuildPath(dest)
-    val tmpB = Indexes.tmpBuildPath(dest)
+    val tmpA = graft.ops.Stores.tmpBuildPath(dest)
+    val tmpB = graft.ops.Stores.tmpBuildPath(dest)
     Indexes.writeLshIndex(stable, tmpA)
     Indexes.writeLshIndex(stable, tmpB)
-    Indexes.commitIndexDir(spark, tmpA, dest) // A wins
-    Indexes.commitIndexDir(spark, tmpB, dest) // B loses, discards its tmp
+    graft.ops.Stores.commitIndexDir(spark, tmpA, dest) // A wins
+    graft.ops.Stores.commitIndexDir(spark, tmpB, dest) // B loses, discards its tmp
     assert(new java.io.File(dest, "_SUCCESS").exists())
     assert(!new java.io.File(tmpA).exists() && !new java.io.File(tmpB).exists(),
       "loser tmp must be discarded")
@@ -598,10 +598,10 @@ class IndexesSpec extends AnyFunSuite {
     val del = emb.where(col("vec_id") % 3 === 0).select(col("vec_id"))
     val delIds = del.as[Long].collect().toSet
     // two batches through the sidecar (append-mode accumulation)
-    Indexes.tombstoneLshIndex(spark, path,
-      del.where(col("vec_id") % 2 === 0))
-    Indexes.tombstoneLshIndex(spark, path,
-      del.where(col("vec_id") % 2 === 1))
+    graft.ops.Stores.tombstone(path,
+      del.where(col("vec_id") % 2 === 0), "vec_id")
+    graft.ops.Stores.tombstone(path,
+      del.where(col("vec_id") % 2 === 1), "vec_id")
     val visible = Indexes.readLshIndex(spark, path)
       .select(col("vec_id")).distinct().as[Long].collect().toSet
     assert(visible.intersect(delIds).isEmpty, "tombstoned ids still visible")
@@ -635,7 +635,7 @@ class IndexesSpec extends AnyFunSuite {
     // IVF inverted lists
     val ivf = Files.createTempDirectory("uni_ivf").toString + "/idx"
     Indexes.writeIvfIndex(emb, cent, ivf)
-    Indexes.tombstoneLshIndex(spark, ivf, del)
+    graft.ops.Stores.tombstone(ivf, del, "vec_id")
     val gotIvf = Indexes.ivfTopKIndexed(emb, cent, ivf, 7L, 10, nProbe = 4)
       .as[(Long, Double)].collect().toSeq
     val rbIvf = Files.createTempDirectory("uni_ivf_rb").toString + "/idx"
@@ -652,7 +652,7 @@ class IndexesSpec extends AnyFunSuite {
     // IVF-PQ code lists share the sidecar convention
     val pq = Files.createTempDirectory("uni_pq").toString + "/idx"
     Indexes.writeIvfPqIndex(emb, cent, cbs, pq)
-    Indexes.tombstoneLshIndex(spark, pq, del)
+    graft.ops.Stores.tombstone(pq, del, "vec_id")
     val gotPq = Indexes.ivfPqTopKIndexed(emb, cent, cbs, pq, 7L, 10,
       nProbe = 4, rerank = 32).as[(Long, Double)].collect().toSeq
     assert(gotPq.nonEmpty && gotPq.forall { case (id, _) => !delIds(id) },
@@ -667,7 +667,7 @@ class IndexesSpec extends AnyFunSuite {
     // LSH point probe (the original family) through the same verb
     val lsh = Files.createTempDirectory("uni_lsh").toString + "/idx"
     Indexes.writeLshIndex(emb, lsh)
-    Indexes.tombstoneLshIndex(spark, lsh, del)
+    graft.ops.Stores.tombstone(lsh, del, "vec_id")
     val gotLsh = Indexes.lshTopKIndexed(emb, lsh, 7L, 10)
       .as[(Long, Double)].collect().toSeq
     assert(gotLsh.nonEmpty && gotLsh.forall { case (id, _) => !delIds(id) })
@@ -707,7 +707,7 @@ class IndexesSpec extends AnyFunSuite {
     Indexes.appendLshIndexIdempotent(emb.where(col("vec_id") % 2 === 0), 0L, grown)
     Indexes.appendLshIndexIdempotent(emb.where(col("vec_id") % 2 === 1), 1L, grown)
     val del = emb.where(col("vec_id") % 5 === 0).select(col("vec_id"))
-    Indexes.tombstoneLshIndex(spark, grown, del)
+    graft.ops.Stores.tombstone(grown, del, "vec_id")
     val compacted = Files.createTempDirectory("flat_compact_dst").toString + "/idx"
     Indexes.compactLshIndex(spark, grown, compacted)
     val out = spark.read.parquet(compacted)
@@ -918,8 +918,8 @@ class IndexesSpec extends AnyFunSuite {
     // tombstone docs 1 and 3 (replayed: the fold dedups) — probe must
     // equal a store built without them
     val del = Seq(1L, 3L).toDF("doc_id")
-    Indexes.tombstonePositionedWindows(spark, srv, del)
-    Indexes.tombstonePositionedWindows(spark, srv, del)
+    graft.ops.Stores.tombstone(srv, del, "doc_id")
+    graft.ops.Stores.tombstone(srv, del, "doc_id")
     val got = TextAnalysis.phraseSearch(spark, srv, Seq("a", "b", "c"), 2)
       .as[(Long, Long, Int)].collect().toSeq
     assert(got === before.filter(r => r._1 == 0L || r._1 == 2L),
@@ -943,8 +943,8 @@ class IndexesSpec extends AnyFunSuite {
       .select(col("doc_id"), col("pos"), col("s"))
       .withColumn("sb", shiftright(col("s"), 48 - Indexes.PosWinDirBits))
       .write.mode("overwrite").partitionBy("sb").parquet(srv2)
-    Indexes.tombstonePositionedWindowsIdempotent(spark, srv2, del, 5L)
-    Indexes.tombstonePositionedWindowsIdempotent(spark, srv2, del, 5L)
+    graft.ops.Stores.tombstone(srv2, del, "doc_id", Some(5L))
+    graft.ops.Stores.tombstone(srv2, del, "doc_id", Some(5L))
     val gotS = TextAnalysis.phraseSearch(spark, srv2, Seq("a", "b", "c"), 2)
       .as[(Long, Long, Int)].collect().toSeq
     assert(gotS === got)
@@ -1045,7 +1045,7 @@ class IndexesSpec extends AnyFunSuite {
     // simhash — the fourth family on the same lifecycle (doc-keyed sigs)
     val sh = Files.createTempDirectory("sh_tomb").toString + "/idx"
     graft.ops.Dedup.simhash(docs).write.mode("overwrite").parquet(sh)
-    Indexes.tombstoneSimhashIndex(spark, sh, del)
+    graft.ops.Stores.tombstone(sh, del, "doc_id")
     val gotSh = Indexes.simhashNearDupsIndexed(spark, sh)
       .select(col("doc_a"), col("doc_b")).as[(Long, Long)].collect().toSet
     val shRb = Files.createTempDirectory("sh_tomb_rb").toString + "/idx"
@@ -1289,5 +1289,109 @@ class IndexesSpec extends AnyFunSuite {
     assert(!plan.contains("Generate"), "probe plan re-buckets via explode")
     val dots = "graft_dot".r.findAllIn(plan).size
     assert(dots <= 6, s"probe plan has $dots graft_dot calls — bucketing leaked in:\n$plan")
+  }
+
+  test("compaction policy: every recognised layout compacts to its folded rows") {
+    import graft.ops.{Dedup, Decontamination, Stores, TextAnalysis}
+    val docs = graft.engine.Tables.documents(spark, sf).limit(60)
+    val cent = spark.read.parquet(graft.queries.PipelineQueries.ivfCentroidsPath)
+    val cb = spark.read.parquet(graft.queries.PipelineQueries.pqCodebooksPath)
+    def tmp(tag: String) = Files.createTempDirectory(s"layout_$tag").toString + "/idx"
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+      val cols = df.columns.filterNot(_ == "batch_id").sorted
+      df.select(cols.map(col).toSeq: _*).collect().map(_.toString).toSeq.sorted
+    }
+    val delVec = emb.where(col("vec_id") % 5 === 0).select(col("vec_id"))
+    val delDoc = docs.where(col("doc_id") % 5 === 0).select(col("doc_id"))
+    def flatDocStore(df: org.apache.spark.sql.DataFrame)(p: String): Unit =
+      df.write.mode("overwrite").parquet(p)
+    def knnGraphRead(p: String) = {
+      val raw = spark.read.parquet(p)
+      Stores.deleted(spark, p, "vec_id").fold(raw)(del => raw
+        .join(del.withColumnRenamed("vec_id", "vec_a"), Seq("vec_a"), "left_anti")
+        .join(del.withColumnRenamed("vec_id", "vec_b"), Seq("vec_b"), "left_anti"))
+    }
+    def minhashRead(p: String) =
+      rows(Indexes.readMinhashTable(spark, s"$p/sets")) ++
+        rows(Indexes.readMinhashTable(spark, s"$p/bands"))
+    def invertedRead(p: String) = {
+      val post = spark.read.parquet(s"$p/postings")
+      rows(TextAnalysis.invertedTombstones(spark, p).fold(post)(t =>
+        post.join(t.select(col("doc_id")), Seq("doc_id"), "left_anti")))
+    }
+    // (layout, build a small store, tombstone a few keys, folded rows)
+    val table: Seq[(String, String => Unit, String => Unit, String => Seq[String])] = Seq(
+      ("lsh bucketed", Indexes.writeLshIndex(emb, _),
+        Stores.tombstone(_, delVec, "vec_id"), p => rows(Indexes.readLshIndex(spark, p))),
+      ("lsh flat", Indexes.writeLshIndex(emb, _, partitionByBucket = false),
+        Stores.tombstone(_, delVec, "vec_id"), p => rows(Indexes.readLshIndex(spark, p))),
+      ("lsh streaming", p => (0 until 2).foreach(i => Indexes.appendLshIndexIdempotent(
+          emb.where(col("vec_id") % 2 === i), i.toLong, p)),
+        Stores.tombstone(_, delVec, "vec_id", Some(0L)),
+        p => rows(Indexes.readLshIndex(spark, p))),
+      ("ivf cell", Indexes.writeIvfIndex(emb, cent, _),
+        Stores.tombstone(_, delVec, "vec_id"), p => rows(Indexes.readLshIndex(spark, p))),
+      ("ivf-pq cell", Indexes.writeIvfPqIndex(emb, cent, cb, _),
+        Stores.tombstone(_, delVec, "vec_id"), p => rows(Indexes.readLshIndex(spark, p))),
+      ("pq codes", flatDocStore(emb.select(col("vec_id"),
+          (col("vec_id") % 16).cast("int").as("c0"),
+          (col("vec_id") % 7).cast("int").as("c1"))),
+        Stores.tombstone(_, delVec, "vec_id"), p => rows(Indexes.readLshIndex(spark, p))),
+      ("knn graph", flatDocStore(Indexes.knnGraphIndexed(emb, idxPath, 3)),
+        Stores.tombstone(_, delVec, "vec_id"), p => rows(knnGraphRead(p))),
+      ("minhash", p => Indexes.appendMinhashIndex(docs, s"$p/sets", s"$p/bands"),
+        p => Indexes.tombstoneMinhashIndex(spark, s"$p/sets", delDoc), minhashRead),
+      ("inverted", TextAnalysis.writeInvertedIndex(docs, _),
+        TextAnalysis.tombstoneInvertedIndex(spark, _, delDoc), invertedRead),
+      // the fuzzy store carries no sidecar by design (deletes re-derive df
+      // from the inverted index's survivors at probe time)
+      ("fuzzy terms", TextAnalysis.writeFuzzyTermIndex(docs, _), _ => (),
+        p => rows(spark.read.parquet(p))),
+      ("positioned windows serving", p =>
+          Decontamination.positionedWindows(docs, windowN = 2)
+            .select(col("doc_id"), col("pos"), col("s"))
+            .withColumn("sb", shiftright(col("s"), 48 - Indexes.PosWinDirBits))
+            .write.mode("overwrite").partitionBy("sb").parquet(p),
+        Stores.tombstone(_, delDoc, "doc_id"),
+        p => rows(Stores.live(spark, p, "doc_id"))),
+      ("positioned windows streaming",
+        Indexes.appendPositionedWindowsIdempotent(docs, 3L, _, windowN = 2),
+        Stores.tombstone(_, delDoc, "doc_id", Some(3L)),
+        p => rows(Stores.live(spark, p, "doc_id"))),
+      ("positioned windows report",
+        flatDocStore(Decontamination.positionedWindows(docs, windowN = 2)),
+        Stores.tombstone(_, delDoc, "doc_id"),
+        p => rows(Stores.live(spark, p, "doc_id"))),
+      ("simhash", flatDocStore(Dedup.simhash(docs)),
+        Stores.tombstone(_, delDoc, "doc_id"),
+        p => rows(Stores.live(spark, p, "doc_id"))),
+      ("shingle sets", flatDocStore(Dedup.shingleSets(docs, 3)),
+        Stores.tombstone(_, delDoc, "doc_id"),
+        p => rows(Stores.live(spark, p, "doc_id"))),
+      ("window hashes", flatDocStore(Dedup.windowHashes(docs, 4)),
+        Stores.tombstone(_, delDoc, "doc_id"),
+        p => rows(Stores.live(spark, p, "doc_id"))),
+      ("image hashes", flatDocStore(Seq(("a.png", 8, 8, "00ff00ff00ff00ff"),
+          ("b.png", 8, 8, "00ff00ff00ff00fe"), ("c.png", 4, 4, "ffffffff00000000"))
+          .toDF("name", "width", "height", "ahash_hex")),
+        Stores.tombstone(_, Seq("b.png").toDF("name"), "name"),
+        p => rows(Stores.live(spark, p, "name"))),
+      ("audio hashes", flatDocStore(Seq(("a.wav", 1, 800L, "0123456789abcdef"),
+          ("b.wav", 2, 900L, "0123456789abcdee"))
+          .toDF("name", "channels", "n_samples", "ehash_hex")),
+        Stores.tombstone(_, Seq("a.wav").toDF("name"), "name"),
+        p => rows(Stores.live(spark, p, "name"))))
+    table.foreach { case (layout, build, delete, read) =>
+      val src = tmp("src")
+      build(src)
+      delete(src)
+      val want = read(src)
+      val dest = tmp("dst")
+      val d = Indexes.compactionPolicy(spark, src, dest, maxFiles = 0)
+      assert(d.declined.isEmpty, s"$layout: the policy must recognise the layout: $d")
+      assert(d.compacted && d.dest === Some(dest), s"$layout: $d")
+      assert(read(dest) === want,
+        s"$layout: the compacted generation must read the folded source rows")
+    }
   }
 }

@@ -82,7 +82,7 @@ class ManifestWireSpec extends AnyFunSuite {
   test("ensure* resolves through the family manifest; re-ensure flips nothing") {
     val sfDir = "/root/testdata/sf0.001"
     val p1 = TextAnalysis.ensureInvertedIndex(spark, docs, sfDir)
-    val manifest = Indexes.familyManifestDir(sfDir,
+    val manifest = graft.ops.Stores.familyManifestDir(sfDir,
       s"inverted_b${TextAnalysis.TermBuckets}_")
     assert(Indexes.currentGeneration(spark, manifest) === Some(p1),
       "the build path must publish its generation")
@@ -105,7 +105,7 @@ class ManifestWireSpec extends AnyFunSuite {
     // assert on, and out of a previous run's leftover manifest state.
     val sfDir = ManifestWireSpec.flipNamespace
     val p1 = TextAnalysis.ensureInvertedIndex(spark, docs, sfDir)
-    val manifest = Indexes.familyManifestDir(sfDir,
+    val manifest = graft.ops.Stores.familyManifestDir(sfDir,
       s"inverted_b${TextAnalysis.TermBuckets}_")
     val terms = docs
       .select(explode(graft.ops.TextOps.wordsSafe(col("text"))).as("w"))
@@ -229,7 +229,7 @@ class ManifestWireSpec extends AnyFunSuite {
         () => TextAnalysis.ensureFuzzyTermIndex(spark, docs, sfDir), Seq("")))
     fams.foreach { case (name, prefix, ensure, subs) =>
       val p1 = ensure()
-      val manifest = Indexes.familyManifestDir(sfDir, prefix)
+      val manifest = graft.ops.Stores.familyManifestDir(sfDir, prefix)
       assert(Indexes.currentGeneration(spark, manifest) === Some(p1),
         s"$name: ensure must publish its generation")
       val before = content(p1, subs)

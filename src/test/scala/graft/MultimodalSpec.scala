@@ -181,7 +181,7 @@ class MultimodalSpec extends AnyFunSuite {
         java.nio.file.Paths.get(dir, f.getName))
     }
     val p1 = Indexes.ensureImageHashIndex(spark, dir)
-    val stored = Indexes.readImageHashIndex(spark, p1)
+    val stored = graft.ops.Stores.live(spark, p1, "name")
       .collect().map(r => r.getString(0) -> r.getString(3)).toMap
     // store == inline decode (decode-once serving is lossless)
     val inline = graft.ops.Multimodal.imagePHashes(
@@ -189,16 +189,16 @@ class MultimodalSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.getString(3)).toMap
     assert(stored === inline)
     // tombstone one member of a known dup pair → its pairs vanish at read
-    Indexes.tombstoneImageHashIndex(spark, p1,
-      Seq("genv_00.png").toDF("name"))
+    graft.ops.Stores.tombstone(p1,
+      Seq("genv_00.png").toDF("name"), "name")
     val pairs = Dedup.hammingNearDups64(
-        Indexes.readImageHashIndex(spark, p1), "name", "ahash_hex", 6, 8)
+        graft.ops.Stores.live(spark, p1, "name"), "name", "ahash_hex", 6, 8)
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(pairs.nonEmpty)
     assert(!pairs.exists(p => p._1 == "genv_00.png" || p._2 == "genv_00.png"),
       "a tombstoned image must not candidate for pairs")
     // the policy recognizes the layout and compacts the delete physically
-    val manifest = Indexes.familyManifestDir(dir, "imghash_")
+    val manifest = graft.ops.Stores.familyManifestDir(dir, "imghash_")
     val dest = java.nio.file.Files
       .createTempDirectory("imghash_spec_c").toString + "/c0"
     val d = Indexes.compactionPolicy(spark, p1, dest, maxFiles = 0,
@@ -613,7 +613,7 @@ class MultimodalSpec extends AnyFunSuite {
         java.nio.file.Paths.get(dir, f.getName))
     }
     val p1 = Indexes.ensureAudioHashIndex(spark, dir)
-    val stored = Indexes.readAudioHashIndex(spark, p1)
+    val stored = graft.ops.Stores.live(spark, p1, "name")
       .collect().map(r => r.getString(0) -> r.getString(3)).toMap
     // store == inline decode (decode-once serving is lossless)
     val inline = Multimodal.audioPHashes(
@@ -621,16 +621,16 @@ class MultimodalSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.getString(3)).toMap
     assert(stored === inline)
     // tombstone one member of a known dup pair → its pairs vanish at read
-    Indexes.tombstoneAudioHashIndex(spark, p1,
-      Seq("genv_00.wav").toDF("name"))
+    graft.ops.Stores.tombstone(p1,
+      Seq("genv_00.wav").toDF("name"), "name")
     val pairs = Dedup.hammingNearDups64(
-        Indexes.readAudioHashIndex(spark, p1), "name", "ehash_hex", 6, 8)
+        graft.ops.Stores.live(spark, p1, "name"), "name", "ehash_hex", 6, 8)
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(pairs.nonEmpty)
     assert(!pairs.exists(p => p._1 == "genv_00.wav" || p._2 == "genv_00.wav"),
       "a tombstoned recording must not candidate for pairs")
     // the policy recognizes the layout and compacts the delete physically
-    val manifest = Indexes.familyManifestDir(dir, "audhash_")
+    val manifest = graft.ops.Stores.familyManifestDir(dir, "audhash_")
     val dest = java.nio.file.Files
       .createTempDirectory("audhash_spec_c").toString + "/c0"
     val d = Indexes.compactionPolicy(spark, p1, dest, maxFiles = 0,

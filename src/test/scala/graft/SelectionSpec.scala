@@ -417,7 +417,7 @@ class SelectionSpec extends AnyFunSuite {
     // CURRENT generation → kept; the orphan is unreferenced and aged →
     // reclaimed; the mutable store is untouchable by construction
     graft.ops.Indexes.withGcGrace(0L) {
-      graft.ops.Indexes.retireDsirSnapshots(spark, p7, m7)
+      graft.ops.Indexes.retireStoreSnapshots(spark, p7, m7)
       val live = new java.io.File(s"$p7.gen").listFiles()
         .filter(_.isDirectory).map(_.getName).toSet
       assert(!live.exists(n => g0.exists(_.endsWith(n))),
