@@ -10,9 +10,9 @@ import java.nio.file.{Files, Paths}
   *     non-zero exit instead of recording a fake "fast" timing;
   *   - the JSON line is written to `bench_result.json` in the CWD as well as
   *     stdout, so the driver's parse cannot lose it in sbt log noise;
-  *   - documented-quadratic verification baselines (q_jaccard_all_pairs —
-  *     kept only to validate the LSH paths against exact answers) are
-  *     excluded from the timed set and listed in the `excluded` field.
+  *   - registry rows marked `timed = false` (exact verification baselines
+  *     and streaming-lifecycle checks; each row says why) are excluded from
+  *     the timed set and listed in the `excluded` field.
   *
   * SELF-ADJUDICATION (round 7, VERDICT r6 §wrong 1): a single min-of-3
   * number per query could not distinguish "plan regressed" from "suite/
@@ -98,42 +98,6 @@ object Bench {
       s"(inherited ${haveMb}m is outside the bench spec)")
     sys.exit(pb.start().waitFor())
   }
-  /** Exact-answer baselines that exist to verify the scalable paths; timing
-    * them tells you nothing about the engine's 100 TB design.
-    * q_semantic_dedup_recall joined the set in round 10: it is a recall
-    * AUDIT whose truth side is the brute-force all-pairs cosine join — the
-    * same quadratic-verification class as q_jaccard_all_pairs. Both stay
-    * under the per-round correctness gate; they are only untimed.
-    * The two *_store_stream_equiv rows (r17) are STREAMING-LIFECYCLE
-    * assertions: each invocation stages a landing zone, runs a
-    * checkpointed CDC stream twice (with a restart between), and probes
-    * a few dozen fixture rows — the time measured is Structured
-    * Streaming start/stop machinery on a 26-file fixture, not an
-    * operator's data path (the data path, hammingNearDups64 over the
-    * committed store, is timed by q_image_near_dups/q_audio_near_dups).
-    * They stay under the per-round correctness gate; only untimed.
-    * q_attribution_stream_equiv joined the class in the round-17
-    * continuation: it stages a landing zone and runs a checkpointed
-    * stream-stream join start-to-stop per invocation (~7 s of streaming
-    * machinery, measured flat in data volume — the 10% user slice and
-    * the full fixture time identically); its data path is timed by
-    * q_attribution_join / q_attribution_outer.
-    * q_dsir_model_stream_equiv (r18) is the same class for the
-    * maintained DSIR model: landing zone + two checkpointed stream
-    * sessions with a restart + compaction per invocation; its data
-    * paths are timed by q_dsir_weights (scoring) and
-    * q_dsir_weights_store (store serving).
-    * q_dsir_gate_stream_equiv (r19) is the gate-side twin: two landing
-    * zones, a fenced maintenance stream AND a twice-started fenced gate
-    * stream with a restart per invocation — pure streaming machinery on
-    * fixture rows; the gate's data path (the native kernel projection)
-    * is timed by q_dsir_gate / q_dsir_weights_store. */
-  private val excludedBaselines =
-    Set("q_jaccard_all_pairs", "q_semantic_dedup_recall",
-      "q_image_store_stream_equiv", "q_audio_store_stream_equiv",
-      "q_attribution_stream_equiv", "q_dsir_model_stream_equiv",
-      "q_dsir_gate_stream_equiv")
-
   private def syncFs(): Unit =
     try new ProcessBuilder("sync").inheritIO().start().waitFor()
     catch { case _: java.io.IOException => () } // no /bin/sync: skip
@@ -242,6 +206,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     ensureBenchHeap(args)
+    // Dev-only filter (comma-separated names); unset selects every timed query.
+    val ordered0 = SparkEntry.registry.select(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
+      .filter(_.timed).map(q => (q.name, q.body))
+    require(ordered0.nonEmpty, "SPARK_GRAFT_BENCH_ONLY names no timed query")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.engine.Sessions.local(cpus, "graft-bench")
@@ -255,11 +223,6 @@ object Bench {
     // contention-free estimate of the plan's real cost, which is what a
     // cross-round comparison needs.
     val steadyIters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
-    // Dev-only iteration filter (comma-separated names); driver leaves unset.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val ordered0 = SparkEntry.queries.toSeq
-      .filterNot { case (name, _) => excludedBaselines(name) }
-      .filter { case (name, _) => only.forall(_.contains(name)) }
     // Default order is a SEEDED SHUFFLE (VERDICT r10 #6): a fixed forward
     // order correlates late-suite queries with accumulated host drift — the
     // r10 steal concentration landed on the same late queries every round,
@@ -439,7 +402,8 @@ object Bench {
     val cpuJson = jMap(_._4.map(_.cpuMs).mkString("[", ",", "]"))
     val runqJson = jMap(_._4.map(_.runqMs).mkString("[", ",", "]"))
     val orderJson = results.map("\"" + _._1 + "\"").mkString("[", ",", "]")
-    val excl = excludedBaselines.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val excl = SparkEntry.registry.rows.filterNot(_.timed)
+      .map("\"" + _.name + "\"").mkString("[", ",", "]")
     val availJson = countersAvailable.toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
     val total = results.map(_._2).sum

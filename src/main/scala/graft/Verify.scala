@@ -68,12 +68,11 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // Dev-only filter (comma-separated names); unset selects every query.
+    val selected = SparkEntry.registry.select(sys.env.get("SPARK_GRAFT_ONLY"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.engine.Sessions.local(cpus, "graft-verify")
-    // Dev-only iteration filter (comma-separated names); driver leaves unset.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    dumpAll(spark, sfDir, outDir, SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.forall(_.contains(name)) })
+    dumpAll(spark, sfDir, outDir, selected.map(q => (q.name, q.body)))
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -42,19 +41,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * DuckDB — identical for BMP text; the corpus convention (wordsSafe
   * lowercase whitespace words) is ASCII-safe by construction. */
 case class BpeEncode(child: Expression, model: BpeVocabRef)
-    extends UnaryExpression {
+    extends UnaryExpression with NativeKernel {
 
+  override protected def sqlName: String = "graft_bpe"
+  override protected def argTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_bpe requires a string argument, got ${child.dataType.catalogString}")
 
   override def nullSafeEval(s: Any): Any =
     BpeEncode.encode(s.asInstanceOf[UTF8String], model.probe())
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+  override protected def kernelCode(ctx: CodegenContext, ev: ExprCode,
+      inputs: Seq[String]): String = {
     val refName = ctx.addReferenceObj("bpeModel", model,
       classOf[BpeVocabRef].getName)
     // resolve the probe set once per codegen instance (partition init),
@@ -62,13 +59,11 @@ case class BpeEncode(child: Expression, model: BpeVocabRef)
     // but the mutable slot also skips the volatile read in the row loop
     val setVar = ctx.addMutableState("java.util.HashSet", "bpeSet",
       v => s"$v = $refName.probe();")
-    defineCodeGen(ctx, ev, c => s"graft.functions.BpeEncode.encode($c, $setVar)")
+    staticCall(ev, "graft.functions.BpeEncode.encode", inputs.head, setVar)
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
-  override def prettyName: String = "graft_bpe"
 }
 
 object BpeEncode {

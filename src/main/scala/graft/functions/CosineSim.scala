@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -39,20 +38,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * nulls in both interpreted and codegen forms).
   */
 case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with NativeKernel {
 
+  override protected def sqlName: String = "graft_cos"
+  override protected def argTypes: Seq[DataType] = DotProduct.NumericArray
   override def dataType: DataType = DoubleType
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(dt: DataType): Boolean = dt match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_cos requires array<float>/array<double> arguments, got " +
-        s"${left.dataType.catalogString} and ${right.dataType.catalogString}")
-  }
 
   private def isFloat(e: Expression): Boolean =
     e.dataType.asInstanceOf[ArrayType].elementType == FloatType
@@ -78,44 +68,43 @@ case class CosineSim(left: Expression, right: Expression)
     sab / (math.sqrt(saa) * math.sqrt(sbb))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val n = ctx.freshName("n")
-      val sab = ctx.freshName("sab")
-      val saa = ctx.freshName("saa")
-      val sbb = ctx.freshName("sbb")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      val xOk = ctx.freshName("xOk")
-      val yOk = ctx.freshName("yOk")
-      val getX = if (isFloat(left)) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
-      val getY = if (isFloat(right)) s"(double) $b.getFloat($i)" else s"$b.getDouble($i)"
-      s"""
-         |int $na = $a.numElements();
-         |int $nb = $b.numElements();
-         |int $n = java.lang.Math.max($na, $nb);
-         |double $sab = 0.0; double $saa = 0.0; double $sbb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  boolean $xOk = $i < $na && !$a.isNullAt($i);
-         |  boolean $yOk = $i < $nb && !$b.isNullAt($i);
-         |  double $xv = $xOk ? $getX : 0.0;
-         |  double $yv = $yOk ? $getY : 0.0;
-         |  if ($xOk) $saa += $xv * $xv;
-         |  if ($yOk) $sbb += $yv * $yv;
-         |  if ($xOk && $yOk) $sab += $xv * $yv;
-         |}
-         |${ev.value} = $sab / (java.lang.Math.sqrt($saa) * java.lang.Math.sqrt($sbb));
-       """.stripMargin
-    })
+  override protected def kernelCode(ctx: CodegenContext, ev: ExprCode,
+      inputs: Seq[String]): String = {
+    val (a, b) = (inputs(0), inputs(1))
+    val i = ctx.freshName("i")
+    val na = ctx.freshName("na")
+    val nb = ctx.freshName("nb")
+    val n = ctx.freshName("n")
+    val sab = ctx.freshName("sab")
+    val saa = ctx.freshName("saa")
+    val sbb = ctx.freshName("sbb")
+    val xv = ctx.freshName("xv")
+    val yv = ctx.freshName("yv")
+    val xOk = ctx.freshName("xOk")
+    val yOk = ctx.freshName("yOk")
+    val getX = if (isFloat(left)) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
+    val getY = if (isFloat(right)) s"(double) $b.getFloat($i)" else s"$b.getDouble($i)"
+    s"""
+       |int $na = $a.numElements();
+       |int $nb = $b.numElements();
+       |int $n = java.lang.Math.max($na, $nb);
+       |double $sab = 0.0; double $saa = 0.0; double $sbb = 0.0;
+       |for (int $i = 0; $i < $n; $i++) {
+       |  boolean $xOk = $i < $na && !$a.isNullAt($i);
+       |  boolean $yOk = $i < $nb && !$b.isNullAt($i);
+       |  double $xv = $xOk ? $getX : 0.0;
+       |  double $yv = $yOk ? $getY : 0.0;
+       |  if ($xOk) $saa += $xv * $xv;
+       |  if ($yOk) $sbb += $yv * $yv;
+       |  if ($xOk && $yOk) $sab += $xv * $yv;
+       |}
+       |${ev.value} = $sab / (java.lang.Math.sqrt($saa) * java.lang.Math.sqrt($sbb));
+     """.stripMargin
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "graft_cos"
 }
 
 object CosineSim {

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -27,20 +26,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   *     dense; documented, not load-bearing on the fixtures).
   */
 case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with NativeKernel {
 
+  override protected def sqlName: String = "graft_dot"
+  override protected def argTypes: Seq[DataType] = DotProduct.NumericArray
   override def dataType: DataType = DoubleType
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(dt: DataType): Boolean = dt match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_dot requires array<float>/array<double> arguments, got " +
-        s"${left.dataType.catalogString} and ${right.dataType.catalogString}")
-  }
 
   private def isFloat(e: Expression): Boolean =
     e.dataType.asInstanceOf[ArrayType].elementType == FloatType
@@ -63,33 +53,36 @@ case class DotProduct(left: Expression, right: Expression)
     s
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val getX = if (isFloat(left)) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
-      val getY = if (isFloat(right)) s"(double) $b.getFloat($i)" else s"$b.getDouble($i)"
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i) && !$b.isNullAt($i)) {
-         |    $s += $getX * $getY;
-         |  }
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
+  override protected def kernelCode(ctx: CodegenContext, ev: ExprCode,
+      inputs: Seq[String]): String = {
+    val (a, b) = (inputs(0), inputs(1))
+    val i = ctx.freshName("i")
+    val n = ctx.freshName("n")
+    val s = ctx.freshName("s")
+    val getX = if (isFloat(left)) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
+    val getY = if (isFloat(right)) s"(double) $b.getFloat($i)" else s"$b.getDouble($i)"
+    s"""
+       |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
+       |double $s = 0.0;
+       |for (int $i = 0; $i < $n; $i++) {
+       |  if (!$a.isNullAt($i) && !$b.isNullAt($i)) {
+       |    $s += $getX * $getY;
+       |  }
+       |}
+       |${ev.value} = $s;
+     """.stripMargin
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "graft_dot"
 }
 
 object DotProduct {
+  /** array<float> or array<double>, per argument. */
+  private[functions] val NumericArray: Seq[DataType] =
+    Seq(ArrayType(FloatType), ArrayType(DoubleType))
+
   /** Column form — usable on ANY session (no function-registry dependency). */
   def dot(a: Column, b: Column): Column =
     ColumnBridge.column(DotProduct(ColumnBridge.expression(a),

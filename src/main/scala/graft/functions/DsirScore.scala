@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -38,35 +37,25 @@ import org.apache.spark.unsafe.types.UTF8String
   * (DuckDB replays the exploded derivation against this expression's
   * output). */
 case class DsirScore(child: Expression, lr: Array[Double])
-    extends UnaryExpression {
+    extends UnaryExpression with NativeKernel {
 
+  override protected def sqlName: String = "graft_dsir_score"
+  override protected def argTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_dsir_score requires a string argument, got " +
-        child.dataType.catalogString)
 
   override def nullSafeEval(input: Any): Any =
     DsirScore.score(input.asInstanceOf[UTF8String], lr)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lrRef = ctx.addReferenceObj("dsirLr", lr, "double[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.DsirScore.score($c, $lrRef);")
-  }
+  override protected def kernelCode(ctx: CodegenContext, ev: ExprCode,
+      inputs: Seq[String]): String =
+    staticCall(ev, "graft.functions.DsirScore.score", inputs.head,
+      ctx.addReferenceObj("dsirLr", lr, "double[]"))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
-  override def prettyName: String = "graft_dsir_score"
 }
 
 object DsirScore {
-  private val Space = UTF8String.fromString(" ")
-  private val WsPattern = UTF8String.fromString("\\s+")
-
   /** 48-bit md5-prefix bucket of one feature ([[Md5Bucket]] — the
     * shared kernel form of the corpus hash convention). */
   private def bucketOf(f: UTF8String, buckets: Int,
@@ -76,33 +65,27 @@ object DsirScore {
   /** The per-row kernel the generated code calls. */
   def score(text: UTF8String, lr: Array[Double]): Long = {
     val buckets = lr.length
-    val w = text.trim().toLowerCase().split(WsPattern, -1)
+    val w = Md5Bucket.words(text)
     val md = Md5Bucket.md()
     val counts = new Array[Long](buckets)
     var i = 0
     while (i < w.length) {
       counts(bucketOf(w(i), buckets, md)) += 1L
       if (i + 1 < w.length)
-        counts(bucketOf(UTF8String.concat(w(i), Space, w(i + 1)), buckets, md)) += 1L
+        counts(bucketOf(UTF8String.concat(w(i), Md5Bucket.Space, w(i + 1)), buckets, md)) += 1L
       i += 1
     }
     var s = 0L
     var b = 0
     while (b < buckets) {
-      if (counts(b) != 0L)
-        // Catalyst Round's double path, verbatim: shortest-repr BigDecimal,
-        // HALF_UP at scale 0, back through double, truncating long cast
-        s += java.math.BigDecimal.valueOf(counts(b) * lr(b) * 1e6)
-          .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue().toLong
+      // Catalyst Round at scale 0, then the truncating long cast
+      if (counts(b) != 0L) s += Md5Bucket.roundHalfUp(counts(b) * lr(b) * 1e6, 0).toLong
       b += 1
     }
     s
   }
 
   /** Column form; NULL text scores like '' (the wordsSafe convention). */
-  def scoreCol(text: Column, lr: Array[Double]): Column = {
-    import org.apache.spark.sql.functions.{coalesce, lit}
-    ColumnBridge.column(
-      DsirScore(ColumnBridge.expression(coalesce(text, lit(""))), lr))
-  }
+  def scoreCol(text: Column, lr: Array[Double]): Column =
+    ColumnBridge.column(DsirScore(Md5Bucket.textOrEmpty(text), lr))
 }

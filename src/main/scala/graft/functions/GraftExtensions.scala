@@ -17,35 +17,21 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // optimizer rule: the row_number()<=k window-filter idiom becomes a
     // GroupedTopKNode automatically (see graft.plans.RankLimitRewrite)
     ext.injectOptimizerRule(_ => graft.plans.RankLimitRewrite)
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (children: Seq[Expression]) => {
-        if (children.length != 2) {
-          throw new IllegalArgumentException(
-            s"graft_dot requires exactly 2 arguments, got ${children.length}")
-        }
-        DotProduct(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_cos"),
-      new ExpressionInfo(classOf[CosineSim].getName, "graft_cos"),
-      (children: Seq[Expression]) => {
-        if (children.length != 2) {
-          throw new IllegalArgumentException(
-            s"graft_cos requires exactly 2 arguments, got ${children.length}")
-        }
-        CosineSim(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
-      (children: Seq[Expression]) => {
-        if (children.length != 1) {
-          throw new IllegalArgumentException(
-            s"graft_nfc requires exactly 1 argument, got ${children.length}")
-        }
-        NfcNormalize(children.head)
-      }))
+    val kernels: Seq[(String, Class[_], Int, Seq[Expression] => Expression)] = Seq(
+      ("graft_dot", classOf[DotProduct], 2, c => DotProduct(c(0), c(1))),
+      ("graft_cos", classOf[CosineSim], 2, c => CosineSim(c(0), c(1))),
+      ("graft_nfc", classOf[NfcNormalize], 1, c => NfcNormalize(c(0))))
+    kernels.foreach { case (name, cls, arity, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name),
+        (children: Seq[Expression]) => {
+          if (children.length != arity) {
+            val noun = if (arity == 1) "argument" else "arguments"
+            throw new IllegalArgumentException(
+              s"$name requires exactly $arity $noun, got ${children.length}")
+          }
+          build(children)
+        }))
+    }
   }
 }

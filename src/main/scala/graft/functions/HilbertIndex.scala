@@ -2,10 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{DataType, LongType}
 
@@ -27,31 +25,24 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * bijectivity onto [0, 4^bits) and unit-step adjacency — the property
   * Morton lacks and the reason this expression exists. */
 case class HilbertIndex(left: Expression, right: Expression, bits: Int)
-    extends BinaryExpression {
+    extends BinaryExpression with NativeKernel {
 
   require(bits >= 1 && bits <= 31, s"1 <= bits <= 31, got $bits")
 
+  override protected def sqlName: String = "graft_hilbert"
+  override protected def argTypes: Seq[DataType] = Seq(LongType)
   override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == LongType && right.dataType == LongType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_hilbert requires two long arguments, got " +
-        s"${left.dataType.catalogString}, ${right.dataType.catalogString}")
 
   override def nullSafeEval(x: Any, y: Any): Any =
     HilbertIndex.xy2d(1L << bits, x.asInstanceOf[Long], y.asInstanceOf[Long])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) =>
-      s"${ev.value} = graft.functions.HilbertIndex.xy2d(${1L << bits}L, $x, $y);")
+  override protected def kernelCode(ctx: CodegenContext, ev: ExprCode,
+      inputs: Seq[String]): String =
+    staticCall(ev, "graft.functions.HilbertIndex.xy2d", s"${1L << bits}L" +: inputs: _*)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "graft_hilbert"
 }
 
 object HilbertIndex {
@@ -249,22 +240,18 @@ object HilbertIndex {
   * codegen'd kernel call per row (the coordinate array is a per-row
   * scratch buffer the JIT routinely stack-allocates). Inputs MUST already
   * be normalized to [0, 2^bits); output is in [0, 2^(n·bits)), 63-bit
-  * budget enforced at construction. */
+  * budget enforced at construction; any null coordinate gives null. */
 case class HilbertIndexN(children: Seq[Expression], bits: Int)
-    extends Expression {
+    extends Expression with NativeKernel {
 
   require(children.size >= 2, s"need >= 2 dims, got ${children.size}")
   require(bits >= 1 && children.size * bits <= 63,
     s"n*bits must fit 63 bits, got ${children.size} * $bits")
 
+  override protected def sqlName: String = "graft_hilbert_n"
+  override protected def argTypes: Seq[DataType] = Seq(LongType)
   override def dataType: DataType = LongType
   override def nullable: Boolean = children.exists(_.nullable)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (children.forall(_.dataType == LongType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_hilbert_n requires long arguments, got " +
-        children.map(_.dataType.catalogString).mkString(", "))
 
   override def eval(input: InternalRow): Any = {
     val xs = new Array[Long](children.size)
@@ -278,27 +265,12 @@ case class HilbertIndexN(children: Seq[Expression], bits: Int)
     HilbertIndex.axesToIndex(bits, xs)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val gens = children.map(_.genCode(ctx))
-    val arr = ctx.freshName("hilbertCoords")
-    val childCode = gens.map(_.code.toString).mkString("\n")
-    val anyNull = gens.map(_.isNull.toString).mkString(" || ")
-    val assigns = gens.zipWithIndex
-      .map { case (g, i) => s"$arr[$i] = ${g.value};" }.mkString("\n")
-    ev.copy(code = code"""
-      $childCode
-      boolean ${ev.isNull} = false;
-      long ${ev.value} = 0L;
-      if ($anyNull) { ${ev.isNull} = true; } else {
-        long[] $arr = new long[${children.size}];
-        $assigns
-        ${ev.value} = graft.functions.HilbertIndex.axesToIndex($bits, $arr);
-      }""")
-  }
+  override protected def kernelCode(ctx: CodegenContext, ev: ExprCode,
+      inputs: Seq[String]): String =
+    staticCall(ev, "graft.functions.HilbertIndex.axesToIndex", bits.toString,
+      inputs.mkString("new long[] {", ", ", "}"))
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(children = newChildren)
-
-  override def prettyName: String = "graft_hilbert_n"
 }

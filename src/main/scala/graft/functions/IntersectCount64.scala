@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -26,34 +25,22 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * DedupSpec pins it and every registered oracle replays
   * `len(list_intersect(...))` in DuckDB. */
 case class IntersectCount64(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with NativeKernel {
 
+  override protected def sqlName: String = "graft_intersect_count64"
+  override protected def argTypes: Seq[DataType] = Seq(ArrayType(LongType))
   override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def isLongArray(dt: DataType): Boolean = dt match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    if (isLongArray(left.dataType) && isLongArray(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_intersect_count64 requires two array<bigint> arguments, got " +
-        s"${left.dataType.catalogString} and ${right.dataType.catalogString}")
-  }
 
   override def nullSafeEval(a: Any, b: Any): Any =
     IntersectCount64.count(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.IntersectCount64.count($a, $b);")
+  override protected def kernelCode(ctx: CodegenContext, ev: ExprCode,
+      inputs: Seq[String]): String =
+    staticCall(ev, "graft.functions.IntersectCount64.count", inputs: _*)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "graft_intersect_count64"
 }
 
 object IntersectCount64 {

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -43,32 +42,24 @@ import org.apache.spark.unsafe.types.UTF8String
   * q_lang_id_multi's oracle (DuckDB replays the exploded derivation). */
 case class LangIdScore(child: Expression, labels: Array[String],
                        lr: Array[Array[Long]], prior: Array[Long], n: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with NativeKernel {
 
+  override protected def sqlName: String = "graft_langid"
+  override protected def argTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = StringType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_langid requires a string argument, got " +
-        child.dataType.catalogString)
 
   override def nullSafeEval(input: Any): Any =
     LangIdScore.predict(input.asInstanceOf[UTF8String], labels, lr, prior, n)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val labelsRef = ctx.addReferenceObj("langidLabels", labels, "java.lang.String[]")
-    val lrRef = ctx.addReferenceObj("langidLr", lr, "long[][]")
-    val priorRef = ctx.addReferenceObj("langidPrior", prior, "long[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.LangIdScore.predict(" +
-        s"$c, $labelsRef, $lrRef, $priorRef, $n);")
-  }
+  override protected def kernelCode(ctx: CodegenContext, ev: ExprCode,
+      inputs: Seq[String]): String =
+    staticCall(ev, "graft.functions.LangIdScore.predict", inputs.head,
+      ctx.addReferenceObj("langidLabels", labels, "java.lang.String[]"),
+      ctx.addReferenceObj("langidLr", lr, "long[][]"),
+      ctx.addReferenceObj("langidPrior", prior, "long[]"), n.toString)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
-  override def prettyName: String = "graft_langid"
 }
 
 object LangIdScore {
@@ -122,10 +113,7 @@ object LangIdScore {
 
   /** Column form; NULL text predicts like '' (the charGrams coalesce). */
   def predictCol(text: Column, labels: Seq[String], lr: Array[Array[Long]],
-                 prior: Array[Long], n: Int): Column = {
-    import org.apache.spark.sql.functions.{coalesce, lit}
-    ColumnBridge.column(LangIdScore(
-      ColumnBridge.expression(coalesce(text, lit(""))),
+                 prior: Array[Long], n: Int): Column =
+    ColumnBridge.column(LangIdScore(Md5Bucket.textOrEmpty(text),
       labels.toArray, lr, prior, n))
-  }
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -49,40 +48,31 @@ import org.apache.spark.unsafe.types.UTF8String
 case class LmDocScore(child: Expression, n: Int, gram: Array[Long],
                       prefix: Array[Long], depth: Int, width: Int,
                       vocab: Long)
-    extends UnaryExpression {
+    extends UnaryExpression with NativeKernel {
 
+  override protected def sqlName: String = "graft_lm_doc_score"
+  override protected def argTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = StructType(Seq(
     StructField("n_bigrams", LongType, nullable = false),
     StructField("q2_nll", LongType, nullable = false),
     StructField("nll", DoubleType, nullable = false)))
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_lm_doc_score requires a string argument, got " +
-        child.dataType.catalogString)
-
   override def nullSafeEval(input: Any): Any =
     LmDocScore.score(input.asInstanceOf[UTF8String], n, gram, prefix,
       depth, width, vocab)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val gramRef = ctx.addReferenceObj("lmGram", gram, "long[]")
-    val prefRef = ctx.addReferenceObj("lmPrefix", prefix, "long[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.LmDocScore.score($c, $n, $gramRef, " +
-        s"$prefRef, $depth, $width, ${vocab}L);")
-  }
+  override protected def kernelCode(ctx: CodegenContext, ev: ExprCode,
+      inputs: Seq[String]): String =
+    staticCall(ev, "graft.functions.LmDocScore.score", inputs.head, n.toString,
+      ctx.addReferenceObj("lmGram", gram, "long[]"),
+      ctx.addReferenceObj("lmPrefix", prefix, "long[]"),
+      depth.toString, width.toString, s"${vocab}L")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
-  override def prettyName: String = "graft_lm_doc_score"
 }
 
 object LmDocScore {
-  private val Space = UTF8String.fromString(" ")
-  private val WsPattern = UTF8String.fromString("\\s+")
   private val P = graft.ops.Dedup.MinhashP
 
   /** (a, b) hash rows for a given depth — [[graft.ops.Dedup
@@ -109,16 +99,11 @@ object LmDocScore {
     est
   }
 
-  /** 64 − nlz = `length(bin(x))` for positive x (bin of 0 is "0",
-    * length 1 — unreachable here: both arguments are ≥ 1). */
-  private def bitLen(x: Long): Long =
-    64L - java.lang.Long.numberOfLeadingZeros(x)
-
   /** The per-row kernel the generated code calls. */
   def score(text: UTF8String, n: Int, gram: Array[Long],
             prefix: Array[Long], depth: Int, width: Int,
             vocab: Long): InternalRow = {
-    val w = text.trim().toLowerCase().split(WsPattern, -1)
+    val w = Md5Bucket.words(text)
     val ab = consts(depth)
     val md = Md5Bucket.md()
     val positions = if (w.length >= n) w.length - n + 1 else 0
@@ -129,28 +114,23 @@ object LmDocScore {
       // gram = words[i..i+n-1] space-joined; prefix = words[i..i+n-2]
       var g = w(i)
       var k = 1
-      while (k < n - 1) { g = UTF8String.concat(g, Space, w(i + k)); k += 1 }
+      while (k < n - 1) { g = UTF8String.concat(g, Md5Bucket.Space, w(i + k)); k += 1 }
       val pfx = g
-      if (n >= 2) g = UTF8String.concat(g, Space, w(i + n - 1))
+      if (n >= 2) g = UTF8String.concat(g, Md5Bucket.Space, w(i + n - 1))
       val eb = cmsMin(Md5Bucket.h48(md, g.getBytes), gram, ab, width)
       val eu = cmsMin(Md5Bucket.h48(md, pfx.getBytes), prefix, ab, width)
-      q2 += bitLen(eu + vocab) - bitLen(eb + 1L)
+      // both bit-length arguments are >= 1
+      q2 += Md5Bucket.bitLen(eu + vocab) - Md5Bucket.bitLen(eb + 1L)
       nllSum += java.lang.Math.log((eu + vocab).toDouble / (eb + 1L).toDouble)
       i += 1
     }
-    val denom = math.max(positions, 1)
-    // Catalyst Round's double path, verbatim (HALF_UP at scale 6)
-    val nll = java.math.BigDecimal.valueOf(nllSum / denom)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+    val nll = Md5Bucket.roundHalfUp(nllSum / math.max(positions, 1), 6)
     new GenericInternalRow(Array[Any](positions.toLong, q2, nll))
   }
 
   /** Column form over a trained [[graft.ops.LmScore.NgramLm]]; NULL text
     * scores like '' (the wordsSafe convention). */
-  def scoreCol(text: Column, lm: graft.ops.LmScore.NgramLm): Column = {
-    import org.apache.spark.sql.functions.{coalesce, lit}
-    ColumnBridge.column(
-      LmDocScore(ColumnBridge.expression(coalesce(text, lit(""))),
-        lm.n, lm.gram, lm.prefix, lm.depth, lm.width, lm.vocab))
-  }
+  def scoreCol(text: Column, lm: graft.ops.LmScore.NgramLm): Column =
+    ColumnBridge.column(LmDocScore(Md5Bucket.textOrEmpty(text),
+      lm.n, lm.gram, lm.prefix, lm.depth, lm.width, lm.vocab))
 }

@@ -1,10 +1,14 @@
 package graft.functions
 
-/** The corpus-wide 48-bit md5-prefix hash convention as ONE shared
-  * kernel helper (self-review r20 third pass: [[DsirScore]] and
-  * [[LangIdScore]] each carried a private copy of the thread-local
-  * digest and the 6-byte big-endian fold — a drifting surface for the
-  * one constant the whole oracle story rests on).
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.unsafe.types.UTF8String
+
+/** The per-row text steps the text kernels ([[DsirScore]], [[LmDocScore]],
+  * [[NbDocScore]], [[LangIdScore]]) share, each written once: the corpus-wide
+  * 48-bit md5-prefix hash, the whitespace tokenizer, the bit length, the
+  * Catalyst `Round` step and the null-as-empty input.
   *
   * `h48(bytes)` is byte-for-byte the value
   * `conv(substring(md5(s), 1, 12), 16, 10)` yields (the digest's first
@@ -39,4 +43,29 @@ private[functions] object Md5Bucket {
   /** 48-bit md5 prefix of a whole byte array. */
   def h48(md: java.security.MessageDigest, bytes: Array[Byte]): Long =
     h48(md, bytes, 0, bytes.length)
+
+  val Space: UTF8String = UTF8String.fromString(" ")
+  private val WsPattern = UTF8String.fromString("\\s+")
+
+  /** `split(lower(trim(text)), '\\s+')` with the same UTF8String calls
+    * Catalyst evaluates, including the `[""]` result for empty or
+    * whitespace-only text. */
+  def words(text: UTF8String): Array[UTF8String] =
+    text.trim().toLowerCase().split(WsPattern, -1)
+
+  /** `length(bin(x))` for positive x: 64 − nlz. */
+  def bitLen(x: Long): Long = 64L - java.lang.Long.numberOfLeadingZeros(x)
+
+  /** Catalyst `Round`'s double path: shortest-repr BigDecimal, HALF_UP at
+    * `scale`, back to double. */
+  def roundHalfUp(x: Double, scale: Int): Double =
+    java.math.BigDecimal.valueOf(x)
+      .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** A text kernel's input: NULL text reads as '' (the wordsSafe
+    * convention). */
+  def textOrEmpty(text: Column): Expression = {
+    import org.apache.spark.sql.functions.{coalesce, lit}
+    ColumnBridge.expression(coalesce(text, lit("")))
+  }
 }

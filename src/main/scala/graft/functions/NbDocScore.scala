@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -32,49 +31,38 @@ import org.apache.spark.unsafe.types.UTF8String
 case class NbDocScore(child: Expression, pos: Array[Long], neg: Array[Long],
                       posTokens: Long, negTokens: Long,
                       posDocs: Long, negDocs: Long, buckets: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with NativeKernel {
 
+  override protected def sqlName: String = "graft_nb_doc_score"
+  override protected def argTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = StructType(Seq(
     StructField("n_tokens", LongType, nullable = false),
     StructField("q2_odds", LongType, nullable = false),
     StructField("nb_logodds", DoubleType, nullable = false)))
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_nb_doc_score requires a string argument, got " +
-        child.dataType.catalogString)
-
   override def nullSafeEval(input: Any): Any =
     NbDocScore.score(input.asInstanceOf[UTF8String], pos, neg,
       posTokens, negTokens, posDocs, negDocs, buckets)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val posRef = ctx.addReferenceObj("nbPos", pos, "long[]")
-    val negRef = ctx.addReferenceObj("nbNeg", neg, "long[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NbDocScore.score($c, $posRef, " +
-        s"$negRef, ${posTokens}L, ${negTokens}L, ${posDocs}L, " +
-        s"${negDocs}L, $buckets);")
-  }
+  override protected def kernelCode(ctx: CodegenContext, ev: ExprCode,
+      inputs: Seq[String]): String =
+    staticCall(ev, "graft.functions.NbDocScore.score", inputs.head,
+      ctx.addReferenceObj("nbPos", pos, "long[]"),
+      ctx.addReferenceObj("nbNeg", neg, "long[]"),
+      s"${posTokens}L", s"${negTokens}L", s"${posDocs}L", s"${negDocs}L",
+      buckets.toString)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
-  override def prettyName: String = "graft_nb_doc_score"
 }
 
 object NbDocScore {
-  private val WsPattern = UTF8String.fromString("\\s+")
-
-  private def bitLen(x: Long): Long =
-    64L - java.lang.Long.numberOfLeadingZeros(x)
 
   /** The per-row kernel the generated code calls. */
   def score(text: UTF8String, pos: Array[Long], neg: Array[Long],
             posTokens: Long, negTokens: Long, posDocs: Long,
             negDocs: Long, buckets: Int): InternalRow = {
-    val w = text.trim().toLowerCase().split(WsPattern, -1)
+    val w = Md5Bucket.words(text)
     val md = Md5Bucket.md()
     val pt = (posTokens + buckets).toDouble
     val nt = (negTokens + buckets).toDouble
@@ -88,25 +76,18 @@ object NbDocScore {
         val b = (Md5Bucket.h48(md, w(i).getBytes) % buckets).toInt
         val p = pos(b)
         val ng = neg(b)
-        q2 += bitLen(p + 1L) - bitLen(ng + 1L)
+        q2 += Md5Bucket.bitLen(p + 1L) - Md5Bucket.bitLen(ng + 1L)
         acc += java.lang.Math.log((p + 1L).toDouble / pt) -
           java.lang.Math.log((ng + 1L).toDouble / nt)
       }
       i += 1
     }
-    // Catalyst Round's double path, verbatim (HALF_UP at scale 6)
-    val odds = java.math.BigDecimal.valueOf(acc)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-    new GenericInternalRow(Array[Any](n, q2, odds))
+    new GenericInternalRow(Array[Any](n, q2, Md5Bucket.roundHalfUp(acc, 6)))
   }
 
   /** Column form over a trained [[graft.ops.TextClassifier.NbModel]];
     * NULL text scores like '' (the wordsSafe convention). */
-  def scoreCol(text: Column, m: graft.ops.TextClassifier.NbModel): Column = {
-    import org.apache.spark.sql.functions.{coalesce, lit}
-    ColumnBridge.column(
-      NbDocScore(ColumnBridge.expression(coalesce(text, lit(""))),
-        m.pos, m.neg, m.posTokens, m.negTokens, m.posDocs, m.negDocs,
-        m.buckets))
-  }
+  def scoreCol(text: Column, m: graft.ops.TextClassifier.NbModel): Column =
+    ColumnBridge.column(NbDocScore(Md5Bucket.textOrEmpty(text),
+      m.pos, m.neg, m.posTokens, m.negTokens, m.posDocs, m.negDocs, m.buckets))
 }

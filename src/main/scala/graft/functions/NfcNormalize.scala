@@ -3,7 +3,6 @@ package graft.functions
 import java.text.Normalizer
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -28,25 +27,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * Unicode canonical composition, so normalized fingerprints hash-match
   * across engines (NfcNormalizeSpec pins composed == decomposed and the
   * fingerprint collision). */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
+case class NfcNormalize(child: Expression) extends UnaryExpression with NativeKernel {
 
+  override protected def sqlName: String = "graft_nfc"
+  override protected def argTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = StringType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_nfc requires a string argument, got ${child.dataType.catalogString}")
 
   override def nullSafeEval(s: Any): Any =
     NfcNormalize.nfc(s.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.NfcNormalize.nfc($c)")
+  override protected def kernelCode(ctx: CodegenContext, ev: ExprCode,
+      inputs: Seq[String]): String =
+    staticCall(ev, "graft.functions.NfcNormalize.nfc", inputs: _*)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
-  override def prettyName: String = "graft_nfc"
 }
 
 object NfcNormalize {

@@ -56,4 +56,27 @@ class AllQueriesAnalyzeSpec extends AnyFunSuite {
     assert(nulled.isEmpty,
       s"oracle SQL captured a null interpolation (declare it lazy): $nulled")
   }
+
+  test("registry construction rejects a duplicate query name") {
+    val body: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
+      (s, _) => s.emptyDataFrame
+    val e = intercept[IllegalArgumentException](new Registry(Seq(
+      Query("q_a", body, "SELECT 1"), Query("q_b", body, "SELECT 2"),
+      Query("q_a", body, "SELECT 3"))))
+    assert(e.getMessage.contains("q_a") && !e.getMessage.contains("q_b"))
+    // building the registry and reading its bodies evaluates no oracle
+    val lazyOracle = new Registry(Seq(Query("q_a", body, sys.error("oracle evaluated"))))
+    assert(lazyOracle.queries.keySet == Set("q_a"))
+  }
+
+  test("select keeps registry order and fails on names that are not registered") {
+    val r = SparkEntry.registry
+    assert(r.select(None).map(_.name) == SparkEntry.queries.keys.toSeq)
+    val picked = r.select(Some("q_value_counts,q_histogram"))
+    assert(picked.map(_.name) == SparkEntry.queries.keys.toSeq
+      .filter(Set("q_value_counts", "q_histogram")))
+    val e = intercept[IllegalArgumentException](
+      r.select(Some("q_histogram,q_histogrm,q_nope")))
+    assert(e.getMessage.endsWith(": q_histogrm, q_nope"))
+  }
 }
