@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -62,23 +62,46 @@ object Clean {
     * (`analytics_otodom.py:14-51`): sentinel → null on every column, ascii
     * rename, numeric parse fan-out, IEEE ratio, coerced timestamp.
     *
+    * One-projection rule: the layer is three `select`s, never a
+    * `withColumn` chain. One denulls and renames all 29 columns, one adds
+    * the parsed numbers, one adds the ratio and the timestamp. Each
+    * `withColumn` call re-analyzes the whole plan below it and stacks
+    * another Project (Spark's own `withColumn` doc warns against calling
+    * it in a loop): one call per output column would build 37 Projects and
+    * pay for 36 analyses on every query that reads the layer. The ratio
+    * reads the parse projection's output, so each money parse runs once
+    * per row.
+    *
     * The ratio uses `price * pow(area, -1)` deliberately: Spark's `/`
     * nulls on a zero divisor, while pandas doubles follow IEEE — x/0 → Inf
     * and 0/0 → NaN (`analytics_otodom.py:42`, `test.py:25`); `Math.pow`
     * restores that parity and DuckDB `power` matches it. */
-  def clean(raw: DataFrame): DataFrame = {
-    val denulled = rawColumns.foldLeft(raw) { (d, c) =>
-      d.withColumn(c, when(col(c) === Sentinel, lit(null)).otherwise(col(c)))
-    }
-    denulled
-      .withColumnsRenamed(asciiNames)
-      .withColumn("price_num", Parse.parseMoney(col("price")))
-      .withColumn("rent_fee_num", Parse.parseMoney(col("rent_fee")))
-      .withColumn("deposit_num", Parse.parseMoney(col("deposit")))
-      .withColumn("area_num", Parse.parseMoney(col("area")))
-      .withColumn("rooms_num", Parse.parseRooms(col("rooms")))
-      .withColumn("price_per_m2", col("price_num") * pow(col("area_num"), lit(-1.0)))
-      .withColumn("scraped_at", Parse.parseTimestamp(col("scrape_date")))
+  def clean(raw: DataFrame): DataFrame =
+    raw.select(rawColumns.map { c =>
+        when(col(c) === Sentinel, lit(null)).otherwise(col(c)).as(asciiNames(c))
+      }: _*)
+      .select(col("*"),
+        Parse.parseMoney(col("price")).as("price_num"),
+        Parse.parseMoney(col("rent_fee")).as("rent_fee_num"),
+        Parse.parseMoney(col("deposit")).as("deposit_num"),
+        Parse.parseMoney(col("area")).as("area_num"),
+        Parse.parseRooms(col("rooms")).as("rooms_num"))
+      .select(col("*"),
+        (col("price_num") * pow(col("area_num"), lit(-1.0))).as("price_per_m2"),
+        Parse.parseTimestamp(col("scrape_date")).as("scraped_at"))
+
+  /** Filter on columns [[clean]] parsed, evaluated on the parse
+    * projection's output. A plain `where` lets PushPredicateThroughNonJoin
+    * substitute the regex chain into a Filter below the projection, so
+    * every kept row parses twice. The nondeterministic barrier column
+    * stops the rule (the [[graft.ops.LmScore.lmGate]] idiom); its
+    * tautological conjunct never changes the output. Filter on raw columns
+    * with a plain `where` first: those still reach the scan. */
+  def whereParsed(df: DataFrame, cond: Column): DataFrame = {
+    require(!df.columns.contains("__graft_nd"), "input already has column __graft_nd")
+    df.withColumn("__graft_nd", rand(42L))
+      .where(cond && col("__graft_nd") >= 0.0)
+      .drop("__graft_nd")
   }
 
   /** F6/A12 — case-insensitive city slice with the reference's

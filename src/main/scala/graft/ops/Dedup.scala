@@ -331,11 +331,13 @@ object Dedup {
     checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
     val reliable = checkpointDir.isDefined
 
-    def cut[T](rdd: org.apache.spark.rdd.RDD[T]): org.apache.spark.rdd.RDD[T] = {
+    // Eager: materialize (and write the reliable checkpoint) now; the
+    // materializing job's row count is the return value.
+    def cut(rdd: org.apache.spark.rdd.RDD[_]): Long = {
       if (reliable) { rdd.persist(); rdd.checkpoint() } else rdd.localCheckpoint()
-      rdd.count() // eager: materialize (and write the reliable checkpoint) now
+      val n = rdd.count()
       if (reliable) rdd.unpersist(false) // served from checkpoint files from here on
-      rdd
+      n
     }
     def release(rdd: org.apache.spark.rdd.RDD[_]): Unit =
       if (!reliable) rdd.unpersist(false) // reliable blocks were already dropped
@@ -347,9 +349,9 @@ object Dedup {
     // Edge list materialized ONCE: the upstream (LSH+refine) pipeline must
     // not re-execute in the per-round joins, and the edge count sizes the
     // loop's parallelism.
-    val e0 = cut(pairs.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
-      .as[(Long, Long)].rdd)
-    val nEdges = e0.count()
+    val e0 = pairs.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
+      .as[(Long, Long)].rdd
+    val nEdges = cut(e0)
 
     if (!reliable && nEdges <= localEdgeThreshold) {
       // small-graph path: bounded collect (≤ threshold pairs) + union-find
@@ -386,7 +388,8 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     var labels: org.apache.spark.rdd.RDD[(Long, Long)] =
-      cut(byDst.keys.distinct(parts).map(id => (id, id)).partitionBy(part))
+      byDst.keys.distinct(parts).map(id => (id, id)).partitionBy(part)
+    cut(labels)
     var changed = 1L
     while (changed > 0) {
       // neighbor-min: edges pick up their dst's label (co-partitioned join,
@@ -407,10 +410,11 @@ object Dedup {
       // in an accumulator (retry-safe here — a re-run task can only re-add
       // POSITIVE counts, so `changed == 0` is never reported spuriously).
       val acc = spark.sparkContext.longAccumulator
-      val next = cut(updated.map { case (id, (rep, jnext)) =>
+      val next = updated.map { case (id, (rep, jnext)) =>
         if (jnext < rep) acc.add(1L)
         (id, jnext)
-      }.partitionBy(part))
+      }.partitionBy(part)
+      cut(next)
       changed = acc.value
       release(labels)
       labels = next

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 import graft.engine.{Clean, LocationParse, Parse, Tables}
 
 /** The reference's rental-ingest/clean pipeline operators as driver-contract
@@ -86,10 +87,11 @@ object RentalQueries {
   /** E2 — the full load_and_clean pipeline (`analytics_otodom.py:14-51`)
     * over the raw CSV: explicit all-string scan, sentinel → null, parse
     * fan-out, IEEE ratio (`x/0 → Inf`, `0/0 → NaN`), then the reference's
-    * F3 filter (`test.py:26` — drops null AND NaN, keeps Inf). */
+    * F3 filter (`test.py:26` — drops null AND NaN, keeps Inf), evaluated
+    * on the parsed ratio ([[Clean.whereParsed]]). */
   def cleanLayer(s: SparkSession, d: String): DataFrame =
-    Clean.clean(Clean.readRaw(s, rentalCsvPath))
-      .where(col("price_per_m2").isNotNull && !isnan(col("price_per_m2")))
+    Clean.whereParsed(Clean.clean(Clean.readRaw(s, rentalCsvPath)),
+        col("price_per_m2").isNotNull && !isnan(col("price_per_m2")))
       .select(col("url"), col("title"), col("price_num"), col("rent_fee_num"),
         col("deposit_num"), col("area_num"), col("rooms_num"),
         round(col("price_per_m2"), 4).as("price_per_m2"),
@@ -179,6 +181,12 @@ object RentalQueries {
   val geojsonPath: String =
     sys.env.getOrElse("SPARK_GRAFT_GEOJSON", "/root/repo/data/voivodeships.geojson")
 
+  /** The two GeoJSON fields the dimension reads. An explicit schema skips
+    * the inference job and never parses the geometry coordinates. */
+  private val geojsonSchema = StructType(Seq(StructField("features", ArrayType(
+    StructType(Seq(StructField("properties", StructType(Seq(
+      StructField("terc", StringType), StructField("name", StringType))))))))))
+
   /** S5/P13/J1 — the choropleth pipeline (`analytics_otodom.py:168-185`):
     * multiLine GeoJSON scan, `explode(features)`, name normalization
     * (strip "województwo" case-insensitively, trim, capitalize-FIRST — not
@@ -186,17 +194,19 @@ object RentalQueries {
     * dimension left-joins the per-voivodeship rent averages (A2: grouped
     * mean, round 0, null keys dropped — pandas groupby parity). Both sides
     * broadcast; unmatched voivodeships survive with null stats ("Brak
-    * danych" semantics). */
+    * danych" semantics). The raw voivodeship guard reaches the scan; the
+    * parsed-price guard runs on the parse output ([[Clean.whereParsed]]). */
   def geojsonDim(s: SparkSession, d: String): DataFrame = {
     // (?iu): Java needs UNICODE_CASE on top of (?i) to fold Ó↔ó; DuckDB's
     // RE2 folds unicode under plain (?i).
     val normName = Parse.capitalizeFirst(
       trim(regexp_replace(col("f.properties.name"), "(?iu)województwo", "")))
-    val geo = s.read.option("multiLine", "true").json(geojsonPath)
+    val geo = s.read.option("multiLine", "true").schema(geojsonSchema).json(geojsonPath)
       .select(explode(col("features")).as("f"))
       .select(col("f.properties.terc").as("terc"), normName.as("wojewodztwo"))
-    val agg = Clean.clean(Clean.readRaw(s, rentalCsvPath))
-      .where(col("price_num").isNotNull && col("voivodeship").isNotNull)
+    val agg = Clean.whereParsed(
+        Clean.clean(Clean.readRaw(s, rentalCsvPath)).where(col("voivodeship").isNotNull),
+        col("price_num").isNotNull)
       .groupBy(Parse.capitalizeFirst(col("voivodeship")).as("wojewodztwo"))
       .agg(round(avg(col("price_num")), 0).as("avg_price"), count(lit(1)).as("n"))
     geo.join(broadcast(agg), Seq("wojewodztwo"), "left")

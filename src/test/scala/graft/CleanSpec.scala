@@ -26,6 +26,19 @@ class CleanSpec extends AnyFunSuite {
     assert(cleaned.columns.toSet.intersect(Clean.rawColumns.toSet -- Seq("media", "url")).isEmpty)
   }
 
+  test("clean layer schema: the 36 (name, type) pairs, in order") {
+    val ascii = Seq("title", "price", "rent_fee", "deposit", "area", "voivodeship",
+      "county", "city", "district", "street", "location", "rooms",
+      "advertiser_type", "heating", "floor", "finishing_state", "available_from",
+      "additional_info", "building_year", "elevator", "building_type",
+      "building_material", "windows", "safety", "equipment", "security", "media",
+      "url", "scrape_date").map(_ -> "string")
+    val parsed = Seq("price_num", "rent_fee_num", "deposit_num", "area_num",
+      "rooms_num", "price_per_m2").map(_ -> "double") :+ ("scraped_at" -> "timestamp")
+    assert(cleaned.schema.fields.map(f => f.name -> f.dataType.typeName).toSeq ===
+      ascii ++ parsed)
+  }
+
   test("sentinel becomes null inside the engine") {
     assert(cleaned.where(col("city") === Clean.Sentinel).count() === 0)
     assert(cleaned.where(col("city").isNull).count() > 0)

@@ -664,6 +664,35 @@ class PlanAuditSpec extends AnyFunSuite {
       s"the ANY-channel min confirm must stay unrolled in codegen:\n$xi")
   }
 
+  test("clean layer: one projection, parse outside filters") {
+    import org.apache.spark.sql.catalyst.expressions.{Lower, RegExpExtract, RegExpReplace}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
+    import graft.engine.Clean
+    val cleaned = Clean.clean(Clean.readRaw(spark, graft.queries.RentalQueries.rentalCsvPath))
+    val projects = cleaned.queryExecution.analyzed.collect { case p: Project => p }.size
+    assert(projects <= 3, s"the clean layer must stay a few projections, found $projects Projects")
+    def isParse(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+      e.exists(x => x.isInstanceOf[RegExpReplace] || x.isInstanceOf[RegExpExtract])
+    Seq("q_clean_layer", "q_raw_profile", "q_multivalue_explode", "q_city_slice",
+        "q_geojson_dim").foreach { q =>
+      val opt = SparkEntry.queries(q)(spark, d).queryExecution.optimizedPlan
+      val parsing = opt.collect { case f: Filter if isParse(f.condition) => f.condition }
+      assert(parsing.isEmpty, s"$q: a Filter re-runs the parse:\n${parsing.mkString("\n")}")
+    }
+    // the cheap raw city match still sits below the parse projection
+    val cs = SparkEntry.queries("q_city_slice")(spark, d).queryExecution.optimizedPlan
+    val parseProjects = cs.collect {
+      case p: Project if p.projectList.exists(isParse) => p
+    }
+    assert(parseProjects.nonEmpty, s"q_city_slice must parse in a Project:\n$cs")
+    parseProjects.foreach { p =>
+      assert(p.child.exists {
+        case f: Filter => f.condition.exists(_.isInstanceOf[Lower])
+        case _ => false
+      }, s"the city match must sit below the parse projection:\n$cs")
+    }
+  }
+
   test("no registered query plans a CartesianProduct") {
     // Theta joins in the documented quadratic baselines become
     // BroadcastNestedLoopJoin (bounded side); an unconditional
