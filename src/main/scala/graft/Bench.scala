@@ -274,9 +274,7 @@ object Bench {
       val c0 = System.nanoTime()
       fn(spark, sfDir).count()
       val cold = (System.nanoTime() - c0) / 1e9
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      graft.engine.Stage.releaseAll(spark, blocking = false)
       name -> cold
     }.toMap
     // Bounded C2 quiesce between the phases: wait until total JIT compile
@@ -318,21 +316,11 @@ object Bench {
         // Level the heap before this query's timed iterations (see scaladoc).
         System.gc()
         def runOnce(): Iter = {
-          spark.catalog.clearCache()
-          // clearCache drops DATASET cache entries but NOT the persistent
-          // RDD blocks behind localCheckpoint (q_pipeline_e2e materializes
-          // 7 stages per run): those wait for a driver GC + async
-          // ContextCleaner round, so successive iterations ran against a
-          // block manager still holding earlier iterations' checkpoints
-          // (measured: monotone 6.3→4.8 s decline across 6 iterations,
-          // gc_ms≈0, as the cleaner caught up). Blocking unpersist makes
-          // every timed run start from the same empty block manager.
-          // CONTRACT for query authors: this is a blanket unpersist of the
-          // whole shared session — a query function must NOT rely on RDD
-          // blocks persisted in an earlier iteration (disk-backed index
-          // state is fine; that's where all current cross-run state lives).
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
+          // Blocking, so every timed run starts from the same empty block
+          // manager (left to the ContextCleaner, earlier iterations' cut
+          // blocks made q_pipeline_e2e read a monotone 6.3→4.8 s decline
+          // across 6 iterations). Query contract: graft.engine.Stage.
+          graft.engine.Stage.releaseAll(spark, blocking = true)
           // Flush dirty page-cache writes NOW, outside the timed region:
           // the cold run builds multi-hundred-MB on-disk indexes and every
           // timed run leaves its own shuffle files dirty — the

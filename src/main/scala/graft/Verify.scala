@@ -34,17 +34,11 @@ object Verify {
         Files.createDirectories(d)
         Files.writeString(d.resolve("_FAILED"), msg)
       }
-      // Operators persist intermediates (shingle sets, band keys) and leave
-      // lifetime to the caller; release between queries so 100+ dumps don't
-      // accumulate cached blocks. clearCache drops Dataset cache entries
-      // only — the localCheckpoint RDD blocks q_pipeline_e2e materializes
-      // (7 stages per run) wait for a driver GC + async ContextCleaner
-      // round, so they are unpersisted explicitly, same as the bench loop
-      // (non-blocking here: the next query needn't wait for the drop, it
-      // only must not run against a filling block manager).
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // Release between queries so 100+ dumps don't accumulate cached
+      // blocks (graft.engine.Stage); non-blocking: the next query needn't
+      // wait for the drop, it only must not run against a filling block
+      // manager.
+      graft.engine.Stage.releaseAll(spark, blocking = false)
     }
     val errJson = failures.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)

@@ -90,13 +90,13 @@ object Clean {
         (col("price_num") * pow(col("area_num"), lit(-1.0))).as("price_per_m2"),
         Parse.parseTimestamp(col("scrape_date")).as("scraped_at"))
 
-  /** Filter on columns [[clean]] parsed, evaluated on the parse
-    * projection's output. A plain `where` lets PushPredicateThroughNonJoin
-    * substitute the regex chain into a Filter below the projection, so
-    * every kept row parses twice. The nondeterministic barrier column
-    * stops the rule (the [[graft.ops.LmScore.lmGate]] idiom); its
-    * tautological conjunct never changes the output. Filter on raw columns
-    * with a plain `where` first: those still reach the scan. */
+  /** Filter on columns a projection computed ([[clean]]'s parses,
+    * [[graft.ops.LmScore.lmGate]]'s score), evaluated on the projection's
+    * output. A plain `where` lets PushPredicateThroughNonJoin substitute
+    * the computation into a Filter below the projection, so every kept
+    * row computes it twice. The nondeterministic barrier column stops the
+    * rule; its tautological conjunct never changes the output. Filter on
+    * raw columns with a plain `where` first: those still reach the scan. */
   def whereParsed(df: DataFrame, cond: Column): DataFrame = {
     require(!df.columns.contains("__graft_nd"), "input already has column __graft_nd")
     df.withColumn("__graft_nd", rand(42L))

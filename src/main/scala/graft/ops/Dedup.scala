@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.engine.Stage
 
 /** Deduplication operators for a large-scale training-data pipeline:
   * exact (hash group-by), MinHash+LSH, SimHash, and exact n-gram Jaccard.
@@ -146,11 +147,9 @@ object Dedup {
     * Only candidate pairs ever touch the shingle arrays, so the expensive
     * comparison is linear in |candidates|.
     *
-    * Resource contract: the fat (doc_id, sh) intermediate is persisted for
-    * the duration of THIS call and released before returning — the returned
-    * pair frame is eagerly materialized (it is tiny relative to the corpus:
-    * only above-threshold pairs), lineage-cut, and holds no reference to the
-    * shingle cache, so library callers never accumulate cached blocks. */
+    * The fat (doc_id, sh) intermediate is persisted for THIS call only:
+    * the pair frame (tiny: above-threshold pairs) is cut, then the cache
+    * released ([[graft.engine.Stage]] block-lifetime contract). */
   def nearDupPairs(docs: DataFrame, threshold: Double, numHashes: Int = 16,
                    bandRows: Int = 2, shingleN: Int = 3): DataFrame = {
     val sets = shingleSets(docs, shingleN).persist()
@@ -159,9 +158,7 @@ object Dedup {
       .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
       .select(col("doc_a"), col("doc_b"), TextOps.jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
       .where(col("jaccard") >= threshold)
-      .localCheckpoint(true) // materialize, then the shingle cache can go
-    sets.unpersist()
-    pairs
+    Stage.cut(pairs, release = sets.unpersist())
   }
 
   /** DIRECTED containment near-dups — the subset-duplicate detector the
@@ -255,10 +252,7 @@ object Dedup {
         call_function("div", col("inter") * lit(1000000L), col("n_b"))
           .as("c_b_in_a_fp"))
       .where(greatest(col("c_a_in_b_fp"), col("c_b_in_a_fp")) >= thresholdFp)
-      .localCheckpoint(true) // materialize, then the caches can go
-    rareEx.unpersist()
-    sets.unpersist()
-    pairs
+    Stage.cut(pairs, release = { rareEx.unpersist(); sets.unpersist() })
   }
 
   /** Connected components over near-dup pairs — the keep-one-per-cluster
@@ -289,24 +283,11 @@ object Dedup {
     * orders of magnitude smaller than the corpus, and AQE cannot size
     * stages across an iterative driver loop.
     *
-    * Per-round lineage/caching: each round's labels are persisted and the
-    * previous round released deterministically. Two modes:
-    *  - default (`checkpointDir = None`): `localCheckpoint` — executor-local
-    *    blocks, fastest, but NOT fault-tolerant (a lost executor loses the
-    *    truncated lineage). Fine for local mode / restartable jobs.
-    *  - cluster (`checkpointDir = Some(dir)`): reliable `checkpoint` to a
-    *    (HDFS/object-store) directory — each round survives executor loss;
-    *    the in-memory copy is dropped as soon as the checkpoint files exist.
-    *    Checkpoint hygiene: `setCheckpointDir` already places every file
-    *    under a per-call UUID subdirectory, each superseded round's files
-    *    are DELETED as soon as the next round is safely checkpointed
-    *    (`spark.cleaner.referenceTracking.cleanCheckpoints` defaults to
-    *    false, so nothing else would ever reclaim them), and the context's
-    *    prior checkpoint dir is restored on return — repeated invocations
-    *    accumulate only the FINAL round's (result-sized) files, which must
-    *    outlive the call because the returned frame is served from them.
-    *    Concurrent invocations on one context still race on the shared
-    *    `setCheckpointDir` state; serialize reliable-mode calls per context.
+    * Per-round lineage: each round's labels are cut in `mode` and the
+    * previous round released (for [[graft.engine.Stage.Durable]], its
+    * checkpoint files deleted), so repeated calls keep only the FINAL
+    * round, which serves the returned frame. Block-loss fate per mode:
+    * the [[graft.engine.Stage]] scaladoc.
     *
     * SIZE-ADAPTIVE small-graph path: the near-dup pair set is orders of
     * magnitude smaller than the corpus, and below `localEdgeThreshold`
@@ -317,48 +298,35 @@ object Dedup {
     * COUNT is always computed distributed first, so the driver never
     * collects an unbounded set — this is the bounded, guarded kind of
     * driver work (like [[graft.ops.Indexes]]' probe-key computation), not a
-    * driver-side loop over corpus data. Reliable-checkpoint mode
-    * (`checkpointDir` set) always takes the distributed loop: the caller
-    * asked for cluster fault-tolerance semantics.
+    * driver-side loop over corpus data. Durable mode always takes the
+    * distributed loop: the caller asked for fault-tolerant stages.
     *
     * Output: (doc_id, rep) for every doc appearing in ≥1 pair. */
   def connectedComponents(pairs: DataFrame,
-                          checkpointDir: Option[String] = None,
-                          localEdgeThreshold: Long = 100000L): DataFrame = {
+                          mode: Stage.Mode = Stage.Local,
+                          localEdgeThreshold: Long = 100000L): DataFrame =
+    Stage.withCheckpointDir(pairs.sparkSession, mode) {
+      components(pairs, mode, localEdgeThreshold)
+    }
+
+  private def components(pairs: DataFrame, mode: Stage.Mode,
+                         localEdgeThreshold: Long): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    val priorCkptDir = spark.sparkContext.getCheckpointDir
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    val reliable = checkpointDir.isDefined
-
-    // Eager: materialize (and write the reliable checkpoint) now; the
-    // materializing job's row count is the return value.
-    def cut(rdd: org.apache.spark.rdd.RDD[_]): Long = {
-      if (reliable) { rdd.persist(); rdd.checkpoint() } else rdd.localCheckpoint()
-      val n = rdd.count()
-      if (reliable) rdd.unpersist(false) // served from checkpoint files from here on
-      n
-    }
-    def release(rdd: org.apache.spark.rdd.RDD[_]): Unit =
-      if (!reliable) rdd.unpersist(false) // reliable blocks were already dropped
-      else rdd.getCheckpointFile.foreach { f => // superseded round: reclaim now
-        val p = new org.apache.hadoop.fs.Path(f)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      }
 
     // Edge list materialized ONCE: the upstream (LSH+refine) pipeline must
     // not re-execute in the per-round joins, and the edge count sizes the
     // loop's parallelism.
     val e0 = pairs.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
       .as[(Long, Long)].rdd
-    val nEdges = cut(e0)
+    val nEdges = Stage.cut(e0, mode)
 
-    if (!reliable && nEdges <= localEdgeThreshold) {
+    if (mode == Stage.Local && nEdges <= localEdgeThreshold) {
       // small-graph path: bounded collect (≤ threshold pairs) + union-find
       // with min-root merging — the root of every set is its minimum id at
       // all times, so find() yields exactly the distributed loop's fixpoint.
       val edges = e0.collect()
-      release(e0)
+      Stage.release(e0, mode)
       val parent = scala.collection.mutable.LongMap.empty[Long]
       def find(x: Long): Long = {
         var r = x
@@ -389,7 +357,7 @@ object Dedup {
 
     var labels: org.apache.spark.rdd.RDD[(Long, Long)] =
       byDst.keys.distinct(parts).map(id => (id, id)).partitionBy(part)
-    cut(labels)
+    Stage.cut(labels, mode)
     var changed = 1L
     while (changed > 0) {
       // neighbor-min: edges pick up their dst's label (co-partitioned join,
@@ -414,14 +382,13 @@ object Dedup {
         if (jnext < rep) acc.add(1L)
         (id, jnext)
       }.partitionBy(part)
-      cut(next)
+      Stage.cut(next, mode)
       changed = acc.value
-      release(labels)
+      Stage.release(labels, mode)
       labels = next
     }
     byDst.unpersist(false)
-    release(e0)
-    priorCkptDir.foreach(spark.sparkContext.setCheckpointDir)
+    Stage.release(e0, mode)
     labels.toDF("doc_id", "rep")
   }
 

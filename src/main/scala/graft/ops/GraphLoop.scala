@@ -33,10 +33,8 @@ import org.apache.spark.storage.StorageLevel
   * than it gains for per-round work this small, while at cluster scale
   * the defaultParallelism cap binds.
   *
-  * Block lifetime: callers materialize their output (localCheckpoint) and
-  * unpersist every loop RDD before returning — the [[PageRank.hitsFp]]
-  * eager-execution contract, so harness loops that unpersist between
-  * queries hold nothing.
+  * Callers cut their output and release the graph with
+  * `Stage.cut(out, release = g.release())` ([[graft.engine.Stage]]).
   */
 private[ops] object GraphLoop {
 

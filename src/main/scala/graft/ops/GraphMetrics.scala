@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.engine.Stage
 
 /** Structural graph metrics over the committed similarity/co-occurrence
   * graphs — the descriptive complement to [[PageRank]]'s rank walks:
@@ -38,10 +39,7 @@ import org.apache.spark.sql.functions._
   *    lowering without the DataFrame loop's per-round re-optimization,
   *    exchanges and codegen (the hitsFp measurement).
   *
-  * Block lifetime: checkpointed blocks are referenced only by the
-  * returned frame's lineage (nothing memo-pinned), so harness loops that
-  * unpersist between queries release them immediately — the r12
-  * sourceEntropy-leak precedent.
+  * Cuts and block lifetime: [[graft.engine.Stage]].
   */
 object GraphMetrics {
 
@@ -77,10 +75,9 @@ object GraphMetrics {
     // out-degree at O(√|E|) (object scaladoc)
     val uFirst = col("du") < col("dv") ||
       (col("du") === col("dv") && col("u") < col("v"))
-    val oriented = withDeg.select(
+    val oriented = Stage.cut(withDeg.select(
       when(uFirst, col("u")).otherwise(col("v")).as("a"),
-      when(uFirst, col("v")).otherwise(col("u")).as("b"))
-      .localCheckpoint()
+      when(uFirst, col("v")).otherwise(col("u")).as("b")))
     // wedges at pivot a, leaf pair id-ordered so each candidate triangle
     // appears once; closed iff the id-ordered leaf pair is an edge
     oriented.as("o1")
@@ -91,11 +88,10 @@ object GraphMetrics {
   }
 
   def triangleStats(edges: DataFrame): DataFrame = {
-    val und = undirect(edges).localCheckpoint()
-    val deg = und.select(col("u").as("node"))
+    val und = Stage.cut(undirect(edges))
+    val deg = Stage.cut(und.select(col("u").as("node"))
       .unionAll(und.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
+      .groupBy("node").agg(count(lit(1)).as("deg")))
     val perNode = trianglesOf(und, deg)
       .select(explode(array(col("x"), col("y"), col("z"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("tri"))
@@ -150,9 +146,7 @@ object GraphMetrics {
     val g = GraphLoop.buildWeighted(sym)
     var labels = GraphLoop.initVector(g.nodes, n => n)
     for (_ <- 1 to iters) labels = GraphLoop.voteRoundWeighted(g, labels)
-    val out = labels.toDF("node", "label").localCheckpoint(true)
-    g.release()
-    out
+    Stage.cut(labels.toDF("node", "label"), release = g.release())
   }
 
   /** Synchronous label propagation over the UNDIRECTED version of
@@ -182,9 +176,7 @@ object GraphMetrics {
     val g = GraphLoop.build(sym)
     var labels = GraphLoop.initVector(g.nodes, n => n)
     for (_ <- 1 to iters) labels = GraphLoop.voteRound(g, labels)
-    val out = labels.toDF("node", "label").localCheckpoint(true)
-    g.release()
-    out
+    Stage.cut(labels.toDF("node", "label"), release = g.release())
   }
 
   /** Synchronous k-core peeling over the UNDIRECTED version of `edges`,
@@ -235,9 +227,8 @@ object GraphMetrics {
       val keep = degreesOf(e).filter(_._2 >= k)
       e = keepSide(keepSide(e, keep).map(_.swap), keep).map(_.swap)
     }
-    val out = degreesOf(e).toDF("node", "deg").localCheckpoint(true)
-    e0.unpersist(blocking = false)
-    out
+    Stage.cut(degreesOf(e).toDF("node", "deg"),
+      release = e0.unpersist(blocking = false))
   }
 
   /** One-row structural health summary of the UNDIRECTED version of
@@ -265,11 +256,10 @@ object GraphMetrics {
     * degrees, one for pair sums, plus the [[trianglesOf]] wedge join. */
   def graphSummary(edges: DataFrame): DataFrame = {
     val dec = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 0)
-    val und = undirect(edges).localCheckpoint()
-    val deg = und.select(col("u").as("node"))
+    val und = Stage.cut(undirect(edges))
+    val deg = Stage.cut(und.select(col("u").as("node"))
       .unionAll(und.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
+      .groupBy("node").agg(count(lit(1)).as("deg")))
     val degAgg = deg.agg(
       count(lit(1)).as("nodes"), max(col("deg")).as("max_deg"),
       sum(call_function("div", col("deg") * (col("deg") - 1), lit(2L))
@@ -338,9 +328,7 @@ object GraphMetrics {
     var dist = GraphLoop.initVector(g.nodes,
       n => if (seedSet(n)) 0L else BfsInf)
     for (_ <- 1 to rounds) dist = GraphLoop.minRound(g, dist, BfsInf)
-    val out = dist.toDF("node", "hops").localCheckpoint(true)
-    g.release()
-    out
+    Stage.cut(dist.toDF("node", "hops"), release = g.release())
   }
 
   /** Host-side sequential twin of [[bfsHops]] (spec cross-check only). */

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Stage
 
 /** Materialized ANN index surface: precompute the banded-LSH bucket
   * assignment ONCE and serve every subsequent query from the stored index,
@@ -2491,11 +2492,8 @@ object Indexes {
         call_function("div", col("inter") * lit(1000000L), col("n_c"))
           .as("c_corpus_fp"))
       .where(greatest(col("c_new_fp"), col("c_corpus_fp")) >= thresholdFp)
-      .localCheckpoint(true)
-    corpusEx.unpersist()
-    newShingles.unpersist()
-    newSets.unpersist()
-    pairs
+    Stage.cut(pairs, release = {
+      corpusEx.unpersist(); newShingles.unpersist(); newSets.unpersist() })
   }
 
   /** Label → path segment with a LENGTH prefix, so no two distinct labels

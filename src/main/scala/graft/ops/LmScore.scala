@@ -202,39 +202,23 @@ object LmScore {
     * gate is computed INLINE on the corpus scan — same join-free scan-stage
     * filter shape as [[Curation.qualityGate]], no self-join.
     *
-    * The filter carries a nondeterministic PUSHDOWN BARRIER column:
-    * without it, PushPredicateThroughNonJoin substitutes the gate
-    * predicate through every projection down to the scan, inlining the
-    * whole tokenize→md5→CMS chain into one Filter expression — where the
-    * regex split re-executes inside each per-element lambda, the measured
-    * O(words²) trap [[TextOps.shingleSetFromWords]] documents (a plan
-    * dump showed 15 copies of the split vs [[lmScores]]'s one). A
-    * nondeterministic projection field that the predicate references
-    * blocks the rule on both of its guards; the tautological conjunct
-    * costs one double comparison per row. The barrier is seeded `rand`
-    * (not `monotonically_increasing_id`, which streaming plans reject —
-    * [[graft.streaming.EventStreams.lmGateStream]] filters a streaming
-    * frame with this exact code); its value never influences the output,
-    * so the gate stays deterministic. LmScoreSpec pins the plan to a
-    * single split. */
+    * The filter runs above the score projection through the pushdown
+    * barrier of [[graft.engine.Clean.whereParsed]]: a plain `where` lets
+    * PushPredicateThroughNonJoin inline the kernel call into the Filter
+    * once per referenced struct field. The barrier is seeded `rand`, which
+    * streaming plans accept ([[graft.streaming.EventStreams.lmGateStream]]
+    * gates a streaming frame with this code). LmScoreSpec pins the plan to
+    * a single split. */
   def lmGate(docs: DataFrame, lm: NgramLm, maxNll: Double,
              textCol: String = "text"): DataFrame = {
     val reserved = docs.columns.filter(_.startsWith("__graft_"))
     require(reserved.isEmpty,
       s"input already has reserved column(s) ${reserved.mkString(", ")}; rename them first")
     val keep = docs.columns.map(col)
-    // r20 OPT: the kernel scores once per row; the nondeterministic
-    // barrier still pins the struct to its own projection so pushdown
-    // cannot clone the kernel call into the Filter (the predicate
-    // references TWO struct fields — inlined, each GetStructField would
-    // carry its own kernel evaluation).
-    docs
-      .withColumn("__graft_sc",
-        graft.functions.LmDocScore.scoreCol(col(textCol), lm))
-      .withColumn("__graft_nd", rand(42L))
-      .where((col("__graft_sc.n_bigrams") === 0L ||
-          col("__graft_sc.nll") <= maxNll) &&
-        col("__graft_nd") >= 0.0)
+    graft.engine.Clean.whereParsed(
+        docs.withColumn("__graft_sc",
+          graft.functions.LmDocScore.scoreCol(col(textCol), lm)),
+        col("__graft_sc.n_bigrams") === 0L || col("__graft_sc.nll") <= maxNll)
       .select(keep.toIndexedSeq: _*)
   }
 

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.engine.Stage
 
 /** Fixed-iteration PageRank in pure integer fixed point — the iterative
   * message-passing family member next to [[Dedup]]'s connected components
@@ -38,10 +39,8 @@ import org.apache.spark.sql.functions._
   * rescales ranks uniformly — documented rather than redistributed, to
   * keep the per-round cost at one pass.
   *
-  * Block lifetime: every walk materializes its output (localCheckpoint)
-  * and unpersists its loop RDDs before returning — the hitsFp
-  * eager-execution contract, so harness loops that unpersist between
-  * queries (Verify/Bench) hold nothing.
+  * Every walk cuts its output and releases its loop RDDs before
+  * returning ([[graft.engine.Stage]] block-lifetime contract).
   */
 object PageRank {
 
@@ -56,10 +55,7 @@ object PageRank {
     * `/` ≡ SQL `div`; sums commute), so results stay bit-identical —
     * PageRankSpec pins distributed == sequential reference, and the
     * unrolled-CTE oracles replay untouched.
-    *
-    * EAGER-EXECUTION CONTRACT (the hitsFp rule): the returned frame is
-    * already materialized (localCheckpoint) and every loop RDD is
-    * unpersisted before return. */
+    * The returned frame is cut ([[graft.engine.Stage]]). */
   private def runDamped(edges: DataFrame, iters: Int, dampNum: Long,
                         dampDen: Long,
                         mk: GraphLoop.Graph => (Long => Long, Long => Long),
@@ -72,9 +68,7 @@ object PageRank {
     var ranks = GraphLoop.initVector(g.nodes, r0)
     for (_ <- 1 to iters)
       ranks = GraphLoop.dampedRound(g, ranks, tp, dampNum, dampDen)
-    val out = ranks.toDF("node", "rank_fp").localCheckpoint(true)
-    g.release()
-    out
+    Stage.cut(ranks.toDF("node", "rank_fp"), release = g.release())
   }
 
   private def checkIters(iters: Int): Unit =
@@ -171,9 +165,7 @@ object PageRank {
     for (_ <- 1 to iters)
       ranks = GraphLoop.dampedRoundWeighted(g, ranks,
         n => if (seedSet(n)) teleport else 0L, dampNum, dampDen)
-    val out = ranks.toDF("node", "rank_fp").localCheckpoint(true)
-    g.release()
-    out
+    Stage.cut(ranks.toDF("node", "rank_fp"), release = g.release())
   }
 
   /** [[pprFp]]'s many-panels twin — the walk family's batch column: P
@@ -258,11 +250,9 @@ object PageRank {
           }
       }
     }
-    val out = ranks.flatMap { case (n, rv) =>
+    Stage.cut(ranks.flatMap { case (n, rv) =>
       Iterator.range(0, np).map(p => (pIds(p), n, rv(p)))
-    }.toDF("panel_id", "node", "rank_fp").localCheckpoint(true)
-    g.release()
-    out
+    }.toDF("panel_id", "node", "rank_fp"), release = g.release())
   }
 
   /** Host-side sequential twin of [[pprFp]] (spec cross-check only). */
@@ -347,10 +337,8 @@ object PageRank {
     * the uniform start; fixed rounds + integer arithmetic make the run
     * replay as unrolled CTEs in DuckDB, bit for bit.
     *
-    * EAGER-EXECUTION CONTRACT (the batch-probe family's rule): calling
-    * this method RUNS the walk — the loop's L1 folds are driver actions
-    * and the returned frame is already materialized (localCheckpoint),
-    * with every loop cache released before return. */
+    * Calling this method RUNS the walk: the loop's L1 folds are driver
+    * actions and the returned frame is cut ([[graft.engine.Stage]]). */
   def hitsFp(edges: DataFrame, iters: Int,
              scale: Long = 1000000000L): DataFrame = {
     checkIters(iters)
@@ -479,10 +467,8 @@ object PageRank {
         (n, am.getOrElse(n, 0L), hm.getOrElse(n, 0L)) }
     }
       .toDF("node", "auth_fp", "hub_fp")
-      .localCheckpoint(true)
-    (Seq(edPairs, bySrc, byDst, nodes) ++ cached)
-      .foreach(_.unpersist(blocking = false))
-    out
+    Stage.cut(out, release = (Seq(edPairs, bySrc, byDst, nodes) ++ cached)
+      .foreach(_.unpersist(blocking = false)))
   }
 
   /** Host-side sequential twin of [[hitsFp]] (spec cross-check only). */

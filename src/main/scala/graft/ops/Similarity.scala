@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.engine.Stage
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -528,10 +529,8 @@ object Similarity {
     val bk = emb.select(col("vec_id"), explode(array(tables: _*)).as("b"))
       .select(col("vec_id"), col("b.t").as("t"), col("b.key").as("key"))
       .persist() // computed once; both sides of the self-join reuse it
-    // Resource contract (mirrors Dedup.nearDupPairs): the bucket frame is
-    // persisted only for this call — the returned pair frame is eagerly
-    // materialized (above-threshold pairs only) and lineage-cut, so the
-    // cache is released before returning and callers never leak blocks.
+    // The bucket frame is persisted for this call only: cut, then release
+    // (graft.engine.Stage).
     val pairs = bk.select(col("t"), col("key"), col("vec_id").as("vec_a"))
       .join(bk.select(col("t"), col("key"), col("vec_id").as("vec_b")), Seq("t", "key"))
       .where(col("vec_a") < col("vec_b"))
@@ -541,9 +540,7 @@ object Similarity {
       .select(col("vec_a"), col("vec_b"),
         cosRound(col("emb_a"), col("emb_b"), 6).as("cos"))
       .where(col("cos") > threshold)
-      .localCheckpoint(true)
-    bk.unpersist()
-    pairs
+    Stage.cut(pairs, release = bk.unpersist())
   }
 
   /** One distributed Lloyd (k-means) refinement step over the embeddings —

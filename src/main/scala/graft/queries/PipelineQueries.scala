@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Stage
 import graft.engine.Tables._
 import graft.ops.{Curation, Decontamination, Dedup, Multimodal, Similarity, Sketches, TextAnalysis, TextOps}
 
@@ -411,7 +412,7 @@ object PipelineQueries {
     * deduped slice); the LM threshold is a memoized bounded driver scalar
     * ([[graft.ops.LmScore.lmNllPercentile]]).
     *
-    * Each stage is materialized ONCE via eager `localCheckpoint`, which
+    * Each stage is materialized ONCE by [[graft.engine.Stage.cut]], which
     * also TRUNCATES LINEAGE between stages. Without truncation the
     * composed plan is the product of every stage's plan: analysis,
     * optimization, and cache-lookup canonicalization re-walk the
@@ -419,129 +420,31 @@ object PipelineQueries {
     * driver time (~12 s) dwarfed executor time (2.3 s over 33 stages) at
     * sf0.1 — a pure planning bottleneck that only worsens as stages are
     * added, independent of data volume. Truncation resets every stage's
-    * plan to scan-of-materialized-result + one operator, the same shape a
-    * production 100 TB run gets by materializing each stage to durable
-    * storage.
+    * plan to scan-of-materialized-result + one operator.
     *
-    * STAGE-MATERIALIZATION MODE (VERDICT r9 #5): `localCheckpoint` blocks
-    * are executor-memory/disk-resident and die with the executor — fine in
-    * a single-JVM local run (which cannot lose blocks), wrong as the prod
-    * story at cluster scale. The 3-arg overload takes a [[StageStore]]:
-    * [[StorageStage]] writes every stage to parquet under a work dir and
-    * reads it back — the lineage truncation is then the storage scan
-    * itself, and stages survive any executor death (re-runnable from the
-    * last materialized stage). PipelineCheckpointModeSpec asserts the two
-    * modes produce IDENTICAL stage fingerprints on the real fixture, and
-    * measured the warm local cost delta at sf0.001: ~4.0 s localCheckpoint
-    * vs ~5.5 s storage round-trip (7 parquet write+read cycles) — a ~1.4×
-    * premium that buys executor-death durability, which is why local mode
-    * keeps the cheap form and a cluster run takes the storage mode. */
+    * The 2-arg form (q_pipeline_e2e) cuts in [[graft.engine.Stage.Local]]
+    * mode; [[pipelineE2eDurable]] writes every stage to parquet and reads
+    * it back, so the stages survive block loss (the cluster mode; its
+    * block-loss fate is in the [[graft.engine.Stage]] scaladoc).
+    * PipelineCheckpointModeSpec asserts the two modes produce IDENTICAL
+    * stage fingerprints on the real fixture, and measured the warm local
+    * cost delta at sf0.001: ~4.0 s local vs ~5.5 s durable (7 parquet
+    * write+read cycles). */
   def pipelineE2e(s: SparkSession, d: String): DataFrame =
-    // SPARK_GRAFT_E2E_STAGE_DIR flips the registered query to durable
-    // storage-backed stages without a code change — the cluster deployment
-    // sets it to a shared-filesystem/object-store prefix; unset (the local
-    // driver contract) keeps the cheaper executor-resident form. Both modes
-    // are fingerprint-identical (PipelineCheckpointModeSpec).
-    pipelineE2e(s, d, sys.env.get("SPARK_GRAFT_E2E_STAGE_DIR")
-      .map(p => StorageStage(runScopedStageDir(s, p))).getOrElse(LocalStage))
+    pipelineE2e(s, d, Stage.Local)
 
-  /** [[pipelineE2e]] FORCED through durable [[StorageStage]] materialization
-    * — the 100 TB cluster mode as its own registered query, so the storage-
-    * backed path earns a CORRECTNESS row every round (VERDICT r10 #4: the
-    * mode was spec-verified but never oracle-gated; same promotion
-    * q_dedup_components_distributed got in round 10). Shares
-    * [[pipelineE2eSql]]: both modes must produce identical stage
-    * fingerprints, so one oracle grades both. */
-  def pipelineE2eDurable(s: SparkSession, d: String): DataFrame = {
-    val base = sys.env.getOrElse("SPARK_GRAFT_E2E_STAGE_DIR",
-      s"${System.getProperty("java.io.tmpdir")}/graft_e2e_stages")
-    pipelineE2e(s, d, StorageStage(runScopedStageDir(s, base)))
-  }
+  /** [[pipelineE2e]] with durable stages ([[graft.engine.Stage.durableRun]])
+    * as its own registered query, so the durable path earns a correctness
+    * row. Shares [[pipelineE2eSql]]: both modes must produce identical
+    * stage fingerprints, so one oracle grades both. */
+  def pipelineE2eDurable(s: SparkSession, d: String): DataFrame =
+    pipelineE2e(s, d, Stage.durableRun(s))
 
-  /** Stage work dirs are NAMESPACED PER RUN (ADVICE r10): the fixed
-    * `$dir/s1_exact…` paths let two concurrent runs sharing a work prefix —
-    * bench and verify in the same round, or two cluster jobs — overwrite a
-    * stage between another run's write and read-back, silently corrupting
-    * results. `applicationId` is unique per SparkContext (cluster-manager-
-    * assigned on a real cluster), so each run writes under its own prefix;
-    * within one application, stage writes are sequential driver actions and
-    * mode=overwrite is safe.
-    *
-    * Superseded run dirs are RECLAIMED here (VERDICT r11 #6: the
-    * namespacing fix left a permanent directory per run), with the index
-    * family's mark-then-sweep pattern but run-dir GC's OWN grace
-    * ([[graft.ops.Indexes.effectiveRunDirGcGraceMs]], default ≥ 6 h —
-    * ADVICE r12: reusing the 15-min index knob let a sweep reclaim a
-    * concurrent application's LIVE stages whenever one stage outran the
-    * grace; the [[graft.ops.Indexes.withGcGrace]] test hook still
-    * applies). Liveness keys on max(dir mtime, `.heartbeat` mtime):
-    * [[materializeStage]] touches the heartbeat file at every stage
-    * boundary, so a long multi-stage run keeps proving liveness even on
-    * filesystems where directory mtime only moves on child creation. A
-    * run never sweeps its own dir. */
-  private[graft] def runScopedStageDir(s: SparkSession, base: String): String = {
-    val mine = s.sparkContext.applicationId
-    val basePath = new org.apache.hadoop.fs.Path(base)
-    val fs = demoFs(s, base)
-    if (fs.exists(basePath)) {
-      val cutoff =
-        System.currentTimeMillis() - graft.ops.Indexes.effectiveRunDirGcGraceMs
-      fs.listStatus(basePath).foreach { st =>
-        val hb = new org.apache.hadoop.fs.Path(st.getPath, HeartbeatName)
-        val lastAlive = math.max(st.getModificationTime,
-          if (fs.exists(hb)) fs.getFileStatus(hb).getModificationTime else 0L)
-        if (st.getPath.getName != mine && lastAlive < cutoff)
-          fs.delete(st.getPath, true)
-      }
-    }
-    s"$base/$mine"
-  }
-
-  private val HeartbeatName = ".heartbeat"
-
-  /** Prove the run dir alive at a stage boundary — an overwrite of the
-    * tiny heartbeat file refreshes ITS mtime even where the run dir's
-    * own mtime would not move (no new direct child). */
-  private def touchHeartbeat(s: SparkSession, dir: String): Unit = {
-    val fs = demoFs(s, dir)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(dir, HeartbeatName), true)
-    out.close()
-  }
-
-  /** How [[pipelineE2e]] stages are materialized + lineage-truncated. */
-  sealed trait StageStore
-  /** Executor-resident `localCheckpoint` — cheapest; local/default mode. */
-  case object LocalStage extends StageStore
-  /** Durable parquet round-trip under `dir` — the 100 TB cluster mode. */
-  final case class StorageStage(dir: String) extends StageStore
-
-  /** SPARK_GRAFT_STAGE_DEBUG=1 prints per-stage materialization wall
-    * time to stderr (dev-only; the bench leaves it unset). */
-  private val stageDebug = sys.env.get("SPARK_GRAFT_STAGE_DEBUG").contains("1")
-
-  private def materializeStage(df: DataFrame, store: StageStore,
-      name: String): DataFrame = {
-    val t0 = if (stageDebug) System.nanoTime() else 0L
-    val out = store match {
-      case LocalStage => df.localCheckpoint()
-      case StorageStage(dir) =>
-        touchHeartbeat(df.sparkSession, dir)
-        val p = s"$dir/$name"
-        df.write.mode("overwrite").parquet(p)
-        graft.engine.Tables.parquetCached(df.sparkSession, p)
-    }
-    if (stageDebug) System.err.println(
-      f"[stage] $name%-16s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-    out
-  }
-
-  def pipelineE2e(s: SparkSession, d: String, store: StageStore): DataFrame = {
+  def pipelineE2e(s: SparkSession, d: String, mode: Stage.Mode): DataFrame = {
     val docs = documents(s, d).select(col("doc_id"), col("source"), col("text"))
 
     // stage 1: exact dedup (min doc_id per text digest)
-    val exact = materializeStage(Dedup.dropExactDuplicates(docs), store,
-      "s1_exact")
+    val exact = Stage.cut(Dedup.dropExactDuplicates(docs), mode, "s1_exact")
 
     // stage 2: near-dup clusters keep their LONGEST member; pairs come from
     // the committed corpus index restricted to exact survivors
@@ -552,46 +455,45 @@ object PipelineQueries {
       .join(ids.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_semi")
       .join(ids.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_semi")
       .select(col("doc_a"), col("doc_b"))
-    val best = materializeStage(Dedup.survivorsBy(exact, pairs,
-      length(coalesce(col("text"), lit("")))), store, "s2_neardup")
+    val best = Stage.cut(Dedup.survivorsBy(exact, pairs,
+      length(coalesce(col("text"), lit("")))), mode, "s2_neardup")
 
     // stage 3: boilerplate line removal over deterministic 2-word
     // pseudo-lines (the q_line_dedup derivation; the fixture has no '\n')
     // materialized once (r20 OPT): four consumers re-derived the
     // pseudo-line text per reference (boilerplate df, line hashes,
-    // reconstruction, the source join) — the intra-op localCheckpoint
-    // precedent of Dedup.nearDupPairs
-    val lined = best
+    // reconstruction, the source join) — the intra-op cut precedent of
+    // Dedup.nearDupPairs
+    val lined = Stage.cut(best
       .select(col("doc_id"), col("source"),
         TextOps.wordsSafe(col("text")).as("w"))
-      .select(col("doc_id"), col("source"), pseudoLines2(col("w")).as("text"))
-      .localCheckpoint()
-    val cleaned = materializeStage(graft.ops.LineDedup
+      .select(col("doc_id"), col("source"), pseudoLines2(col("w")).as("text")))
+    val cleaned = Stage.cut(graft.ops.LineDedup
       .cleanDocs(lined.select(col("doc_id"), col("text")), maxDocFreq = 25)
       .join(lined.select(col("doc_id"), col("source")), Seq("doc_id"))
       .select(col("doc_id"), col("source"), col("clean_text").as("text")),
-      store, "s3_lineclean")
+      mode, "s3_lineclean")
 
     // stage 4: windowed decontamination (≥ 5 consecutive shared tokens)
     val train = cleaned.where(col("source") =!= "src0")
     val evalD = cleaned.where(col("source") === "src0")
-    val decon = materializeStage(
+    val decon = Stage.cut(
       Decontamination.removeContaminated(train, evalD, shingleN = 5),
-      store, "s4_decon")
+      mode, "s4_decon")
 
     // stage 5: LM gate — bigram LM on the cleaned eval slice, cut the
     // worst decile at the exact 0.9 NLL-quantile
     val lm = graft.ops.LmScore.trainBigramLm(evalD)
     val thr = graft.ops.LmScore.lmNllPercentile(decon, lm, 0.9)
-    val gated = materializeStage(graft.ops.LmScore.lmGate(decon, lm, thr),
-      store, "s5_lmgate")
+    val gated = Stage.cut(graft.ops.LmScore.lmGate(decon, lm, thr),
+      mode, "s5_lmgate")
 
     // stages 6-7: domain mix + per-source token budgets
-    val mixed = materializeStage(
+    val mixed = Stage.cut(
       Curation.sampleByDomain(gated, Seq("src1" -> 50), default = 100),
-      store, "s6_mix")
-    val budgeted = materializeStage(Curation.tokenBudgetMix(mixed, Seq.empty,
-      defaultBudget = 2000L), store, "s7_budget")
+      mode, "s6_mix")
+    val budgeted = Stage.cut(Curation.tokenBudgetMix(mixed, Seq.empty,
+      defaultBudget = 2000L), mode, "s7_budget")
 
     // stage 8: pack the budget-selected docs into 512-token bins
     val finalDocs = mixed.join(budgeted.select(col("doc_id")), Seq("doc_id"),
@@ -1325,7 +1227,7 @@ object PipelineQueries {
 
   def hits(s: SparkSession, d: String): DataFrame = {
     val ed = graft.engine.Tables.parquetCached(s, ensurePurchaseEdges(s, d))
-    val r = graft.ops.PageRank.hitsFp(ed, iters = 4).localCheckpoint(true)
+    val r = graft.ops.PageRank.hitsFp(ed, iters = 4)
     def top(c: String, role: String) =
       r.orderBy(col(c).desc, col("node").asc).limit(10)
         .select(lit(role).as("role"), col("node"), col(c).as("score_fp"))
@@ -3963,9 +3865,8 @@ object PipelineQueries {
     // replaces). Materialize the scored pool once; the rounds then scan
     // a two-column cached frame — exactly what a 100 TB run does by
     // writing the scored pool before deriving cut thresholds.
-    val scored = documents(s, d).select(col("source"),
-        TextAnalysis.qualityScore(col("text")).as("q"))
-      .localCheckpoint()
+    val scored = Stage.cut(documents(s, d).select(col("source"),
+        TextAnalysis.qualityScore(col("text")).as("q")))
     graft.engine.Medians.exactRankSelect(
         scored, Seq("source"), "q", n => n / 2 + 1, out = "thr")
       .select(col("source"),
@@ -7701,49 +7602,41 @@ object PipelineQueries {
     * Scale: every stage keeps its registered operator's shape (the gate
     * a per-row kernel projection, calibration one window per source,
     * components doc-keyed, the mix one bounded cumsum per source,
-    * packing one bounded-shard cumsum); stages are [[StageStore]]-
-    * materialized to truncate lineage between the 6 audit branches —
-    * the q_pipeline_e2e planning-bottleneck lesson. The registered row
-    * keeps the cheap executor-resident mode (or the
-    * SPARK_GRAFT_E2E_STAGE_DIR override, as [[pipelineE2e]]);
-    * [[selectionE2eDurable]] forces the storage-backed 100 TB mode
-    * under its own CORRECTNESS row. */
+    * packing one bounded-shard cumsum); stages are cut by
+    * [[graft.engine.Stage.cut]] to truncate lineage between the 6 audit
+    * branches — the q_pipeline_e2e planning-bottleneck lesson. The
+    * registered row cuts in [[graft.engine.Stage.Local]] mode;
+    * [[selectionE2eDurable]] is the durable mode under its own
+    * correctness row. */
   def selectionE2e(s: SparkSession, d: String): DataFrame =
-    selectionE2e(s, d, sys.env.get("SPARK_GRAFT_E2E_STAGE_DIR")
-      .map(p => StorageStage(runScopedStageDir(s, p))).getOrElse(LocalStage))
+    selectionE2e(s, d, Stage.Local)
 
-  /** [[selectionE2e]] FORCED through durable [[StorageStage]]
-    * materialization — the q_pipeline_e2e_durable promotion applied to
-    * the selection chain (VERDICT r19 #2): at 100 TB the durable mode IS
-    * the deployment mode, so it earns its own oracle row every round.
+  /** [[selectionE2e]] with durable stages ([[graft.engine.Stage.durableRun]]).
     * Shares [[selectionE2eSql]]: both modes must produce identical stage
     * fingerprints (PipelineCheckpointModeSpec pins this chain too). */
-  def selectionE2eDurable(s: SparkSession, d: String): DataFrame = {
-    val base = sys.env.getOrElse("SPARK_GRAFT_E2E_STAGE_DIR",
-      s"${System.getProperty("java.io.tmpdir")}/graft_e2e_stages")
-    selectionE2e(s, d, StorageStage(runScopedStageDir(s, base)))
-  }
+  def selectionE2eDurable(s: SparkSession, d: String): DataFrame =
+    selectionE2e(s, d, Stage.durableRun(s))
 
-  def selectionE2e(s: SparkSession, d: String, store: StageStore): DataFrame = {
+  def selectionE2e(s: SparkSession, d: String, mode: Stage.Mode): DataFrame = {
     val docs = documents(s, d).select(col("doc_id"), col("source"), col("text"))
     val isTarget = col("source") === "src0"
 
     // stage 1: DSIR gate — native kernel over the NULL-safe raw pool
     val model = graft.ops.Selection.dsirModel(docs, isTarget)
-    val g1 = materializeStage(graft.ops.Selection
+    val g1 = Stage.cut(graft.ops.Selection
       .dsirScoredStateless(docs.where(!coalesce(isTarget, lit(false))), model)
       .where(col("s") >= 0L)
       .select(col("doc_id"), col("source"), col("text"), col("s")),
-      store, "sel1_gate")
+      mode, "sel1_gate")
 
     // stage 2: per-source calibrated quality cut over the gated pool
-    val g2 = materializeStage(Curation.calibrateByGroup(
+    val g2 = Stage.cut(Curation.calibrateByGroup(
         g1.select(col("doc_id"), col("source"), col("text"),
           TextAnalysis.qualityScore(col("text")).as("q")),
         col("source"), col("q"), col("doc_id"))
       .where(col("cal") > 0.5)
       .select(col("doc_id"), col("source"), col("text")),
-      store, "sel2_calibrate")
+      mode, "sel2_calibrate")
 
     // stage 3: leakage-safe split; committed full-corpus pairs restricted
     // to calibration survivors on both ends
@@ -7754,9 +7647,9 @@ object PipelineQueries {
       .join(ids.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_semi")
       .join(ids.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_semi")
       .select(col("doc_a"), col("doc_b"))
-    val g3 = materializeStage(Curation.clusterSplit(g2, pairs,
+    val g3 = Stage.cut(Curation.clusterSplit(g2, pairs,
         Seq("train" -> 90, "val" -> 5, "test" -> 5)),
-      store, "sel3_split")
+      mode, "sel3_split")
     val train = g3.where(col("split") === "train")
       .select(col("doc_id"), col("source"), col("text"))
 
@@ -7766,9 +7659,9 @@ object PipelineQueries {
       .select(col("source"), col("w")).collect() // |domains| rows — bounded
     val budgets = wrows.toSeq
       .map(r => r.getString(0) -> math.round(2000.0 * r.getDouble(1)))
-    val g4 = materializeStage(
+    val g4 = Stage.cut(
       Curation.tokenBudgetMix(train, budgets, defaultBudget = 0L),
-      store, "sel4_mix")
+      mode, "sel4_mix")
 
     // stage 5: pack the budget-selected docs into 512-token bins
     val finalDocs = train.join(g4.select(col("doc_id")), Seq("doc_id"),

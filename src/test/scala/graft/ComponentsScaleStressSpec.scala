@@ -79,7 +79,7 @@ class ComponentsScaleStressSpec extends AnyFunSuite {
     val pairs = fixturePairs()
     val ckpt = java.nio.file.Files.createTempDirectory("cc-reliable").toString
     val viaReliable = labels(
-      Dedup.connectedComponents(pairs, checkpointDir = Some(ckpt)))
+      Dedup.connectedComponents(pairs, mode = graft.engine.Stage.Durable(ckpt)))
     val viaDriver = labels(Dedup.connectedComponents(pairs))
     assert(viaReliable == viaDriver,
       "reliable-checkpoint mode diverged from the driver union-find fixpoint")

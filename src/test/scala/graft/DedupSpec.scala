@@ -118,7 +118,7 @@ class DedupSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
     try {
       val local = Dedup.connectedComponents(edges).as[(Long, Long)].collect().toMap
-      val reliable = Dedup.connectedComponents(edges, Some(dir))
+      val reliable = Dedup.connectedComponents(edges, graft.engine.Stage.Durable(dir))
         .as[(Long, Long)].collect().toMap
       assert(reliable === local)
       // the checkpoint files were really written to the reliable dir

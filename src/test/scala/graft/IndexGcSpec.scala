@@ -132,7 +132,7 @@ class IndexGcSpec extends AnyFunSuite {
     Files.setLastModifiedTime(beating,
       FileTime.fromMillis(System.currentTimeMillis() - 3600 * 1000L))
     val dir = Indexes.withGcGrace(1000L) {
-      graft.queries.PipelineQueries.runScopedStageDir(spark, base)
+      graft.engine.Stage.runScopedStageDir(spark, base)
     }
     assert(dir.endsWith(spark.sparkContext.applicationId))
     assert(!Files.exists(aged), "aged superseded run dir must be reclaimed")
@@ -147,7 +147,7 @@ class IndexGcSpec extends AnyFunSuite {
     Files.setLastModifiedTime(mine,
       FileTime.fromMillis(System.currentTimeMillis() - 3600 * 1000L))
     Indexes.withGcGrace(1000L) {
-      graft.queries.PipelineQueries.runScopedStageDir(spark, base)
+      graft.engine.Stage.runScopedStageDir(spark, base)
     }
     assert(Files.exists(mine), "the current run's own dir must never be swept")
   }

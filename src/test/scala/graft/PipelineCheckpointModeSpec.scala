@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.engine.Stage
 import graft.queries.PipelineQueries
 
 /** Stage-materialization parity for the e2e pipeline (VERDICT r9 #5):
@@ -24,16 +25,16 @@ class PipelineCheckpointModeSpec extends AnyFunSuite {
 
     // Cold run (untimed-for-comparison): absorbs the one-time minhash index
     // build + codegen/JIT so the two timed runs below compare warm-vs-warm.
-    rows(PipelineQueries.pipelineE2e(spark, d, PipelineQueries.LocalStage))
+    rows(PipelineQueries.pipelineE2e(spark, d, Stage.Local))
 
     val t0 = System.nanoTime()
-    val local = rows(PipelineQueries.pipelineE2e(spark, d, PipelineQueries.LocalStage))
+    val local = rows(PipelineQueries.pipelineE2e(spark, d, Stage.Local))
     val tLocal = (System.nanoTime() - t0) / 1e9
 
     val workDir = Files.createTempDirectory("pipeline-storage-stages").toString
     val t1 = System.nanoTime()
     val stored = rows(PipelineQueries.pipelineE2e(spark, d,
-      PipelineQueries.StorageStage(workDir)))
+      Stage.Durable(workDir)))
     val tStored = (System.nanoTime() - t1) / 1e9
 
     info(f"warm localCheckpoint mode: $tLocal%.2f s; warm storage mode: $tStored%.2f s")
@@ -59,13 +60,13 @@ class PipelineCheckpointModeSpec extends AnyFunSuite {
         (r.getInt(0), r.getString(1), r.getLong(2), r.getString(3)))
 
     // cold run absorbs the minhash index build + codegen
-    rows(PipelineQueries.selectionE2e(spark, d, PipelineQueries.LocalStage))
+    rows(PipelineQueries.selectionE2e(spark, d, Stage.Local))
 
     val local = rows(
-      PipelineQueries.selectionE2e(spark, d, PipelineQueries.LocalStage))
+      PipelineQueries.selectionE2e(spark, d, Stage.Local))
     val workDir = Files.createTempDirectory("selection-storage-stages").toString
     val stored = rows(PipelineQueries.selectionE2e(spark, d,
-      PipelineQueries.StorageStage(workDir)))
+      Stage.Durable(workDir)))
 
     assert(local.size == 6, s"expected 6 stage rows, got ${local.size}")
     assert(stored == local,
