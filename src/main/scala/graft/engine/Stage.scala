@@ -1,8 +1,9 @@
 package graft.engine
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.ContextBridge
 
 /** Stage materialization: the one place that cuts lineage, and the one
   * place that drops every cached block between queries.
@@ -85,10 +86,12 @@ object Stage {
 
   /** Run an operator's RDD cuts with `mode`'s checkpoint dir set on the
     * context: one `setCheckpointDir` (which adds a per-call UUID subdir)
-    * for [[Durable]], the context's prior dir restored after. [[Local]]
-    * leaves the context alone. The dir is context-wide state: serialize
-    * durable operator calls per context. The final stage's files outlive
-    * the call, since the returned frame is served from them. */
+    * for [[Durable]], then the context's prior value put back exactly,
+    * `None` included (re-setting it would nest a fresh UUID dir under the
+    * prior one). [[Local]] leaves the context alone. The dir is
+    * context-wide state: serialize durable operator calls per context. The
+    * final stage's files outlive the call, since the returned frame is
+    * served from them. */
   def withCheckpointDir[T](spark: SparkSession, mode: Mode)(body: => T): T =
     mode match {
       case Local => body
@@ -96,7 +99,7 @@ object Stage {
         val sc = spark.sparkContext
         val prior = sc.getCheckpointDir
         sc.setCheckpointDir(dir)
-        try body finally prior.foreach(sc.setCheckpointDir)
+        try body finally ContextBridge.restoreCheckpointDir(sc, prior)
     }
 
   /** Drop every cached Dataset and every persisted RDD block of the
@@ -120,10 +123,10 @@ object Stage {
     * stages; within one run stage writes are sequential driver actions.
     *
     * Superseded run dirs are swept here, mark-then-sweep with the run-dir
-    * grace ([[graft.ops.Indexes.effectiveRunDirGcGraceMs]], ≥ 6 h by
+    * grace ([[graft.ops.Stores.effectiveRunDirGcGraceMs]], ≥ 6 h by
     * default, since one stage can outlast the index sweep's grace and a
     * concurrent run's live stages must survive;
-    * [[graft.ops.Indexes.withGcGrace]] overrides it in tests).
+    * [[graft.ops.Stores.withGcGrace]] overrides it in tests).
     * Liveness is max(dir mtime, `.heartbeat` mtime): every durable cut
     * touches the heartbeat, so a long multi-stage run stays live even
     * where a dir's mtime only moves on child creation. A run never sweeps
@@ -131,10 +134,10 @@ object Stage {
   private[graft] def runScopedStageDir(s: SparkSession, base: String): String = {
     val mine = s.sparkContext.applicationId
     val basePath = new Path(base)
-    val fs = fsOf(s, base)
+    val fs = Fs.of(s, base)
     if (fs.exists(basePath)) {
       val cutoff =
-        System.currentTimeMillis() - graft.ops.Indexes.effectiveRunDirGcGraceMs
+        System.currentTimeMillis() - graft.ops.Stores.effectiveRunDirGcGraceMs
       fs.listStatus(basePath).foreach { st =>
         val hb = new Path(st.getPath, HeartbeatName)
         val lastAlive = math.max(st.getModificationTime,
@@ -151,8 +154,5 @@ object Stage {
   /** Overwriting the heartbeat file moves ITS mtime even where the run
     * dir's own mtime would not (no new direct child). */
   private def touchHeartbeat(s: SparkSession, dir: String): Unit =
-    fsOf(s, dir).create(new Path(dir, HeartbeatName), true).close()
-
-  private def fsOf(s: SparkSession, path: String): FileSystem =
-    FileSystem.get(new java.net.URI(path), s.sparkContext.hadoopConfiguration)
+    Fs.of(s, dir).create(new Path(dir, HeartbeatName), true).close()
 }

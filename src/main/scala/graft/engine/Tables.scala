@@ -60,8 +60,7 @@ object Tables {
     * reuse stays sound. */
   def parquetCached(spark: SparkSession, path: String): DataFrame = {
     val key = try {
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+      val fs = Fs.of(spark, path)
       val kids = fs.listStatus(new org.apache.hadoop.fs.Path(path))
       var totalLen = 0L
       var maxMtime = 0L

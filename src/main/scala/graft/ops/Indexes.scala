@@ -27,39 +27,6 @@ import graft.engine.Stage
   */
 object Indexes {
 
-  /** Bump when any index-producing ALGORITHM changes (plane generation,
-    * shingling, signature family, simhash votes, layout) — the corpus
-    * fingerprint only guards against DATA changes; without this tag an
-    * algorithm change with unchanged parameters would silently probe a
-    * stale index built by the old code. */
-  // v4: image-hash store gains the dhash_hex column (r17)
-  // v5: image-hash store gains rhash_hex, audio-hash store gains
-  //     crate/cehash_hex (r18) — without the bump, a committed v4
-  //     generation over an UNCHANGED corpus dir (env-pinned index root,
-  //     persisted probe dirs) would manifest-resolve and serve without
-  //     the columns the rotated/resampled queries select (masked in-repo
-  //     only because the fixture dirs themselves changed)
-  // v6: DSIR model stores persist their trained bucket WIDTH as a
-  //     constant `buckets` column (r18 ADVICE: max-observed-id inference
-  //     rejects a wider store but lets a NARROWER one fold silently —
-  //     wrong smoothing universe, zero-count tail rows); the image-hash
-  //     store gains the three per-rotation columns r90/r180/r270_hex
-  //     (the 4-way rotation+edit cross-distance probe needs each
-  //     rotation's hash, not just their min). v5 generations lack both
-  //     and must not manifest-resolve into the new readers.
-  // v7: the audio-hash store gains the two FIXED-RATE energy hashes
-  //     x4k_hex/x6k_hex (cross-rate composites — a 44.1 kHz master and
-  //     its 16 kHz re-encode land at different power-of-2 canonical
-  //     rates, so only a shared fixed target rate makes them
-  //     comparable). v6 audio generations lack the columns and must not
-  //     manifest-resolve into the new readers.
-  // v8: the fixed-rate kept-frame convention finalized (floor + the
-  //     sub-64-kept-frame comparability sentinel) after an interim
-  //     same-round ceiling build — a v7 audio store may carry
-  //     ceiling-era x4k/x6k hashes that no longer match the engine or
-  //     the regenerated manifest (the bump-on-algorithm-change rule).
-  val IndexFormatVersion = "v8"
-
   /** Cap on partition-directory fan-out per LSH table: the bucketed layout
     * partitions by the key's TOP `min(bBits, PartDirBits)` bits only, so
     * the directory count is bounded at `lTables · 2^PartDirBits` FOREVER —
@@ -83,56 +50,6 @@ object Indexes {
     * scan). The bound makes the documented contract LOUD instead of an
     * eventual driver OOM. */
   val MaxBatchProbeRows = 1 << 20
-
-  /** Root for on-demand local indexes (env-overridable; on a cluster this
-    * would be a shared filesystem/object-store prefix). */
-  val indexRoot: String = sys.env.getOrElse("SPARK_GRAFT_INDEX_DIR",
-    s"${System.getProperty("java.io.tmpdir")}/graft_indexes") + s"/$IndexFormatVersion"
-
-  private val legacyRootsSwept = new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  /** One-shot reclaim of SUPERSEDED version roots (ADVICE r16: naming
-    * migrations inside a version — e.g. promoting model fingerprints
-    * into the pq/ivf family prefixes — orphan the old-named generations
-    * and their manifest dirs forever, because no current family glob can
-    * match them; index roots are durable across JVMs). Version roots are
-    * the migration boundary: any legacy naming lives under an OLD
-    * `<base>/vN`, so reclaiming aged sibling version roots retires every
-    * orphan class at once without enumerating historical conventions.
-    * Grace: [[runDirGcGraceMsDefault]] (≥ 6 h) on the root's mtime — a
-    * live older-version JVM keeps touching its root's children (child
-    * creation moves dir mtime), so only genuinely abandoned roots age
-    * out. Runs once per JVM, piggybacked on the first family sweep. */
-  private[graft] def gcLegacyVersionRoots(spark: SparkSession): Unit =
-    if (legacyRootsSwept.compareAndSet(false, true))
-      sweepLegacyVersionRoots(spark)
-
-  /** The sweep body (separately callable so the spec can exercise it
-    * without consuming the once-per-JVM guard). Only STRICTLY OLDER
-    * version roots are candidates (self-review catch: `!= current` would
-    * let a lingering old binary delete a NEWER deployment's live root —
-    * upgrades only ever orphan the past, so numeric N < current is the
-    * correct "superseded" test), and the grace honours the
-    * [[withGcGrace]] hook like every other sweep. */
-  private[graft] def sweepLegacyVersionRoots(spark: SparkSession): Unit = {
-    val root = new org.apache.hadoop.fs.Path(indexRoot)
-    val base = root.getParent
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(indexRoot), spark.sparkContext.hadoopConfiguration)
-    val current = IndexFormatVersion.stripPrefix("v").toLong
-    if (base != null && fs.exists(base)) {
-      val cutoff = System.currentTimeMillis() - effectiveRunDirGcGraceMs
-      fs.listStatus(base).foreach { st =>
-        val name = st.getPath.getName
-        // 1..18 digits: fits a Long, so a stray 'v<hugenumber>' dir in
-        // the shared base can never crash the sweep (it is skipped)
-        if (st.isDirectory && name.matches("v\\d{1,18}") &&
-            name.stripPrefix("v").toLong < current &&
-            st.getModificationTime < cutoff)
-          fs.delete(st.getPath, true)
-      }
-    }
-  }
 
   /** Cheap corpus fingerprint from the frame's input files — path, length,
     * modification time, PLUS each file's last ≤4 KiB (for parquet that is
@@ -272,47 +189,6 @@ object Indexes {
     s"lsh_b${bBits}_L${lTables}_s${seed}_$layout"
   }
 
-  /** Grace period before a superseded index generation is reclaimed.
-    * Mark-then-sweep with an age gate instead of delete-on-supersede: a
-    * generation another live session is mid-query on stays readable until
-    * its directory mtime falls the grace period behind the sweep —
-    * in-flight reads finish, and only genuinely stale generations (and
-    * orphaned tmp dirs from crashed builds) are reclaimed. */
-  private[graft] val gcGraceMsDefault: Long =
-    sys.env.get("SPARK_GRAFT_INDEX_GC_GRACE_MS").map(_.toLong)
-      .getOrElse(15L * 60L * 1000L)
-
-  /** Test hook, THREAD-SCOPED (ADVICE r10: the old global `var` let one
-    * suite's forced-immediate grace leak into a concurrently-running suite's
-    * `ensure*` sweep, reclaiming a generation its reader still held). A
-    * `DynamicVariable` override applies only to sweeps the wrapped body
-    * itself triggers on this thread; every other caller keeps the default. */
-  private val gcGraceOverride =
-    new scala.util.DynamicVariable[Option[Long]](None)
-  private[graft] def withGcGrace[T](ms: Long)(body: => T): T =
-    gcGraceOverride.withValue(Some(ms))(body)
-
-  /** The effective (possibly test-overridden) grace window — shared with
-    * the other mark-then-sweep reclaimers in the engine (the durable-e2e
-    * run-dir GC), so one knob and one [[withGcGrace]] hook govern every
-    * sweep. */
-  private[graft] def effectiveGcGraceMs: Long =
-    gcGraceOverride.value.getOrElse(gcGraceMsDefault)
-
-  /** Run-dir GC gets its OWN, much larger default grace (ADVICE r12: the
-    * 15-min index knob made it easy for a sweep to reclaim a concurrent
-    * application's LIVE intermediate stages when one stage ran longer
-    * than the grace — index generations are content-addressed and
-    * rebuildable, run dirs are in-flight state, so they do not share a
-    * liveness budget). Floor is 6 h or the index grace, whichever is
-    * larger; `SPARK_GRAFT_RUNDIR_GC_GRACE_MS` overrides, and the
-    * [[withGcGrace]] test hook still governs (thread-scoped). */
-  private[graft] val runDirGcGraceMsDefault: Long =
-    sys.env.get("SPARK_GRAFT_RUNDIR_GC_GRACE_MS").map(_.toLong)
-      .getOrElse(math.max(gcGraceMsDefault, 6L * 60L * 60L * 1000L))
-  private[graft] def effectiveRunDirGcGraceMs: Long =
-    gcGraceOverride.value.getOrElse(runDirGcGraceMsDefault)
-
   /** Build the banded-LSH index: per vector, `lTables` rows of
     * (vec_id, t, key) where `key` is the table's `bBits`-bit sign bucket —
     * the IDENTICAL bucketing [[Similarity.lshTopK]] computes inline (same
@@ -441,7 +317,7 @@ object Indexes {
     * [[Stores.compact]] rename; a pre-existing dest wins any race and the
     * loser's tmp is discarded). The caller owns the reader flip and the
     * old generation's retirement — same contract as every committed
-    * generation here ([[effectiveGcGraceMs]] protects in-flight readers). Probe
+    * generation here ([[Stores.effectiveGcGraceMs]] protects in-flight readers). Probe
     * results are bit-identical pre/post compaction (IndexesSpec). */
   def compactLshIndex(spark: SparkSession, src: String,
                       dest: String): Unit = Stores.compact(spark, dest) { tmp =>
@@ -1039,8 +915,7 @@ object Indexes {
                        maxFiles: Int = 64,
                        maxImbalance: Double = 8.0,
                        manifestDir: Option[String] = None): CompactionDecision = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(src), spark.sparkContext.hadoopConfiguration)
+    val fs = graft.engine.Fs.of(spark, src)
     var nFiles = 0L
     val it = fs.listFiles(new org.apache.hadoop.fs.Path(src), true)
     while (it.hasNext) if (it.next().getPath.getName.endsWith(".parquet")) nFiles += 1
@@ -1071,21 +946,8 @@ object Indexes {
     val compact = nFiles > maxFiles
     if (compact) {
       layout.get.compactor(spark, src, dest)
-      // the READER FLIP: a manifest-addressed store publishes its new
-      // generation atomically and retires superseded generations under
-      // the standing grace. The compacted generation inherits src's
-      // fingerprint LINEAGE (src's own root if src was itself a
-      // compaction), so the next ensure recognizes the flipped generation
-      // as serving its fingerprint instead of republishing the
-      // uncompacted store.
-      manifestDir.foreach { m =>
-        val mfs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(m), spark.sparkContext.hadoopConfiguration)
-        val root = lineageOf(mfs, new org.apache.hadoop.fs.Path(m), src)
-          .getOrElse(src)
-        publishGeneration(spark, m, dest, lineage = Some(root))
-        retireGenerations(spark, m)
-      }
+      // the READER FLIP of a manifest-addressed store
+      manifestDir.foreach(Stores.publishCompacted(spark, _, src, dest))
     }
     CompactionDecision(nFiles, imbalance, compact,
       rebandAdvised = layout.get.reband && imbalance > maxImbalance,
@@ -1126,223 +988,6 @@ object Indexes {
       Nil, compactDocFlatIndex),
     Layout(m => m("name") && (m("ahash_hex") || m("ehash_hex")), "name", Nil,
       compactDocFlatIndex))
-
-  /** GENERATION MANIFEST — the atomic READER FLIP every compactor's
-    * scaladoc previously punted to the caller ("the caller owns the
-    * reader flip + old-generation retirement"), now a first-class verb:
-    * an explicitly-managed production store is addressed through a tiny
-    * manifest directory of monotonically-numbered pointer files
-    * (`gen-<seq12>-<nonce8>`, content = one generation path), and readers
-    * resolve [[currentGeneration]] — the highest (sequence, name) — instead
-    * of a hard-coded path. [[publishGeneration]] writes the pointer
-    * tmp-then-rename (one atomic metadata op on HDFS/local; on
-    * rename-as-copy object stores the pointer file is a single small
-    * object, so the PUT itself is the atomic op — the same caveat
-    * [[Stores.compact]] carries, but manifest-sized instead of
-    * store-sized, which is exactly why production table formats flip
-    * pointers rather than directories). A reader that resolved the old
-    * generation mid-flip keeps reading it — generations are write-once
-    * and retirement is grace-gated, the standard snapshot-isolation
-    * shape.
-    *
-    * [[retireGenerations]] deletes superseded generation DIRS (and their
-    * delete sidecars) whose pointer is both superseded by ≥
-    * `keep` newer generations and older than the grace window
-    * ([[effectiveGcGraceMs]] unless overridden) — in-flight readers
-    * finish inside the grace, the [[Stores.gcSiblings]] rationale. The pointer
-    * files themselves stay (a complete, tiny flip history — the
-    * manifest's audit log); only the data dirs go. Returns the retired
-    * generation paths. */
-  def publishGeneration(spark: SparkSession, manifestDir: String,
-                        generationPath: String,
-                        lineage: Option[String] = None): Long = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(manifestDir), spark.sparkContext.hadoopConfiguration)
-    val dir = new org.apache.hadoop.fs.Path(manifestDir)
-    fs.mkdirs(dir)
-    val seq = manifestEntries(fs, dir).lastOption.map(_._1 + 1L).getOrElse(0L)
-    // PUBLISHER-UNIQUE pointer name (r13 ADVICE): the earlier shared
-    // `gen-<seq>` target relied on rename FAILING when the destination
-    // exists, but Hadoop's RawLocalFileSystem delegates to rename(2),
-    // which silently REPLACES — two publishers racing one sequence both
-    // "succeeded" and one published generation was lost. A per-publisher
-    // nonce in the FINAL name means no two renames ever share a target,
-    // so every publish is durable; two publishers racing one sequence
-    // both land, totally ordered by (seq, name) — the later nonce wins
-    // [[currentGeneration]], the loser is superseded history, exactly as
-    // if it had published a moment earlier. (The tmp is also unique —
-    // review catch: a shared tmp let a racing loser's create TRUNCATE
-    // the winner's content before the winner's rename.)
-    val name = f"gen-$seq%012d-${java.util.UUID.randomUUID().toString.take(8)}"
-    val tmp = new org.apache.hadoop.fs.Path(dir, s".$name.tmp")
-    val out = fs.create(tmp, true)
-    // pointer content: line 1 = generation path; OPTIONAL line 2 = the
-    // fingerprint path this generation descends from (its lineage — the
-    // [[Stores.resolveThroughManifest]] republish guard's key). A lineage-less
-    // pointer (pre-r15 format, or a bare publishGeneration call) reads
-    // back as lineage == its own path.
-    val content = generationPath + lineage.map("\n" + _).getOrElse("")
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-    val dest = new org.apache.hadoop.fs.Path(dir, name)
-    if (!fs.rename(tmp, dest)) {
-      // nothing can legitimately occupy a nonce'd name — treat as a
-      // transient fs refusal and surface it rather than spin
-      fs.delete(tmp, false)
-      throw new java.io.IOException(
-        s"publishGeneration: rename to unique pointer $dest refused")
-    }
-    seq
-  }
-
-  /** The path readers serve from: the highest-sequence manifest pointer,
-    * or None on an empty/absent manifest. One driver listing + one tiny
-    * file read — never touches generation data. */
-  def currentGeneration(spark: SparkSession, manifestDir: String): Option[String] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(manifestDir), spark.sparkContext.hadoopConfiguration)
-    val dir = new org.apache.hadoop.fs.Path(manifestDir)
-    if (!fs.exists(dir)) return None
-    manifestEntries(fs, dir).lastOption.map { case (_, p) => readPointer(fs, p) }
-  }
-
-  /** See [[publishGeneration]]. `keep` ≥ 1 latest generations always
-    * survive regardless of age. The grace clock runs from SUPERSESSION,
-    * not publication: a superseded generation retires only when its
-    * SUCCESSOR pointer is older than the grace window (review catch:
-    * gating on the generation's own mtime deleted a long-lived current
-    * generation the instant a compaction superseded it — under the
-    * in-flight readers the grace exists to protect).
-    *
-    * `scopePrefix` (r19): restrict DELETION to generation paths under a
-    * prefix — the per-batch snapshot publisher's guard, because a
-    * manifest may also carry non-snapshot paths (a compacted LIVE store
-    * the maintenance stream appends into) that a generic sweep would
-    * recursively delete. Supersession is still judged against the FULL
-    * pointer history; only the delete targets are scoped.
-    * `prunePointers` (r19): also delete every pointer file naming a
-    * retired generation, so a per-batch publisher's manifest listing
-    * stays bounded by the grace window instead of growing one pointer
-    * per batch forever (the flip history is only pruned for generations
-    * whose data is already gone). */
-  def retireGenerations(spark: SparkSession, manifestDir: String,
-                        keep: Int = 1,
-                        scopePrefix: Option[String] = None,
-                        prunePointers: Boolean = false): Seq[String] = {
-    require(keep >= 1, "retireGenerations must keep at least the current generation")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(manifestDir), spark.sparkContext.hadoopConfiguration)
-    val dir = new org.apache.hadoop.fs.Path(manifestDir)
-    if (!fs.exists(dir)) return Seq.empty
-    val entries = manifestEntries(fs, dir)
-    val cutoff = System.currentTimeMillis() - effectiveGcGraceMs
-    val gens = entries.map { case (_, p) => readPointer(fs, p) }
-    val live = gens.takeRight(keep).toSet
-    // a re-published path (rollback flips BACK to an old generation)
-    // must survive retirement of its earlier superseded pointers, and a
-    // twice-pointed generation's clock runs from its LAST supersession —
-    // the pointer after its final occurrence (an earlier occurrence's
-    // successor may be arbitrarily old while the generation was current
-    // again until just now)
-    val candidates = gens.dropRight(keep).distinct.filterNot(live.contains)
-      .filter(gen => scopePrefix.forall(gen.startsWith))
-    // snapshot every successor mtime BEFORE any deletion: with
-    // prunePointers, retiring one generation deletes every pointer
-    // naming it, and under a rollback-republish history (g1,g2,g1,g3)
-    // a pruned pointer of g1 is exactly g2's successor — reading it
-    // lazily mid-sweep would throw FileNotFoundException (review catch)
-    val supersededAtOf = candidates.map { gen =>
-      // last occurrence is outside the live tail (filtered above), so the
-      // successor index always exists
-      gen -> fs.getFileStatus(
-        entries(gens.lastIndexOf(gen) + 1)._2).getModificationTime
-    }.toMap
-    candidates
-      .flatMap { gen =>
-        val genP = new org.apache.hadoop.fs.Path(gen)
-        val supersededAt = supersededAtOf(gen)
-        if (fs.exists(genP) && supersededAt < cutoff) {
-          fs.delete(genP, true)
-          val ts = new org.apache.hadoop.fs.Path(Stores.sidecarOf(gen))
-          if (fs.exists(ts)) fs.delete(ts, true)
-          if (prunePointers)
-            entries.zip(gens).foreach { case ((_, p), g) =>
-              if (g == gen) fs.delete(p, false)
-            }
-          Some(gen)
-        } else None
-      }
-  }
-
-  /** Pointer files sorted by (sequence, name): the name's nonce suffix
-    * breaks same-sequence ties deterministically (see
-    * [[publishGeneration]]'s race note); legacy suffix-less `gen-<seq>`
-    * names parse the same. Hidden `.gen-*.tmp` files never match the
-    * prefix filter. */
-  private[graft] def manifestEntries(fs: org.apache.hadoop.fs.FileSystem,
-                              dir: org.apache.hadoop.fs.Path)
-      : Seq[(Long, org.apache.hadoop.fs.Path)] =
-    Option(fs.listStatus(dir)).getOrElse(Array.empty).toSeq
-      .filter(st => st.isFile && st.getPath.getName.startsWith("gen-"))
-      .map { st =>
-        val seq = st.getPath.getName.stripPrefix("gen-")
-          .takeWhile(_.isDigit).toLong
-        (seq, st.getPath)
-      }
-      .sortBy { case (seq, p) => (seq, p.getName) }
-
-  /** The pointer's generation path (content line 1). */
-  private def readPointer(fs: org.apache.hadoop.fs.FileSystem,
-                          p: org.apache.hadoop.fs.Path): String =
-    readPointerLines(fs, p)._1
-
-  /** (generation path, lineage) — see [[publishGeneration]]'s content
-    * format. Lineage is None for pre-lineage pointers. */
-  private[graft] def readPointerLines(fs: org.apache.hadoop.fs.FileSystem,
-                               p: org.apache.hadoop.fs.Path)
-      : (String, Option[String]) = {
-    val in = fs.open(p)
-    val content = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val tmp = new Array[Byte](4096)
-      var n = in.read(tmp)
-      while (n > 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-      new String(buf.toByteArray, "UTF-8")
-    } finally in.close()
-    content.split("\n", 2) match {
-      case Array(gen)      => (gen, None)
-      case Array(gen, lin) => (gen, Some(lin).filter(_.nonEmpty))
-    }
-  }
-
-  /** The current pointer's (generation path, lineage), or None on an
-    * empty/absent manifest. */
-  private[graft] def currentGenerationEntry(spark: SparkSession,
-                                            manifestDir: String)
-      : Option[(String, Option[String])] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(manifestDir), spark.sparkContext.hadoopConfiguration)
-    val dir = new org.apache.hadoop.fs.Path(manifestDir)
-    if (!fs.exists(dir)) return None
-    manifestEntries(fs, dir).lastOption
-      .map { case (_, p) => readPointerLines(fs, p) }
-  }
-
-  /** The lineage key of `gen` as recorded by its LAST manifest pointer:
-    * the recorded lineage, else the generation path itself (lineage-less
-    * pointers root their own lineage), else None when `gen` was never
-    * published here — [[compactionPolicy]] uses this to propagate the
-    * fingerprint root across a compaction chain. */
-  private def lineageOf(fs: org.apache.hadoop.fs.FileSystem,
-                        dir: org.apache.hadoop.fs.Path,
-                        gen: String): Option[String] =
-    // a manifest that does not exist yet has no lineage to propagate —
-    // the policy's first-ever publish to a fresh manifest must not
-    // crash on the listing (review catch: listStatus throws
-    // FileNotFoundException, it does not return null)
-    if (!fs.exists(dir)) None
-    else manifestEntries(fs, dir).reverse.iterator
-      .map { case (_, p) => readPointerLines(fs, p) }
-      .collectFirst { case (g, lin) if g == gen => lin.getOrElse(gen) }
 
   /** [[compactLshIndex]]'s twin for the CELL-partitioned families (IVF
     * inverted lists and the IVF-PQ IVFADC layout share it — the schema
@@ -1604,144 +1249,30 @@ object Indexes {
   }
 
   /** Publish a WRITE-ONCE merged-counts snapshot of a maintained model
-    * store through a generation manifest — the torn-read fence for
-    * [[graft.streaming.EventStreams.dsirGateStreamLiveFenced]] (r18
-    * VERDICT #4): the gate previously read the MUTABLE store path
-    * directly, so a gate batch racing an in-flight append (or a crash
-    * replay's delete-then-rewrite of a batch partition) could score
-    * against half-landed counts. This verb derives the merged ≤ `buckets`-
-    * row count table into a FRESH nonce'd generation dir (never mutated
-    * after creation — a replayed maintenance batch publishes a NEW
-    * generation rather than rewriting one a reader may hold), then flips
-    * the manifest pointer atomically ([[publishGeneration]]). Readers
-    * resolving [[currentGeneration]] therefore only ever see a complete
-    * snapshot: published-after-written, write-once forever after.
-    *
-    * Cost per micro-batch: one ≤ `buckets`-row write + one pointer
-    * rename — model-sized, corpus-independent. Superseded SNAPSHOT dirs
-    * retire inline through [[retireStoreSnapshots]]: the PROVEN
-    * [[retireGenerations]] supersession rule (grace from the successor
-    * POINTER's mtime, rollback republishes survive, unpublished crash
-    * orphans can never count as supersessors — the r19 third-pass
-    * catch), SCOPED so only `<store>.gen/` paths are deletable (a
-    * compacted LIVE store published through the same manifest is
-    * untouchable) and with retired snapshots' pointer files pruned so
-    * the per-batch manifest listing stays bounded by the grace window
-    * instead of growing one pointer per batch forever (non-snapshot
-    * pointers keep their full flip history). A store with NO count rows
-    * yet (never
-    * appended, or an all-filtered first micro-batch left a schema-only
-    * file) publishes NOTHING and returns None — readers keep the
-    * neutral prior, and the maintenance stream must not die on a case
-    * the unfenced form tolerated (self-review r19). A replay that runs
-    * AFTER later batches landed snapshots the store as it then is —
-    * fresher than the original, never torn; the gate's "model at
-    * processing time" contract is unchanged. */
+    * store through a generation manifest ([[Stores.publishStoreSnapshot]])
+    * — the torn-read fence for
+    * [[graft.streaming.EventStreams.dsirGateStreamLiveFenced]]: a gate
+    * batch reading the MUTABLE store path could race an in-flight append
+    * (or a crash replay's delete-then-rewrite of a batch partition) and
+    * score against half-landed counts. The merged ≤ `buckets`-row count
+    * table lands in a fresh write-once generation, so readers resolving
+    * [[Stores.currentGeneration]] only ever see a complete snapshot. Cost
+    * per micro-batch: one ≤ `buckets`-row write + one pointer rename —
+    * model-sized, corpus-independent. A store with NO count rows yet
+    * (never appended, or an all-filtered first micro-batch left a
+    * schema-only file) publishes NOTHING and returns None — readers keep
+    * the neutral prior. A replay that runs AFTER later batches landed
+    * snapshots the store as it then is — fresher than the original,
+    * never torn. */
   def publishDsirModelGeneration(spark: SparkSession, storePath: String,
                                  manifestDir: String,
                                  batchId: Long): Option[String] =
-    publishStoreSnapshot(spark, storePath, manifestDir, batchId) {
+    Stores.publishStoreSnapshot(spark, storePath, manifestDir, batchId) {
       val widths = dsirStoreWidths(spark, storePath)
       if (widths.isEmpty) None
       else Some(mergedDsirCounts(spark, storePath)
         .withColumn("buckets", lit(singleDsirWidth(storePath, widths))))
     }
-
-  /** GENERIC per-batch snapshot-fence lifecycle (VERDICT r19 #5 — the
-    * DSIR fence's pattern extracted once, so the next live-maintained
-    * store a streaming reader consumes does not re-derive it): derive a
-    * MODEL-SIZED merged view of a maintained store via `merge`, write it
-    * into a fresh write-once nonce'd generation dir under
-    * `<store>.gen/`, flip the manifest pointer atomically strictly AFTER
-    * the write, and retire superseded snapshots. `merge` returning None
-    * (nothing to snapshot yet — e.g. an all-filtered first micro-batch)
-    * publishes NOTHING and returns None; readers keep their prior.
-    *
-    * The three r19 hazard lessons, encoded here once:
-    *  - retirement is SCOPED to the `<store>.gen/` prefix — a generic
-    *    sweep would recursively delete any non-snapshot path (a
-    *    compacted LIVE store) published through the same manifest;
-    *  - retired snapshots' pointer files are PRUNED so a per-batch
-    *    publisher's manifest listing stays bounded by the grace window
-    *    (never O(total batches)), with every successor mtime snapshotted
-    *    BEFORE any deletion so a rollback-republish history survives;
-    *  - crash ORPHANS (written, never pointer-flipped) are reclaimed by
-    *    their own age only — manifest-driven supersession means an
-    *    unpublished dir can never retire a generation a reader resolved.
-    *
-    * SINGLE publisher per store (see [[retireStoreSnapshots]]); the
-    * snapshot must be bounded (it is written `coalesce(1)`) — this fence
-    * is for model/count stores a stream consults per batch, not for
-    * corpus-sized data. */
-  def publishStoreSnapshot(spark: SparkSession, storePath: String,
-                           manifestDir: String, batchId: Long)
-                          (merge: => Option[DataFrame]): Option[String] =
-    merge match {
-      case None => None
-      case Some(snapshot) =>
-        val gen = s"$storePath.gen/b$batchId-" +
-          java.util.UUID.randomUUID().toString.take(8)
-        snapshot.coalesce(1).write.mode("overwrite").parquet(gen)
-        publishGeneration(spark, manifestDir, gen)
-        retireStoreSnapshots(spark, storePath, manifestDir)
-        Some(gen)
-    }
-
-  /** The snapshot sweep [[publishStoreSnapshot]] runs per publish
-    * — MANIFEST-DRIVEN, not dir-mtime-driven (self-review r19 third
-    * pass: an UNPUBLISHED orphan dir — a crash between the snapshot
-    * write and the pointer flip — must never count as a supersessor, or
-    * the sweep deletes the manifest-current generation a reader just
-    * resolved, with zero grace; likewise a rollback republish must keep
-    * its target, which only the pointer history knows). Delegates to
-    * [[retireGenerations]]' proven supersession rule, SCOPED so only
-    * paths under `<store>.gen/` can be deleted (a compacted live store
-    * published through the same manifest is untouchable) and with
-    * pointer pruning so the per-batch manifest listing stays bounded by
-    * the grace window. Crash ORPHANS — snapshot dirs no pointer ever
-    * named, invisible to readers by construction — are reclaimed
-    * directly once their own age passes the grace window.
-    *
-    * SINGLE-PUBLISHER contract: orphan reclaim judges a dir purely by
-    * age-vs-grace, so a CONCURRENT publisher's snapshot sitting in its
-    * write-to-publish window (written, pointer not yet flipped) is
-    * indistinguishable from a crash orphan, and a second sweeping
-    * process running under a short [[withGcGrace]] override could
-    * delete it before the flip. One publisher per store — exactly what
-    * the foreachBatch maintenance stream guarantees (Structured
-    * Streaming serializes a query's batches) — makes the race
-    * impossible: the only in-window snapshot is the sweeping batch's
-    * own, already pointer-flipped by the time this runs. Do not point a
-    * second concurrent publisher or an external sweeper at the same
-    * store. */
-  def retireStoreSnapshots(spark: SparkSession,
-                           storePath: String,
-                           manifestDir: String): Seq[String] = {
-    val prefix = s"$storePath.gen/"
-    val retired = retireGenerations(spark, manifestDir, keep = 1,
-      scopePrefix = Some(prefix), prunePointers = true)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(storePath), spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(s"$storePath.gen")
-    if (!fs.exists(root)) return retired
-    val mdir = new org.apache.hadoop.fs.Path(manifestDir)
-    // compare by the nonce'd dir NAME: listStatus returns fully-qualified
-    // URIs (file:/…) while pointers carry the caller's raw path form —
-    // a string compare on full paths would orphan every live snapshot
-    val referencedNames =
-      if (!fs.exists(mdir)) Set.empty[String]
-      else manifestEntries(fs, mdir)
-        .map { case (_, p) => readPointer(fs, p) }
-        .filter(_.startsWith(prefix))
-        .map(g => new org.apache.hadoop.fs.Path(g).getName).toSet
-    val cutoff = System.currentTimeMillis() - effectiveGcGraceMs
-    val orphans = fs.listStatus(root).toSeq.filter { st =>
-      st.isDirectory && !referencedNames.contains(st.getPath.getName) &&
-        st.getModificationTime < cutoff
-    }
-    orphans.foreach(st => fs.delete(st.getPath, true))
-    retired ++ orphans.map(_.getPath.toString)
-  }
 
   /** Build-if-missing INGEST-LIFECYCLE model store — the
     * [[ensureLifecycleMinhashIndex]] bridge for the DSIR family: the base
@@ -1961,14 +1492,14 @@ object Indexes {
     * CONCURRENCY: builds land via [[Stores.ensure]] (tmp dir + atomic
     * rename), so a reader never sees a partial index and racing builders
     * resolve to one committed generation; superseded generations survive
-    * [[effectiveGcGraceMs]] past their replacement, so another session's in-flight
+    * [[Stores.effectiveGcGraceMs]] past their replacement, so another session's in-flight
     * read of the old generation completes before reclamation. */
   def ensureLshIndex(spark: SparkSession, emb: DataFrame, sfDir: String,
                      bBits: Int = 4, lTables: Int = 16, dim: Int = 64,
                      seed: Long = 42L, partitionByBucket: Boolean = true): String = {
     // the probe path resolves THROUGH the family manifest: each newly
     // built fingerprint generation is published as a pointer flip, and
-    // the serving path is [[currentGeneration]] — the same reader contract
+    // the serving path is [[Stores.currentGeneration]] — the same reader contract
     // a compaction flip uses, so a corpus-less serving process and this
     // corpus-keyed build path read one door
     Stores.ensure(spark, sfDir, lshFamily(bBits, lTables, seed, partitionByBucket),
@@ -2503,7 +2034,7 @@ object Indexes {
     * "train_excl_src0"'s live generation). The length prefix shipped in
     * the same round that introduced labeled families, so no deployed
     * index root holds pre-rename generations; any FUTURE family rename
-    * must bump [[IndexFormatVersion]] or old-format directories escape
+    * must bump [[Stores.IndexFormatVersion]] or old-format directories escape
     * every sweep. */
   private def labelSegment(label: String): String = {
     val lbl = label.replaceAll("[^A-Za-z0-9._-]", "_")

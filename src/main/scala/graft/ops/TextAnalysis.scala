@@ -389,8 +389,7 @@ object TextAnalysis {
     * rationale above); delete sidecar folded below the pruned read. */
   private def probeFoldedWindows(spark: SparkSession, posWinPath: String,
                                  hs: Seq[Long]): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(posWinPath),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = graft.engine.Fs.of(spark, posWinPath)
     val isServing = Option(fs.globStatus(
       new org.apache.hadoop.fs.Path(s"$posWinPath/sb=*"))).exists(_.nonEmpty)
     // a STREAMING serving store nests idempotent batch lineage inside
@@ -491,8 +490,7 @@ object TextAnalysis {
           s"$path/postings", "batch_id", "tb")
         // an EMPTY first batch on a fresh path writes no postings files —
         // skip the derived-store read-back rather than fail schema inference
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+        val fs = graft.engine.Fs.of(spark, path)
         if (fs.globStatus(new org.apache.hadoop.fs.Path(
             s"$path/postings", "*/*/*.parquet")).nonEmpty)
           writeDerivedStores(spark, path, b, dynamic = true)
@@ -571,8 +569,7 @@ object TextAnalysis {
   private def readPartDirs(spark: SparkSession, base: String, glob: String,
                            schema: StructType)
       : DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(base),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = graft.engine.Fs.of(spark, base)
     val matches =
       Option(fs.globStatus(new org.apache.hadoop.fs.Path(s"$base/$glob")))
         .getOrElse(Array.empty).map(_.getPath.toString)
@@ -858,8 +855,7 @@ object TextAnalysis {
   private def maxScoreInputs(spark: SparkSession, indexPath: String,
                              terms: Seq[String])
       : Option[(Map[String, (Long, Long)], Long, Long)] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(indexPath), spark.sparkContext.hadoopConfiguration)
+    val fs = graft.engine.Fs.of(spark, indexPath)
     if (fs.globStatus(new org.apache.hadoop.fs.Path(
         s"$indexPath/termstats", "*/*/*.parquet")).isEmpty) return None
     val tbs = terms.map(termBucketLocal).distinct

@@ -174,17 +174,18 @@ object PipelineQueries {
     * rebuild on the surviving corpus. The oracle exploits that both
     * candidate generation and Jaccard are PAIRWISE: survivors-only
     * derivation == full derivation with both endpoints filtered. The
-    * shared write-once ensure-generation is never tombstoned — other
-    * queries read it; deletes target an explicitly-managed demo store
-    * (the [[ensureKnnDemo]] marker pattern). */
+    * shared minhash generation other queries read is never tombstoned:
+    * the deletes target this query's own demo generation, built once per
+    * corpus by [[graft.ops.Stores.ensure]] (store and sidecar together). */
   def minhashDelete(s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d)
     val deleted = docs.where(col("doc_id") % 9 === 4).select(col("doc_id"))
-    val base = ensureKnnDemo(s, "del_minhash_demo_", graft.ops.Indexes.indexRoot +
-        s"/del_minhash_demo_${graft.ops.Indexes.corpusFingerprint(docs)}") { p =>
-      graft.ops.Indexes.appendMinhashIndex(docs, s"$p/sets", s"$p/bands")
-      graft.ops.Indexes.tombstoneMinhashIndex(s, s"$p/sets", deleted)
-    }
+    val base = graft.ops.Stores.ensure(s, d, "del_minhash_demo_",
+        graft.ops.Indexes.corpusFingerprint(docs),
+        committed = Seq("store/sets", "store/bands", "store/tombstones")) { p =>
+      graft.ops.Indexes.appendMinhashIndex(docs, s"$p/store/sets", s"$p/store/bands")
+      graft.ops.Indexes.tombstoneMinhashIndex(s, s"$p/store/sets", deleted)
+    } + "/store"
     graft.ops.Indexes.minhashNearDupsIndexed(s, s"$base/sets", s"$base/bands",
         threshold = 0.3)
       .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
@@ -2773,54 +2774,6 @@ object PipelineQueries {
        |GROUP BY hops ORDER BY hops ASC""".stripMargin
   }
 
-
-  private def demoFs(s: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
-    org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-
-  private def demoMarker(dir: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(dir, "_DEMO_READY")
-
-  /** Memoized demo-state builder for the graph-maintenance queries
-    * (VERDICT r11 #2: the old shape re-ran the index write + prior-graph
-    * build inside every TIMED bench iteration, so the artifact measured
-    * ~95% setup and a planted O(corpus) regression in the refresh path
-    * would have been invisible). State (index dir at `path`, prior graph
-    * parquet at `<path>_prevgraph`) is keyed by corpus fingerprint + band
-    * width in the dir name and guarded by a `_DEMO_READY` marker written
-    * only after `build` completes — a crash mid-setup leaves no marker
-    * and the next caller wipes and rebuilds. The timed query body then
-    * touches ONLY the maintenance operator under test. */
-  private def ensureKnnDemo(s: SparkSession, family: String, path: String)
-                           (build: String => Unit): String = {
-    val fs = demoFs(s, path)
-    if (!fs.exists(demoMarker(path))) {
-      for (stale <- Seq(path, graft.ops.Stores.sidecarOf(path), s"${path}_prevgraph"))
-        fs.delete(new org.apache.hadoop.fs.Path(stale), true)
-      build(path)
-      fs.create(demoMarker(path), true).close()
-      // sibling sweep (review catch: fingerprint rotation leaked one
-      // permanent demo-state group per fixture generation — the same
-      // leak class the run-dir GC closes): aged `family`-prefixed
-      // entries reclaim unless they belong to the CURRENT generation
-      // (its own name prefixes its _prevgraph / delete-sidecar
-      // companions). Shares the grace knob + test hook.
-      val p = new org.apache.hadoop.fs.Path(path)
-      val parent = p.getParent
-      if (parent != null && fs.exists(parent)) {
-        val cutoff = System.currentTimeMillis() -
-          graft.ops.Indexes.effectiveGcGraceMs
-        fs.listStatus(parent).foreach { st =>
-          val name = st.getPath.getName
-          if (name.startsWith(family) && !name.startsWith(p.getName) &&
-              st.getModificationTime < cutoff)
-            fs.delete(st.getPath, true)
-        }
-      }
-    }
-    path
-  }
-
   /** INCREMENTAL kNN-graph maintenance, oracle-gated by EQUIVALENCE: the
     * corpus splits into an "already indexed" half and an "appended batch"
     * (by vec_id parity), the previous graph is built on the old half
@@ -2829,9 +2782,10 @@ object PipelineQueries {
     * [[graft.ops.Indexes.knnGraphIncremental]] refreshes only the changed
     * neighbourhood — while the ORACLE is simply the full-rebuild graph
     * derivation, so the driver hash-verifies the incremental ==
-    * rebuild contract itself every round. The index+prior-graph setup is
-    * MEMOIZED via [[ensureKnnDemo]] (fingerprint-keyed, marker-gated), so
-    * the timed body is the refresh alone. */
+    * rebuild contract itself every round. The index + prior-graph setup
+    * is one [[graft.ops.Stores.ensure]] generation per corpus and band
+    * width (`store/`, `prevgraph/`), so the timed body is the refresh
+    * alone. */
   def knnGraphIncremental(s: SparkSession, d: String): DataFrame = {
     val emb = embeddings(s, d)
     val b = Similarity.scaledBandBits(corpusCount(emb))
@@ -2844,19 +2798,20 @@ object PipelineQueries {
     // operator's work is min(corpus, ~256·|batch|) by construction; the
     // oracle (full rebuild) gates correctness for any split.
     val isNew = col("vec_id") % 2 === 1
-    val path = ensureKnnDemo(s, "incr_knn_demo_", graft.ops.Indexes.indexRoot +
-        s"/incr_knn_demo_${graft.ops.Indexes.corpusFingerprint(emb)}_b$b") { p =>
+    val gen = graft.ops.Stores.ensure(s, d, "incr_knn_demo_",
+        s"${graft.ops.Indexes.corpusFingerprint(emb)}_b$b",
+        committed = Seq("store", "prevgraph")) { p =>
       val oldEmb = emb.where(!isNew)
-      graft.ops.Indexes.writeLshIndex(oldEmb, p, bBits = b, lTables = 8,
+      graft.ops.Indexes.writeLshIndex(oldEmb, s"$p/store", bBits = b, lTables = 8,
         partitionByBucket = false)
-      graft.ops.Indexes.knnGraphIndexed(oldEmb, p, j = 3)
-        .write.mode("overwrite").parquet(s"${p}_prevgraph")
-      graft.ops.Indexes.appendLshIndex(emb.where(isNew), p,
+      graft.ops.Indexes.knnGraphIndexed(oldEmb, s"$p/store", j = 3)
+        .write.mode("overwrite").parquet(s"$p/prevgraph")
+      graft.ops.Indexes.appendLshIndex(emb.where(isNew), s"$p/store",
         bBits = b, lTables = 8, partitionByBucket = false)
     }
-    graft.ops.Indexes.knnGraphIncremental(emb, path,
+    graft.ops.Indexes.knnGraphIncremental(emb, s"$gen/store",
         emb.where(isNew).select(col("vec_id")),
-        graft.engine.Tables.parquetCached(s, s"${path}_prevgraph"), j = 3)
+        graft.engine.Tables.parquetCached(s, s"$gen/prevgraph"), j = 3)
       .orderBy(col("vec_a"), col("cos").desc, col("vec_b"))
   }
 
@@ -2871,23 +2826,25 @@ object PipelineQueries {
     * against the index in setup, passed as the delete batch to the
     * operator), and the ORACLE is the full-rebuild graph on the
     * SURVIVING corpus — driver-hash-verifying delete-refresh == rebuild
-    * every round. Setup (index, prior graph, tombstones) is memoized;
+    * every round. Setup (index, prior graph, tombstones) is one
+    * [[graft.ops.Stores.ensure]] generation per corpus and band width;
     * the timed body is tombstone-folded read + affected-set derivation +
     * changed-neighbourhood re-rank only. */
   def knnGraphDelete(s: SparkSession, d: String): DataFrame = {
     val emb = embeddings(s, d)
     val b = Similarity.scaledBandBits(corpusCount(emb))
     val deleted = emb.where(col("vec_id") % 7 === 3).select(col("vec_id"))
-    val path = ensureKnnDemo(s, "del_knn_demo_", graft.ops.Indexes.indexRoot +
-        s"/del_knn_demo_${graft.ops.Indexes.corpusFingerprint(emb)}_b$b") { p =>
-      graft.ops.Indexes.writeLshIndex(emb, p, bBits = b, lTables = 8,
+    val gen = graft.ops.Stores.ensure(s, d, "del_knn_demo_",
+        s"${graft.ops.Indexes.corpusFingerprint(emb)}_b$b",
+        committed = Seq("store", "prevgraph", "store.tombstones")) { p =>
+      graft.ops.Indexes.writeLshIndex(emb, s"$p/store", bBits = b, lTables = 8,
         partitionByBucket = false)
-      graft.ops.Indexes.knnGraphIndexed(emb, p, j = 3)
-        .write.mode("overwrite").parquet(s"${p}_prevgraph")
-      graft.ops.Stores.tombstone(p, deleted, "vec_id")
+      graft.ops.Indexes.knnGraphIndexed(emb, s"$p/store", j = 3)
+        .write.mode("overwrite").parquet(s"$p/prevgraph")
+      graft.ops.Stores.tombstone(s"$p/store", deleted, "vec_id")
     }
-    graft.ops.Indexes.knnGraphDelete(emb, path, deleted,
-        graft.engine.Tables.parquetCached(s, s"${path}_prevgraph"), j = 3)
+    graft.ops.Indexes.knnGraphDelete(emb, s"$gen/store", deleted,
+        graft.engine.Tables.parquetCached(s, s"$gen/prevgraph"), j = 3)
       .orderBy(col("vec_a"), col("cos").desc, col("vec_b"))
   }
 
@@ -4573,8 +4530,7 @@ object PipelineQueries {
     // rewriting — matching how a production shard tree is consumed.
     val docs = documents(s, d)
     val fp = graft.ops.Indexes.corpusFingerprint(docs)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), s.sparkContext.hadoopConfiguration)
+    val fs = graft.engine.Fs.of(s, path)
     val marker = new org.apache.hadoop.fs.Path(path, s"_graft_fp_$fp")
     if (!fs.exists(marker)) {
       Curation.writeTrainingShards(docs, path,
@@ -4601,7 +4557,7 @@ object PipelineQueries {
     * purpose: the oracle SQL is a static string and must glob the same
     * tree the query just wrote). */
   private def shardAuditPath(d: String): String =
-    s"${graft.ops.Indexes.indexRoot}/shard_audit/" +
+    s"${graft.ops.Stores.indexRoot}/shard_audit/" +
       d.replaceAll("[^A-Za-z0-9._-]", "_")
 
   /** Verify runs at sf0.01 (driver contract), so the oracle globs the
@@ -6385,17 +6341,18 @@ object PipelineQueries {
     * ~1/9 doc slice is tombstoned against a demo-path inverted index and
     * the BM25 probe must equal a rebuild on the surviving corpus — df,
     * the corpus scalars (corrected from the sidecar's captured (1, dl)
-    * partials), and the candidate set all fold. Same demo-store marker
+    * partials), and the candidate set all fold. Same demo generation
     * pattern as q_minhash_delete; the shared write-once ensure
     * generation is never tombstoned. */
   def bm25IndexedDelete(s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d)
     val deleted = docs.where(col("doc_id") % 9 === 4).select(col("doc_id"))
-    val base = ensureKnnDemo(s, "del_inverted_demo_", graft.ops.Indexes.indexRoot +
-        s"/del_inverted_demo_${graft.ops.Indexes.corpusFingerprint(docs)}") { p =>
-      TextAnalysis.writeInvertedIndex(docs, p)
-      TextAnalysis.tombstoneInvertedIndex(s, p, deleted)
-    }
+    val base = graft.ops.Stores.ensure(s, d, "del_inverted_demo_",
+        graft.ops.Indexes.corpusFingerprint(docs),
+        committed = Seq("store", "store.tombstones")) { p =>
+      TextAnalysis.writeInvertedIndex(docs, s"$p/store")
+      TextAnalysis.tombstoneInvertedIndex(s, s"$p/store", deleted)
+    } + "/store"
     TextAnalysis.bm25TopKIndexed(s, base,
       Seq("vector", "stream", "merge", "quantum"), k = 25)
   }
@@ -7073,7 +7030,7 @@ object PipelineQueries {
     * folds the lineage ([[graft.ops.Indexes.compactDsirModelStore]]),
     * the compacted path is published through the SAME manifest, and the
     * raw pool scores from the MANIFEST-RESOLVED generation
-    * ([[graft.ops.Indexes.currentGeneration]]) with the native kernel.
+    * ([[graft.ops.Stores.currentGeneration]]) with the native kernel.
     * The oracle knows nothing of streams, stores, or manifests — it
     * replays the one-shot full-corpus exploded derivation — so this
     * row's hash match proves maintained == published == compacted ==
@@ -7105,8 +7062,8 @@ object PipelineQueries {
       // the reader flip every other committed store already grades:
       // publish the compacted generation, resolve it back through the
       // manifest, and score from what the POINTER serves
-      graft.ops.Indexes.publishGeneration(s, mdir, compacted)
-      val gen = graft.ops.Indexes.currentGeneration(s, mdir)
+      graft.ops.Stores.publishGeneration(s, mdir, compacted)
+      val gen = graft.ops.Stores.currentGeneration(s, mdir)
         .getOrElse(sys.error("manifest must serve the compacted generation"))
       require(gen == compacted,
         s"the freshly published compaction must win the pointer, got $gen")

@@ -407,7 +407,7 @@ object EventStreams {
       .start()
 
   /** [[dsirGateStreamLive]] with the torn-read window CLOSED: each gate
-    * batch resolves [[graft.ops.Indexes.currentGeneration]] and scores
+    * batch resolves [[graft.ops.Stores.currentGeneration]] and scores
     * against that write-once snapshot — a concurrent append, crash
     * replay, or compaction can never be read mid-flight, because
     * generations are published only after they are completely written
@@ -424,7 +424,7 @@ object EventStreams {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark = batch.sparkSession
-        val model = graft.ops.Indexes.currentGeneration(spark, manifestDir)
+        val model = graft.ops.Stores.currentGeneration(spark, manifestDir)
           .map(gen => graft.ops.Indexes.readDsirModel(spark, gen, buckets))
           .getOrElse(graft.ops.Selection.neutralModel(buckets))
         gateBatch(batch.toDF(), model, buckets, minWeightQ, batchId, outPath)
@@ -561,7 +561,6 @@ object EventStreams {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val s = batch.sparkSession
-        import s.implicits._
         val b = batch.toDF().select(col("vec_id"), col("embedding")).persist()
         try {
           // an EMPTY micro-batch is a no-op (availableNow/no-data batches
@@ -578,30 +577,41 @@ object EventStreams {
           graft.ops.Stores.appendBatch(b, batchId, embPath)
           graft.ops.Indexes.appendLshIndexIdempotent(b, batchId, indexPath,
             bBits, lTables, dim, seed)
-          val fs = org.apache.hadoop.fs.FileSystem.get(
-            new java.net.URI(graphPath), s.sparkContext.hadoopConfiguration)
-          val gPath = new org.apache.hadoop.fs.Path(graphPath)
-          def gens(): Seq[Long] =
-            if (!fs.exists(gPath)) Seq.empty
-            else fs.listStatus(gPath).toSeq.map(_.getPath.getName)
-              .filter(_.startsWith("gen=")).map(_.drop(4).toLong)
-          val prevGens = gens().filter(_ < batchId)
-          val prev =
-            if (prevGens.isEmpty) Seq.empty[(Long, Long, Double)]
-              .toDF("vec_a", "vec_b", "cos")
-            else s.read.parquet(s"$graphPath/gen=${prevGens.max}")
-          val embAll = s.read.parquet(embPath)
-            .select(col("vec_id"), col("embedding"))
-          graft.ops.Stores.overwritePartitions(
+          landGraphGeneration(s, embPath, graphPath, batchId) { (embAll, prev) =>
             graft.ops.Indexes.knnGraphIncremental(embAll, indexPath,
-              b.select(col("vec_id")), prev, j).withColumn("gen", lit(batchId)),
-            graphPath, "gen")
-          gens().filter(_ < batchId - 2).foreach(g =>
-            fs.delete(new org.apache.hadoop.fs.Path(s"$graphPath/gen=$g"), true))
+              b.select(col("vec_id")), prev, j)
+          }
           }
         } finally b.unpersist(blocking = false)
       }
       .start()
+
+  /** Step (3) of both kNN-graph streams: land batch `batchId`'s graph as
+    * partition `gen=<batchId>` of `graphPath`. `derive(embAll, prev)`
+    * refreshes the previous generation (the newest below `batchId`, empty
+    * on the first batch) against every vector landed in `embPath` so far;
+    * generations older than `batchId - 2` are swept once the new one has
+    * landed. */
+  private def landGraphGeneration(s: SparkSession, embPath: String,
+                                  graphPath: String, batchId: Long)
+                                 (derive: (DataFrame, DataFrame) => DataFrame): Unit = {
+    import s.implicits._
+    val fs = graft.engine.Fs.of(s, graphPath)
+    val gPath = new org.apache.hadoop.fs.Path(graphPath)
+    def gens(): Seq[Long] =
+      if (!fs.exists(gPath)) Seq.empty
+      else fs.listStatus(gPath).toSeq.map(_.getPath.getName)
+        .filter(_.startsWith("gen=")).map(_.drop(4).toLong)
+    val prevGens = gens().filter(_ < batchId)
+    val prev =
+      if (prevGens.isEmpty) Seq.empty[(Long, Long, Double)].toDF("vec_a", "vec_b", "cos")
+      else s.read.parquet(s"$graphPath/gen=${prevGens.max}")
+    val embAll = s.read.parquet(embPath).select(col("vec_id"), col("embedding"))
+    graft.ops.Stores.overwritePartitions(
+      derive(embAll, prev).withColumn("gen", lit(batchId)), graphPath, "gen")
+    gens().filter(_ < batchId - 2).foreach(g =>
+      fs.delete(new org.apache.hadoop.fs.Path(s"$graphPath/gen=$g"), true))
+  }
 
   /** Streaming INVERTED-INDEX maintenance — the retrieval twin of
     * [[indexMaintenanceStream]]: each micro-batch of landing documents
@@ -844,8 +854,7 @@ object EventStreams {
           require(adds.join(dels, Seq("vec_id"), "left_semi").isEmpty,
             s"CDC batch $batchId adds and deletes the same vec_id — " +
               "ambiguous; split the operations across batches")
-          val fs = org.apache.hadoop.fs.FileSystem.get(
-            new java.net.URI(indexPath), s.sparkContext.hadoopConfiguration)
+          val fs = graft.engine.Fs.of(s, indexPath)
           val hasIndex = fs.exists(new org.apache.hadoop.fs.Path(indexPath))
           val hasAdds = !adds.isEmpty
           val hasDels = !dels.isEmpty
@@ -880,27 +889,11 @@ object EventStreams {
               bBits, lTables, dim, seed)
           }
           graft.ops.Stores.tombstone(indexPath, dels, "vec_id", Some(batchId))
-          val gfs = org.apache.hadoop.fs.FileSystem.get(
-            new java.net.URI(graphPath), s.sparkContext.hadoopConfiguration)
-          val gPath = new org.apache.hadoop.fs.Path(graphPath)
-          def gens(): Seq[Long] =
-            if (!gfs.exists(gPath)) Seq.empty
-            else gfs.listStatus(gPath).toSeq.map(_.getPath.getName)
-              .filter(_.startsWith("gen=")).map(_.drop(4).toLong)
-          val prevGens = gens().filter(_ < batchId)
-          val prev =
-            if (prevGens.isEmpty) Seq.empty[(Long, Long, Double)]
-              .toDF("vec_a", "vec_b", "cos")
-            else s.read.parquet(s"$graphPath/gen=${prevGens.max}")
-          val embAll = s.read.parquet(embPath)
-            .select(col("vec_id"), col("embedding"))
-          val afterAdds = graft.ops.Indexes.knnGraphIncremental(embAll,
-            indexPath, adds.select(col("vec_id")), prev, j)
-          graft.ops.Stores.overwritePartitions(
+          landGraphGeneration(s, embPath, graphPath, batchId) { (embAll, prev) =>
+            val afterAdds = graft.ops.Indexes.knnGraphIncremental(embAll,
+              indexPath, adds.select(col("vec_id")), prev, j)
             graft.ops.Indexes.knnGraphDelete(embAll, indexPath, dels, afterAdds, j)
-              .withColumn("gen", lit(batchId)), graphPath, "gen")
-          gens().filter(_ < batchId - 2).foreach(g =>
-            gfs.delete(new org.apache.hadoop.fs.Path(s"$graphPath/gen=$g"), true))
+          }
           }
         } finally b.unpersist(blocking = false)
       }

@@ -1191,7 +1191,7 @@ class EventStreamsSpec extends AnyFunSuite {
       in.toDF().toDF("doc_id", "source", "text"), isTarget, store, mdir,
       s"$dir/ck")
     in.addData(b1); q.processAllAvailable(); q.stop()
-    val genA = graft.ops.Indexes.currentGeneration(spark, mdir).get
+    val genA = graft.ops.Stores.currentGeneration(spark, mdir).get
     val modelA = graft.ops.Indexes.readDsirModel(spark, genA)
     // a HALF-LANDED append: batch-2 counts land in the MUTABLE store with
     // no publish — exactly what a gate racing an in-flight append sees
@@ -1228,7 +1228,7 @@ class EventStreamsSpec extends AnyFunSuite {
     // through the SAME manifest — an atomic, read-equivalent reader flip
     val compacted = s"$dir/model_c0"
     graft.ops.Indexes.compactDsirModelStore(spark, store, compacted)
-    graft.ops.Indexes.publishGeneration(spark, mdir, compacted)
+    graft.ops.Stores.publishGeneration(spark, mdir, compacted)
     gin.addData(probe); gq.processAllAvailable(); gq.stop()
     val s2 = spark.read.parquet(out).where(col("batch_id") === 2)
       .select(col("s")).as[Long].head()

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.Indexes
+import graft.ops.{Indexes, Stores}
 
 /** The index-generation GC (Stores.gcSiblings) had a purpose-built test
   * hook (`gcGraceMs`) but no spec driving it — the mark-then-sweep contract
@@ -46,7 +46,7 @@ class IndexGcSpec extends AnyFunSuite {
     // (ADVICE r10: the old global-var hook could reclaim a generation a
     // concurrently-running suite was still reading).
     // New corpus content at the same path → new fingerprint → rebuild+sweep.
-    val p2 = Indexes.withGcGrace(1000L) {
+    val p2 = Stores.withGcGrace(1000L) {
       Indexes.ensureLshIndex(spark, writeCorpus(s"$base/data", 7),
         sfTag, bBits = 3, lTables = 2, dim = 8, partitionByBucket = false)
     }
@@ -58,7 +58,7 @@ class IndexGcSpec extends AnyFunSuite {
     assert(Files.exists(Paths.get(p2, "_SUCCESS")))
 
     // A generation still inside the grace window must survive the sweep.
-    val p3 = Indexes.withGcGrace(Long.MaxValue) {
+    val p3 = Stores.withGcGrace(Long.MaxValue) {
       Indexes.ensureLshIndex(spark, writeCorpus(s"$base/data", 13),
         sfTag, bBits = 3, lTables = 2, dim = 8, partitionByBucket = false)
     }
@@ -86,7 +86,7 @@ class IndexGcSpec extends AnyFunSuite {
     // an unrelated corpus of the family triggers a sweep at the same
     // parent; grace = 10 min, so the seconds-old p1 generation is safe
     // while the hour-aged sidecar is sweep-eligible — exactly the bug
-    Indexes.withGcGrace(10L * 60L * 1000L) {
+    Stores.withGcGrace(10L * 60L * 1000L) {
       Indexes.ensureLshIndex(spark, writeCorpus(s"$base/data2", 3),
         sfTag, bBits = 3, lTables = 2, dim = 8, partitionByBucket = false)
     }
@@ -103,7 +103,7 @@ class IndexGcSpec extends AnyFunSuite {
     // probe could race a non-atomic commit rename and sweep a live
     // generation's sidecar)
     Files.setLastModifiedTime(Paths.get(p1), old)
-    Indexes.withGcGrace(10L * 60L * 1000L) {
+    Stores.withGcGrace(10L * 60L * 1000L) {
       Indexes.ensureLshIndex(spark, writeCorpus(s"$base/data", 9),
         sfTag, bBits = 3, lTables = 2, dim = 8, partitionByBucket = false)
     }
@@ -131,7 +131,7 @@ class IndexGcSpec extends AnyFunSuite {
       FileTime.fromMillis(System.currentTimeMillis() - 3600 * 1000L))
     Files.setLastModifiedTime(beating,
       FileTime.fromMillis(System.currentTimeMillis() - 3600 * 1000L))
-    val dir = Indexes.withGcGrace(1000L) {
+    val dir = Stores.withGcGrace(1000L) {
       graft.engine.Stage.runScopedStageDir(spark, base)
     }
     assert(dir.endsWith(spark.sparkContext.applicationId))
@@ -146,7 +146,7 @@ class IndexGcSpec extends AnyFunSuite {
     Files.createDirectories(mine)
     Files.setLastModifiedTime(mine,
       FileTime.fromMillis(System.currentTimeMillis() - 3600 * 1000L))
-    Indexes.withGcGrace(1000L) {
+    Stores.withGcGrace(1000L) {
       graft.engine.Stage.runScopedStageDir(spark, base)
     }
     assert(Files.exists(mine), "the current run's own dir must never be swept")
@@ -154,7 +154,7 @@ class IndexGcSpec extends AnyFunSuite {
 
   test("superseded version roots: aged vN siblings reclaimed; current and fresh survive") {
     import graft.ops.Indexes
-    val base = java.nio.file.Paths.get(Indexes.indexRoot).getParent
+    val base = java.nio.file.Paths.get(Stores.indexRoot).getParent
     java.nio.file.Files.createDirectories(base)
     val old = base.resolve("v0")
     val fresh = base.resolve("v1")
@@ -164,11 +164,11 @@ class IndexGcSpec extends AnyFunSuite {
       .foreach(java.nio.file.Files.createDirectories(_))
     // age v0, v99, and the non-version dir past the ≥6 h grace
     val aged = java.nio.file.attribute.FileTime.fromMillis(
-      System.currentTimeMillis() - Indexes.runDirGcGraceMsDefault - 60000L)
+      System.currentTimeMillis() - Stores.runDirGcGraceMsDefault - 60000L)
     java.nio.file.Files.setLastModifiedTime(old, aged)
     java.nio.file.Files.setLastModifiedTime(newer, aged)
     java.nio.file.Files.setLastModifiedTime(notVersion, aged)
-    Indexes.sweepLegacyVersionRoots(spark)
+    Stores.sweepLegacyVersionRoots(spark)
     assert(!java.nio.file.Files.exists(old),
       "an aged superseded version root (with its legacy-named families) is reclaimed")
     assert(java.nio.file.Files.exists(fresh),
@@ -194,24 +194,24 @@ class IndexGcSpec extends AnyFunSuite {
     val store = s"$base/store"
     val mdir = s"$base/manifest"
     def snap(tag: String, batch: Long): String =
-      Indexes.withGcGrace(Long.MaxValue) { // publish-only: no retirement yet
-        Indexes.publishStoreSnapshot(spark, store, mdir, batch) {
+      Stores.withGcGrace(Long.MaxValue) { // publish-only: no retirement yet
+        Stores.publishStoreSnapshot(spark, store, mdir, batch) {
           Some(spark.range(3).select(col("id"), lit(tag).as("tag")))
         }.get
       }
     val g1 = snap("g1", 1L); Thread.sleep(30)
     val g2 = snap("g2", 2L); Thread.sleep(30)
     // rollback: flip BACK to g1 by republishing its existing dir
-    Indexes.publishGeneration(spark, mdir, g1); Thread.sleep(30)
+    Stores.publishGeneration(spark, mdir, g1); Thread.sleep(30)
     val g3 = snap("g3", 4L); Thread.sleep(30)
 
-    val retired = Indexes.withGcGrace(0L) {
-      Indexes.retireStoreSnapshots(spark, store, mdir) // must not throw
+    val retired = Stores.withGcGrace(0L) {
+      Stores.retireStoreSnapshots(spark, store, mdir) // must not throw
     }
     assert(retired.toSet === Set(g1, g2), s"retired: $retired")
     assert(!new java.io.File(g1).exists() && !new java.io.File(g2).exists())
     assert(new java.io.File(g3).exists(), "the current generation survives")
-    assert(Indexes.currentGeneration(spark, mdir) === Some(g3))
+    assert(Stores.currentGeneration(spark, mdir) === Some(g3))
     // pruning: only the current generation's pointer remains
     val pointers = new java.io.File(mdir).listFiles()
       .map(_.getName).filter(_.startsWith("gen-")).toSeq

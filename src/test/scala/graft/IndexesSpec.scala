@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.{Indexes, Similarity}
+import graft.ops.{Indexes, Similarity, Stores}
 
 class IndexesSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
@@ -271,7 +271,7 @@ class IndexesSpec extends AnyFunSuite {
     emb.limit(20).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     def reread = spark.read.parquet(s"$dir/embeddings.parquet")
     // thread-scoped immediate reclamation (cannot leak into other suites)
-    Indexes.withGcGrace(0L) {
+    Stores.withGcGrace(0L) {
       val path1 = Indexes.ensureLshIndex(spark, reread, dir)
       // regenerate twice: each rebuild must reclaim the superseded generation
       emb.limit(25).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
@@ -299,7 +299,7 @@ class IndexesSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("gc_grace_spec").toString
     emb.limit(20).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     def reread = spark.read.parquet(s"$dir/embeddings.parquet")
-    Indexes.withGcGrace(60L * 60L * 1000L) { // 1 h — nothing reclaims mid-test
+    Stores.withGcGrace(60L * 60L * 1000L) { // 1 h — nothing reclaims mid-test
       val path1 = Indexes.ensureLshIndex(spark, reread, dir)
       // a lazily-planned reader on generation 1 — another session mid-query
       val inflight = spark.read.parquet(path1)
@@ -836,45 +836,45 @@ class IndexesSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("manifest").toString
     val manifest = s"$root/manifest"
     // no manifest yet: nothing to serve, nothing to retire
-    assert(Indexes.currentGeneration(spark, manifest).isEmpty)
-    assert(Indexes.retireGenerations(spark, manifest).isEmpty)
+    assert(Stores.currentGeneration(spark, manifest).isEmpty)
+    assert(Stores.retireGenerations(spark, manifest).isEmpty)
     def mkGen(n: Int): String = {
       val g = s"$root/gen$n"
       emb.limit(n + 1).write.parquet(g)
       g
     }
     val g0 = mkGen(0); val g1 = mkGen(1); val g2 = mkGen(2)
-    assert(Indexes.publishGeneration(spark, manifest, g0) === 0L)
-    assert(Indexes.currentGeneration(spark, manifest) === Some(g0))
-    assert(Indexes.publishGeneration(spark, manifest, g1) === 1L)
-    assert(Indexes.currentGeneration(spark, manifest) === Some(g1))
+    assert(Stores.publishGeneration(spark, manifest, g0) === 0L)
+    assert(Stores.currentGeneration(spark, manifest) === Some(g0))
+    assert(Stores.publishGeneration(spark, manifest, g1) === 1L)
+    assert(Stores.currentGeneration(spark, manifest) === Some(g1))
     // retirement respects the grace window: a young superseded generation
     // survives (in-flight readers), an aged one goes
-    Indexes.withGcGrace(Long.MaxValue) {
-      assert(Indexes.retireGenerations(spark, manifest).isEmpty)
+    Stores.withGcGrace(Long.MaxValue) {
+      assert(Stores.retireGenerations(spark, manifest).isEmpty)
       assert(new java.io.File(g0).exists())
     }
     Thread.sleep(5) // grace clock runs from SUPERSESSION (successor mtime)
-    Indexes.withGcGrace(0L) {
-      assert(Indexes.retireGenerations(spark, manifest) === Seq(g0))
+    Stores.withGcGrace(0L) {
+      assert(Stores.retireGenerations(spark, manifest) === Seq(g0))
     }
     assert(!new java.io.File(g0).exists(), "aged superseded generation retires")
     assert(new java.io.File(g1).exists(), "the current generation never retires")
     // the flip history survives retirement (pointer files stay)
-    assert(Indexes.currentGeneration(spark, manifest) === Some(g1))
+    assert(Stores.currentGeneration(spark, manifest) === Some(g1))
     // rollback: RE-publishing an old path flips back; its superseded
     // pointer must then never retire the live data dir
-    Indexes.publishGeneration(spark, manifest, g2)
-    Indexes.publishGeneration(spark, manifest, g1) // roll back to g1
-    assert(Indexes.currentGeneration(spark, manifest) === Some(g1))
+    Stores.publishGeneration(spark, manifest, g2)
+    Stores.publishGeneration(spark, manifest, g1) // roll back to g1
+    assert(Stores.currentGeneration(spark, manifest) === Some(g1))
     Thread.sleep(5)
-    Indexes.withGcGrace(0L) {
-      val retired = Indexes.retireGenerations(spark, manifest)
+    Stores.withGcGrace(0L) {
+      val retired = Stores.retireGenerations(spark, manifest)
       assert(retired === Seq(g2), s"only the abandoned g2 retires: $retired")
     }
     assert(new java.io.File(g1).exists(),
       "a rolled-back-to generation survives retirement of its old pointer")
-    assert(spark.read.parquet(Indexes.currentGeneration(spark, manifest).get)
+    assert(spark.read.parquet(Stores.currentGeneration(spark, manifest).get)
       .count() === 2L)
     // the review-caught race, pinned: an OLD generation superseded JUST
     // NOW must survive a grace larger than the supersession age — the
@@ -883,20 +883,20 @@ class IndexesSpec extends AnyFunSuite {
     // instant a compaction flips past it)
     val m2 = s"$root/manifest2"
     val gOld = mkGen(3)
-    Indexes.publishGeneration(spark, m2, gOld)
+    Stores.publishGeneration(spark, m2, gOld)
     val hourAgo = System.currentTimeMillis() - 60L * 60L * 1000L
     assert(new java.io.File(gOld).setLastModified(hourAgo))
     new java.io.File(m2).listFiles().foreach(f => f.setLastModified(hourAgo))
-    Indexes.publishGeneration(spark, m2, mkGen(4)) // supersede NOW
-    Indexes.withGcGrace(10L * 60L * 1000L) {
-      assert(Indexes.retireGenerations(spark, m2).isEmpty,
+    Stores.publishGeneration(spark, m2, mkGen(4)) // supersede NOW
+    Stores.withGcGrace(10L * 60L * 1000L) {
+      assert(Stores.retireGenerations(spark, m2).isEmpty,
         "an aged generation superseded inside the grace window must survive")
     }
     assert(new java.io.File(gOld).exists())
     // age the SUPERSEDING pointer past the grace: now it retires
     new java.io.File(m2).listFiles().foreach(f => f.setLastModified(hourAgo))
-    Indexes.withGcGrace(10L * 60L * 1000L) {
-      assert(Indexes.retireGenerations(spark, m2) === Seq(gOld))
+    Stores.withGcGrace(10L * 60L * 1000L) {
+      assert(Stores.retireGenerations(spark, m2) === Seq(gOld))
     }
   }
 
@@ -968,26 +968,26 @@ class IndexesSpec extends AnyFunSuite {
       Indexes.appendLshIndexIdempotent(emb.where(col("vec_id") % 4 === i),
         i.toLong, gen0))
     val manifest = s"$root/manifest"
-    Indexes.publishGeneration(spark, manifest, gen0)
+    Stores.publishGeneration(spark, manifest, gen0)
     def probeRows(path: String): Set[(Long, Int, Long)] =
       Indexes.readLshIndex(spark, path)
         .select(col("vec_id"), col("t"), col("key"))
         .as[(Long, Int, Long)].collect().toSet
-    val before = probeRows(Indexes.currentGeneration(spark, manifest).get)
+    val before = probeRows(Stores.currentGeneration(spark, manifest).get)
     // the policy trips on file count and compacts into gen1
     val gen1 = s"$root/gen1"
     val d = Indexes.compactionPolicy(spark,
-      Indexes.currentGeneration(spark, manifest).get, gen1, maxFiles = 3)
+      Stores.currentGeneration(spark, manifest).get, gen1, maxFiles = 3)
     assert(d.compacted, s"4 appended batches must trip maxFiles=3: $d")
-    Indexes.publishGeneration(spark, manifest, gen1)
-    assert(probeRows(Indexes.currentGeneration(spark, manifest).get) === before,
+    Stores.publishGeneration(spark, manifest, gen1)
+    assert(probeRows(Stores.currentGeneration(spark, manifest).get) === before,
       "the flipped-to generation must answer identically")
     // retirement reclaims the superseded generation, current survives
-    Indexes.withGcGrace(0L) {
-      assert(Indexes.retireGenerations(spark, manifest) === Seq(gen0))
+    Stores.withGcGrace(0L) {
+      assert(Stores.retireGenerations(spark, manifest) === Seq(gen0))
     }
     assert(!new java.io.File(gen0).exists())
-    assert(probeRows(Indexes.currentGeneration(spark, manifest).get) === before,
+    assert(probeRows(Stores.currentGeneration(spark, manifest).get) === before,
       "the probe must survive old-generation retirement")
   }
 

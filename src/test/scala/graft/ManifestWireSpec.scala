@@ -2,15 +2,16 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, FilterFileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{Indexes, TextAnalysis}
+import graft.ops.{Indexes, Stores, TextAnalysis}
 
 /** r13 VERDICT #4: the generation manifest gets real consumers — the
   * compaction policy PUBLISHES its new generation and retires superseded
   * ones under the standing grace, probes RESOLVE through
-  * [[Indexes.currentGeneration]], and a probe racing a compaction reads
+  * [[Stores.currentGeneration]], and a probe racing a compaction reads
   * one consistent generation before, during, and after the flip. Plus the
   * two r13 ADVICE hardenings on the same surface: the policy declines
   * stores whose layout it cannot name, and publish uses nonce'd pointer
@@ -21,6 +22,25 @@ object ManifestWireSpec {
     * run's leftover manifests — the index root outlives the JVM). */
   val flipNamespace: String =
     s"manifns-${java.util.UUID.randomUUID().toString.take(8)}"
+
+  /** The local filesystem under the test-only `countfs` scheme, counting
+    * directory listings and file opens. */
+  final class CountingFs extends FilterFileSystem(new RawLocalFileSystem {
+    override def getUri: java.net.URI = java.net.URI.create("countfs:///")
+  }) {
+    override def listStatus(f: Path): Array[FileStatus] = {
+      CountingFs.listings.incrementAndGet()
+      super.listStatus(f)
+    }
+    override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+      CountingFs.opens.incrementAndGet()
+      super.open(f, bufferSize)
+    }
+  }
+  object CountingFs {
+    val listings = new java.util.concurrent.atomic.AtomicLong()
+    val opens = new java.util.concurrent.atomic.AtomicLong()
+  }
 }
 
 class ManifestWireSpec extends AnyFunSuite {
@@ -42,7 +62,7 @@ class ManifestWireSpec extends AnyFunSuite {
     (0 until 3).foreach(i => TextAnalysis.appendInvertedIndexIdempotent(
       docs.where(col("doc_id") % 3 === i), i.toLong, gen0))
     val manifest = s"$root/manifest"
-    Indexes.publishGeneration(spark, manifest, gen0)
+    Stores.publishGeneration(spark, manifest, gen0)
     // query terms that certainly exist: the two most frequent corpus words
     val terms = docs
       .select(explode(graft.ops.TextOps.wordsSafe(col("text"))).as("w"))
@@ -50,16 +70,16 @@ class ManifestWireSpec extends AnyFunSuite {
       .limit(2).select("w").as[String].collect().toSeq.sorted
     def probe(): Seq[(Long, Double)] =
       TextAnalysis.bm25TopKIndexed(spark,
-          Indexes.currentGeneration(spark, manifest).get, terms, k = 10)
+          Stores.currentGeneration(spark, manifest).get, terms, k = 10)
         .as[(Long, Double)].collect().toSeq
     val before = probe()
     assert(before.nonEmpty)
     // a reader that resolved BEFORE the flip (the in-flight snapshot)
-    val preResolved = Indexes.currentGeneration(spark, manifest).get
+    val preResolved = Stores.currentGeneration(spark, manifest).get
     val d = Indexes.compactionPolicy(spark, preResolved, s"$root/gen1",
       maxFiles = 1, manifestDir = Some(manifest))
     assert(d.compacted && d.dest === Some(s"$root/gen1"))
-    assert(Indexes.currentGeneration(spark, manifest) === Some(s"$root/gen1"),
+    assert(Stores.currentGeneration(spark, manifest) === Some(s"$root/gen1"),
       "the policy must publish the compacted generation")
     assert(probe() === before, "the flipped probe answers identically")
     // the pre-flip reader keeps its consistent snapshot: generations are
@@ -72,8 +92,8 @@ class ManifestWireSpec extends AnyFunSuite {
     // after the grace expires the superseded generation retires; the
     // manifest-resolved probe is unaffected
     Thread.sleep(5)
-    Indexes.withGcGrace(0L) {
-      assert(Indexes.retireGenerations(spark, manifest) === Seq(gen0))
+    Stores.withGcGrace(0L) {
+      assert(Stores.retireGenerations(spark, manifest) === Seq(gen0))
     }
     assert(!new java.io.File(gen0).exists())
     assert(probe() === before)
@@ -84,7 +104,7 @@ class ManifestWireSpec extends AnyFunSuite {
     val p1 = TextAnalysis.ensureInvertedIndex(spark, docs, sfDir)
     val manifest = graft.ops.Stores.familyManifestDir(sfDir,
       s"inverted_b${TextAnalysis.TermBuckets}_")
-    assert(Indexes.currentGeneration(spark, manifest) === Some(p1),
+    assert(Stores.currentGeneration(spark, manifest) === Some(p1),
       "the build path must publish its generation")
     val pointersAfterFirst = new java.io.File(manifest).listFiles().length
     val p2 = TextAnalysis.ensureInvertedIndex(spark, docs, sfDir)
@@ -116,7 +136,7 @@ class ManifestWireSpec extends AnyFunSuite {
     val dest = Files.createTempDirectory("manifest_keepflip").toString + "/c0"
     val d = Indexes.compactionPolicy(spark, p1, dest, maxFiles = 0,
       manifestDir = Some(manifest))
-    assert(d.compacted && Indexes.currentGeneration(spark, manifest) === Some(dest))
+    assert(d.compacted && Stores.currentGeneration(spark, manifest) === Some(dest))
     val pointers = new java.io.File(manifest).listFiles()
       .count(_.getName.startsWith("gen-"))
     val p2 = TextAnalysis.ensureInvertedIndex(spark, docs, sfDir)
@@ -143,7 +163,7 @@ class ManifestWireSpec extends AnyFunSuite {
     // (pre-fix it found successExists false, paid the full rebuild, and
     // the manifest answer immediately shadowed it)
     Thread.sleep(5)
-    Indexes.withGcGrace(0L) { Indexes.retireGenerations(spark, manifest) }
+    Stores.withGcGrace(0L) { Stores.retireGenerations(spark, manifest) }
     assert(!new java.io.File(p1).exists(),
       "retirement must reclaim the superseded fingerprint generation")
     assert(TextAnalysis.ensureInvertedIndex(spark, docs, sfDir) === dest2)
@@ -153,7 +173,7 @@ class ManifestWireSpec extends AnyFunSuite {
     // path; the resolver's liveness check sees the dead pointer, ensure
     // REBUILDS the fingerprint generation, and serving continues from
     // it — the disaster-recovery shape.
-    Indexes.publishGeneration(spark, manifest, p1, lineage = Some(p1))
+    Stores.publishGeneration(spark, manifest, p1, lineage = Some(p1))
     assert(TextAnalysis.ensureInvertedIndex(spark, docs, sfDir) === p1,
       "rollback: the republished fingerprint generation serves again")
     assert(new java.io.File(p1).exists(), "the rollback rebuilt the store")
@@ -230,7 +250,7 @@ class ManifestWireSpec extends AnyFunSuite {
     fams.foreach { case (name, prefix, ensure, subs) =>
       val p1 = ensure()
       val manifest = graft.ops.Stores.familyManifestDir(sfDir, prefix)
-      assert(Indexes.currentGeneration(spark, manifest) === Some(p1),
+      assert(Stores.currentGeneration(spark, manifest) === Some(p1),
         s"$name: ensure must publish its generation")
       val before = content(p1, subs)
       val dest = Files.createTempDirectory(s"manif15_$name").toString + "/c0"
@@ -238,7 +258,7 @@ class ManifestWireSpec extends AnyFunSuite {
         manifestDir = Some(manifest))
       assert(d.compacted && d.declined.isEmpty,
         s"$name: the policy must recognize and compact this family: $d")
-      assert(Indexes.currentGeneration(spark, manifest) === Some(dest),
+      assert(Stores.currentGeneration(spark, manifest) === Some(dest),
         s"$name: the policy must publish the compacted generation")
       val p2 = ensure()
       assert(p2 === dest || p2.stripSuffix("/sets") === dest,
@@ -248,7 +268,7 @@ class ManifestWireSpec extends AnyFunSuite {
       // rollback flip: restore the fingerprint generation as current —
       // exercises the rollback shape AND returns the shared sf0.001
       // families to steady state for later suites
-      Indexes.publishGeneration(spark, manifest, p1, lineage = Some(p1))
+      Stores.publishGeneration(spark, manifest, p1, lineage = Some(p1))
       assert(ensure() === p1, s"$name: rollback must serve again")
     }
   }
@@ -258,18 +278,38 @@ class ManifestWireSpec extends AnyFunSuite {
     // simulate the POSIX race: both publishers computed seq 0; with
     // nonce'd names neither rename can replace the other, so both
     // pointers are durable and the name tiebreak picks one winner
-    assert(Indexes.publishGeneration(spark, manifest, "/some/genA") === 0L)
+    assert(Stores.publishGeneration(spark, manifest, "/some/genA") === 0L)
     // forge a same-sequence rival the way a racing process would have
     // landed it (unique nonce, same seq)
     val rival = new java.io.File(manifest, "gen-000000000000-zzzzzzzz")
     java.nio.file.Files.writeString(rival.toPath, "/some/genB")
-    assert(Indexes.currentGeneration(spark, manifest) === Some("/some/genB"),
+    assert(Stores.currentGeneration(spark, manifest) === Some("/some/genB"),
       "same-seq pointers order by name; the later nonce wins")
     assert(new java.io.File(manifest).listFiles()
       .count(_.getName.startsWith("gen-")) === 2,
       "no publish may ever overwrite a rival's pointer")
     // the next publish sees both and moves PAST the contested sequence
-    assert(Indexes.publishGeneration(spark, manifest, "/some/genC") === 1L)
-    assert(Indexes.currentGeneration(spark, manifest) === Some("/some/genC"))
+    assert(Stores.publishGeneration(spark, manifest, "/some/genC") === 1L)
+    assert(Stores.currentGeneration(spark, manifest) === Some("/some/genC"))
+  }
+
+  test("a served fingerprint resolves with one manifest listing and one pointer open") {
+    import ManifestWireSpec.CountingFs
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.countfs.impl", classOf[CountingFs].getName)
+    val root = Files.createTempDirectory("manifest_reads")
+    val gen = Files.createDirectory(root.resolve("g1")).toString
+    val manifest = Files.createDirectory(root.resolve("manifest"))
+    // a three-pointer history in the on-disk pointer format (line 1 =
+    // generation, line 2 = lineage); the last pointer serves `gen`
+    Seq(s"$root/g0", s"$root/g0c\n$root/g0", s"$gen\n$gen").zipWithIndex
+      .foreach { case (content, i) =>
+        Files.writeString(manifest.resolve(f"gen-$i%012d-0000000$i"), content)
+      }
+    val (lists, opens) = (CountingFs.listings.get, CountingFs.opens.get)
+    assert(Stores.resolveThroughManifest(spark, s"countfs://$manifest", gen) === gen)
+    assert(CountingFs.listings.get - lists === 1, "manifest listings")
+    assert(CountingFs.opens.get - opens === 1, "pointer opens")
+    assert(manifest.toFile.list().length === 3, "a served fingerprint publishes nothing")
   }
 }

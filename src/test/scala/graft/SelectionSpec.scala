@@ -383,7 +383,7 @@ class SelectionSpec extends AnyFunSuite {
       docs.where(lit(false)), isTarget, 0L, p6)
     assert(graft.ops.Indexes.publishDsirModelGeneration(
       spark, p6, s"$dir/empty_manifest", 0L).isEmpty)
-    assert(graft.ops.Indexes.currentGeneration(
+    assert(graft.ops.Stores.currentGeneration(
       spark, s"$dir/empty_manifest").isEmpty,
       "an empty store must not publish a generation")
     // snapshot retirement is MANIFEST-DRIVEN, SCOPED to the .gen prefix,
@@ -398,7 +398,7 @@ class SelectionSpec extends AnyFunSuite {
     // retire, including an UNPUBLISHED orphan (crash between snapshot
     // write and pointer flip), which must also never count as a
     // supersessor of anything
-    val (g0, g1) = graft.ops.Indexes.withGcGrace(60000L) {
+    val (g0, g1) = graft.ops.Stores.withGcGrace(60000L) {
       graft.ops.Indexes.appendDsirModelStoreIdempotent(base, isTarget, 0L, p7)
       val a = graft.ops.Indexes.publishDsirModelGeneration(spark, p7, m7, 0L)
       val orphan = new java.io.File(s"$p7.gen/b9-orphan00")
@@ -416,8 +416,8 @@ class SelectionSpec extends AnyFunSuite {
     // past the window → retired with its pointer files pruned; g1 is the
     // CURRENT generation → kept; the orphan is unreferenced and aged →
     // reclaimed; the mutable store is untouchable by construction
-    graft.ops.Indexes.withGcGrace(0L) {
-      graft.ops.Indexes.retireStoreSnapshots(spark, p7, m7)
+    graft.ops.Stores.withGcGrace(0L) {
+      graft.ops.Stores.retireStoreSnapshots(spark, p7, m7)
       val live = new java.io.File(s"$p7.gen").listFiles()
         .filter(_.isDirectory).map(_.getName).toSet
       assert(!live.exists(n => g0.exists(_.endsWith(n))),
@@ -425,10 +425,10 @@ class SelectionSpec extends AnyFunSuite {
       assert(g1.exists(g => live.exists(g.endsWith)),
         s"the current generation must survive every sweep: $live")
       assert(!live.contains("b9-orphan00"), s"orphan must be reclaimed: $live")
-      assert(graft.ops.Indexes.currentGeneration(spark, m7) === g1)
+      assert(graft.ops.Stores.currentGeneration(spark, m7) === g1)
       assert(graft.ops.Indexes.readDsirModel(spark, p7).toSeq === full.toSeq)
       assert(graft.ops.Indexes.readDsirModel(spark,
-        graft.ops.Indexes.currentGeneration(spark, m7).get).toSeq === full.toSeq)
+        graft.ops.Stores.currentGeneration(spark, m7).get).toSeq === full.toSeq)
     }
     val compacted = spark.read.parquet(p4)
     assert(compacted.columns.contains("batch_id"),

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.ContextBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.Stage
@@ -64,5 +65,28 @@ class StageLossSpec extends AnyFunSuite {
       Stage.releaseAll(spark, blocking = true)
       assert(rows(durable) == expected)
     }
+  }
+
+  test("durable calls leave the context's checkpoint dir exactly as they found it") {
+    val sc = spark.sparkContext
+    val pairs = Seq((2L, 1L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
+    def twoDurableCalls(): Unit = withTmp { dir =>
+      (1 to 2).foreach(_ => Dedup.connectedComponents(pairs, Stage.Durable(dir),
+        localEdgeThreshold = 0L).collect())
+    }
+    val saved = sc.getCheckpointDir
+    try {
+      ContextBridge.restoreCheckpointDir(sc, None)
+      twoDurableCalls()
+      assert(sc.getCheckpointDir === None)
+      withTmp { base =>
+        sc.setCheckpointDir(s"$base/prior")
+        val prior = sc.getCheckpointDir
+        twoDurableCalls()
+        assert(sc.getCheckpointDir === prior)
+        assert(new java.io.File(new java.net.URI(prior.get)).list().isEmpty,
+          "the prior dir gained children")
+      }
+    } finally ContextBridge.restoreCheckpointDir(sc, saved)
   }
 }
