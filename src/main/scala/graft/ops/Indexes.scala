@@ -252,11 +252,8 @@ object Indexes {
                            bBits: Int, lTables: Int, dim: Int, seed: Long,
                            partitionByBucket: Boolean): Unit = {
     val rows = lshRows(emb, bBits, lTables, dim, seed)
-    if (partitionByBucket)
-      writeBucketedLshRows(rows, path, mode, bBits)
-    else
-      rows.repartition(col("t"), col("key")).sortWithinPartitions(col("t"), col("key"))
-        .write.mode(mode).parquet(path)
+    if (partitionByBucket) writeBucketedLshRows(rows, path, mode, bBits)
+    else Stores.write(rows, path, LshFlatLayout, mode)
   }
 
   /** [[appendLshIndex]]'s exactly-once twin for STREAMING maintenance —
@@ -268,18 +265,14 @@ object Indexes {
     * bytes). The layout is batch-partitioned flat parquet: full-index
     * consumers ([[knnGraphIndexed]]/[[knnGraphIncremental]]'s self-join)
     * read it unchanged (the extra batch_id column is ignored by their
-    * (t, key, vec_id) projection). Lifecycle: [[compactLshIndex]] folds
-    * an append-grown store into one batch_id=0 generation (layout
-    * preserved, so the stream keeps appending); point-probe deployments
-    * additionally cut a two-level serving generation with
+    * (t, key, vec_id) projection). Lifecycle: [[compact]]; point-probe
+    * deployments additionally cut a two-level serving generation with
     * [[rebucketLshIndex]] (which takes the index's own bBits, checked). */
   def appendLshIndexIdempotent(emb: DataFrame, batchId: Long, path: String,
                                bBits: Int = 4, lTables: Int = 16,
                                dim: Int = 64, seed: Long = 42L): Unit =
-    Stores.overwritePartitions(lshRows(emb, bBits, lTables, dim, seed)
-      .withColumn("batch_id", lit(batchId))
-      .repartition(col("t"), col("key"))
-      .sortWithinPartitions(col("t"), col("key")), path, "batch_id")
+    Stores.write(lshRows(emb, bBits, lTables, dim, seed), path, LshFlatLayout,
+      batch = Some(batchId))
 
   /** The canonical two-level bucketed layout from raw (vec_id, t, key)
     * rows ([[PartDirBits]]): dirs keyed by the key's top bits (bounded
@@ -288,84 +281,21 @@ object Indexes {
   private def writeBucketedLshRows(rows: DataFrame, path: String,
                                    mode: String, bBits: Int): Unit = {
     val shift = bBits - math.min(bBits, PartDirBits)
-    rows.withColumn("pkey", shiftright(col("key"), shift))
-      .repartition(col("t"), col("pkey"))
-      .sortWithinPartitions(col("key"), col("vec_id"))
-      .write.mode(mode).partitionBy("t", "pkey").parquet(path)
-  }
-
-  /** COMPACT an append-grown bucketed LSH index into a fresh canonical
-    * generation at `dest` — the missing lifecycle verb between
-    * [[appendLshIndex]] and [[Stores.gcSiblings]]: every append lands one more
-    * small file inside each touched (t, pkey) directory, so probe cost
-    * creeps up with append count (footer-per-file, not rows) until a
-    * compaction folds the accumulated files back into the
-    * one-sorted-file-per-directory layout a fresh build produces.
-    *
-    * No re-bucketing: the signatures are already in the index (keys are a
-    * pure function of the vectors and the index's own planes), so
-    * compaction is a pure shuffle-and-rewrite of (vec_id, t, key) rows —
-    * it never touches the corpus, works at any band width, and costs one
-    * pass over index rows (≪ the original bucketing pass over embeddings).
-    * The source's OWN pkey partition values are preserved verbatim —
-    * compaction never re-derives the key→pkey mapping, so there is no
-    * band-width parameter to get wrong (an earlier draft took a caller-
-    * supplied bBits; a mismatch with the index's actual width would have
-    * silently re-bucketed pkey and every later probe would return empty).
-    *
-    * Write-once semantics: `dest` must be a NEW path (tmp build + atomic
-    * [[Stores.compact]] rename; a pre-existing dest wins any race and the
-    * loser's tmp is discarded). The caller owns the reader flip and the
-    * old generation's retirement — same contract as every committed
-    * generation here ([[Stores.effectiveGcGraceMs]] protects in-flight readers). Probe
-    * results are bit-identical pre/post compaction (IndexesSpec). */
-  def compactLshIndex(spark: SparkSession, src: String,
-                      dest: String): Unit = Stores.compact(spark, dest) { tmp =>
-    // readLshIndex folds src's delete tombstones, so the new generation
-    // is physically delete-free and carries NO sidecar — compaction is
-    // where logical deletes become physical (no sidecar ⇒ identical plan
-    // to the plain read, preserving the bit-identical pre/post claim)
-    val folded = readLshIndex(spark, src)
-    if (folded.columns.contains("pkey"))
-      folded.select(col("vec_id"), col("t"), col("key"), col("pkey"))
-        .repartition(col("t"), col("pkey"))
-        .sortWithinPartitions(col("key"), col("vec_id"))
-        .write.mode("overwrite").partitionBy("t", "pkey").parquet(tmp)
-    else if (folded.columns.contains("batch_id"))
-      // STREAMING (batch_id-partitioned) layouts fold into generation
-      // batch 0 and KEEP the partitioned layout (the
-      // [[graft.ops.TextAnalysis.compactInvertedIndex]] precedent —
-      // ADVICE r12: the old flat fold dropped batch_id, so the compacted
-      // generation could neither accept further
-      // [[appendLshIndexIdempotent]] appends — flat files next to
-      // batch_id= dirs break partition discovery at the next read — nor
-      // stay layout-compatible with the maintenance stream that feeds it)
-      folded.select(col("vec_id"), col("t"), col("key"))
-        .withColumn("batch_id", lit(0L))
-        .repartition(col("t"), col("key"))
-        .sortWithinPartitions(col("t"), col("key"))
-        .write.mode("overwrite").partitionBy("batch_id").parquet(tmp)
-    else
-      // FLAT layouts (writeLshIndex(partitionByBucket = false) — review
-      // catch: the unconditional pkey select threw on exactly the
-      // deployments the append doc sends here): fold to clustered flat
-      // parquet — compaction IS the generation cut
-      folded.select(col("vec_id"), col("t"), col("key"))
-        .repartition(col("t"), col("key"))
-        .sortWithinPartitions(col("t"), col("key"))
-        .write.mode("overwrite").parquet(tmp)
+    Stores.write(rows.withColumn("pkey", shiftright(col("key"), shift)), path,
+      LshBucketedLayout, mode)
   }
 
   /** REBUCKET any LSH generation into the canonical two-level
     * (t, pkey)-partitioned serving layout ([[PartDirBits]]) — the bridge
     * from the streaming/flat layouts to POINT-PROBE serving
     * ([[lshTopKIndexed]] needs the static pkey pruning; the streaming
-    * batch_id layout has none). Unlike [[compactLshIndex]], this MUST be
-    * given the index's own band width to re-derive pkey — a wrong bBits
-    * would silently re-bucket and every later probe would return empty —
-    * so the mismatch is CHECKED: every key must fit in bBits bits.
+    * batch_id layout has none). Unlike [[compact]], which copies the
+    * source's own pkey values, this MUST be given the index's own band
+    * width to re-derive pkey — a wrong bBits would silently re-bucket and
+    * every later probe would return empty — so the mismatch is CHECKED:
+    * every key must fit in bBits bits.
     * Tombstones fold (the new generation is physically delete-free);
-    * write-once tmp build + atomic commit, same as every compactor. */
+    * write-once tmp build + atomic commit, same as [[compact]]. */
   def rebucketLshIndex(spark: SparkSession, src: String, dest: String,
                        bBits: Int): Unit = Stores.compact(spark, dest) { tmp =>
     val folded = readLshIndex(spark, src)
@@ -878,39 +808,31 @@ object Indexes {
 
   /** One observed-state row + the action taken by [[compactionPolicy]].
     * `declined` carries the reason when the policy REFUSED to act on a
-    * store whose layout it does not recognize (r13 ADVICE: falling
-    * through to the LSH compactor on an unknown schema threw mid-policy
-    * instead of declining). */
+    * store whose layout it does not recognize. */
   final case class CompactionDecision(nFiles: Long, imbalance: Double,
                                       compacted: Boolean, rebandAdvised: Boolean,
                                       dest: Option[String],
                                       declined: Option[String] = None)
 
-  /** STATS-DRIVEN compaction (VERDICT r12 #6) — the decision logic that
-    * turns [[lshIndexStats]]-style observability into the maintenance
-    * trigger a production store needs, as code with explicit thresholds
-    * instead of a runbook:
+  /** STATS-DRIVEN compaction — the decision logic that turns
+    * [[lshIndexStats]]-style observability into the maintenance trigger a
+    * production store needs, as code with explicit thresholds instead of
+    * a runbook:
     *  - FILE COUNT: every idempotent append lands ≥ 1 more file per
     *    touched partition dir, so probe cost creeps with append count
     *    (footer-per-file, not rows); past `maxFiles` the store compacts
-    *    into a fresh generation at `dest` via the layout's own compactor
-    *    — ONE trigger dispatching across every maintained family:
-    *    the first [[layouts]] row whose marker matches the store;
-    *    probes bit-identical pre/post, each compactor's existing
-    *    contract. Deletes fold physically as a side effect, retiring the
-    *    tombstone sidecar. An unrecognized layout is DECLINED, never
-    *    guessed at.
-    *  - IMBALANCE: max/mean bucket occupancy over the layout's bucket
+    *    into a fresh generation at `dest` through [[compact]]. An
+    *    unrecognized layout is DECLINED, never guessed at.
+    *  - IMBALANCE: max/mean bucket occupancy over the family's bucket
     *    columns (delete sidecar folded). Compaction cannot fix a hot
     *    bucket — that needs re-deriving the band width
     *    ([[graft.ops.Similarity.scaledBandBits]]) and re-bucketing the
     *    corpus — so past `maxImbalance` the decision only ADVISES a
     *    reband, and only for bucket-KEY families (the caller owns the
-    *    rebuild; this operator never re-buckets implicitly, the
-    *    [[compactLshIndex]] no-silent-rebucket rule).
+    *    rebuild; compaction never re-buckets implicitly).
     * Returns what it saw and did; when it compacts, the caller owns the
-    * reader flip + old-generation retirement (every compactor's
-    * write-once contract) unless `manifestDir` is given. */
+    * reader flip + old-generation retirement ([[compact]]'s write-once
+    * contract) unless `manifestDir` is given. */
   def compactionPolicy(spark: SparkSession, src: String, dest: String,
                        maxFiles: Int = 64,
                        maxImbalance: Double = 8.0,
@@ -919,119 +841,169 @@ object Indexes {
     var nFiles = 0L
     val it = fs.listFiles(new org.apache.hadoop.fs.Path(src), true)
     while (it.hasNext) if (it.next().getPath.getName.endsWith(".parquet")) nFiles += 1
-    // multi-table stores are recognized by their subdirs BEFORE any read —
-    // their root is not a single parquet table
+    val (marks, family) = recognise(spark, src)
+    val imbalance = family.filter(_.buckets.nonEmpty).fold(1.0) { f =>
+      val row = f.live(spark, src, f.tables.last._1)
+        .groupBy(f.buckets.map(col): _*).agg(count(lit(1)).as("c"))
+        .agg((max(col("c")).cast("double") * count(lit(1)).cast("double") /
+          sum(col("c")).cast("double")).as("imb")).collect()(0)
+      if (row.isNullAt(0)) 1.0 else row.getDouble(0)
+    }
+    if (family.isEmpty)
+      return CompactionDecision(nFiles, imbalance, compacted = false,
+        rebandAdvised = false, dest = None, declined = Some(unrecognised(marks)))
+    val doCompact = nFiles > maxFiles
+    if (doCompact) {
+      compact(spark, src, dest)
+      // the READER FLIP of a manifest-addressed store
+      manifestDir.foreach(Stores.publishCompacted(spark, _, src, dest))
+    }
+    CompactionDecision(nFiles, imbalance, doCompact,
+      rebandAdvised = family.get.reband && imbalance > maxImbalance,
+      dest = if (doCompact) Some(dest) else None)
+  }
+
+  /** COMPACT a store into a fresh generation at `dest`, whatever its
+    * family: the first [[layouts]] row whose marker matches `src` names
+    * its tables and their layouts. Per table: fold the deletes (the
+    * family's key, or its own fold), restore the source column order,
+    * write by the table's layout ([[Stores.write]]); then the family's rebuild step runs over the
+    * new generation. The result is physically delete-free, carries no
+    * sidecar and answers every probe as the source did.
+    *
+    * Pure shuffle-and-rewrite of stored rows — never re-tokenizes or
+    * re-buckets (partition values such as LSH's pkey are copied, so
+    * there is no band-width parameter to get wrong). Write-once: `dest`
+    * commits atomically from a tmp build ([[Stores.compact]]); a
+    * pre-existing dest wins any race. The caller owns the reader flip
+    * ([[Stores.publishCompacted]]) and the old generation's retirement.
+    * Throws, leaving nothing at `dest`, on an unrecognized layout.
+    *
+    * A streaming-maintained store keeps appending (and crash-replaying)
+    * against `src`, whose batch partitions stay the replay idempotence
+    * domain: point a live checkpointed stream at a compacted `dest` only
+    * from a fresh checkpoint over drained input, or a replayed batch
+    * lands beside its own rows already folded into batch 0. */
+  def compact(spark: SparkSession, src: String, dest: String): Unit = {
+    val (marks, family) = recognise(spark, src)
+    val f = family.getOrElse(throw new IllegalArgumentException(
+      s"compact $src: ${unrecognised(marks)}"))
+    Stores.compact(spark, dest) { tmp =>
+      f.tables.foreach { case (table, layout) =>
+        val (from, to) = if (table.isEmpty) (src, tmp) else (s"$src/$table", s"$tmp/$table")
+        val order = graft.engine.Tables.parquetCached(spark, from).columns
+        val rows = f.live(spark, src, table)
+        Stores.write(rows.select(order.filter(rows.columns.contains).map(col).toSeq: _*),
+          to, layout)
+      }
+      f.rebuild(spark, tmp)
+    }
+  }
+
+  /** The marks `src` is recognised by (its column names, or `postings/`,
+    * `sets/`, `bands/` for the multi-table stores — whose root is not one
+    * parquet table, so their subdirs are checked BEFORE any read) and the
+    * first [[layouts]] row they match. */
+  private def recognise(spark: SparkSession, src: String): (Seq[String], Option[Family]) = {
+    val fs = graft.engine.Fs.of(spark, src)
     val subdirs = Seq("postings", "sets", "bands")
       .filter(d => fs.exists(new org.apache.hadoop.fs.Path(s"$src/$d")))
     val marks: Seq[String] =
       if (subdirs.nonEmpty) subdirs.map(_ + "/")
       else graft.engine.Tables.parquetCached(spark, src).columns.toSeq
-    val layout = layouts.find(_.marker(marks.toSet))
-    val imbalance = layout.filter(_.buckets.nonEmpty).fold(1.0) { l =>
-      val stats =
-        if (l.table.isEmpty) Stores.live(spark, src, l.key)
-        else readMinhashTable(spark, s"$src/${l.table}")
-      val row = stats.groupBy(l.buckets.map(col): _*).agg(count(lit(1)).as("c"))
-        .agg((max(col("c")).cast("double") * count(lit(1)).cast("double") /
-          sum(col("c")).cast("double")).as("imb")).collect()(0)
-      if (row.isNullAt(0)) 1.0 else row.getDouble(0)
-    }
-    if (layout.isEmpty)
-      return CompactionDecision(nFiles, imbalance, compacted = false,
-        rebandAdvised = false, dest = None,
-        declined = Some(s"unrecognized store layout (columns: " +
-          s"${marks.mkString(", ")}) — no postings/, sets/+bands/, " +
-          "t/key, cell, sb, vec_a/vec_b, code, or doc-keyed marker; " +
-          "refusing to guess a compactor"))
-    val compact = nFiles > maxFiles
-    if (compact) {
-      layout.get.compactor(spark, src, dest)
-      // the READER FLIP of a manifest-addressed store
-      manifestDir.foreach(Stores.publishCompacted(spark, _, src, dest))
-    }
-    CompactionDecision(nFiles, imbalance, compact,
-      rebandAdvised = layout.get.reband && imbalance > maxImbalance,
-      dest = if (compact) Some(dest) else None)
+    (marks, layouts.find(_.marker(marks.toSet)))
   }
 
-  /** One store layout [[compactionPolicy]] recognizes: its `marker` over
-    * the store's column names (plus `postings/`, `sets/`, `bands/` for
-    * the multi-table stores), the delete `key` its occupancy stats fold
-    * on (a multi-table store's stats read its `table` subdir through the
-    * shared `doc_id` base sidecar), the bucket columns occupancy is
-    * measured over (empty: no stats), and the layout-preserving
-    * compactor. `reband` marks bucket-KEY families (LSH band keys, IVF
-    * cells, minhash bands) whose skew a new band width can fix — term,
-    * variant and window-hash buckets track frequency, so a reband cannot
-    * help them. Rows are tried in order, most specific first. */
-  private final case class Layout(marker: Set[String] => Boolean, key: String,
+  private def unrecognised(marks: Seq[String]): String =
+    s"unrecognized store layout (columns: ${marks.mkString(", ")}) — no " +
+      "postings/, sets/+bands/, t/key, cell, sb, vec_a/vec_b, code, " +
+      "doc-keyed or DSIR-count marker; refusing to guess a layout"
+
+  /** One store family [[compact]] and [[compactionPolicy]] recognize: its
+    * `marker` over the store's marks ([[recognise]]), the delete `key`
+    * its rows fold on, the bucket columns occupancy is measured over
+    * (empty: no stats; measured on the last table), and its `tables`
+    * ("" = the store root) with their layouts. `fold` replaces the plain
+    * [[Stores.live]] fold of a single-table store; `rebuild` re-derives
+    * dependent tables inside the new generation. `reband` marks
+    * bucket-KEY families (LSH band keys, IVF cells, minhash bands) whose
+    * skew a new band width can fix — term, variant and window-hash
+    * buckets track frequency, so a reband cannot help them. */
+  private final case class Family(marker: Set[String] => Boolean, key: String,
                                   buckets: Seq[String],
-                                  compactor: (SparkSession, String, String) => Unit,
-                                  table: String = "", reband: Boolean = false)
+                                  tables: Seq[(String, Stores.Layout)],
+                                  reband: Boolean = false,
+                                  fold: Option[(SparkSession, String, String) => DataFrame] = None,
+                                  rebuild: (SparkSession, String) => Unit = (_, _) => ()) {
+    /** `table` of store `src` with its deletes folded. */
+    def live(spark: SparkSession, src: String, table: String): DataFrame =
+      fold.fold(Stores.live(spark, src, key))(_(spark, src, table))
+  }
 
-  private lazy val layouts: Seq[Layout] = Seq(
-    Layout(_("postings/"), "doc_id", Seq("tb"),
-      TextAnalysis.compactInvertedIndex, table = "postings"),
-    Layout(m => m("sets/") && m("bands/"), "doc_id", Seq("band", "key"),
-      compactMinhashIndex, table = "bands", reband = true),
-    Layout(_("cell"), "vec_id", Seq("cell"), compactCellIndex, reband = true),
-    Layout(_("sb"), "doc_id", Seq("sb"), compactPositionedWindows),
-    Layout(m => m("t") && m("key"), "vec_id", Seq("t", "key"), compactLshIndex,
-      reband = true),
-    Layout(m => m("vb") && m("variant"), "term", Seq("vb"),
-      TextAnalysis.compactFuzzyTermIndex),
-    Layout(m => m("vec_a") && m("vec_b"), "vec_id", Nil, compactKnnGraph),
-    Layout(m => m("vec_id") && m("c0"), "vec_id", Nil, compactPqIndex),
-    Layout(m => m("doc_id") && m("s") && m("pos"), "doc_id", Nil,
-      compactPositionedWindows),
-    Layout(m => m("doc_id") && (m("simhash") || m("sh") || m("h")), "doc_id",
-      Nil, compactDocFlatIndex),
-    Layout(m => m("name") && (m("ahash_hex") || m("ehash_hex")), "name", Nil,
-      compactDocFlatIndex))
+  // ---- store layouts: each table's writers and its compaction share one ----
 
-  /** [[compactLshIndex]]'s twin for the CELL-partitioned families (IVF
-    * inverted lists and the IVF-PQ IVFADC layout share it — the schema
-    * rides through untouched, so PQ code columns survive): fold the
-    * one-file-per-append accumulation back to one vec_id-sorted file per
-    * cell directory. Same write-once contract: `dest` is a new
-    * generation, committed atomically; the caller flips readers. */
-  def compactCellIndex(spark: SparkSession, src: String, dest: String): Unit =
-    Stores.compact(spark, dest) { tmp =>
-      // readLshIndex (family-generic) folds src's delete tombstones — the
-      // new generation is physically delete-free, same as the LSH compactor
-      readLshIndex(spark, src)
-        .repartition(col("cell"))
-        .sortWithinPartitions(col("vec_id"))
-        .write.mode("overwrite").partitionBy("cell").parquet(tmp)
-    }
+  /** Two-level LSH serving layout: one file per (t, pkey) dir. */
+  private val LshBucketedLayout =
+    Stores.Layout(Seq("t", "pkey"), Seq("t", "pkey"), Seq("key", "vec_id"))
+  /** Flat LSH layout clustered by (t, key), for full-index consumers. */
+  private val LshFlatLayout = Stores.Layout(Nil, Seq("t", "key"), Seq("t", "key"))
+  private val DocLayout = Stores.Layout(Nil, Seq("doc_id"), Seq("doc_id"))
+  private val NameLayout = Stores.Layout(Nil, Seq("name"), Seq("name"))
+  /** Positioned-window serving layout: one file per sb dir. */
+  private val PosWinServingLayout =
+    Stores.Layout(Seq("sb"), Seq("sb"), Seq("s", "doc_id", "pos"))
 
-  /** Compact a FLAT doc_id-keyed store (simhash signatures, shingle
-    * sets, window-hash and positioned-window REPORT tables — r14 VERDICT
-    * #2): fold the doc_id tombstone sidecar physically and rewrite one
-    * balanced doc-clustered generation carrying no sidecar (the
-    * family-wide contract). Trivially layout-preserving: these stores
-    * have no partition dirs; their consumers scan them whole. */
-  def compactDocFlatIndex(spark: SparkSession, src: String,
-                          dest: String): Unit = Stores.compact(spark, dest) { tmp =>
+  /** Rows are tried in order, most specific first. */
+  private lazy val layouts: Seq[Family] = Seq(
+    Family(_("postings/"), "doc_id", Seq("tb"),
+      Seq("postings" -> TextAnalysis.PostingsLayout),
+      fold = Some((spark, src, table) => Stores.live(spark, s"$src/$table", "doc_id",
+        sidecar = Some(Stores.sidecarOf(src)))),
+      rebuild = TextAnalysis.writeDerivedStores(_, _, 0L, dynamic = false)),
+    // both tables fold the ONE shared sidecar and publish under one rename,
+    // so a reader never sees a folded sets/ beside an unfolded bands/
+    Family(m => m("sets/") && m("bands/"), "doc_id", Seq("band", "key"),
+      Seq("sets" -> DocLayout,
+        "bands" -> Stores.Layout(Nil, Seq("band", "key"), Seq("band", "key"))), reband = true,
+      fold = Some((spark, src, table) => readMinhashTable(spark, s"$src/$table"))),
+    // IVF and IVF-PQ inverted lists: one file per cell dir
+    Family(_("cell"), "vec_id", Seq("cell"),
+      Seq("" -> Stores.Layout(Seq("cell"), Seq("cell"), Seq("vec_id"))), reband = true),
+    Family(_("sb"), "doc_id", Seq("sb"), Seq("" -> PosWinServingLayout)),
+    Family(m => m("t") && m("key") && m("pkey"), "vec_id", Seq("t", "key"),
+      Seq("" -> LshBucketedLayout), reband = true),
+    Family(m => m("t") && m("key"), "vec_id", Seq("t", "key"),
+      Seq("" -> LshFlatLayout), reband = true),
+    Family(m => m("vb") && m("variant"), "term", Seq("vb"),
+      Seq("" -> TextAnalysis.FuzzyLayout)),
+    Family(m => m("vec_a") && m("vec_b"), "vec_id", Nil,
+      Seq("" -> Stores.Layout(Nil, Seq("vec_a"), Seq("vec_a", "vec_b"))),
+      fold = Some((spark, src, _) => knnGraphLive(spark, src))),
+    Family(m => m("vec_id") && m("c0"), "vec_id", Nil,
+      Seq("" -> Stores.Layout(Nil, Seq("vec_id"), Seq("vec_id")))),
+    // the positioned-window REPORT store is written as it is read
+    Family(m => m("doc_id") && m("s") && m("pos"), "doc_id", Nil,
+      Seq("" -> Stores.Layout())),
+    Family(m => m("doc_id") && m("pos") && m("h"), "doc_id", Nil,
+      Seq("" -> Stores.Layout(Nil, Seq("doc_id"), Seq("doc_id", "pos")))),
+    Family(m => m("doc_id") && (m("simhash") || m("sh") || m("h")), "doc_id", Nil,
+      Seq("" -> DocLayout)),
+    Family(m => m("name") && (m("ahash_hex") || m("ehash_hex")), "name", Nil,
+      Seq("" -> NameLayout)),
+    // DSIR counts: always batch-addressed, one merged file
+    Family(m => m("b") && m("ct") && m("cr"), "b", Nil,
+      Seq("" -> Stores.Layout(Seq("batch_id"))),
+      fold = Some((spark, src, _) => dsirMergedCounts(spark, src))))
+
+  /** The kNN adjacency store's fold: a delete hides a node from BOTH
+    * endpoints (the graph serving ops' tombstonedIds rule) — folding only
+    * vec_a would leave edges INTO deleted nodes for the beam expansion to
+    * walk. */
+  private def knnGraphLive(spark: SparkSession, src: String): DataFrame = {
     val raw = graft.engine.Tables.parquetCached(spark, src)
-    // the store's own key: doc_id for the text families, name for the
-    // image/audio-hash stores (one sidecar convention, one compactor)
-    val keyCol = if (raw.columns.contains("doc_id")) "doc_id" else "name"
-    val folded = Stores.live(spark, src, keyCol)
-    val sortCols = Seq(keyCol, "pos").filter(raw.columns.contains).map(col)
-    if (raw.columns.contains("batch_id"))
-      // STREAMING (batch_id-partitioned) stores fold their lineage into
-      // generation batch 0 and KEEP the layout (the [[compactLshIndex]]
-      // rule), so the compacted store accepts further idempotent appends
-      folded.drop("batch_id").withColumn("batch_id", lit(0L))
-        .repartition(col(keyCol))
-        .sortWithinPartitions(sortCols: _*)
-        .write.mode("overwrite").partitionBy("batch_id").parquet(tmp)
-    else
-      folded.select(raw.columns.map(col).toSeq: _*)
-        .repartition(col(keyCol))
-        .sortWithinPartitions(sortCols: _*)
-        .write.mode("overwrite").parquet(tmp)
+    Stores.deleted(spark, src, "vec_id").fold(raw)(del => raw
+      .join(del.withColumnRenamed("vec_id", "vec_a"), Seq("vec_a"), "left_anti")
+      .join(del.withColumnRenamed("vec_id", "vec_b"), Seq("vec_b"), "left_anti"))
   }
 
   /** Committed PERCEPTUAL-HASH store for an image corpus: decoding is the
@@ -1041,13 +1013,11 @@ object Indexes {
     * committed (name, width, height, *hash_hex) table. Fingerprinted over
     * the image FILES (binaryFile inputs are regular scan inputs). Deletes
     * are `name`-keyed ([[Stores.tombstone]] / [[Stores.live]]); the
-    * policy compacts the layout through [[compactDocFlatIndex]]. */
+    * layout is shared with [[compact]]. */
   def ensureImageHashIndex(spark: SparkSession, imagesDir: String): String = {
     val images = spark.read.format("binaryFile").load(imagesDir)
     Stores.ensure(spark, imagesDir, "imghash_", corpusFingerprint(images)) { tmp =>
-      Multimodal.imagePHashes(images).toDF()
-        .repartition(col("name")).sortWithinPartitions(col("name"))
-        .write.mode("overwrite").parquet(tmp)
+      Stores.write(Multimodal.imagePHashes(images).toDF(), tmp, NameLayout)
     }
   }
 
@@ -1055,8 +1025,7 @@ object Indexes {
     * store: the micro-batch's payloads decode to hash rows that land in
     * a `batch_id=<id>` partition ([[Stores.appendBatch]]), so a replayed
     * batch rewrites its own partition. Readers ignore the extra batch_id
-    * column; compaction folds the lineage into generation batch 0
-    * keeping the layout. */
+    * column. */
   def appendImageHashIndexIdempotent(named: DataFrame, batchId: Long,
                                      path: String): Unit =
     Stores.appendBatch(Multimodal.imagePHashesNamed(named).toDF().coalesce(1),
@@ -1070,9 +1039,7 @@ object Indexes {
   def ensureAudioHashIndex(spark: SparkSession, audioDir: String): String = {
     val audio = spark.read.format("binaryFile").load(audioDir)
     Stores.ensure(spark, audioDir, "audhash_", corpusFingerprint(audio)) { tmp =>
-      Multimodal.audioPHashes(audio).toDF()
-        .repartition(col("name")).sortWithinPartitions(col("name"))
-        .write.mode("overwrite").parquet(tmp)
+      Stores.write(Multimodal.audioPHashes(audio).toDF(), tmp, NameLayout)
     }
   }
 
@@ -1215,38 +1182,18 @@ object Indexes {
                     buckets: Int = Selection.DefaultBuckets): Array[(Long, Double)] =
     Selection.modelFromCounts(readDsirModelCounts(spark, path, buckets), buckets)
 
-  /** Compact a streaming-maintained model store: the batch_id lineage
-    * (one ≤ `buckets`-row file per micro-batch) folds into ONE merged
-    * count table under generation batch 0, keeping the batch-addressed
-    * layout so maintenance appends keep landing ([[compactLshIndex]]'s
-    * layout-preservation rule). Unlike row stores there are no
-    * tombstones to fold — counts only ever merge — so compaction is
-    * pure file-count hygiene: a year of daily batches is 365 files a
-    * reader must sum; post-compaction it is one. Read-equivalence is
-    * exact by the merge's associativity (spec-asserted).
-    *
-    * FENCING CONTRACT (the compactionPolicy rule, stated for the
-    * double-count hazard specific to mergeable counts): `dest` is a NEW
-    * generation for READERS; the maintenance stream keeps writing (and
-    * crash-REPLAYING) against `src`, whose per-batch partitions remain
-    * the replay idempotence domain. Re-pointing a live checkpointed
-    * stream at a compacted destination would let a replayed batch land
-    * beside its own counts already folded into batch 0 — counted twice,
-    * silently. Flip the stream to a compacted path only from a FRESH
-    * checkpoint over drained input. Write-once like every compactor:
-    * `dest` commits atomically from a tmp build ([[Stores.compact]]), so
-    * a crash mid-write never leaves a partial generation at the path the
-    * caller publishes next. */
-  def compactDsirModelStore(spark: SparkSession, src: String,
-                            dest: String): Unit = Stores.compact(spark, dest) { tmp =>
-    // the width travels WITH the compaction (read it off the source, not
-    // a caller parameter — compaction is layout hygiene, not retraining)
+  /** A model store's compaction fold: the batch lineage (one
+    * ≤ `buckets`-row file per micro-batch) merges into ONE count table,
+    * the width read off the source (compaction is layout hygiene, not
+    * retraining). There are no tombstones to fold — counts only ever
+    * merge — and read-equivalence is exact by the merge's associativity
+    * (spec-asserted). A stream appending to the store double-counts if
+    * re-pointed at the compacted generation mid-checkpoint ([[compact]]'s
+    * streaming note). */
+  private def dsirMergedCounts(spark: SparkSession, src: String): DataFrame =
     mergedDsirCounts(spark, src)
       .withColumn("buckets", lit(storedDsirWidth(spark, src)))
-      .withColumn("batch_id", lit(0L))
       .coalesce(1)
-      .write.mode("overwrite").partitionBy("batch_id").parquet(tmp)
-  }
 
   /** Publish a WRITE-ONCE merged-counts snapshot of a maintained model
     * store through a generation manifest ([[Stores.publishStoreSnapshot]])
@@ -1299,66 +1246,6 @@ object Indexes {
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       appendDsirModelStore(batch, isTarget, tmp, buckets)
     }
-  }
-
-  /** Compact the flat PQ code table (vec_id, c0..c{m-1}): the sidecar is
-    * the family-generic vec_id channel ([[readLshIndex]]'s scaladoc
-    * names PQ code lists explicitly), so the fold IS [[readLshIndex]];
-    * rewrite vec_id-clustered so the ADC scan stays footer-prunable on
-    * the id column. */
-  def compactPqIndex(spark: SparkSession, src: String, dest: String): Unit =
-    Stores.compact(spark, dest) { tmp =>
-      readLshIndex(spark, src)
-        .repartition(col("vec_id"))
-        .sortWithinPartitions(col("vec_id"))
-        .write.mode("overwrite").parquet(tmp)
-    }
-
-  /** Compact the kNN adjacency store (vec_a, vec_b, …): a delete hides a
-    * node from BOTH endpoints (the graph serving ops' tombstonedIds
-    * rule), so the fold drops rows where EITHER endpoint is tombstoned —
-    * folding only vec_a would leave edges INTO deleted nodes for the
-    * beam expansion to walk. Rewrite keeps the vec_a-clustered
-    * adjacency-lookup layout [[ensureKnnGraph]] builds. */
-  def compactKnnGraph(spark: SparkSession, src: String, dest: String): Unit =
-    Stores.compact(spark, dest) { tmp =>
-      val raw = graft.engine.Tables.parquetCached(spark, src)
-      val folded = Stores.deleted(spark, src, "vec_id").fold(raw)(del => raw
-        .join(del.withColumnRenamed("vec_id", "vec_a"), Seq("vec_a"), "left_anti")
-        .join(del.withColumnRenamed("vec_id", "vec_b"), Seq("vec_b"), "left_anti"))
-      // anti-joins reorder the join keys to the front; restore the
-      // source's column order so the generation is schema-identical
-      folded.select(raw.columns.map(col).toSeq: _*)
-        .repartition(col("vec_a"))
-        .sortWithinPartitions(col("vec_a"), col("vec_b"))
-        .write.mode("overwrite").parquet(tmp)
-    }
-
-  /** Compact a minhash BASE generation (`sets/` + `bands/` + the shared
-    * doc_id sidecar at `<base>/tombstones`): both derived tables fold
-    * the ONE sidecar (they share the doc_id key — folding one but not
-    * the other would let a deleted doc refine pairs it can no longer
-    * candidate for), each rewrites in its own serving layout
-    * (batch_id-partitioned stores fold to generation batch 0 and KEEP
-    * the layout — the [[compactLshIndex]] streaming rule), and the pair
-    * publishes under ONE atomic rename so a reader can never see a
-    * folded sets/ beside an unfolded bands/. */
-  def compactMinhashIndex(spark: SparkSession, src: String,
-                          dest: String): Unit = Stores.compact(spark, dest) { tmp =>
-    def rewrite(table: String, bucketCols: Seq[String]): Unit = {
-      val folded = readMinhashTable(spark, s"$src/$table")
-      if (folded.columns.contains("batch_id"))
-        folded.drop("batch_id").withColumn("batch_id", lit(0L))
-          .repartition(bucketCols.map(col): _*)
-          .write.mode("overwrite").partitionBy("batch_id")
-          .parquet(s"$tmp/$table")
-      else
-        folded.repartition(bucketCols.map(col): _*)
-          .sortWithinPartitions(bucketCols.map(col): _*)
-          .write.mode("overwrite").parquet(s"$tmp/$table")
-    }
-    rewrite("sets", Seq("doc_id"))
-    rewrite("bands", Seq("band", "key"))
   }
 
   /** Driver-side replica of [[Similarity.bucketFromPlanes]] for ONE vector:
@@ -2133,48 +2020,14 @@ object Indexes {
                                      label: String): String =
     Stores.ensure(spark, sfDir, s"poswinsrv_n${windowN}_${labelSegment(label)}_",
         corpusFingerprint(docs)) { tmp =>
-      servingWindows(docs, windowN)
-        .write.mode("overwrite").partitionBy("sb").parquet(tmp)
+      Stores.write(servingWindows(docs, windowN), tmp, PosWinServingLayout)
     }
 
-  /** The serving layout's rows: (doc_id, pos, s, sb), clustered into one
-    * s-sorted run per sb dir. */
+  /** The serving layout's rows: (doc_id, pos, s, sb). */
   private def servingWindows(docs: DataFrame, windowN: Int): DataFrame =
     Decontamination.positionedWindows(docs, windowN)
       .select(col("doc_id"), col("pos"), col("s"))
       .withColumn("sb", shiftright(col("s"), 48 - PosWinDirBits))
-      .repartition(col("sb"))
-      .sortWithinPartitions(col("s"), col("doc_id"), col("pos"))
-
-  /** Fold a positioned-window store's delete sidecar PHYSICALLY into a
-    * fresh generation — the compaction verb where logical deletes become
-    * physical (the family-wide contract; the new generation carries no
-    * sidecar). LAYOUT-PRESERVING: a serving store (sb= partition dirs)
-    * compacts back to the bucketed s-sorted layout so probes stay
-    * statically pruned — a STREAMING serving store ((sb, batch_id)
-    * dirs) folds its batch lineage into generation batch 0 and keeps
-    * the unified layout, so the compacted store accepts further
-    * idempotent appends without a partition-discovery conflict (the
-    * compactLshIndex lesson); a doc-ordered report store compacts flat.
-    * Pure shuffle-and-rewrite — never re-tokenizes; probes answer
-    * identically pre/post (spec-asserted). Write-once: `dest` is a new
-    * generation committed atomically. */
-  def compactPositionedWindows(spark: SparkSession, src: String,
-                               dest: String): Unit = Stores.compact(spark, dest) { tmp =>
-    val rows0 = graft.engine.Tables.parquetCached(spark, src)
-    val rows = Stores.live(spark, src, "doc_id")
-    if (rows0.columns.contains("batch_id"))
-      rows.withColumn("batch_id", lit(0L))
-        .repartition(col("sb"))
-        .sortWithinPartitions(col("s"), col("doc_id"), col("pos"))
-        .write.mode("overwrite").partitionBy("sb", "batch_id").parquet(tmp)
-    else if (rows0.columns.contains("sb"))
-      rows.repartition(col("sb"))
-        .sortWithinPartitions(col("s"), col("doc_id"), col("pos"))
-        .write.mode("overwrite").partitionBy("sb").parquet(tmp)
-    else
-      rows.write.mode("overwrite").parquet(tmp)
-  }
 
   /** Idempotent streaming append of a doc batch's positioned windows to
     * an explicitly-managed SERVING store — the ingest half of
@@ -2195,22 +2048,18 @@ object Indexes {
     // family hit in r12) — a streaming store is born streaming, or cut
     // from a compaction that kept the unified layout
     val spark = docs.sparkSession
-    val hasBatch = Option(org.apache.hadoop.fs.FileSystem
-        .get(new java.net.URI(storePath), spark.sparkContext.hadoopConfiguration)
+    val hasBatch = Option(graft.engine.Fs.of(spark, storePath)
         .globStatus(new org.apache.hadoop.fs.Path(s"$storePath/sb=*/batch_id=*")))
       .exists(_.nonEmpty)
     // accepts only an EMPTY/new store or one already streaming — a flat
     // sb= serving store AND a doc-ordered report store both reject
-    // (review catch: the first guard only checked sb=, letting the
-    // report layout take nested partition dirs beside flat part files)
     require(!Stores.hasParquetFiles(spark, storePath) || hasBatch,
       s"appendPositionedWindowsIdempotent: $storePath holds a non-streaming " +
         "layout (flat sb= serving files or a doc-ordered report store) — " +
-        "appending batch partitions would mix layouts; compact through " +
-        "compactPositionedWindows from a streaming source, or start a " +
-        "fresh streaming store")
-    Stores.overwritePartitions(servingWindows(docs, windowN)
-      .withColumn("batch_id", lit(batchId)), storePath, "sb", "batch_id")
+        "appending batch partitions would mix layouts; compact a streaming " +
+        "source, or start a fresh streaming store")
+    Stores.write(servingWindows(docs, windowN), storePath, PosWinServingLayout,
+      batch = Some(batchId))
   }
 
   /** Append a new batch's derived dedup state to an EXISTING minhash index

@@ -43,6 +43,13 @@ import graft.engine.Fs
   *    in batch partitions by dynamic overwrite ([[overwritePartitions]]),
   *    so a replayed micro-batch rewrites its own partition. A store uses
   *    ONE channel: flat appends and batch dirs do not mix in one dir.
+  *  - LAYOUT: each store table declares one [[Layout]] (partition dirs,
+  *    cluster columns, sort columns) that its writers and its compaction
+  *    share through [[write]]. The streaming rule lives there alone: a
+  *    table whose rows carry `batch_id` (or whose layout names it) is
+  *    batch-partitioned, `batch_id` appended to the partition columns
+  *    unless the layout places it, and a compaction folds every batch
+  *    into batch 0 — the compacted store keeps accepting appends.
   *  - DEMO STATE (the delete/incremental maintenance queries): one
   *    [[ensure]] generation holding the store under `store/`, its sidecar
   *    at `store.tombstones` (MinHash: `store/tombstones`) and any prior
@@ -195,6 +202,41 @@ object Stores {
     commitIndexDir(spark, tmp, dest)
   }
 
+  /** The on-disk layout of one store table: `partitionBy` dirs, rows
+    * hash-clustered on `clusterBy` (one file per dir when it covers the
+    * dir columns) and sorted by `sortBy` within each file. Empty = skip
+    * that step. A partition column that varies makes Spark's write
+    * re-sort the rows by the partition columns, which drops `sortBy`
+    * (files keep shuffle order); the constant batch-0 fold keeps it. */
+  final case class Layout(partitionBy: Seq[String] = Nil,
+                          clusterBy: Seq[String] = Nil,
+                          sortBy: Seq[String] = Nil)
+
+  /** Write `rows` by `layout` — the one writer builds, appends and
+    * compactions share, holding the streaming rule of the class scaladoc.
+    * `batch` lands the rows as that batch by dynamic overwrite
+    * ([[overwritePartitions]]); without it, batch-partitioned rows fold
+    * into batch 0 and the write uses `mode`. */
+  def write(rows: DataFrame, path: String, layout: Layout,
+            mode: String = "overwrite", batch: Option[Long] = None): Unit = {
+    val named = layout.partitionBy.contains("batch_id")
+    val streaming = batch.isDefined || named || rows.columns.contains("batch_id")
+    val stamped =
+      if (batch.isDefined) rows.withColumn("batch_id", lit(batch.get))
+      else if (streaming) rows.withColumn("batch_id", lit(0L))
+      else rows
+    val parts = if (streaming && !named) layout.partitionBy :+ "batch_id"
+                else layout.partitionBy
+    val clustered =
+      if (layout.clusterBy.isEmpty) stamped
+      else stamped.repartition(layout.clusterBy.map(col): _*)
+    val sorted =
+      if (layout.sortBy.isEmpty) clustered
+      else clustered.sortWithinPartitions(layout.sortBy.map(col): _*)
+    if (batch.isDefined) overwritePartitions(sorted, path, parts: _*)
+    else sorted.write.mode(mode).partitionBy(parts: _*).parquet(path)
+  }
+
   /** The dynamic-partition-overwrite write every idempotent channel
     * shares: only the partitions `df` touches are replaced, so a replayed
     * batch rewrites its own partitions bit-identically. */
@@ -204,7 +246,7 @@ object Stores {
 
   /** Land `df` as batch `batchId` of a batch-addressed store. */
   def appendBatch(df: DataFrame, batchId: Long, path: String): Unit =
-    overwritePartitions(df.withColumn("batch_id", lit(batchId)), path, "batch_id")
+    write(df, path, Layout(), batch = Some(batchId))
 
   // ---- delete sidecars ------------------------------------------------------
 

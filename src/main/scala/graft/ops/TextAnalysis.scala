@@ -322,7 +322,7 @@ object TextAnalysis {
     * ([[graft.ops.Stores.tombstone]] on `doc_id`) folds here as an
     * anti-join BELOW the grouping (partition filters still push below
     * it, so the pruned probe stays pruned) and folds physically at
-    * [[graft.ops.Indexes.compactPositionedWindows]] — a deleted
+    * [[graft.ops.Indexes.compact]] — a deleted
     * (right-to-be-forgotten or re-filtered) document stops being served
     * by phrase search the moment its tombstone lands, the same contract
     * every other index family carries. */
@@ -452,7 +452,7 @@ object TextAnalysis {
     * ([[bm25TopKIndexed]]/Batch anti-join the probed postings and
     * subtract the sidecar's (1, dl) partials from the scalars; df is a count over surviving probed postings, so it
     * corrects itself) and folded PHYSICALLY by
-    * [[compactInvertedIndex]]. */
+    * [[graft.ops.Indexes.compact]]. */
   def writeInvertedIndex(docs: DataFrame, path: String): Unit =
     writeInvertedRows(docs, path, None)
 
@@ -460,9 +460,7 @@ object TextAnalysis {
                                     path: String): Unit =
     writeInvertedRows(docs, path, Some(batchId))
 
-  /** ONE on-disk layout for both write modes (review catch: a tb-only
-    * batch build next to (batch_id, tb) streaming appends made partition
-    * discovery throw at the first probe): every store is
+  /** ONE on-disk layout for both write modes: every store is
     * (batch_id, tb)-partitioned — the batch build IS batch 0, written
     * with a plain overwrite (which commits a root _SUCCESS for the
     * ensure gate); streaming appends land via dynamic overwrite. */
@@ -475,19 +473,11 @@ object TextAnalysis {
       .groupBy(col("doc_id"), col("term"))
       .agg(max(col("dl")).as("dl"), count(lit(1)).as("tf"))
       .withColumn("tb", termBucket(col("term")))
-      .withColumn("batch_id", lit(batch.getOrElse(0L)))
     val spark = docs.sparkSession
+    Stores.write(post, s"$path/postings", PostingsLayout, batch = batch)
     batch match {
-      case None =>
-        post.repartition(col("tb"))
-          .sortWithinPartitions(col("term"), col("doc_id"))
-          .write.mode("overwrite").partitionBy("batch_id", "tb")
-          .parquet(s"$path/postings")
-        writeDerivedStores(spark, path, 0L, dynamic = false)
+      case None => writeDerivedStores(spark, path, 0L, dynamic = false)
       case Some(b) =>
-        Stores.overwritePartitions(post.repartition(col("tb"))
-          .sortWithinPartitions(col("term"), col("doc_id")),
-          s"$path/postings", "batch_id", "tb")
         // an EMPTY first batch on a fresh path writes no postings files —
         // skip the derived-store read-back rather than fail schema inference
         val fs = graft.engine.Fs.of(spark, path)
@@ -497,6 +487,12 @@ object TextAnalysis {
     }
   }
 
+  /** The postings layout: batch_id OUTER, then one file per term bucket
+    * (the (term, doc_id) sort is lost to the partitioned write, see
+    * [[Stores.Layout]]). */
+  private[graft] val PostingsLayout =
+    Stores.Layout(Seq("batch_id", "tb"), Seq("tb"), Seq("term", "doc_id"))
+
   /** The three derived stores of one generation batch, each computed from
     * the JUST-WRITTEN postings partition (a narrow read-back — never a
     * re-tokenization): `doclens` (doc_id, dl; doc_id-range-sorted so a
@@ -505,8 +501,8 @@ object TextAnalysis {
     * exact because postings are one row per containing doc and docs are
     * batch-disjoint), `scalars` (1-row partials, derived from the tiny
     * doclens read-back rather than a second postings pass). */
-  private def writeDerivedStores(spark: SparkSession, path: String,
-                                 batch: Long, dynamic: Boolean): Unit = {
+  private[graft] def writeDerivedStores(spark: SparkSession, path: String,
+                                        batch: Long, dynamic: Boolean): Unit = {
     def save(df: DataFrame, sub: String, parts: Seq[String]): Unit =
       if (dynamic) Stores.overwritePartitions(df, s"$path/$sub", parts: _*)
       else df.write.mode("overwrite").partitionBy(parts: _*).parquet(s"$path/$sub")
@@ -602,7 +598,7 @@ object TextAnalysis {
     * store to price a delete. Ids absent from the store are silently
     * no-ops (the LSH family's semantics). Folded at read by
     * [[bm25TopKIndexed]]/[[bm25TopKIndexedBatch]], physically at
-    * [[compactInvertedIndex]].
+    * [[graft.ops.Indexes.compact]].
     *
     * CONTENT-ADDRESSING CAVEAT (the family-wide rule): never tombstone
     * the write-once fingerprint-keyed generations [[ensureInvertedIndex]]
@@ -651,37 +647,6 @@ object TextAnalysis {
       nD / col("total_dl").cast("double"))
     val idf = log((nD - dfD + lit(0.5)) / (dfD + lit(0.5)) + lit(1.0))
     round(idf * (tfD * lit(k1 + 1.0)) / (tfD + norm) * lit(1e6), 0).cast("long")
-  }
-
-  /** Fold an append-grown (batch_id-partitioned) inverted index into a
-    * fresh canonical generation — the [[graft.ops.Indexes.compactLshIndex]]
-    * lifecycle verb for the retrieval store: one sorted file per term
-    * bucket, batch lineage folded into generation batch 0 (so the
-    * compacted store accepts further streaming appends), derived stores
-    * rebuilt exactly from the folded postings, and — round 13 — the
-    * delete sidecar folded PHYSICALLY: tombstoned docs' postings and
-    * doclens rows are dropped, scalars/termstats re-derive from the
-    * survivors, and the new generation carries NO sidecar (compaction is
-    * where logical deletes become physical, the family-wide contract).
-    * Pure shuffle-and-rewrite of index rows — never re-tokenizes; probes
-    * answer identically pre/post (spec-asserted). Write-once: `dest` is
-    * a new generation committed atomically. */
-  def compactInvertedIndex(spark: SparkSession, src: String,
-                           dest: String): Unit = Stores.compact(spark, dest) { tmp =>
-    val ts = invertedTombstones(spark, src)
-    def fold(df: DataFrame): DataFrame =
-      ts.fold(df)(t => df.join(t.select(col("doc_id")), Seq("doc_id"), "left_anti"))
-    fold(graft.engine.Tables.parquetCached(spark, s"$src/postings"))
-      .select(col("doc_id"), col("term"), col("dl"), col("tf"), col("tb"))
-      .withColumn("batch_id", lit(0L))
-      .repartition(col("tb"))
-      .sortWithinPartitions(col("term"), col("doc_id"))
-      .write.mode("overwrite").partitionBy("batch_id", "tb")
-      .parquet(s"$tmp/postings")
-    // doclens/termstats/scalars re-derive from the folded postings just
-    // written (read-back, not recompute), so every derived store agrees
-    // with the surviving corpus exactly
-    writeDerivedStores(spark, tmp, 0L, dynamic = false)
   }
 
   /** BM25 top-`k` served from the inverted index — ZERO corpus scans:
@@ -1331,30 +1296,20 @@ object TextAnalysis {
     * (|V|·(avg term length + 1) rows), never corpus-sized — the same
     * scale class as termstats, orders of magnitude under the postings. */
   def writeFuzzyTermIndex(docs: DataFrame, path: String): Unit =
-    docs.select(col("doc_id"),
+    Stores.write(docs.select(col("doc_id"),
         explode(TextOps.wordsSafe(col("text"))).as("term"))
       .distinct()
       .groupBy(col("term")).agg(count(lit(1)).as("df"))
       .select(explode(deletionVariants(col("term"))).as("variant"),
         col("term"), col("df"))
-      .withColumn("vb", termBucket(col("variant")))
-      .repartition(col("vb"))
-      .sortWithinPartitions(col("variant"), col("term"))
-      .write.mode("overwrite").partitionBy("vb").parquet(path)
+      .withColumn("vb", termBucket(col("variant"))), path, FuzzyLayout)
 
-  /** Compact the fuzzy deletion-neighborhood store ((variant, term, df),
-    * vb partition dirs) — a pure file fold back to one variant-sorted
-    * file per bucket. The family carries NO delete sidecar by design:
-    * deletes re-derive candidate df from the SURVIVING postings at probe
-    * time (see [[fuzzyTerms]]'s tombstonesFrom), so compaction here is
-    * layout maintenance only; probes answer identically pre/post. */
-  def compactFuzzyTermIndex(spark: SparkSession, src: String,
-                            dest: String): Unit = Stores.compact(spark, dest) { tmp =>
-    graft.engine.Tables.parquetCached(spark, src)
-      .repartition(col("vb"))
-      .sortWithinPartitions(col("variant"), col("term"))
-      .write.mode("overwrite").partitionBy("vb").parquet(tmp)
-  }
+  /** One file per variant bucket. The family carries NO
+    * delete sidecar by design: deletes re-derive candidate df from the
+    * SURVIVING postings at probe time (see [[fuzzyTerms]]'s
+    * tombstonesFrom), so its compaction is layout maintenance only. */
+  private[graft] val FuzzyLayout =
+    Stores.Layout(Seq("vb"), Seq("vb"), Seq("variant", "term"))
 
   /** Write-once build-if-missing for the registered query path (the
     * [[ensureInvertedIndex]] lifecycle). */

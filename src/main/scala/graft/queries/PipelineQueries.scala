@@ -4555,10 +4555,10 @@ object PipelineQueries {
 
   /** Deterministic, overwrite-per-run audit location (fingerprint-free on
     * purpose: the oracle SQL is a static string and must glob the same
-    * tree the query just wrote). */
+    * tree the query just wrote). The leaf never starts with `_` or `.`:
+    * Spark's file listing treats such names as hidden and ignores them. */
   private def shardAuditPath(d: String): String =
-    s"${graft.ops.Stores.indexRoot}/shard_audit/" +
-      d.replaceAll("[^A-Za-z0-9._-]", "_")
+    s"${graft.ops.Stores.indexRoot}/shard_audit/corpus${graft.ops.Stores.pathSegment(d)}"
 
   /** Verify runs at sf0.01 (driver contract), so the oracle globs the
     * sf0.01 tree; resolved at dump time from the same [[shardAuditPath]]. */
@@ -7027,7 +7027,7 @@ object PipelineQueries {
     * builds the count store batch by batch AND publishes a write-once
     * generation snapshot per batch (r19: the registered row now
     * exercises the torn-read fence, not just the spec), then COMPACTION
-    * folds the lineage ([[graft.ops.Indexes.compactDsirModelStore]]),
+    * folds the lineage ([[graft.ops.Indexes.compact]]),
     * the compacted path is published through the SAME manifest, and the
     * raw pool scores from the MANIFEST-RESOLVED generation
     * ([[graft.ops.Stores.currentGeneration]]) with the native kernel.
@@ -7058,7 +7058,7 @@ object PipelineQueries {
       land(docs.where(col("doc_id") % 2 =!= 0)) // lands while DOWN
       val q2 = start(); q2.processAllAvailable(); q2.stop()
       val compacted = s"$scratch/model_c0"
-      graft.ops.Indexes.compactDsirModelStore(s, store, compacted)
+      graft.ops.Indexes.compact(s, store, compacted)
       // the reader flip every other committed store already grades:
       // publish the compacted generation, resolve it back through the
       // manifest, and score from what the POINTER serves

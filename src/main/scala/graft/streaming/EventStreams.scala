@@ -387,7 +387,7 @@ object EventStreams {
     * resolveThroughManifest. A crash between append and publish costs
     * nothing: readers keep the previous snapshot, and the replayed batch
     * re-appends idempotently then publishes. Compaction composes: fold
-    * the lineage with [[graft.ops.Indexes.compactDsirModelStore]], then
+    * the lineage with [[graft.ops.Indexes.compact]], then
     * publish the compacted path through the SAME manifest — readers flip
     * atomically to a read-equivalent generation. */
   def dsirModelMaintenanceStreamFenced(docs: DataFrame, isTarget: Column,

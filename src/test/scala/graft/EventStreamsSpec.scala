@@ -550,7 +550,7 @@ class EventStreamsSpec extends AnyFunSuite {
     // compaction folds the streaming store (lineage -> batch 0, deletes
     // physical) and the probe answers identically
     val dest = java.nio.file.Files.createTempDirectory("pwcdc_c").toString + "/idx"
-    graft.ops.Indexes.compactPositionedWindows(spark, store, dest)
+    graft.ops.Indexes.compact(spark, store, dest)
     assert(!new java.io.File(s"$dest.tombstones").exists())
     val gotC = graft.ops.TextAnalysis.phraseSearch(spark, dest, phrase, 2)
       .as[(Long, Long, Int)].collect().toSeq
@@ -1227,7 +1227,7 @@ class EventStreamsSpec extends AnyFunSuite {
     // compaction MID-STREAM: fold the lineage, publish the compacted path
     // through the SAME manifest — an atomic, read-equivalent reader flip
     val compacted = s"$dir/model_c0"
-    graft.ops.Indexes.compactDsirModelStore(spark, store, compacted)
+    graft.ops.Indexes.compact(spark, store, compacted)
     graft.ops.Stores.publishGeneration(spark, mdir, compacted)
     gin.addData(probe); gq.processAllAvailable(); gq.stop()
     val s2 = spark.read.parquet(out).where(col("batch_id") === 2)

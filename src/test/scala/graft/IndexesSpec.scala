@@ -429,7 +429,7 @@ class IndexesSpec extends AnyFunSuite {
     val before = Indexes.lshTopKIndexed(emb, grown, 7L, 10)
       .as[(Long, Double)].collect().toSeq
     val compacted = Files.createTempDirectory("lsh_compact_dst").toString + "/idx"
-    Indexes.compactLshIndex(spark, grown, compacted)
+    Indexes.compact(spark, grown, compacted)
     val after = Indexes.lshTopKIndexed(emb, compacted, 7L, 10)
       .as[(Long, Double)].collect().toSeq
     assert(after === before, "compaction must not change probe results")
@@ -451,7 +451,7 @@ class IndexesSpec extends AnyFunSuite {
       .as[(Long, Double)].collect().toSeq
     assert(before6.nonEmpty)
     val compacted6 = Files.createTempDirectory("lsh_compact6_dst").toString + "/idx"
-    Indexes.compactLshIndex(spark, grown6, compacted6)
+    Indexes.compact(spark, grown6, compacted6)
     val after6 = Indexes.lshTopKIndexed(emb, compacted6, 7L, 10, bBits = 6)
       .as[(Long, Double)].collect().toSeq
     assert(after6 === before6, "b=6 probe must survive compaction unchanged")
@@ -465,7 +465,7 @@ class IndexesSpec extends AnyFunSuite {
     val beforePq = Indexes.ivfPqTopKIndexed(emb, cent, cbs, grownPq, 7L, 10,
       nProbe = 4, rerank = 32).as[(Long, Double)].collect().toSeq
     val compactedPq = Files.createTempDirectory("ivfpq_compact_dst").toString + "/idx"
-    Indexes.compactCellIndex(spark, grownPq, compactedPq)
+    Indexes.compact(spark, grownPq, compactedPq)
     val afterPq = Indexes.ivfPqTopKIndexed(emb, cent, cbs, compactedPq, 7L, 10,
       nProbe = 4, rerank = 32).as[(Long, Double)].collect().toSeq
     assert(afterPq === beforePq, "IVF-PQ probe must survive compaction")
@@ -609,7 +609,7 @@ class IndexesSpec extends AnyFunSuite {
     // physical fold: compaction drops tombstoned rows and carries NO
     // sidecar into the new generation
     val compacted = Files.createTempDirectory("lsh_tomb_dst").toString + "/idx"
-    Indexes.compactLshIndex(spark, path, compacted)
+    Indexes.compact(spark, path, compacted)
     assert(!new java.io.File(s"$compacted.tombstones").exists(),
       "compacted generation must not carry a tombstone sidecar")
     val physIds = spark.read.parquet(compacted)
@@ -659,7 +659,7 @@ class IndexesSpec extends AnyFunSuite {
       "tombstoned ids surfaced from the IVF-PQ probe")
     // cell compaction folds physically, like the LSH compactor
     val pqc = Files.createTempDirectory("uni_pq_c").toString + "/idx"
-    Indexes.compactCellIndex(spark, pq, pqc)
+    Indexes.compact(spark, pq, pqc)
     assert(!new java.io.File(s"$pqc.tombstones").exists())
     val physIds = spark.read.parquet(pqc)
       .select(col("vec_id")).distinct().as[Long].collect().toSet
@@ -709,7 +709,7 @@ class IndexesSpec extends AnyFunSuite {
     val del = emb.where(col("vec_id") % 5 === 0).select(col("vec_id"))
     graft.ops.Stores.tombstone(grown, del, "vec_id")
     val compacted = Files.createTempDirectory("flat_compact_dst").toString + "/idx"
-    Indexes.compactLshIndex(spark, grown, compacted)
+    Indexes.compact(spark, grown, compacted)
     val out = spark.read.parquet(compacted)
     assert(out.columns.contains("batch_id"),
       "compacted streaming store must keep the unified batch_id layout")
@@ -927,7 +927,7 @@ class IndexesSpec extends AnyFunSuite {
     // physical fold: compacted generation has no sidecar, no deleted
     // rows, identical probe; serving layout (sb dirs) preserved
     val dest = Files.createTempDirectory("poswin_del_c").toString + "/idx"
-    Indexes.compactPositionedWindows(spark, srv, dest)
+    Indexes.compact(spark, srv, dest)
     assert(!new java.io.File(s"$dest.tombstones").exists())
     assert(new java.io.File(dest).listFiles().exists(_.getName.startsWith("sb=")),
       "compaction must preserve the bucketed serving layout")
@@ -1380,7 +1380,48 @@ class IndexesSpec extends AnyFunSuite {
           ("b.wav", 2, 900L, "0123456789abcdee"))
           .toDF("name", "channels", "n_samples", "ehash_hex")),
         Stores.tombstone(_, Seq("a.wav").toDF("name"), "name"),
-        p => rows(Stores.live(spark, p, "name"))))
+        p => rows(Stores.live(spark, p, "name"))),
+      // counts carry no sidecar: a base plus two appended batches merge
+      ("dsir model", p => (0 until 3).foreach(i => Indexes.appendDsirModelStore(
+          docs.where(col("doc_id") % 3 === i), col("doc_id") % 2 === 0, p, buckets = 64)),
+        _ => (), p => rows(Indexes.readDsirModelCounts(spark, p, buckets = 64))))
+    // per layout, per compacted table: (subdir, one file per leaf dir, the
+    // sort order of each file's rows). A write partitioned on a column
+    // that varies re-sorts its rows by the partition columns and drops the
+    // layout's within-file sort, so file order is asserted on the tables
+    // without such dirs (the batch_id=0 fold is a constant).
+    def flat(sort: String*) = Seq(("", false, sort))
+    val dirs = Seq(("", true, Nil))
+    val layouts: Map[String, Seq[(String, Boolean, Seq[String])]] = Map(
+      "lsh bucketed" -> dirs, "lsh flat" -> flat("t", "key"),
+      "lsh streaming" -> flat("t", "key"), "ivf cell" -> dirs,
+      "ivf-pq cell" -> dirs, "pq codes" -> flat("vec_id"),
+      "knn graph" -> flat("vec_a", "vec_b"),
+      "minhash" -> Seq(("sets", false, Seq("doc_id")), ("bands", false, Seq("band", "key"))),
+      "inverted" -> Seq(("postings", true, Nil)), "fuzzy terms" -> dirs,
+      "positioned windows serving" -> dirs, "positioned windows streaming" -> dirs,
+      "positioned windows report" -> flat(), "simhash" -> flat("doc_id"),
+      "shingle sets" -> flat("doc_id"), "window hashes" -> flat("doc_id", "pos"),
+      "image hashes" -> flat("name"), "audio hashes" -> flat("name"),
+      "dsir model" -> dirs)
+    def leafFiles(p: String): Map[java.io.File, Seq[java.io.File]] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles.toSeq.flatMap(walk)
+        else if (f.getName.endsWith(".parquet")) Seq(f) else Nil
+      walk(new java.io.File(p)).groupBy(_.getParentFile)
+    }
+    def ordered(file: java.io.File, sort: Seq[String]): Boolean = {
+      val keys = spark.read.parquet(file.getPath).select(sort.map(col): _*).collect()
+        .map(r => sort.indices.map(i => (r.get(i) match {
+          case s: String => org.apache.spark.unsafe.types.UTF8String.fromString(s)
+          case v => v
+        }).asInstanceOf[Comparable[Any]]))
+      keys.toSeq.sliding(2).forall {
+        case Seq(a, b) => a.zip(b).map { case (x, y) => x.compareTo(y) }
+          .find(_ != 0).forall(_ < 0)
+        case _ => true
+      }
+    }
     table.foreach { case (layout, build, delete, read) =>
       val src = tmp("src")
       build(src)
@@ -1392,6 +1433,25 @@ class IndexesSpec extends AnyFunSuite {
       assert(d.compacted && d.dest === Some(dest), s"$layout: $d")
       assert(read(dest) === want,
         s"$layout: the compacted generation must read the folded source rows")
+      layouts(layout).foreach { case (sub, oneFile, sort) =>
+        val files = leafFiles(if (sub.isEmpty) dest else s"$dest/$sub")
+        assert(files.nonEmpty, s"$layout $sub: no files")
+        if (oneFile) files.foreach { case (dir, fs) =>
+          assert(fs.size === 1, s"$layout: $dir must hold exactly one file")
+        }
+        if (sort.nonEmpty) files.values.flatten.foreach(f =>
+          assert(ordered(f, sort), s"$layout: $f must be sorted by $sort"))
+      }
     }
+  }
+
+  test("compact: an unrecognised layout throws, names its columns, writes nothing") {
+    val src = Files.createTempDirectory("compact_unknown").toString + "/idx"
+    Seq((1L, "x")).toDF("id", "payload").write.parquet(src)
+    val parent = Files.createTempDirectory("compact_unknown_dst").toFile
+    val dest = s"$parent/idx"
+    val e = intercept[IllegalArgumentException](Indexes.compact(spark, src, dest))
+    assert(e.getMessage.contains("id, payload"), e.getMessage)
+    assert(parent.list().isEmpty, "nothing may land at dest, nor a tmp dir beside it")
   }
 }

@@ -349,7 +349,7 @@ class SelectionSpec extends AnyFunSuite {
     // compaction folds the batch lineage into generation batch 0:
     // read-equivalent, layout kept, one file
     val p4 = s"$dir/model_c0"
-    graft.ops.Indexes.compactDsirModelStore(spark, p3, p4)
+    graft.ops.Indexes.compact(spark, p3, p4)
     assert(graft.ops.Indexes.readDsirModel(spark, p4).toSeq === full.toSeq)
     // reading a store at the wrong width fails LOUDLY, never folds
     // silently (the totals would be summed over the wider universe)

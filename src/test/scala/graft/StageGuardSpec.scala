@@ -13,7 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * filesystem lookups go through `graft.engine.Fs`; `graft.ops.Stores`
   * owns the store lifecycle without reaching back into the index
   * families; demo state is an ordinary store generation, never a
-  * marker-file protocol of its own. */
+  * marker-file protocol of its own. Patterns are matched against the
+  * file text with all whitespace removed, so a call split across lines
+  * (`FileSystem` then `.get(` on the next) is still seen. */
 class StageGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
 
@@ -38,9 +40,9 @@ class StageGuardSpec extends AnyFunSuite {
       .filter(_.toString.endsWith(".scala")).toSeq
     val hits = for {
       f <- files if !allowed(root.relativize(f).toString)
-      (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
-      p <- patterns if line.contains(p)
-    } yield s"$f:${n + 1}: $p"
+      text = Files.readString(f).replaceAll("\\s", "")
+      p <- patterns if text.contains(p)
+    } yield s"$f: $p"
     assert(files.nonEmpty)
     assert(hits.isEmpty, hits.mkString(s"$name:\n", "\n", ""))
   }

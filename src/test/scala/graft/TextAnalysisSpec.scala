@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.TextAnalysis
+import graft.ops.{Indexes, TextAnalysis}
 
 class TextAnalysisSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
@@ -157,7 +157,7 @@ class TextAnalysisSpec extends AnyFunSuite {
     // compaction folds the batch partitions; probes identical, lineage gone
     val compacted = java.nio.file.Files.createTempDirectory("inv_compact")
       .toString + "/idx"
-    TextAnalysis.compactInvertedIndex(spark, grown, compacted)
+    Indexes.compact(spark, grown, compacted)
     // ONE unified layout: everything folds into generation batch 0, so a
     // compacted store keeps accepting streaming appends
     val gens = spark.read.parquet(s"$compacted/postings")
@@ -203,7 +203,7 @@ class TextAnalysisSpec extends AnyFunSuite {
     // probe unchanged
     val compacted = java.nio.file.Files.createTempDirectory("inv_del_c")
       .toString + "/idx"
-    TextAnalysis.compactInvertedIndex(spark, base, compacted)
+    Indexes.compact(spark, base, compacted)
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$compacted.tombstones")))
     val delIds = del.as[Long].collect().toSet
