@@ -102,32 +102,28 @@ object Bench {
     try new ProcessBuilder("sync").inheritIO().start().waitFor()
     catch { case _: java.io.IOException => () } // no /bin/sync: skip
 
-  /** Per-iteration OS counters — minor faults, disk write sectors + io-wait.
-    * The round-8 instrumentation that named the r7 growth; ALWAYS on since
-    * round 10 (VERDICT r9 #1: the counters that adjudicate iteration spread
-    * must live in the committed artifact, not behind a debug flag). A few
-    * sub-millisecond /proc reads per iteration — negligible vs the timed run.
-    * SPARK_GRAFT_BENCH_DEBUG=1 additionally prints them per-iteration.
+  /** Per-iteration OS counters — minor faults and disk io-wait, always
+    * recorded in the artifact (the counters that adjudicate iteration
+    * spread live there, not behind a debug flag). A few sub-millisecond
+    * /proc reads per iteration — negligible vs the timed run.
     *
-    * AVAILABILITY IS EXPLICIT (round 11, ADVICE r10): every reader returns
+    * AVAILABILITY IS EXPLICIT: every reader returns
     * -1 when its /proc//sys source cannot be read, and a one-time startup
     * probe is recorded as `counters_available` in the artifact — so "this
     * host genuinely had zero steal/io-wait" and "the counter source does not
     * exist here" are distinguishable in the committed JSON instead of both
     * rendering as 0. */
-  private val benchDebug = sys.env.get("SPARK_GRAFT_BENCH_DEBUG").contains("1")
   private def readFile(p: String): String =
     new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)))
   private def minorFaults(): Long = try {
     val stat = readFile("/proc/self/stat")
     stat.substring(stat.lastIndexOf(')') + 2).split(" ")(7).toLong
   } catch { case _: Throwable => -1L }
-  /** (io_wait_ms, write_sectors) for the root block device; (-1,-1) when
-    * unavailable (non-vda hosts, containers without /sys). */
-  private def diskSnap(): (Long, Long) = try {
-    val f = readFile("/sys/block/vda/stat").trim.split("\\s+")
-    (f(6).toLong, f(3).toLong + f(7).toLong)
-  } catch { case _: Throwable => (-1L, -1L) }
+  /** io_wait_ms for the root block device; -1 when unavailable (non-vda
+    * hosts, containers without /sys). */
+  private def diskIoWaitMs(): Long = try {
+    readFile("/sys/block/vda/stat").trim.split("\\s+")(6).toLong
+  } catch { case _: Throwable => -1L }
 
   private def gcMillis(): Long = {
     import scala.jdk.CollectionConverters._
@@ -249,7 +245,7 @@ object Bench {
     val countersAvailable = Map(
       "minor_faults" -> (minorFaults() >= 0),
       "steal_ms"     -> (stealMillis() >= 0),
-      "io_wait_ms"   -> (diskSnap()._1 >= 0),
+      "io_wait_ms"   -> (diskIoWaitMs() >= 0),
       "cpu_ms"       -> (procCpuMs() >= 0),
       "runq_ms"      -> (runqMs() >= 0))
     countersAvailable.collect { case (k, false) => k }.toList.sorted match {
@@ -332,7 +328,7 @@ object Bench {
           // pays only for ITS OWN writes and pays them here, untimed.
           syncFs()
           val mf0 = minorFaults()
-          val dsk0 = diskSnap()
+          val io0 = diskIoWaitMs()
           val st0 = stealMillis()
           val cpu0 = procCpuMs()
           val rq0 = runqMs()
@@ -343,19 +339,12 @@ object Bench {
           fn(spark, sfDir).count()
           val sec = (System.nanoTime() - t0) / 1e9
           val mf1 = minorFaults()
-          val dsk1 = diskSnap()
+          val io1 = diskIoWaitMs()
           val jit1 = java.lang.management.ManagementFactory.getCompilationMXBean.getTotalCompilationTime
           val cg1 = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-          val it = Iter(sec, gcMillis() - g0, delta(st0, stealMillis()),
-            jit1 - jit0, cg1 - cg0, delta(mf0, mf1), delta(dsk0._1, dsk1._1),
+          Iter(sec, gcMillis() - g0, delta(st0, stealMillis()),
+            jit1 - jit0, cg1 - cg0, delta(mf0, mf1), delta(io0, io1),
             delta(cpu0, procCpuMs()), delta(rq0, runqMs()))
-          if (benchDebug)
-            System.err.println(f"[bench-debug] $name $sec%8.3f s minflt=${it.minorFaults}%9d " +
-              f"stealMs=${it.stealMs}%8d ioWaitMs=${it.ioWaitMs}%8d " +
-              f"cpuMs=${it.cpuMs}%8d runqMs=${it.runqMs}%8d " +
-              f"wrMb=${delta(dsk0._2, dsk1._2) >> 11}%6d heapMb=${Runtime.getRuntime.totalMemory() >> 20}%6d " +
-              f"jitMs=${it.jitMs}%7d janinoCompiles=${it.janino}%4d")
-          it
         }
         val wanted = itersFor(name)
         val buf = scala.collection.mutable.Buffer.empty[Iter]
@@ -363,9 +352,6 @@ object Bench {
             buf.size < wanted + maxStealReruns)
           buf += runOnce()
         val iters = buf.toSeq
-        if (benchDebug && iters.size > wanted)
-          System.err.println(s"[bench-debug] $name: " +
-            s"${iters.size - wanted} steal re-run(s)")
         (name, iters.map(_.sec).min, colds(name), iters)
       }
     def jMap[T](f: ((String, Double, Double, Seq[Iter])) => T) =

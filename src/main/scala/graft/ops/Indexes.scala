@@ -141,6 +141,43 @@ object Indexes {
         s"query vec_id=$queryId not found in the embeddings corpus"))
       .getSeq[Float](0).toArray
 
+  /** The exact re-rank every single-query ANN probe ends with: `rows`
+    * (embedding rows already cut to the candidates) score against the
+    * broadcast query row with the shared [[Similarity.cosRound]] at the
+    * ANN family's output scale 4, then the bounded (cos desc, vec_id)
+    * top-k. */
+  private def exactTopK(emb: DataFrame, rows: DataFrame, queryId: Long,
+                        k: Int): DataFrame = {
+    val q = emb.where(col("vec_id") === queryId)
+      .select(col("embedding").as("qv"))
+    rows.join(broadcast(q))
+      .select(col("vec_id"),
+        Similarity.cosRound(col("embedding"), col("qv"), 4).as("cos"))
+      .orderBy(col("cos").desc, col("vec_id").asc)
+      .limit(k)
+  }
+
+  /** [[exactTopK]]'s batch form: `rows` (embedding rows joined to their
+    * (query_id, vec_id) candidates) score against the broadcast query
+    * frame `q` (query_id, qv, …), and the per-query cut is the
+    * bounded-heap [[graft.plans.GroupedTopK]]. */
+  private def exactTopKBatch(rows: DataFrame, q: DataFrame, k: Int): DataFrame =
+    graft.plans.GroupedTopK.topK(
+      rows.join(broadcast(q), Seq("query_id"))
+        .select(col("query_id"), col("vec_id"),
+          Similarity.cosRound(col("embedding"), col("qv"), 4).as("cos")),
+      Seq("query_id"), Seq("cos" -> true, "vec_id" -> false), k)
+
+  /** The filtered-search cut: keep the rows whose vec_id is in the
+    * caller's `eligible` frame (a metadata predicate's allowed ids), as a
+    * semi-join BEFORE the exact re-rank, so the top-k ranks only
+    * predicate-satisfying vectors — exact filtering, not post-filtering
+    * with over-fetch (which can return < k rows). None = no filter, the
+    * plan is the unfiltered one. */
+  private def keepEligible(df: DataFrame, eligible: Option[DataFrame]): DataFrame =
+    eligible.fold(df)(e =>
+      df.join(e.select(col("vec_id")), Seq("vec_id"), "left_semi"))
+
   /** Driver-side memo for tiny committed MODELS (IVF centroid tables, PQ
     * codebooks) keyed by content fingerprint PLUS the frame's canonicalized
     * logical plan: the fingerprint alone would alias a filtered/projected
@@ -534,38 +571,43 @@ object Indexes {
     * twice, so Catalyst's plan TREE doubles per hop — 2ʰ subplan copies
     * had analysis alone hanging at hops = 10.) The collects are bounded
     * loudly at [[MaxBatchProbeRows]] ids; eager-execution contract as
-    * [[lshTopKBatch]]: construction runs `hops` tiny Spark jobs. */
+    * [[lshTopKBatch]]: construction runs `hops` tiny Spark jobs.
+    *
+    * FILTERED serving: `eligible` (the allowed vec_ids, the
+    * [[keepEligible]] convention) restricts the answer to a metadata
+    * predicate. The navigation stays UNFILTERED by design: routing
+    * through ineligible nodes preserves graph connectivity (the standard
+    * filtered-graph-ANN semantics — a selective predicate would otherwise
+    * shatter the traversal into islands and collapse recall); the
+    * predicate applies at the exact re-rank, where the visited set meets
+    * the metadata. Recall under selective filters is bounded by
+    * |eligible ∩ visited| — raise nProbe/hops with filter selectivity
+    * (measured in GraphAnnRecallSpec's filtered case). */
   def annGraphSearch(emb: DataFrame, centroids: DataFrame,
                      ivfIndexPath: String, graphPath: String,
                      queryId: Long, k: Int, nProbe: Int,
-                     hops: Int): DataFrame =
+                     hops: Int, eligible: Option[DataFrame] = None): DataFrame =
     graphRerank(emb,
       graphVisitedSet(emb, centroids, ivfIndexPath, graphPath, queryId,
         nProbe, hops),
-      queryId, k, eligible = None)
+      queryId, k, eligible)
 
-  /** FILTERED graph-ANN serving — [[annGraphSearch]] under a metadata
-    * predicate (`eligible`: the allowed vec_ids, the
-    * [[ivfTopKFilteredIndexed]] convention), completing the serving
-    * matrix under {bucket, graph} × {plain, batch, beam, filtered}.
-    * The navigation is UNFILTERED by design: routing through ineligible
-    * nodes preserves graph connectivity (the standard filtered-graph-ANN
-    * semantics — a selective predicate would otherwise shatter the
-    * traversal into islands and collapse recall); the predicate applies
-    * at the exact re-rank, where the visited set meets the metadata.
-    * Same frontier bound; recall under selective filters is bounded by
-    * |eligible ∩ visited| — production raises nProbe/hops with filter
-    * selectivity (stated, measured in GraphAnnRecallSpec's filtered
-    * case rather than assumed). */
-  def annGraphSearchFiltered(emb: DataFrame, centroids: DataFrame,
-                             ivfIndexPath: String, graphPath: String,
-                             eligible: DataFrame,
-                             queryId: Long, k: Int, nProbe: Int,
-                             hops: Int): DataFrame =
-    graphRerank(emb,
-      graphVisitedSet(emb, centroids, ivfIndexPath, graphPath, queryId,
-        nProbe, hops),
-      queryId, k, eligible = Some(eligible))
+  /** The entry lookup both single-query graph walks start from: the
+    * probed IVF cells' minimum vec_ids, plus the tombstoned ids every hop
+    * folds out. */
+  private def graphEntries(emb: DataFrame, centroids: DataFrame,
+                           ivfIndexPath: String, queryId: Long,
+                           nProbe: Int): (Set[Long], Set[Long]) = {
+    val spark = emb.sparkSession
+    import spark.implicits._
+    val probes = rankProbes(queryVector(emb, queryId), centroids, nProbe)
+    val dead = tombstonedIds(spark, ivfIndexPath)
+    val entries = readLshIndex(spark, ivfIndexPath)
+      .where(col("cell").isin(probes: _*))
+      .groupBy(col("cell")).agg(min(col("vec_id")).as("vec_id"))
+      .select(col("vec_id")).as[Long].collect().toSet
+    (entries, dead)
+  }
 
   /** The shared frontier navigation of the unbounded graph family:
     * entries = min-id per probed IVF cell, `hops` rounds of pushed-down
@@ -577,13 +619,8 @@ object Indexes {
                               hops: Int): Set[Long] = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val qv = queryVector(emb, queryId)
-    val probes = rankProbes(qv, centroids, nProbe)
-    val dead = tombstonedIds(spark, ivfIndexPath)
-    val entries = readLshIndex(spark, ivfIndexPath)
-      .where(col("cell").isin(probes: _*))
-      .groupBy(col("cell")).agg(min(col("vec_id")).as("vec_id"))
-      .select(col("vec_id")).as[Long].collect().toSet
+    val (entries, dead) =
+      graphEntries(emb, centroids, ivfIndexPath, queryId, nProbe)
     val graph = graft.engine.Tables.parquetCached(spark, graphPath)
       .select(col("vec_a"), col("vec_b"))
     var visited = entries
@@ -603,24 +640,13 @@ object Indexes {
     visited
   }
 
-  /** The shared exact re-rank: visited ids point-fetched (literal IN —
-    * the plan-audited no-corpus-scan shape), optional eligibility
-    * semi-join, cosine at the ANN family's output scale 4, bounded
-    * top-k. */
+  /** The graph family's final cut: visited ids point-fetched (literal IN
+    * — the plan-audited no-corpus-scan shape), optional eligibility
+    * semi-join, then the shared [[exactTopK]]. */
   private def graphRerank(emb: DataFrame, visited: Set[Long], queryId: Long,
-                          k: Int, eligible: Option[DataFrame]): DataFrame = {
-    val q = emb.where(col("vec_id") === queryId)
-      .select(col("embedding").as("qv"))
-    val base = emb.where(col("vec_id").isin(visited.toSeq: _*))
-      .where(col("vec_id") =!= queryId)
-    eligible.fold(base)(e =>
-        base.join(e.select(col("vec_id")), Seq("vec_id"), "left_semi"))
-      .join(broadcast(q))
-      .select(col("vec_id"),
-        Similarity.cosRound(col("embedding"), col("qv"), 4).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-      .limit(k)
-  }
+                          k: Int, eligible: Option[DataFrame]): DataFrame =
+    exactTopK(emb, keepEligible(emb.where(col("vec_id").isin(visited.toSeq: _*))
+      .where(col("vec_id") =!= queryId), eligible), queryId, k)
 
   /** BEAM-limited graph-ANN serving — [[annGraphSearch]] with the
     * best-first cost bound every production graph-ANN system carries
@@ -647,9 +673,8 @@ object Indexes {
                          hops: Int, beamWidth: Int): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val qv = queryVector(emb, queryId)
-    val probes = rankProbes(qv, centroids, nProbe)
-    val dead = tombstonedIds(spark, ivfIndexPath)
+    val (entries, dead) =
+      graphEntries(emb, centroids, ivfIndexPath, queryId, nProbe)
     val q = emb.where(col("vec_id") === queryId)
       .select(col("embedding").as("qv"))
     def score(ids: Set[Long]): Map[Long, Double] =
@@ -660,18 +685,14 @@ object Indexes {
           Similarity.cosRound(col("embedding"), col("qv"), 6).as("c"))
         .where(col("c").isNotNull) // zero-norm rows can't hold a beam slot
         .as[(Long, Double)].collect().toMap
-    val entries = readLshIndex(spark, ivfIndexPath)
-      .where(col("cell").isin(probes: _*))
-      .groupBy(col("cell")).agg(min(col("vec_id")).as("vec_id"))
-      .select(col("vec_id")).as[Long].collect().toSet
     val graph = graft.engine.Tables.parquetCached(spark, graphPath)
       .select(col("vec_a"), col("vec_b"))
     // visited (seen) and scored are tracked SEPARATELY: a zero-norm
     // neighbour scores null and never enters `scored`, and deduping
     // fresh ids against scored alone would re-fetch it every hop —
     // defeating early termination with a redundant job per remaining
-    // hop (review catch). It still counts as visited, so the final
-    // re-rank ranks it last (null), identical to the BFS variant.
+    // hop. It still counts as visited, so the final re-rank ranks it
+    // last (null), identical to the BFS variant.
     var seen: Set[Long] = entries
     var scored: Map[Long, Double] = score(entries)
     def beam: Seq[Long] = scored.toSeq
@@ -689,13 +710,7 @@ object Indexes {
       require(seen.size <= MaxBatchProbeRows,
         s"beam search visited more than MaxBatchProbeRows ids at hop $h")
     }
-    emb.where(col("vec_id").isin(seen.toSeq: _*))
-      .where(col("vec_id") =!= queryId)
-      .join(broadcast(q))
-      .select(col("vec_id"),
-        Similarity.cosRound(col("embedding"), col("qv"), 4).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-      .limit(k)
+    graphRerank(emb, seen, queryId, k, eligible = None)
   }
 
   /** BATCHED graph-ANN serving — [[annGraphSearch]]'s many-queries twin,
@@ -722,7 +737,7 @@ object Indexes {
     import spark.implicits._
     // take(N+1), not collect(): the bound trips BEFORE an unbounded
     // driver transfer of embedding-carrying rows (the lshTopKBatch
-    // pattern; review catch — a collect() here OOMs before the require)
+    // pattern — a collect() here OOMs before the require)
     val qs: Seq[(Long, Array[Float])] = queries
       .select(col("query_id"), col("embedding"))
       .as[(Long, Seq[Float])].take(MaxBatchProbeRows + 1)
@@ -764,15 +779,9 @@ object Indexes {
       .flatMap { case (qid, v) => v.toSeq.map(qid -> _) }
       .toDF("query_id", "vec_id")
     val unionIds = visited.valuesIterator.flatten.toSet
-    val qEmb = qs.toDF("query_id", "qv")
-    val scored = emb.where(col("vec_id").isin(unionIds.toSeq: _*))
+    exactTopKBatch(emb.where(col("vec_id").isin(unionIds.toSeq: _*))
       .join(broadcast(cand), Seq("vec_id"))
-      .where(col("vec_id") =!= col("query_id"))
-      .join(broadcast(qEmb), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        Similarity.cosRound(col("embedding"), col("qv"), 4).as("cos"))
-    graft.plans.GroupedTopK.topK(scored, Seq("query_id"),
-      Seq("cos" -> true, "vec_id" -> false), k)
+      .where(col("vec_id") =!= col("query_id")), qs.toDF("query_id", "qv"), k)
   }
 
   /** Read a vector-index generation with its `vec_id` delete sidecar
@@ -1268,21 +1277,32 @@ object Indexes {
     * for (a) one point lookup of the query vector (min/max pushdown on
     * vec_id) and (b) the exact re-rank of candidates only.
     *
-    * The `lTables` probed (t, pkey, key) triples become literal filters,
-    * so the index scan partition-prunes statically on (t, pkey) and
+    * The probed (t, pkey, key) triples become literal filters, so the
+    * index scan partition-prunes statically on (t, pkey) and
     * footer-stat-prunes on the key-sorted data column — `.explain` shows
     * the pruned `PartitionFilters` plus the pushed key filter, and
     * IndexesSpec machine-asserts both the pruning and the absence of any
     * bucketing pass (no Generate/explode, no plane dots over the
-    * corpus). */
+    * corpus).
+    *
+    * MULTI-PROBE: each table contributes its base bucket PLUS the
+    * `nFlips` smallest-margin 1-bit-flip buckets ([[multiProbeKeysLocal]];
+    * `nFlips = 0` probes the base bucket alone). The probed set is a
+    * strict superset of the single-probe set, so candidates — and
+    * therefore recall — are monotonically ≥ the single-probe result
+    * (IndexesSpec asserts both the superset and the measured uplift).
+    * Scale shape is unchanged: the (1+nFlips)·lTables triples are still
+    * literals, and candidate volume grows by ≤ (1+nFlips)× of one
+    * bucket's expected occupancy. */
   def lshTopKIndexed(emb: DataFrame, indexPath: String, queryId: Long, k: Int,
                      bBits: Int = 4, lTables: Int = 16, dim: Int = 64,
-                     seed: Long = 42L): DataFrame = {
+                     seed: Long = 42L, nFlips: Int = 0): DataFrame = {
     val spark = emb.sparkSession
     val ps = Similarity.planes(bBits * lTables, dim, seed)
     val qv = queryVector(emb, queryId)
-    val qKeys: Seq[(Int, Long)] = (0 until lTables).map { t =>
-      t -> bucketKeyLocal(qv, ps.slice(t * bBits, (t + 1) * bBits))
+    val qKeys: Seq[(Int, Long)] = (0 until lTables).flatMap { t =>
+      multiProbeKeysLocal(qv, ps.slice(t * bBits, (t + 1) * bBits), nFlips)
+        .map(t -> _)
     }
     val shift = bBits - math.min(bBits, PartDirBits)
     val probe = qKeys.map { case (t, key) =>
@@ -1292,14 +1312,7 @@ object Indexes {
       .where(probe)
       .where(col("vec_id") =!= queryId)
       .select(col("vec_id")).distinct()
-    val q = emb.where(col("vec_id") === queryId)
-      .select(col("embedding").as("qv"))
-    emb.join(candIds, Seq("vec_id"), "left_semi")
-      .join(broadcast(q))
-      .select(col("vec_id"),
-        Similarity.cosRound(col("embedding"), col("qv"), 4).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-      .limit(k)
+    exactTopK(emb, emb.join(candIds, Seq("vec_id"), "left_semi"), queryId, k)
   }
 
   /** Multi-probe perturbation keys for ONE table's plane slice: the base
@@ -1310,7 +1323,8 @@ object Indexes {
     * neighbour most likely fell into. Recall rises toward what ~(1+nFlips)·L
     * tables would give at ZERO extra index cost — the probe list grows,
     * the stored index does not. Ties on |margin| break by plane position
-    * (deterministic, replayed by the oracle's row_number). */
+    * (deterministic, replayed by the oracle's row_number). The base key
+    * equals [[bucketKeyLocal]]'s (IndexesSpec asserts it). */
   def multiProbeKeysLocal(v: Array[Float], ps: Seq[Array[Double]],
                           nFlips: Int): Seq[Long] = {
     require(nFlips >= 0 && nFlips <= ps.size,
@@ -1327,45 +1341,6 @@ object Indexes {
     val flips = dots.zipWithIndex
       .sortBy { case (d, j) => (math.abs(d), j) }.take(nFlips).map(_._2)
     base +: flips.map(j => base ^ (1L << j))
-  }
-
-  /** [[lshTopKIndexed]] with multi-probe expansion: each table contributes
-    * its base bucket PLUS the `nFlips` smallest-margin 1-bit-flip buckets
-    * ([[multiProbeKeysLocal]]). The probed set is a strict superset of the
-    * single-probe set, so candidates — and therefore recall — are
-    * monotonically ≥ the single-probe result (IndexesSpec asserts both the
-    * superset and the measured uplift). Scale shape is unchanged: the
-    * (1+nFlips)·lTables triples are still literals, the scan still prunes
-    * statically on (t, pkey) and footer-prunes on the sorted key column —
-    * candidate volume grows by ≤ (1+nFlips)× of one bucket's expected
-    * occupancy, corpus fraction unchanged. */
-  def lshTopKMultiProbe(emb: DataFrame, indexPath: String, queryId: Long,
-                        k: Int, nFlips: Int = 2, bBits: Int = 4,
-                        lTables: Int = 16, dim: Int = 64,
-                        seed: Long = 42L): DataFrame = {
-    val spark = emb.sparkSession
-    val ps = Similarity.planes(bBits * lTables, dim, seed)
-    val qv = queryVector(emb, queryId)
-    val qKeys: Seq[(Int, Long)] = (0 until lTables).flatMap { t =>
-      multiProbeKeysLocal(qv, ps.slice(t * bBits, (t + 1) * bBits), nFlips)
-        .map(t -> _)
-    }
-    val shift = bBits - math.min(bBits, PartDirBits)
-    val probe = qKeys.map { case (t, key) =>
-      col("t") === t && col("pkey") === (key >> shift) && col("key") === key
-    }.reduce(_ || _)
-    val candIds = readLshIndex(spark, indexPath)
-      .where(probe)
-      .where(col("vec_id") =!= queryId)
-      .select(col("vec_id")).distinct()
-    val q = emb.where(col("vec_id") === queryId)
-      .select(col("embedding").as("qv"))
-    emb.join(candIds, Seq("vec_id"), "left_semi")
-      .join(broadcast(q))
-      .select(col("vec_id"),
-        Similarity.cosRound(col("embedding"), col("qv"), 4).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-      .limit(k)
   }
 
   /** Build-if-missing convenience for the registered query path: the first
@@ -1400,7 +1375,7 @@ object Indexes {
     * probe side is a FRAME of (query_id, embedding) rows, not one driver
     * round-trip per query.
     *
-    * EAGER-EXECUTION CONTRACT (ADVICE r11, promoted from an inline note):
+    * EAGER-EXECUTION CONTRACT:
     * calling this method runs a Spark job — the query frame is bucketed
     * and collected to the driver AT CONSTRUCTION TIME, and the returned
     * DataFrame bakes those keys in as literals. Consequences a caller
@@ -1483,49 +1458,30 @@ object Indexes {
       .join(broadcast(qKeys), Seq("t", "pkey", "key"))
       .where(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id")).distinct()
-    val q = queries.select(col("query_id"), col("embedding").as("qv"))
-    val rescored = emb.join(cand, Seq("vec_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        Similarity.cosRound(col("embedding"), col("qv"), 4).as("cos"))
-    graft.plans.GroupedTopK.topK(rescored, Seq("query_id"),
-      Seq("cos" -> true, "vec_id" -> false), k)
+    exactTopKBatch(emb.join(cand, Seq("vec_id")),
+      queries.select(col("query_id"), col("embedding").as("qv")), k)
   }
 
   /** Batched IVF ANN over the stored inverted lists — the [[ivfTopKBatch]]
-    * twin of [[lshTopKBatch]]: per-query cell ranking happens as a tiny
-    * |queries|·|cells| broadcast join reduced by the bounded-heap top-k
-    * operator (no driver centroid math per query), the probed (query_id,
-    * cell) pairs broadcast against the cell-partitioned index, and the
-    * exact re-rank + per-query cut mirror the LSH batch path. Per query
-    * the output is row-identical to [[ivfTopKIndexed]] (IndexesSpec). */
+    * twin of [[lshTopKBatch]]: per-query cell ranking happens in-plan
+    * ([[rankCellsPerQuery]], no driver centroid math per query), the
+    * probed (query_id, cell) pairs broadcast against the cell-partitioned
+    * index, and the exact re-rank + per-query cut mirror the LSH batch
+    * path. `eligible` is [[ivfTopKIndexed]]'s filter: one predicate for
+    * every query, cut before the per-query re-rank. Per query the output
+    * is row-identical to [[ivfTopKIndexed]] (IndexesSpec). */
   def ivfTopKBatch(emb: DataFrame, centroids: DataFrame, indexPath: String,
-                   queries: DataFrame, k: Int, nProbe: Int): DataFrame = {
+                   queries: DataFrame, k: Int, nProbe: Int,
+                   eligible: Option[DataFrame] = None): DataFrame = {
     val spark = emb.sparkSession
     val q = queries.select(col("query_id"), col("embedding").as("qv"),
       Similarity.norm(col("embedding")).as("qn"))
-    val cent = centroids.select(col("cell").cast("int").as("cell"),
-      col("centroid").as("cv"), Similarity.norm(col("centroid")).as("cn"))
-    val cellScores = q.join(broadcast(cent))
-      .select(col("query_id"), col("cell"),
-        (graft.functions.DotProduct.dot(col("qv"), col("cv")) /
-          (col("qn") * col("cn"))).as("ccos"))
-    // NaN parity with the inline/indexed paths: desc ordering sorts NaN
-    // first on both the heap comparator and Spark's orderBy.
-    val probes = graft.plans.GroupedTopK.topK(cellScores, Seq("query_id"),
-        Seq("ccos" -> true, "cell" -> false), nProbe)
-      .select(col("query_id"), col("cell"))
-    val cand = readLshIndex(spark, indexPath)
+    val cand = keepEligible(readLshIndex(spark, indexPath)
       .withColumn("cell", col("cell").cast("int"))
-      .join(broadcast(probes), Seq("cell"))
-      .where(col("vec_id") =!= col("query_id"))
+      .join(broadcast(rankCellsPerQuery(q, centroids, nProbe)), Seq("cell"))
+      .where(col("vec_id") =!= col("query_id")), eligible)
       .select(col("query_id"), col("vec_id"))
-    val rescored = emb.join(cand, Seq("vec_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        Similarity.cosRound(col("embedding"), col("qv"), 4).as("cos"))
-    graft.plans.GroupedTopK.topK(rescored, Seq("query_id"),
-      Seq("cos" -> true, "vec_id" -> false), k)
+    exactTopKBatch(emb.join(cand, Seq("vec_id")), q, k)
   }
 
   /** All-pairs embedding near-dups served from a prebuilt banded-LSH index
@@ -1587,63 +1543,77 @@ object Indexes {
   private def collectCodebooks(codebooks: DataFrame): Map[Int, Array[Array[Double]]] =
     memoModel(codebooks, "pq")(Similarity.collectCodebooks(codebooks))
 
-  /** ADC estimate column over stored code columns c0..c{nSub-1}: the query's
-    * per-subspace dot tables are computed on the DRIVER (same left-to-right
-    * IEEE fold as the codegen'd dot product — the [[bucketKeyLocal]]
-    * precedent) and embedded as literal arrays indexed by each row's code;
-    * the per-subspace terms add LEFT-ASSOCIATED in ascending subspace order,
-    * matching the oracle's explicit `t0+t1+...` chain bit-for-bit (an
-    * unordered SUM would be IEEE-nondeterministic and break the candidate
-    * cut's hash parity). */
-  private def adcEstimate(qv: Array[Float], cbs: Map[Int, Array[Array[Double]]],
-                          nSub: Int, subDim: Int): org.apache.spark.sql.Column = {
+  /** The single-query ADC candidate cut over stored code columns
+    * c0..c{nSub-1}: the query's per-subspace dot tables are computed on
+    * the DRIVER (same left-to-right IEEE fold as the codegen'd dot product
+    * — the [[bucketKeyLocal]] precedent) and embedded as literal arrays
+    * indexed by each row's code; the per-subspace terms add
+    * LEFT-ASSOCIATED in ascending subspace order, matching the oracle's
+    * explicit `t0+t1+...` chain bit-for-bit (an unordered SUM would be
+    * IEEE-nondeterministic and break the cut's hash parity). Keeps the
+    * top-`rerank` (est desc, vec_id) ids of `rows`, the query excluded. */
+  private def adcCandidates(rows: DataFrame, qv: Array[Float],
+                            cbs: Map[Int, Array[Array[Double]]], nSub: Int,
+                            dim: Int, queryId: Long, rerank: Int): DataFrame = {
+    val subDim = dim / nSub
     def dotLocal(off: Int, c: Array[Double]): Double = {
       var s = 0.0; var i = 0
       while (i < subDim) { s += qv(off + i).toDouble * c(i); i += 1 }
       s
     }
-    (0 until nSub).map { m =>
+    val est = (0 until nSub).map { m =>
       val table = cbs(m).map(c => dotLocal(m * subDim, c)).toSeq
       element_at(typedlit(table), col(s"c$m") + 1)
     }.reduceLeft(_ + _)
+    rows.where(col("vec_id") =!= queryId)
+      .select(col("vec_id"), est.as("est"))
+      .orderBy(col("est").desc, col("vec_id").asc)
+      .limit(rerank)
+      .select(col("vec_id"))
+  }
+
+  /** The batch ADC step: each query row's per-subspace dot tables as
+    * array columns qt0..qt{nSub-1} over its `embedding`, computed
+    * EXECUTOR-side with the codegen'd left-to-right fold (bit-identical to
+    * [[adcCandidates]]' driver tables), and the estimate column over the
+    * stored codes — the same ascending-m left-associated adds. */
+  private def adcTables(cbs: Map[Int, Array[Array[Double]]], nSub: Int,
+                        dim: Int): (Seq[Column], Column) = {
+    val subDim = dim / nSub
+    val qTabs = (0 until nSub).map { m =>
+      array(cbs(m).toIndexedSeq.map(c =>
+        graft.functions.DotProduct.dot(
+          slice(col("embedding"), m * subDim + 1, subDim),
+          typedlit(c.toSeq))): _*).as(s"qt$m")
+    }
+    val est = (0 until nSub)
+      .map(m => element_at(col(s"qt$m"), col(s"c$m") + 1))
+      .reduceLeft(_ + _)
+    (qTabs, est)
   }
 
   /** PQ ADC top-k served from the stored code table — output-identical to
     * [[Similarity.pqTopK]]: the query's 128-entry dot table is computed on
-    * the DRIVER with the same left-to-right IEEE fold as the codegen'd
-    * expression (the [[bucketKeyLocal]] precedent), embedded as literals,
-    * so candidate scoring is 8 array lookups + 7 adds per corpus vector
-    * over a (vec_id, 8×int) scan — no raw-vector math until the exact
-    * re-rank of the `rerank` survivors. */
+    * the DRIVER ([[adcCandidates]]), embedded as literals, so candidate
+    * scoring is 8 array lookups + 7 adds per corpus vector over a
+    * (vec_id, 8×int) scan — no raw-vector math until the exact re-rank of
+    * the `rerank` survivors. */
   def pqTopKIndexed(emb: DataFrame, codebooks: DataFrame, indexPath: String,
                     queryId: Long, k: Int, rerank: Int = 100, nSub: Int = 8,
                     dim: Int = 64): DataFrame = {
     val spark = emb.sparkSession
     val cbs = collectCodebooks(codebooks)
     val qv = queryVector(emb, queryId)
-    val est = adcEstimate(qv, cbs, nSub, dim / nSub)
-    val cand = readLshIndex(spark, indexPath)
-      .where(col("vec_id") =!= queryId)
-      .select(col("vec_id"), est.as("est"))
-      .orderBy(col("est").desc, col("vec_id").asc)
-      .limit(rerank)
-      .select(col("vec_id"))
-    val q = emb.where(col("vec_id") === queryId)
-      .select(col("embedding").as("qv"))
-    emb.join(broadcast(cand), Seq("vec_id"), "left_semi")
-      .join(broadcast(q))
-      .select(col("vec_id"),
-        Similarity.cosRound(col("embedding"), col("qv"), 4).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-      .limit(k)
+    val cand = adcCandidates(readLshIndex(spark, indexPath), qv, cbs, nSub,
+      dim, queryId, rerank)
+    exactTopK(emb, emb.join(broadcast(cand), Seq("vec_id"), "left_semi"),
+      queryId, k)
   }
 
   /** Batched PQ ADC top-k over the stored code table — completes the batch
     * triad ([[lshTopKBatch]], [[ivfTopKBatch]]): each query row carries its
-    * 8×16 ADC dot tables as array columns, computed EXECUTOR-side with the
-    * same codegen'd left-to-right fold the driver-side single-query path
-    * uses (bit-identical — the [[bucketKeyLocal]] invariant), so scoring
-    * the whole batch is one broadcast of |queries|·128 doubles against ONE
+    * 8×16 ADC dot tables as array columns ([[adcTables]]), so scoring the
+    * whole batch is one broadcast of |queries|·128 doubles against ONE
     * scan of the (vec_id, 8×int) code table. Candidate cut and exact
     * re-rank are per-query bounded-heap passes. Per query the output is
     * row-identical to [[pqTopKIndexed]] (IndexesSpec asserts it). */
@@ -1651,21 +1621,9 @@ object Indexes {
                   queries: DataFrame, k: Int, rerank: Int = 100, nSub: Int = 8,
                   dim: Int = 64): DataFrame = {
     val spark = emb.sparkSession
-    val subDim = dim / nSub
-    val cbs = collectCodebooks(codebooks)
-    val qTabs = (0 until nSub).map { m =>
-      array(cbs(m).toIndexedSeq.map(c =>
-        graft.functions.DotProduct.dot(
-          slice(col("embedding"), m * subDim + 1, subDim),
-          typedlit(c.toSeq))): _*).as(s"qt$m")
-    }
+    val (qTabs, est) = adcTables(collectCodebooks(codebooks), nSub, dim)
     val q = queries.select(col("query_id") +: col("embedding").as("qv") +:
       qTabs: _*)
-    // ascending-m left-associated adds — the same deterministic chain as
-    // the single-query path and the oracle's explicit t0+...+t7
-    val est = (0 until nSub)
-      .map(m => element_at(col(s"qt$m"), col(s"c$m") + 1))
-      .reduceLeft(_ + _)
     val scored = readLshIndex(spark, indexPath)
       .join(broadcast(q.select(col("query_id") +:
         (0 until nSub).map(m => col(s"qt$m")): _*)))
@@ -1674,12 +1632,8 @@ object Indexes {
     val cand = graft.plans.GroupedTopK.topK(scored, Seq("query_id"),
         Seq("est" -> true, "vec_id" -> false), rerank)
       .select(col("query_id"), col("vec_id"))
-    val rescored = emb.join(cand, Seq("vec_id"))
-      .join(broadcast(q.select(col("query_id"), col("qv"))), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        Similarity.cosRound(col("embedding"), col("qv"), 4).as("cos"))
-    graft.plans.GroupedTopK.topK(rescored, Seq("query_id"),
-      Seq("cos" -> true, "vec_id" -> false), k)
+    exactTopKBatch(emb.join(cand, Seq("vec_id")),
+      q.select(col("query_id"), col("qv")), k)
   }
 
   // ---- text dedup indexes ---------------------------------------------------
@@ -2255,100 +2209,51 @@ object Indexes {
     }.take(nProbe).map(_._2)
   }
 
-  /** IVF ANN top-k served from prebuilt inverted lists — output-identical to
-    * [[Similarity.ivfTopK]] with the same centroids. The probe ranks cells
-    * on the DRIVER ([[rankProbes]]), turns the `nProbe` cell ids into
-    * literal filters (static partition pruning on the index), and
-    * exact-re-ranks only the probed cells' members. */
-  def ivfTopKIndexed(emb: DataFrame, centroids: DataFrame, indexPath: String,
-                     queryId: Long, k: Int, nProbe: Int): DataFrame = {
-    val spark = emb.sparkSession
-    val qv = queryVector(emb, queryId)
-    val probes = rankProbes(qv, centroids, nProbe)
-    val candIds = readLshIndex(spark, indexPath)
-      .where(col("cell").isin(probes: _*))
-      .where(col("vec_id") =!= queryId)
-      .select(col("vec_id"))
-    val q = emb.where(col("vec_id") === queryId)
-      .select(col("embedding").as("qv"))
-    emb.join(candIds, Seq("vec_id"), "left_semi")
-      .join(broadcast(q))
-      .select(col("vec_id"),
-        Similarity.cosRound(col("embedding"), col("qv"), 4).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-      .limit(k)
-  }
-
-  /** FILTERED ANN over the IVF inverted lists — vector search under a
-    * metadata predicate, the production "filtered search" shape (every
-    * vector store's hardest mode): candidates come from the statically
-    * pruned probe cells as in [[ivfTopKIndexed]], then PRE-FILTER against
-    * the caller's eligible-id frame BEFORE the exact re-rank, so the top-k
-    * cut ranks only rows satisfying the predicate — exact filtering, not
-    * the post-filter-with-over-fetch approximation (which can return < k
-    * rows or rank ineligible vectors into the cut).
-    *
-    * Scale shape: `eligible` is typically a pushed-down predicate scan of
-    * the corpus (its filter reaches the parquet scan); the semi-join
-    * shuffles only the PROBED cells' ids (~nProbe/nCells of the corpus)
-    * against it, and AQE picks a broadcast when the predicate is
-    * selective. The recall knob interaction is the documented one: a
-    * selective filter thins every probe cell, so callers widen `nProbe`
-    * proportionally (the registered query probes 8 of 16 cells at a ~10%
-    * filter vs the unfiltered query's 4). */
-  def ivfTopKFilteredIndexed(emb: DataFrame, centroids: DataFrame,
-                             indexPath: String, eligible: DataFrame,
-                             queryId: Long, k: Int, nProbe: Int): DataFrame = {
-    val spark = emb.sparkSession
-    val qv = queryVector(emb, queryId)
-    val probes = rankProbes(qv, centroids, nProbe)
-    val candIds = readLshIndex(spark, indexPath)
-      .where(col("cell").isin(probes: _*))
-      .where(col("vec_id") =!= queryId)
-      .join(eligible.select(col("vec_id")), Seq("vec_id"), "left_semi")
-      .select(col("vec_id"))
-    val q = emb.where(col("vec_id") === queryId)
-      .select(col("embedding").as("qv"))
-    emb.join(candIds, Seq("vec_id"), "left_semi")
-      .join(broadcast(q))
-      .select(col("vec_id"),
-        Similarity.cosRound(col("embedding"), col("qv"), 4).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-      .limit(k)
-  }
-
-  /** Batched [[ivfTopKFilteredIndexed]] — one predicate, many queries, one
-    * scan of the inverted lists: probed (query, cell) pairs broadcast
-    * against the index as in [[ivfTopKBatch]], the eligible-id semi-join
-    * lands before the per-query bounded-heap cut, so every query's top-k
-    * ranks only predicate-satisfying vectors. */
-  def ivfTopKFilteredBatch(emb: DataFrame, centroids: DataFrame,
-                           indexPath: String, eligible: DataFrame,
-                           queries: DataFrame, k: Int, nProbe: Int): DataFrame = {
-    val spark = emb.sparkSession
-    val q = queries.select(col("query_id"), col("embedding").as("qv"),
-      Similarity.norm(col("embedding")).as("qn"))
+  /** [[rankProbes]]'s in-plan form for a query FRAME `q` (query_id, qv,
+    * qn = ‖qv‖, …): a tiny |queries|·|cells| broadcast join with the
+    * centroid model reduced by the bounded-heap top-`nProbe` per query —
+    * (query_id, cell) rows. NaN parity with the driver/inline paths: desc
+    * ordering sorts NaN first on both the heap comparator and Spark's
+    * orderBy. */
+  private def rankCellsPerQuery(q: DataFrame, centroids: DataFrame,
+                                nProbe: Int): DataFrame = {
     val cent = centroids.select(col("cell").cast("int").as("cell"),
       col("centroid").as("cv"), Similarity.norm(col("centroid")).as("cn"))
     val cellScores = q.join(broadcast(cent))
       .select(col("query_id"), col("cell"),
         (graft.functions.DotProduct.dot(col("qv"), col("cv")) /
           (col("qn") * col("cn"))).as("ccos"))
-    val probes = graft.plans.GroupedTopK.topK(cellScores, Seq("query_id"),
+    graft.plans.GroupedTopK.topK(cellScores, Seq("query_id"),
         Seq("ccos" -> true, "cell" -> false), nProbe)
       .select(col("query_id"), col("cell"))
-    val cand = readLshIndex(spark, indexPath)
-      .withColumn("cell", col("cell").cast("int"))
-      .join(broadcast(probes), Seq("cell"))
-      .where(col("vec_id") =!= col("query_id"))
-      .join(eligible.select(col("vec_id")), Seq("vec_id"), "left_semi")
-      .select(col("query_id"), col("vec_id"))
-    val rescored = emb.join(cand, Seq("vec_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        Similarity.cosRound(col("embedding"), col("qv"), 4).as("cos"))
-    graft.plans.GroupedTopK.topK(rescored, Seq("query_id"),
-      Seq("cos" -> true, "vec_id" -> false), k)
+  }
+
+  /** IVF ANN top-k served from prebuilt inverted lists — output-identical to
+    * [[Similarity.ivfTopK]] with the same centroids. The probe ranks cells
+    * on the DRIVER ([[rankProbes]]), turns the `nProbe` cell ids into
+    * literal filters (static partition pruning on the index), and
+    * exact-re-ranks only the probed cells' members.
+    *
+    * FILTERED search (`eligible`, the metadata predicate's allowed ids —
+    * every vector store's hardest mode): the probed candidates
+    * PRE-FILTER against it BEFORE the exact re-rank ([[keepEligible]]).
+    * Scale shape: `eligible` is typically a pushed-down predicate scan of
+    * the corpus; the semi-join shuffles only the PROBED cells' ids
+    * (~nProbe/nCells of the corpus) against it, and AQE picks a broadcast
+    * when the predicate is selective. A selective filter thins every
+    * probe cell, so callers widen `nProbe` proportionally (the registered
+    * filtered query probes 8 of 16 cells at a ~10% filter vs the
+    * unfiltered query's 4). */
+  def ivfTopKIndexed(emb: DataFrame, centroids: DataFrame, indexPath: String,
+                     queryId: Long, k: Int, nProbe: Int,
+                     eligible: Option[DataFrame] = None): DataFrame = {
+    val spark = emb.sparkSession
+    val probes = rankProbes(queryVector(emb, queryId), centroids, nProbe)
+    val candIds = keepEligible(readLshIndex(spark, indexPath)
+      .where(col("cell").isin(probes: _*))
+      .where(col("vec_id") =!= queryId), eligible)
+      .select(col("vec_id"))
+    exactTopK(emb, emb.join(candIds, Seq("vec_id"), "left_semi"), queryId, k)
   }
 
   // ---- IVF-PQ (IVFADC) ------------------------------------------------------
@@ -2435,12 +2340,13 @@ object Indexes {
   /** IVF-PQ ADC top-k over the combined index: coarse probe ranked on the
     * driver ([[rankProbes]] → literal cell filters → static partition
     * pruning), ADC estimate folded over the stored codes inside the pruned
-    * scan ([[adcEstimate]]), exact cosine re-rank of the `rerank` survivors
-    * only. Recall composes multiplicatively — cells never probed (the IVF
-    * trade) × true neighbors the 8-byte estimate misprices out of the
-    * candidate cut (the PQ trade); at nProbe = nCells and rerank ≥ corpus
-    * size it degrades to exact brute force (IndexesSpec asserts that
-    * boundary identity, the recall analogue of the LSH banding notes). */
+    * scan ([[adcCandidates]]), exact cosine re-rank of the `rerank`
+    * survivors only. Recall composes multiplicatively — cells never probed
+    * (the IVF trade) × true neighbors the 8-byte estimate misprices out of
+    * the candidate cut (the PQ trade); at nProbe = nCells and rerank ≥
+    * corpus size it degrades to exact brute force (IndexesSpec asserts
+    * that boundary identity, the recall analogue of the LSH banding
+    * notes). */
   def ivfPqTopKIndexed(emb: DataFrame, centroids: DataFrame,
                        codebooks: DataFrame, indexPath: String, queryId: Long,
                        k: Int, nProbe: Int, rerank: Int = 100, nSub: Int = 8,
@@ -2448,66 +2354,34 @@ object Indexes {
     val spark = emb.sparkSession
     val qv = queryVector(emb, queryId)
     val probes = rankProbes(qv, centroids, nProbe)
-    val est = adcEstimate(qv, collectCodebooks(codebooks), nSub, dim / nSub)
-    val cand = readLshIndex(spark, indexPath)
-      .where(col("cell").isin(probes: _*))
-      .where(col("vec_id") =!= queryId)
-      .select(col("vec_id"), est.as("est"))
-      .orderBy(col("est").desc, col("vec_id").asc)
-      .limit(rerank)
-      .select(col("vec_id"))
-    val q = emb.where(col("vec_id") === queryId)
-      .select(col("embedding").as("qv"))
-    emb.join(broadcast(cand), Seq("vec_id"), "left_semi")
-      .join(broadcast(q))
-      .select(col("vec_id"),
-        Similarity.cosRound(col("embedding"), col("qv"), 4).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-      .limit(k)
+    val cbs = collectCodebooks(codebooks)
+    val cand = adcCandidates(readLshIndex(spark, indexPath)
+      .where(col("cell").isin(probes: _*)), qv, cbs, nSub, dim, queryId, rerank)
+    exactTopK(emb, emb.join(broadcast(cand), Seq("vec_id"), "left_semi"),
+      queryId, k)
   }
 
   /** Batched IVF-PQ ADC top-k — the combined-index member of the batch
     * family ([[lshTopKBatch]], [[ivfTopKBatch]], [[pqTopKBatch]]): per-query
-    * cell ranking via a broadcast of the tiny centroid model + bounded-heap
-    * cut, then ONE scan of the code table joined against the broadcast
-    * (query, probed-cell) pairs — AQE prunes the unprobed cells via the
-    * broadcast join's runtime filter, each candidate row scores as 8 array
-    * lookups + 7 adds from the query's broadcast ADC tables, and only the
-    * per-query `rerank` survivors touch raw vectors. Per query the output is
-    * row-identical to [[ivfPqTopKIndexed]] (IndexesSpec asserts it). */
+    * cell ranking in-plan ([[rankCellsPerQuery]]), then ONE scan of the
+    * code table joined against the broadcast (query, probed-cell) pairs —
+    * AQE prunes the unprobed cells via the broadcast join's runtime
+    * filter, each candidate row scores as 8 array lookups + 7 adds from
+    * the query's broadcast ADC tables ([[adcTables]]), and only the
+    * per-query `rerank` survivors touch raw vectors. Per query the output
+    * is row-identical to [[ivfPqTopKIndexed]] (IndexesSpec asserts it). */
   def ivfPqTopKBatch(emb: DataFrame, centroids: DataFrame,
                      codebooks: DataFrame, indexPath: String,
                      queries: DataFrame, k: Int, nProbe: Int,
                      rerank: Int = 100, nSub: Int = 8,
                      dim: Int = 64): DataFrame = {
     val spark = emb.sparkSession
-    val subDim = dim / nSub
-    val cbs = collectCodebooks(codebooks)
-    // per-query ADC dot tables, computed EXECUTOR-side with the codegen'd
-    // fold (bit-identical to the driver-side single-query tables)
-    val qTabs = (0 until nSub).map { m =>
-      array(cbs(m).toIndexedSeq.map(c =>
-        graft.functions.DotProduct.dot(
-          slice(col("embedding"), m * subDim + 1, subDim),
-          typedlit(c.toSeq))): _*).as(s"qt$m")
-    }
+    val (qTabs, est) = adcTables(collectCodebooks(codebooks), nSub, dim)
     val q = queries.select(col("query_id") +: col("embedding").as("qv") +:
       Similarity.norm(col("embedding")).as("qn") +: qTabs: _*)
-    val cent = centroids.select(col("cell").cast("int").as("cell"),
-      col("centroid").as("cv"), Similarity.norm(col("centroid")).as("cn"))
-    val cellScores = q.join(broadcast(cent))
-      .select(col("query_id"), col("cell"),
-        (graft.functions.DotProduct.dot(col("qv"), col("cv")) /
-          (col("qn") * col("cn"))).as("ccos"))
-    val probes = graft.plans.GroupedTopK.topK(cellScores, Seq("query_id"),
-        Seq("ccos" -> true, "cell" -> false), nProbe)
-      .select(col("query_id"), col("cell"))
-    val est = (0 until nSub)
-      .map(m => element_at(col(s"qt$m"), col(s"c$m") + 1))
-      .reduceLeft(_ + _)
     val scored = readLshIndex(spark, indexPath)
       .withColumn("cell", col("cell").cast("int"))
-      .join(broadcast(probes), Seq("cell"))
+      .join(broadcast(rankCellsPerQuery(q, centroids, nProbe)), Seq("cell"))
       .join(broadcast(q.select(col("query_id") +:
         (0 until nSub).map(m => col(s"qt$m")): _*)), Seq("query_id"))
       .where(col("vec_id") =!= col("query_id"))
@@ -2515,12 +2389,8 @@ object Indexes {
     val cand = graft.plans.GroupedTopK.topK(scored, Seq("query_id"),
         Seq("est" -> true, "vec_id" -> false), rerank)
       .select(col("query_id"), col("vec_id"))
-    val rescored = emb.join(cand, Seq("vec_id"))
-      .join(broadcast(q.select(col("query_id"), col("qv"))), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        Similarity.cosRound(col("embedding"), col("qv"), 4).as("cos"))
-    graft.plans.GroupedTopK.topK(rescored, Seq("query_id"),
-      Seq("cos" -> true, "vec_id" -> false), k)
+    exactTopKBatch(emb.join(cand, Seq("vec_id")),
+      q.select(col("query_id"), col("qv")), k)
   }
 
   /** SemDeDup-style semantic dedup groups served from the IVF inverted

@@ -577,6 +577,22 @@ object TextAnalysis {
         .parquet(matches.toIndexedSeq: _*)
   }
 
+  /** The postings of `terms`, folded: one glob over their term buckets
+    * (static pruning), the bucket and term filters as literals (the
+    * postings files are term-sorted, so the term isin pushes to the scan
+    * and footer stats prune), and the delete fold — with a sidecar view
+    * `ts`, surviving postings only, so a df counted over them corrects
+    * itself. */
+  private def postingsOf(spark: SparkSession, indexPath: String,
+                         terms: Seq[String], ts: Option[DataFrame]): DataFrame = {
+    val tbs = terms.map(termBucketLocal).distinct
+    val post = readPartDirs(spark, s"$indexPath/postings",
+        s"batch_id=*/tb={${tbs.mkString(",")}}", postingsSchema)
+      .where(col("tb").isin(tbs: _*))
+      .where(col("term").isin(terms: _*))
+    ts.fold(post)(t => post.join(t.select(col("doc_id")), Seq("doc_id"), "left_anti"))
+  }
+
   /** The folded view of one generation's delete sidecar: DISTINCT
     * (doc_id, dl) rows — distinct because the plain-append channel may
     * record one doc twice (a replayed delete batch), and the scalar
@@ -658,48 +674,49 @@ object TextAnalysis {
     * semantics). Scoring matches [[bm25TopKBatch]]'s fixed-point
     * contract: per-(doc, term) contributions quantize to 1e-6 BIGINTs,
     * the per-doc reduction is an exact integer sum, constants must be
-    * interpolated into the oracle from the same Scala doubles. */
+    * interpolated into the oracle from the same Scala doubles.
+    *
+    * FILTERED serving (`eligible`, a doc_id frame from any metadata
+    * table): only documents passing the predicate rank, scored with
+    * GLOBAL corpus statistics (df from the probed postings, scalars from
+    * the store) so a document's score does not change with the filter —
+    * eligibility is a candidate cut, the posture of
+    * [[graft.ops.Indexes.annGraphSearch]]'s `eligible` on the vector
+    * side. MAX-SCORE pruning is not engaged under a filter: its θ bound
+    * comes from unfiltered essential partials and is not a valid lower
+    * bound for the k-th ELIGIBLE score. */
   def bm25TopKIndexed(spark: SparkSession, indexPath: String,
                       terms: Seq[String], k: Int = 20,
-                      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+                      k1: Double = 1.2, b: Double = 0.75,
+                      eligible: Option[DataFrame] = None): DataFrame = {
     require(terms.nonEmpty && terms.distinct == terms,
       "bm25TopKIndexed expects a non-empty, duplicate-free query-term list")
     val ts = invertedTombstones(spark, indexPath)
     // max-score pruning only on a delete-free store: under tombstones the
     // stored termstats df is stale (a deleted doc's postings still count)
     // and the exact df needs the anti-joined window count — the full path.
-    // Compaction retires the sidecar and restores the pruned path.
-    // Cost accounting, stated: the r13 probe carries ~0.1 s of FIXED
-    // per-call metadata work vs the r12 shape (sidecar globs, the
-    // pruning decision's memoized stats lookup) — constant in corpus
-    // size, which is the point: it buys the delete fold and the common-
-    // term score ceiling, both of which matter precisely when the
-    // postings read is the dominant term.
+    // Compaction retires the sidecar and restores the pruned path. The
+    // pruning decision costs fixed per-call metadata work (sidecar globs,
+    // the memoized stats lookup), constant in corpus size.
     val pruned =
-      if (ts.isEmpty) bm25TopKIndexedPruned(spark, indexPath, terms, k, k1, b)
+      if (ts.isEmpty && eligible.isEmpty)
+        bm25TopKIndexedPruned(spark, indexPath, terms, k, k1, b)
       else None
-    pruned.getOrElse(bm25TopKIndexedFull(spark, indexPath, terms, k, k1, b, ts))
+    pruned.getOrElse(
+      bm25TopKIndexedFull(spark, indexPath, terms, k, k1, b, ts, eligible))
   }
 
-  /** The read-every-probed-posting path (the pre-r13 shape): df as a
-    * window count over the probed (and tombstone-folded) postings, so it
-    * is correct under ANY sidecar state. [[bm25TopKIndexed]] falls back
-    * here whenever max-score pruning cannot engage. */
+  /** The read-every-probed-posting path: df as a window count over the
+    * probed (and tombstone-folded) postings, so it is correct under ANY
+    * sidecar state. [[bm25TopKIndexed]] falls back here whenever
+    * max-score pruning cannot engage. */
   private[graft] def bm25TopKIndexedFull(spark: SparkSession, indexPath: String,
                                          terms: Seq[String], k: Int,
                                          k1: Double, b: Double,
                                          ts: Option[DataFrame],
                                          eligible: Option[DataFrame] = None)
       : DataFrame = {
-    val tbs = terms.map(termBucketLocal).distinct
-    val post0 = readPartDirs(spark, s"$indexPath/postings",
-        s"batch_id=*/tb={${tbs.mkString(",")}}", postingsSchema)
-      .where(col("tb").isin(tbs: _*))
-      .where(col("term").isin(terms: _*))
-    // the delete fold: surviving postings only — df (window count below)
-    // then counts survivors, correcting itself
-    val post = ts.fold(post0)(t =>
-      post0.join(t.select(col("doc_id")), Seq("doc_id"), "left_anti"))
+    val post = postingsOf(spark, indexPath, terms, ts)
     val stats = invertedScalars(spark, indexPath, ts)
     val tfd = post.withColumn("df",
       count(lit(1)).over(org.apache.spark.sql.expressions.Window
@@ -709,7 +726,7 @@ object TextAnalysis {
       .select(col("doc_id"), contribFp.as("fp"))
     // the eligibility cut lands AFTER the df window: statistics stay
     // GLOBAL (the store's view of the corpus), the filter only restricts
-    // candidates — the annGraphSearchFiltered posture
+    // candidates
     val cut = eligible.fold(contrib)(e =>
       contrib.join(e.select(col("doc_id")).distinct(), Seq("doc_id"),
         "left_semi"))
@@ -718,27 +735,6 @@ object TextAnalysis {
       .agg(round(sum(col("fp")).cast("double") / lit(1e6), 6).as("score"))
       .orderBy(col("score").desc, col("doc_id").asc)
       .limit(k)
-  }
-
-  /** Metadata-FILTERED indexed BM25 — the lexical half of the filtered
-    * serving matrix (r13 VERDICT #7): rank only documents passing an
-    * eligibility predicate (a doc_id frame from any metadata table),
-    * scored with GLOBAL corpus statistics (df from the probed postings,
-    * scalars from the store) so a document's score does not change with
-    * the filter — eligibility is a candidate cut, exactly the
-    * [[graft.ops.Indexes.annGraphSearchFiltered]] posture on the vector
-    * side. Same zero-corpus-scan probe as [[bm25TopKIndexed]]'s full
-    * path; MAX-SCORE pruning is deliberately not engaged here — its θ
-    * bound comes from unfiltered essential partials and is not a valid
-    * lower bound for the k-th ELIGIBLE score. */
-  def bm25TopKIndexedFiltered(spark: SparkSession, indexPath: String,
-                              terms: Seq[String], eligible: DataFrame,
-                              k: Int = 20, k1: Double = 1.2,
-                              b: Double = 0.75): DataFrame = {
-    require(terms.nonEmpty && terms.distinct == terms,
-      "bm25TopKIndexedFiltered expects a non-empty, duplicate-free term list")
-    bm25TopKIndexedFull(spark, indexPath, terms, k, k1, b,
-      invertedTombstones(spark, indexPath), Some(eligible))
   }
 
   /** Corpus scalars with the delete sidecar folded: the stored 1-row
@@ -771,9 +767,9 @@ object TextAnalysis {
     * and the probe falls back to the full read. */
   val PrunedCandidateCap = 10000
 
-  /** MAX-SCORE (WAND-family) pruning for the indexed BM25 probe — the
-    * round-12 scale gap: the indexed probe was "linear in corpus for
-    * common terms"; classic IR serving bounds that with a per-term score
+  /** MAX-SCORE (WAND-family) pruning for the indexed BM25 probe: the
+    * full probe is linear in corpus for common terms; classic IR serving
+    * bounds that with a per-term score
     * ceiling so a stop-word-adjacent term's postings are read only for
     * docs that can still reach the top-k.
     *
@@ -876,13 +872,6 @@ object TextAnalysis {
     val dfLookup = broadcast(
       present.map(t => (t, stat(t)._1)).toDF("term", "df"))
     val contribFp = bm25ContribFp(k1, b)
-    def postingsOf(qs: Seq[String]): DataFrame = {
-      val qtbs = qs.map(termBucketLocal).distinct
-      readPartDirs(spark, s"$indexPath/postings",
-          s"batch_id=*/tb={${qtbs.mkString(",")}}", postingsSchema)
-        .where(col("tb").isin(qtbs: _*))
-        .where(col("term").isin(qs: _*))
-    }
     def scoreFp(post: DataFrame): DataFrame = post
       .join(dfLookup, Seq("term"))
       .withColumn("n_docs", lit(nDocs)).withColumn("total_dl", lit(totalDl))
@@ -892,7 +881,7 @@ object TextAnalysis {
     // candidates (pfp + Σub(common) ≥ θ) are exactly a PREFIX of the
     // partials sorted by pfp desc, so the bounded top-(cap+1) collect
     // yields θ (the k-th row) and the candidate prefix together
-    val top = scoreFp(postingsOf(essential))
+    val top = scoreFp(postingsOf(spark, indexPath, essential, None))
       .orderBy(col("pfp").desc, col("doc_id").asc)
       .limit(PrunedCandidateCap + 1).collect()
     if (top.length < k) return None
@@ -901,7 +890,8 @@ object TextAnalysis {
     val cands = top.takeWhile(_.getAs[Long]("pfp") + sumUbCommon >= theta)
     if (cands.length > PrunedCandidateCap) return None // prefix may be truncated
     val candIds = cands.map(_.getAs[Long]("doc_id"))
-    Some(scoreFp(postingsOf(present).where(col("doc_id").isin(candIds.toSeq: _*)))
+    Some(scoreFp(postingsOf(spark, indexPath, present, None)
+        .where(col("doc_id").isin(candIds.toSeq: _*)))
       .select(col("doc_id"),
         round(col("pfp").cast("double") / lit(1e6), 6).as("score"))
       .orderBy(col("score").desc, col("doc_id").asc)
@@ -912,29 +902,31 @@ object TextAnalysis {
     * corpus scans: ONE probe of the union query vocabulary's buckets
     * serves every query (df per term computed once over the probed
     * postings), scoring joins the (query_id, term) pairs, and the
-    * per-query cut is the bounded-heap [[graft.plans.GroupedTopK]]. The
-    * full family is now closed under {single, batch} × {scan, index}. */
+    * per-query cut is the bounded-heap [[graft.plans.GroupedTopK]].
+    * `eligible` is the single probe's filter: one eligibility semi-join
+    * shared by every query, the same global-statistics contract, and
+    * batch max-score pruning stays declined under it (the single path's
+    * θ-soundness argument). */
   def bm25TopKIndexedBatch(spark: SparkSession, indexPath: String,
                            queries: DataFrame, k: Int = 20,
-                           k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+                           k1: Double = 1.2, b: Double = 0.75,
+                           eligible: Option[DataFrame] = None): DataFrame = {
     // max-score pruning engages under the single-path conditions
-    // (delete-free store — termstats df exact — and a sound per-query
-    // θ/ceiling split); either way the output is byte-identical. The
-    // sidecar view derives ONCE and threads through (the single-query
-    // wrapper's shape — recomputing it in the full path paid the
-    // sidecar globs twice per probe).
+    // (delete-free store — termstats df exact — no filter, and a sound
+    // per-query θ/ceiling split); either way the output is
+    // byte-identical. The sidecar view derives ONCE and threads through.
     val ts = invertedTombstones(spark, indexPath)
     val pruned =
-      if (ts.isEmpty)
+      if (ts.isEmpty && eligible.isEmpty)
         bm25TopKIndexedBatchPruned(spark, indexPath, queries, k, k1, b)
       else None
-    pruned.getOrElse(
-      bm25TopKIndexedBatchFull(spark, indexPath, queries, k, k1, b, ts))
+    pruned.getOrElse(bm25TopKIndexedBatchFull(spark, indexPath, queries, k,
+      k1, b, ts, eligible))
   }
 
-  /** The read-every-probed-posting batch path (the pre-r13 shape) —
-    * correct under ANY sidecar state; [[bm25TopKIndexedBatch]] falls
-    * back here whenever batch max-score pruning cannot engage. */
+  /** The read-every-probed-posting batch path — correct under ANY
+    * sidecar state; [[bm25TopKIndexedBatch]] falls back here whenever
+    * batch max-score pruning cannot engage. */
   private[graft] def bm25TopKIndexedBatchFull(spark: SparkSession,
                                               indexPath: String,
                                               queries: DataFrame, k: Int,
@@ -945,29 +937,16 @@ object TextAnalysis {
     val qterms = queries.select(col("query_id"),
       explode(array_distinct(col("terms"))).as("term"))
     val vocab = qterms.select(col("term")).distinct()
-    // buckets of the union vocabulary as plan-time literals — a driver
-    // round-trip bounded by the vocabulary (take + require, the batch
-    // family's loud-collect pattern)
+    // the union vocabulary as plan-time literals — a driver round-trip
+    // bounded by the vocabulary (take + require, the batch family's
+    // loud-collect pattern); null terms are dropped like the scan twin's
+    // equi-join drops them
     import spark.implicits._
-    // null terms are dropped like the scan twin's equi-join drops them
-    // (review catch: termBucketLocal(null) NPE'd where bm25TopKBatch
-    // tolerated the same frame)
     val termList = vocab.as[String].take(graft.ops.Indexes.MaxBatchProbeRows + 1)
       .filter(_ != null)
     require(termList.length <= graft.ops.Indexes.MaxBatchProbeRows,
       "bm25TopKIndexedBatch union vocabulary exceeds MaxBatchProbeRows — split")
-    val tbs = termList.map(termBucketLocal).distinct.toSeq
-    // term filter as LITERALS, not a semi-join (review catch): the
-    // postings files are term-sorted precisely so the isin pushes to the
-    // scan and footer stats prune — the join read every probed bucket
-    val post0 = readPartDirs(spark, s"$indexPath/postings",
-        s"batch_id=*/tb={${tbs.mkString(",")}}", postingsSchema)
-      .where(col("tb").isin(tbs: _*))
-      .where(col("term").isin(termList.toSeq: _*))
-    // delete fold, shared with the single-query probe: surviving
-    // postings only, sidecar-corrected scalars
-    val post = ts.fold(post0)(t =>
-      post0.join(t.select(col("doc_id")), Seq("doc_id"), "left_anti"))
+    val post = postingsOf(spark, indexPath, termList.toSeq, ts)
     val stats = invertedScalars(spark, indexPath, ts)
     val tfd = post.withColumn("df",
       count(lit(1)).over(org.apache.spark.sql.expressions.Window
@@ -976,8 +955,8 @@ object TextAnalysis {
     val contrib = qterms.join(tfd, Seq("term"))
       .crossJoin(broadcast(stats))
       .select(col("query_id"), col("doc_id"), contribFp.as("fp"))
-    // eligibility AFTER the df window (global statistics, the filtered
-    // single path's posture): a candidate cut shared by every query
+    // eligibility AFTER the df window (global statistics): a candidate
+    // cut shared by every query
     val cut = eligible.fold(contrib)(e =>
       contrib.join(e.select(col("doc_id")).distinct(), Seq("doc_id"),
         "left_semi"))
@@ -987,20 +966,6 @@ object TextAnalysis {
     graft.plans.GroupedTopK.topK(scored, Seq("query_id"),
       Seq("score" -> true, "doc_id" -> false), k)
   }
-
-  /** Metadata-FILTERED batch BM25 — [[bm25TopKIndexedFiltered]]'s
-    * many-queries twin, closing the filtered lexical cell under
-    * {single, batch}: one probe of the union vocabulary, one shared
-    * eligibility semi-join, per-query GroupedTopK cut. Same global-
-    * statistics contract (scores filter-invariant); batch max-score
-    * pruning stays declined under a filter (the single path's stated
-    * θ-soundness argument). */
-  def bm25TopKIndexedBatchFiltered(spark: SparkSession, indexPath: String,
-                                   queries: DataFrame, eligible: DataFrame,
-                                   k: Int = 20, k1: Double = 1.2,
-                                   b: Double = 0.75): DataFrame =
-    bm25TopKIndexedBatchFull(spark, indexPath, queries, k, k1, b,
-      invertedTombstones(spark, indexPath), Some(eligible))
 
   /** MAX-SCORE pruning for the BATCH probe — [[bm25TopKIndexedPruned]]'s
     * many-queries twin, closing the family under
@@ -1061,13 +1026,6 @@ object TextAnalysis {
     val dfLookup = broadcast(vocab.filter(stat.contains)
       .map(t => (t, stat(t)._1)).toDF("term", "df"))
     val contribFp = bm25ContribFp(k1, b)
-    def postingsOf(qs: Seq[String]): DataFrame = {
-      val qtbs = qs.map(termBucketLocal).distinct
-      readPartDirs(spark, s"$indexPath/postings",
-          s"batch_id=*/tb={${qtbs.mkString(",")}}", postingsSchema)
-        .where(col("tb").isin(qtbs: _*))
-        .where(col("term").isin(qs: _*))
-    }
     val qtermPairs = qlist.flatMap { case (q, ts) => ts.map((q, _)) }.toSeq
       .toDF("query_id", "term")
     def scoreFp(post: DataFrame): DataFrame = post
@@ -1076,7 +1034,7 @@ object TextAnalysis {
       .withColumn("n_docs", lit(nDocs)).withColumn("total_dl", lit(totalDl))
       .select(col("query_id"), col("doc_id"), contribFp.as("fp"))
       .groupBy(col("query_id"), col("doc_id")).agg(sum(col("fp")).as("pfp"))
-    val partials = scoreFp(postingsOf(essAll))
+    val partials = scoreFp(postingsOf(spark, indexPath, essAll, None))
     val thetaRows = graft.plans.GroupedTopK.topK(partials, Seq("query_id"),
         Seq("pfp" -> true, "doc_id" -> false), k)
       .groupBy(col("query_id"))
@@ -1095,7 +1053,7 @@ object TextAnalysis {
       .as[Long].take(PrunedCandidateCap + 1)
     if (candIds.length > PrunedCandidateCap) return None
     Some(graft.plans.GroupedTopK.topK(
-      scoreFp(postingsOf(vocab.filter(stat.contains))
+      scoreFp(postingsOf(spark, indexPath, vocab.filter(stat.contains), None)
           .where(col("doc_id").isin(candIds.toSeq: _*)))
         .select(col("query_id"), col("doc_id"),
           round(col("pfp").cast("double") / lit(1e6), 6).as("score")),
@@ -1159,13 +1117,7 @@ object TextAnalysis {
       return bm25TopKIndexed(spark, indexPath, seedTerms, k, k1, b)
     val candTerms = candRows.map(_._1)
     val ts = invertedTombstones(spark, indexPath)
-    val tbs = candTerms.map(termBucketLocal).distinct
-    val post0 = readPartDirs(spark, s"$indexPath/postings",
-        s"batch_id=*/tb={${tbs.mkString(",")}}", postingsSchema)
-      .where(col("tb").isin(tbs: _*))
-      .where(col("term").isin(candTerms: _*))
-    val post = ts.fold(post0)(t =>
-      post0.join(t.select(col("doc_id")), Seq("doc_id"), "left_anti"))
+    val post = postingsOf(spark, indexPath, candTerms, ts)
     val expTerms = candRows.toDF("term", "tf_sum")
       .join(post.groupBy(col("term")).agg(count(lit(1)).as("df")), Seq("term"))
       .crossJoin(broadcast(invertedScalars(spark, indexPath, ts)
@@ -1239,13 +1191,7 @@ object TextAnalysis {
       return bm25TopKIndexedBatch(spark, indexPath, seedDf, k, k1, b)
     val candTerms = candCut.map(_._2).distinct
     val ts = invertedTombstones(spark, indexPath)
-    val tbs = candTerms.map(termBucketLocal).distinct
-    val post0 = readPartDirs(spark, s"$indexPath/postings",
-        s"batch_id=*/tb={${tbs.mkString(",")}}", postingsSchema)
-      .where(col("tb").isin(tbs: _*))
-      .where(col("term").isin(candTerms: _*))
-    val post = ts.fold(post0)(t =>
-      post0.join(t.select(col("doc_id")), Seq("doc_id"), "left_anti"))
+    val post = postingsOf(spark, indexPath, candTerms, ts)
     val weighted = candCut.toDF("query_id", "term", "tf_sum")
       .join(post.groupBy(col("term")).agg(count(lit(1)).as("df")), Seq("term"))
       .crossJoin(broadcast(invertedScalars(spark, indexPath, ts)

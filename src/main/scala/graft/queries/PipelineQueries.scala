@@ -1278,7 +1278,8 @@ object PipelineQueries {
        |ORDER BY role, score_fp DESC, node""".stripMargin
   }
 
-  /** Multi-probe LSH ANN ([[graft.ops.Indexes.lshTopKMultiProbe]]): the
+  /** Multi-probe LSH ANN ([[graft.ops.Indexes.lshTopKIndexed]] with
+    * `nFlips = 2`): the
     * [[annLsh]] probe widened with each table's 2 smallest-margin
     * 1-bit-flip buckets — recall approaches ~3·L tables' at zero extra
     * index cost, and the probe stays statically pruned literals. The
@@ -1289,8 +1290,8 @@ object PipelineQueries {
     val emb = embeddings(s, d)
     val b = annLshBits(emb)
     val idx = graft.ops.Indexes.ensureLshIndex(s, emb, d, bBits = b, lTables = 16)
-    graft.ops.Indexes.lshTopKMultiProbe(emb, idx, queryId = 0L, k = 10,
-      nFlips = 2, bBits = b)
+    graft.ops.Indexes.lshTopKIndexed(emb, idx, queryId = 0L, k = 10,
+      bBits = b, nFlips = 2)
   }
 
   val annLshMultiProbeSql: String =
@@ -1701,7 +1702,7 @@ object PipelineQueries {
 
   /** FILTERED ANN — top-k under a metadata predicate (`label = 2`, ~10%
     * selective), served from the IVF inverted lists with EXACT pre-filter
-    * semantics ([[graft.ops.Indexes.ivfTopKFilteredIndexed]]): the
+    * semantics ([[graft.ops.Indexes.ivfTopKIndexed]] with `eligible`): the
     * eligible-id filter lands between candidate generation and the exact
     * re-rank, so every returned row satisfies the predicate and the cut
     * ranks nothing else. nProbe widens 4 → 8 to compensate the filter
@@ -1713,8 +1714,8 @@ object PipelineQueries {
     val cent = graft.engine.Tables.parquetCached(s, ivfCentroidsPath)
     val idx = graft.ops.Indexes.ensureIvfIndex(s, emb, cent, d, nCells = 16)
     val eligible = emb.where(col("label") === 2).select(col("vec_id"))
-    graft.ops.Indexes.ivfTopKFilteredIndexed(emb, cent, idx, eligible,
-      queryId = 0L, k = 10, nProbe = 8)
+    graft.ops.Indexes.ivfTopKIndexed(emb, cent, idx, queryId = 0L, k = 10,
+      nProbe = 8, eligible = Some(eligible))
   }
 
   val annFilteredSql: String =
@@ -1739,8 +1740,8 @@ object PipelineQueries {
        |ORDER BY cos DESC, e.vec_id ASC LIMIT 10""".stripMargin
 
   /** Batched filtered ANN — the [[annFiltered]] predicate served to five
-    * query vectors in one index scan ([[graft.ops.Indexes
-    * .ivfTopKFilteredBatch]]); per query row-identical semantics to the
+    * query vectors in one index scan ([[graft.ops.Indexes.ivfTopKBatch]]
+    * with `eligible`); per query row-identical semantics to the
     * single-query path. */
   def annFilteredBatch(s: SparkSession, d: String): DataFrame = {
     val emb = embeddings(s, d)
@@ -1749,8 +1750,8 @@ object PipelineQueries {
     val eligible = emb.where(col("label") === 2).select(col("vec_id"))
     val queries = emb.where(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding"))
-    graft.ops.Indexes.ivfTopKFilteredBatch(emb, cent, idx, eligible, queries,
-        k = 10, nProbe = 8)
+    graft.ops.Indexes.ivfTopKBatch(emb, cent, idx, queries, k = 10,
+        nProbe = 8, eligible = Some(eligible))
       .orderBy(col("query_id"), col("cos").desc, col("vec_id"))
   }
 
@@ -3016,9 +3017,8 @@ object PipelineQueries {
        |WHERE e.vec_id != 0
        |ORDER BY cos DESC, e.vec_id ASC LIMIT 10""".stripMargin
 
-  /** FILTERED graph-ANN serving ([[graft.ops.Indexes
-    * .annGraphSearchFiltered]] — round 13, completing the serving matrix
-    * under {bucket, graph} × {plain, batch, beam, filtered}): the same
+  /** FILTERED graph-ANN serving ([[graft.ops.Indexes.annGraphSearch]]
+    * with `eligible`, the serving matrix's filtered graph cell): the same
     * j=3 graph navigation as q_ann_graph_search — traversal UNFILTERED so
     * connectivity survives a selective predicate — with q_ann_filtered's
     * eligibility cut (label = 2) applied at the exact re-rank. The
@@ -3034,8 +3034,8 @@ object PipelineQueries {
     // nProbe 8 (vs the plain demo's 4): a selective filter thins the
     // visited set, so the filtered demo widens the probe — exactly the
     // production dial the operator doc states
-    graft.ops.Indexes.annGraphSearchFiltered(emb, cent, ivfIdx, graphPath,
-      eligible, queryId = 0L, k = 10, nProbe = 8, hops = 2)
+    graft.ops.Indexes.annGraphSearch(emb, cent, ivfIdx, graphPath,
+      queryId = 0L, k = 10, nProbe = 8, hops = 2, eligible = Some(eligible))
   }
 
   /** The navigation replays verbatim; the re-rank gains the eligibility
@@ -5993,8 +5993,8 @@ object PipelineQueries {
   }
 
   /** Metadata-FILTERED indexed BM25 ([[graft.ops.TextAnalysis
-    * .bm25TopKIndexedFiltered]] — r13 VERDICT #7, the lexical half of
-    * the filtered serving matrix): q_bm25_indexed's probe restricted to
+    * .bm25TopKIndexed]] with `eligible`, the lexical half of the filtered
+    * serving matrix): q_bm25_indexed's probe restricted to
     * documents whose EMBEDDING carries label 2 — the same eligibility
     * frame q_ann_graph_filtered cuts on, so the two filtered sub-probes
     * answer one predicate. Statistics stay global (df window before the
@@ -6005,8 +6005,9 @@ object PipelineQueries {
     val idx = TextAnalysis.ensureInvertedIndex(s, documents(s, d), d)
     val eligible = embeddings(s, d).where(col("label") === 2)
       .select(col("vec_id").as("doc_id"))
-    TextAnalysis.bm25TopKIndexedFiltered(s, idx,
-      Seq("vector", "stream", "merge", "quantum"), eligible, k = 25)
+    TextAnalysis.bm25TopKIndexed(s, idx,
+      Seq("vector", "stream", "merge", "quantum"), k = 25,
+      eligible = Some(eligible))
   }
 
   val bm25FilteredSql: String = {
@@ -6574,10 +6575,11 @@ object PipelineQueries {
   val bm25IndexedBatchSql: String = bm25BatchSql
 
   /** Metadata-FILTERED batch BM25 ([[graft.ops.TextAnalysis
-    * .bm25TopKIndexedBatchFiltered]]): the batch probe's five queries cut
-    * on the same embedding-label eligibility as [[bm25Filtered]] — the
-    * filtered lexical cell closed under {single, batch}. Oracle spliced
-    * into the batch scan replay by anchored rewrite. */
+    * .bm25TopKIndexedBatch]] with `eligible`): the batch probe's five
+    * queries cut on the same embedding-label eligibility as
+    * [[bm25Filtered]] — the filtered lexical cell closed under {single,
+    * batch}. Oracle spliced into the batch scan replay by anchored
+    * rewrite. */
   def bm25FilteredBatch(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val idx = TextAnalysis.ensureInvertedIndex(s, documents(s, d), d)
@@ -6590,7 +6592,8 @@ object PipelineQueries {
     ).toDF("query_id", "terms")
     val eligible = embeddings(s, d).where(col("label") === 2)
       .select(col("vec_id").as("doc_id"))
-    TextAnalysis.bm25TopKIndexedBatchFiltered(s, idx, qs, eligible, k = 10)
+    TextAnalysis.bm25TopKIndexedBatch(s, idx, qs, k = 10,
+      eligible = Some(eligible))
       .orderBy(col("query_id"), col("score").desc, col("doc_id"))
   }
 

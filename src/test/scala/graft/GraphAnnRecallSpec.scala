@@ -65,8 +65,8 @@ class GraphAnnRecallSpec extends AnyFunSuite {
           emb.join(eligible.union(Seq(q).toDF("vec_id")), Seq("vec_id"),
             "left_semi"), q, 10)
         .select("vec_id").collect().map(_.getLong(0)).toSet
-      val got = graft.ops.Indexes.annGraphSearchFiltered(emb, cent, ivfIdx,
-          graphPath, eligible, q, 10, 4, 3)
+      val got = graft.ops.Indexes.annGraphSearch(emb, cent, ivfIdx,
+          graphPath, q, 10, 4, 3, eligible = Some(eligible))
         .select("vec_id").collect().map(_.getLong(0)).toSet
       truth.intersect(got).size.toDouble / truth.size
     }
@@ -75,8 +75,8 @@ class GraphAnnRecallSpec extends AnyFunSuite {
       s"filtered-config mean recall too low: $rs")
     // the filter really applies: every served id is eligible
     val elig = eligible.collect().map(_.getLong(0)).toSet
-    val served = graft.ops.Indexes.annGraphSearchFiltered(emb, cent, ivfIdx,
-        graphPath, eligible, 0L, 10, 4, 3)
+    val served = graft.ops.Indexes.annGraphSearch(emb, cent, ivfIdx,
+        graphPath, 0L, 10, 4, 3, eligible = Some(eligible))
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(served.subsetOf(elig), "filtered search served an ineligible id")
   }

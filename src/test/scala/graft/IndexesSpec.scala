@@ -181,13 +181,21 @@ class IndexesSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("ivf_filter_spec").toString + "/idx"
     Indexes.writeIvfIndex(emb, cent, dir)
     val eligible = emb.where(col("vec_id") % 3 === 1).select(col("vec_id"))
-    val got = Indexes.ivfTopKFilteredIndexed(emb, cent, dir, eligible,
-      queryId = 0L, k = 10, nProbe = 16).collect().toSeq
+    val got = Indexes.ivfTopKIndexed(emb, cent, dir, queryId = 0L, k = 10,
+      nProbe = 16, eligible = Some(eligible)).collect().toSeq
     val restricted = emb.where(col("vec_id") % 3 === 1 || col("vec_id") === 0)
     val want = Similarity.bruteForceTopK(restricted, 0L, 10).collect().toSeq
     assert(got === want)
     // and every returned row satisfies the predicate — no post-filter leak
     got.foreach(r => assert(r.getLong(0) % 3 === 1, r.toString))
+    // the batch form at the same width, for query 0, is the same brute force
+    val batch = Indexes.ivfTopKBatch(emb, cent, dir,
+        emb.where(col("vec_id") === 0L)
+          .select(col("vec_id").as("query_id"), col("embedding")),
+        k = 10, nProbe = 16, eligible = Some(eligible))
+      .select(col("vec_id"), col("cos"))
+      .orderBy(col("cos").desc, col("vec_id")).collect().toSeq
+    assert(batch === want)
   }
 
   test("batched filtered ANN == per-query filtered probes") {
@@ -197,13 +205,13 @@ class IndexesSpec extends AnyFunSuite {
     val eligible = emb.where(col("vec_id") % 3 === 1).select(col("vec_id"))
     val queries = emb.where(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding"))
-    val got = Indexes.ivfTopKFilteredBatch(emb, cent, dir, eligible, queries,
-        k = 10, nProbe = 8)
+    val got = Indexes.ivfTopKBatch(emb, cent, dir, queries, k = 10,
+        nProbe = 8, eligible = Some(eligible))
       .as[(Long, Long, Double)].collect()
       .groupBy(_._1).map { case (q, rs) => q -> rs.map(r => (r._2, r._3)).toSet }
     (0L until 5L).foreach { qid =>
-      val single = Indexes.ivfTopKFilteredIndexed(emb, cent, dir, eligible,
-          qid, 10, nProbe = 8)
+      val single = Indexes.ivfTopKIndexed(emb, cent, dir, qid, 10, nProbe = 8,
+          eligible = Some(eligible))
         .as[(Long, Double)].collect().toSet
       assert(got(qid) === single, s"query $qid")
     }
@@ -1056,11 +1064,40 @@ class IndexesSpec extends AnyFunSuite {
     assert(gotSh === wantSh, "tombstoned simhash pairs must equal survivor rebuild")
   }
 
-  test("batch LSH probe: an EMPTY query frame returns empty, not a crash") {
+  test("batch probes: an EMPTY query frame returns empty, not a crash") {
+    import graft.ops.TextAnalysis
     val none = emb.where(col("vec_id") < 0)
       .select(col("vec_id").as("query_id"), col("embedding"))
-    val got = Indexes.lshTopKBatch(emb, idxPath, none, k = 10)
-    assert(got.count() === 0L)
+    val cent = spark.read.parquet(graft.queries.PipelineQueries.ivfCentroidsPath)
+    val cb = spark.read.parquet(graft.queries.PipelineQueries.pqCodebooksPath)
+    val root = Files.createTempDirectory("empty_batch_spec").toString
+    Indexes.writeIvfIndex(emb, cent, s"$root/ivf")
+    Indexes.writeIvfPqIndex(emb, cent, cb, s"$root/ivfpq")
+    val pq = Indexes.ensurePqIndex(spark, emb, cb, sf)
+    Seq((0L, 1L)).toDF("vec_a", "vec_b").write.parquet(s"$root/graph")
+    val eligible = emb.where(col("vec_id") % 3 === 1).select(col("vec_id"))
+    TextAnalysis.writeInvertedIndex(graft.engine.Tables.documents(spark, sf)
+      .select(col("doc_id"), col("text")), s"$root/inv")
+    val noTerms = Seq.empty[(Long, Seq[String])].toDF("query_id", "terms")
+    val eligibleDocs = eligible.select(col("vec_id").as("doc_id"))
+    val probes: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "lsh" -> (() => Indexes.lshTopKBatch(emb, idxPath, none, k = 10)),
+      "ivf" -> (() => Indexes.ivfTopKBatch(emb, cent, s"$root/ivf", none,
+        k = 10, nProbe = 4)),
+      "ivf eligible" -> (() => Indexes.ivfTopKBatch(emb, cent, s"$root/ivf",
+        none, k = 10, nProbe = 4, eligible = Some(eligible))),
+      "pq" -> (() => Indexes.pqTopKBatch(emb, cb, pq, none, k = 10)),
+      "ivf-pq" -> (() => Indexes.ivfPqTopKBatch(emb, cent, cb, s"$root/ivfpq",
+        none, k = 10, nProbe = 4)),
+      "graph" -> (() => Indexes.annGraphSearchBatch(emb, cent, s"$root/ivf",
+        s"$root/graph", none, k = 10, nProbe = 4, hops = 2)),
+      "bm25 indexed" -> (() => TextAnalysis.bm25TopKIndexedBatch(spark,
+        s"$root/inv", noTerms, k = 10)),
+      "bm25 indexed eligible" -> (() => TextAnalysis.bm25TopKIndexedBatch(spark,
+        s"$root/inv", noTerms, k = 10, eligible = Some(eligibleDocs))))
+    probes.foreach { case (name, probe) =>
+      withClue(s"$name: ") { assert(probe().count() === 0L) }
+    }
   }
 
   test("appendLshIndex / appendIvfIndex: appended index equals a rebuild") {
@@ -1272,18 +1309,18 @@ class IndexesSpec extends AnyFunSuite {
     }
     val sp = Indexes.lshTopKIndexed(emb, idxPath, 0L, 10)
       .select(col("vec_id")).as[Long].collect().toSeq
-    val mp = Indexes.lshTopKMultiProbe(emb, idxPath, 0L, 10, nFlips = 2)
+    val mp = Indexes.lshTopKIndexed(emb, idxPath, 0L, 10, nFlips = 2)
       .select(col("vec_id")).as[Long].collect().toSeq
     assert(recallOf(mp) >= recallOf(sp),
       s"multi-probe recall ${recallOf(mp)} below single-probe ${recallOf(sp)}")
     // nFlips = 0 degenerates to exactly the single-probe result
-    val mp0 = Indexes.lshTopKMultiProbe(emb, idxPath, 0L, 10, nFlips = 0)
+    val mp0 = Indexes.lshTopKIndexed(emb, idxPath, 0L, 10, nFlips = 0)
       .collect().toSeq
     assert(mp0 === Indexes.lshTopKIndexed(emb, idxPath, 0L, 10).collect().toSeq)
   }
 
   test("multi-probe plan: still statically pruned, no bucketing pass") {
-    val probe = Indexes.lshTopKMultiProbe(emb, idxPath, 0L, 10, nFlips = 2)
+    val probe = Indexes.lshTopKIndexed(emb, idxPath, 0L, 10, nFlips = 2)
     val plan = probe.queryExecution.executedPlan.toString()
     assert(plan.contains("PartitionFilters"), plan.take(2000))
     assert(!plan.contains("Generate"), "probe plan re-buckets via explode")

@@ -565,15 +565,15 @@ class TextAnalysisSpec extends AnyFunSuite {
     val eligible = corpus.where(col("doc_id") % 2 === 0).select(col("doc_id"))
     val qs = Seq((0L, Seq("vector", "stream")), (1L, Seq("join", "merge")),
       (2L, Seq("quantum"))).toDF("query_id", "terms")
-    val got = TextAnalysis.bm25TopKIndexedBatchFiltered(spark, inv, qs,
-        eligible, k = 10)
+    val got = TextAnalysis.bm25TopKIndexedBatch(spark, inv, qs, k = 10,
+        eligible = Some(eligible))
       .as[(Long, Long, Double)].collect().toSeq
       .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3))
         .sortBy(r => (-r._2, r._1))).toMap
     Seq(0L -> Seq("vector", "stream"), 1L -> Seq("join", "merge"),
       2L -> Seq("quantum")).foreach { case (q, terms) =>
-      val single = TextAnalysis.bm25TopKIndexedFiltered(spark, inv, terms,
-          eligible, k = 10)
+      val single = TextAnalysis.bm25TopKIndexed(spark, inv, terms, k = 10,
+          eligible = Some(eligible))
         .as[(Long, Double)].collect().toSeq
       assert(got.getOrElse(q, Seq.empty) === single, s"query $q")
       assert(single.forall(_._1 % 2 == 0))
@@ -587,8 +587,8 @@ class TextAnalysisSpec extends AnyFunSuite {
     TextAnalysis.writeInvertedIndex(corpus, inv)
     val terms = Seq("vector", "stream", "merge")
     val eligible = corpus.where(col("doc_id") % 2 === 0).select(col("doc_id"))
-    val got = TextAnalysis.bm25TopKIndexedFiltered(spark, inv, terms, eligible,
-        k = 25).as[(Long, Double)].collect().toSeq
+    val got = TextAnalysis.bm25TopKIndexed(spark, inv, terms, k = 25,
+        eligible = Some(eligible)).as[(Long, Double)].collect().toSeq
     // scores must be the UNFILTERED scores (global df/scalars): the
     // filtered ranking is exactly the full ranking restricted to
     // eligible docs, re-cut to k
