@@ -552,9 +552,16 @@ object Dedup {
   /** The banding/join/hamming pass over a precomputed (doc_id, simhash)
     * frame — the ONE implementation behind both the inline path above and
     * the stored-signature path ([[Indexes.simhashNearDupsIndexed]]), so the
-    * two can never drift apart. */
+    * two can never drift apart. Complete only for maxHamming < bands (a
+    * pair at distance `bands` can differ in every chunk), and a chunk
+    * needs at least one of the 60 bits. */
   def simhashNearDupsFromSigs(sh: DataFrame, maxHamming: Int = 3,
                               bands: Int = 4): DataFrame = {
+    require(bands >= 1 && bands <= 60,
+      s"bands must give each chunk at least one of the 60 bits, got $bands")
+    require(maxHamming >= 0 && maxHamming < bands,
+      s"banding is complete only for maxHamming < bands, " +
+        s"got $maxHamming >= $bands")
     val chunkBits = 60 / bands
     val chunks = (0 until bands).map { b =>
       struct(lit(b).as("band"),
@@ -572,305 +579,88 @@ object Dedup {
       .distinct()
   }
 
-  /** Banded Hamming near-dup pass over 64-BIT HEX signatures — the
-    * [[simhashNearDupsFromSigs]] blocking generalized to the image
-    * perceptual-hash family (r14 VERDICT #3: aHash carries 64 bits as
-    * 16 hex chars; the top bit makes a single signed-BIGINT parse
-    * overflow, so the hash rides as two 32-bit halves and the distance
-    * is the sum of the halves' popcounts — exactly the whole-hash
-    * Hamming). COMPLETE for maxHamming < bands by pigeonhole: a pair
-    * within distance d differs in at most d of the `bands` disjoint
-    * chunks, so at least one chunk matches exactly and the pair meets
-    * in that band's bucket — banding is pure blocking, never a recall
-    * trade (MultimodalSpec equates it to brute force). Band keys are
-    * hex SUBSTRINGS (no bit math on the join key at all). Decode
-    * sentinels (empty hex) are dropped before banding, so a corrupt
-    * payload can never collide into a dup pair. Scale shape:
-    * |corpus|·bands exploded rows, bucket-join, exact verify — the
-    * text near-dup asymptote applied to images. */
-  def hammingNearDups64(sigs: DataFrame, idCol: String, hexCol: String,
-                        maxHamming: Int, bands: Int = 8): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < bands,
-      s"banding is complete only for maxHamming < bands, " +
-        s"got $maxHamming >= $bands")
-    // bands-divisibility is enforced once, in banded64 (both entry
-    // points route through it)
-    val a = banded64(sigs, idCol, hexCol, bands, "a")
-    val b = banded64(sigs, idCol, hexCol, bands, "b")
-    a.join(b, Seq("band", "key")).where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), hamming64("a", "b"))
-      .where(col("hamming") <= maxHamming)
-      .distinct()
-  }
-
-  /** INCREMENTAL banded Hamming near-dup — the daily-ingest shape for
-    * the image family (the [[graft.ops.Indexes]] containment-incr
-    * precedent applied to perceptual hashes): a NEW batch of signatures
-    * probed against the committed corpus store, returning
-    * (id_new, id_old, hamming ≤ maxHamming). Same pigeonhole
-    * completeness as [[hammingNearDups64]]; cost is
-    * |batch|·bands ⨝ |corpus|·bands on the band buckets — the corpus
-    * side never self-joins, so a daily batch prices |batch|-bounded
-    * candidates, not corpus². */
-  def hammingNearDups64Incr(batch: DataFrame, corpus: DataFrame,
-                            idCol: String, hexCol: String,
-                            maxHamming: Int, bands: Int = 8): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < bands,
-      s"banding is complete only for maxHamming < bands, " +
-        s"got $maxHamming >= $bands")
-    val n = banded64(batch, idCol, hexCol, bands, "new")
-    val o = banded64(corpus, idCol, hexCol, bands, "old")
-    n.join(o, Seq("band", "key")).where(col("id_new") =!= col("id_old"))
-      .select(col("id_new"), col("id_old"), hamming64("new", "old"))
-      .where(col("hamming") <= maxHamming)
-      .distinct()
-  }
-
-  /** 4-WAY CROSS-DISTANCE banded Hamming near-dup (r18 VERDICT #2 — the
-    * rotation+edit composite server): a pair matches when either image's
-    * PLAIN hash sits within `maxHamming` of ANY of the other's variant
-    * hashes (for rotation robustness the variants are the four
-    * 90°-rotation aHashes, identity included — so the result SUPERSETS
-    * the plain near-dup pairs). This is the distance the min-pick
-    * canonical column cannot serve: a rotated copy WITH an edit can flip
-    * which rotation attains the unsigned min, putting the pair at
-    * canonical Hamming ≫ threshold while the edit itself moved only a
-    * few bits in the ALIGNED rotation — which the cross distance reads
-    * directly.
+  /** Banded Hamming near-dups over 64-bit HEX signatures (16 hex chars,
+    * e.g. the image aHash/dHash and audio energy-hash families) — the
+    * [[simhashNearDupsFromSigs]] blocking for hashes that overflow a
+    * signed BIGINT: each hash rides as two 32-bit halves and its distance
+    * is the sum of the halves' popcounts.
     *
-    * Candidates: the base hash's band keys probed against every variant
-    * hash's band keys, both directions, then pair-normalized. Complete
-    * by the same pigeonhole as [[hammingNearDups64]], per direction: if
-    * min over variants of H(a_base, b_v) ≤ d < bands, then a_base and
-    * the minimizing b_v differ in ≤ d of the `bands` disjoint chunks and
-    * meet in a matching band bucket. The exact confirm computes all
-    * 2·|variants| half-pair popcounts UNROLLED (plan-time `least` chain
-    * — stays in whole-stage codegen, no interpreted HOF) and keeps
-    * min ≤ maxHamming. Scale shape: |corpus|·bands·(|variants|+1)
-    * exploded key rows, bucket-join, O(1) work per candidate — the
-    * hammingNearDups64 asymptote times a small constant. */
-  def hammingNearDups64Cross(sigs: DataFrame, idCol: String,
-                             baseCol: String, variantCols: Seq[String],
-                             maxHamming: Int, bands: Int = 8): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < bands,
-      s"banding is complete only for maxHamming < bands, " +
-        s"got $maxHamming >= $bands")
-    require(variantCols.nonEmpty, "need at least one variant hash column")
-    val aB = banded64(sigs, idCol, baseCol, bands, "a")
-      .select(col("band"), col("key"), col("id_a"))
-    val bB = variantCols.map(vc => banded64(sigs, idCol, vc, bands, "b")
-        .select(col("band"), col("key"), col("id_b")))
-      .reduce(_ unionAll _)
-    val cand = aB.join(bB, Seq("band", "key"))
-      .where(col("id_a") =!= col("id_b"))
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"))
-      .distinct()
-    crossConfirm(cand, sigs, sigs, idCol, baseCol, variantCols,
-      maxHamming, "a", "b")
-  }
-
-  /** INCREMENTAL 4-way cross-distance — the daily-ingest shape for
-    * rotation+edit composites ([[hammingNearDups64Incr]]'s contract over
-    * [[hammingNearDups64Cross]]'s distance): a NEW batch probed against
-    * the committed corpus store, candidates from batch-base×corpus-
-    * variant bands UNIONED with batch-variant×corpus-base bands (the two
-    * directions of the min — either side may be the rotated one), exact
-    * symmetric confirm, corpus never self-joins. Catches what the plain
-    * incremental probe cannot: a landing batch image that is a rotated
-    * (or rotated-and-edited) copy of standing corpus content. */
-  def hammingNearDups64CrossIncr(batch: DataFrame, corpus: DataFrame,
-                                 idCol: String, baseCol: String,
-                                 variantCols: Seq[String], maxHamming: Int,
-                                 bands: Int = 8): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < bands,
-      s"banding is complete only for maxHamming < bands, " +
-        s"got $maxHamming >= $bands")
-    require(variantCols.nonEmpty, "need at least one variant hash column")
-    def bandsOf(side: DataFrame, c: String, suffix: String) =
-      banded64(side, idCol, c, bands, suffix)
-        .select(col("band"), col("key"), col(s"id_$suffix"))
-    val nB = bandsOf(batch, baseCol, "new")
-    val oB = bandsOf(corpus, baseCol, "old")
-    val nV = variantCols.map(bandsOf(batch, _, "new")).reduce(_ unionAll _)
-    val oV = variantCols.map(bandsOf(corpus, _, "old")).reduce(_ unionAll _)
-    val cand = nB.join(oV, Seq("band", "key"))
-      .select(col("id_new"), col("id_old"))
-      .unionAll(nV.join(oB, Seq("band", "key"))
-        .select(col("id_new"), col("id_old")))
-      .where(col("id_new") =!= col("id_old"))
-      .distinct()
-    crossConfirm(cand, batch, corpus, idCol, baseCol, variantCols,
-      maxHamming, "new", "old")
-  }
-
-  /** INCREMENTAL [[hammingNearDups64Multi]] — the daily-ingest shape:
-    * the batch's per-channel bands joined against the corpus's bands of
-    * the SAME channel (rate channels never compare cross-channel),
-    * candidates unioned over channels, confirmed by the ANY-channel
-    * min-distance. The corpus never self-joins. */
-  def hammingNearDups64MultiIncr(batch: DataFrame, corpus: DataFrame,
-                                 idCol: String, hexCols: Seq[String],
-                                 maxHamming: Int,
-                                 bands: Int = 8): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < bands,
-      s"banding is complete only for maxHamming < bands, " +
-        s"got $maxHamming >= $bands")
-    require(hexCols.nonEmpty, "need at least one hash channel")
-    val cand = hexCols.map { c =>
-      banded64(batch, idCol, c, bands, "new")
-        .select(col("band"), col("key"), col("id_new"))
-        .join(banded64(corpus, idCol, c, bands, "old")
-          .select(col("band"), col("key"), col("id_old")), Seq("band", "key"))
-        .where(col("id_new") =!= col("id_old"))
-        .select(col("id_new"), col("id_old"))
-    }.reduce(_ unionAll _).distinct()
-    val dmin = hexCols.indices.map { i =>
-      bit_count(col(s"h${i}hi_new").bitwiseXOR(col(s"h${i}hi_old"))) +
-        bit_count(col(s"h${i}lo_new").bitwiseXOR(col(s"h${i}lo_old")))
-    }.reduce(least(_, _))
-    cand.join(hexHalves(batch, idCol, hexCols, "new", strict = false),
-        Seq("id_new"))
-      .join(hexHalves(corpus, idCol, hexCols, "old", strict = false),
-        Seq("id_old"))
-      .select(col("id_new"), col("id_old"), dmin.cast("long").as("hamming"))
-      .where(col("hamming") <= maxHamming)
-  }
-
-  /** The shared exact confirm of the cross-distance family: join each
-    * side's (base, variants) hash halves onto the candidate pairs and
-    * keep the SYMMETRIC min distance — min over variants of
-    * H(x.base, y.variant) in both directions — within `maxHamming`.
-    * Unrolled `least` chain: stays in whole-stage codegen. */
-  private def crossConfirm(cand: DataFrame, left: DataFrame,
-                           right: DataFrame, idCol: String, baseCol: String,
-                           variantCols: Seq[String], maxHamming: Int,
-                           lSuffix: String, rSuffix: String): DataFrame = {
-    val cols = baseCol +: variantCols
-    def halves(side: DataFrame, suffix: String) =
-      hexHalves(side, idCol, cols, suffix, strict = true)
-    // min over variants of H(side x's BASE, side y's variant i)
-    def dmin(x: String, y: String): Column =
-      variantCols.indices.map { i =>
-        bit_count(col(s"h0hi_$x").bitwiseXOR(col(s"h${i + 1}hi_$y"))) +
-          bit_count(col(s"h0lo_$x").bitwiseXOR(col(s"h${i + 1}lo_$y")))
-      }.reduce(least(_, _))
-    cand.join(halves(left, lSuffix), Seq(s"id_$lSuffix"))
-      .join(halves(right, rSuffix), Seq(s"id_$rSuffix"))
-      .select(col(s"id_$lSuffix"), col(s"id_$rSuffix"),
-        least(dmin(lSuffix, rSuffix), dmin(rSuffix, lSuffix))
-          .cast("long").as("hamming"))
-      .where(col("hamming") <= maxHamming)
-  }
-
-  /** id + per-column (hi, lo) 32-bit halves as longs — the
-    * exact-confirm input shape shared by the cross-distance and
-    * multi-channel families, in two sentinel regimes:
+    * Distance: a row pair's `hamming` is the minimum over `channels` of
+    * H(left row's `x` hash, right row's `y` hash). One plain hash is
+    * `Seq(h -> h)`; same-channel fingerprints (e.g. fixed-rate audio
+    * projections, distinct feature spaces) are `cols.map(c => c -> c)`;
+    * a base hash against variant hashes (e.g. the four 90°-rotation
+    * aHashes, identity included) is
+    * `variants.flatMap(v => Seq(base -> v, v -> base)).distinct`.
     *
-    *  - `strict = true` (the CROSS family / [[crossConfirm]]): rows must
-    *    carry EVERY hash column — the image stores emit sentinels
-    *    all-or-nothing (a corrupt decode blanks the whole row), their
-    *    oracles encode the same all-16 filter, and a mixed row is
-    *    structurally unreachable, so the strict form keeps engine and
-    *    oracle trivially aligned.
-    *  - `strict = false` (the multi-channel family): rows survive with
-    *    ANY comparable column; a sentinel column carries NULL halves,
-    *    its per-channel distance is NULL, and the confirm's `least`
-    *    chain SKIPS it (Spark and DuckDB least both ignore NULLs) — a
-    *    recording comparable on one channel but too short for another
-    *    still pairs on the channel it has, the reachable mixed state
-    *    kept-frame scaling creates (self-review r20 second pass; third
-    *    pass split the regimes so the image oracles' all-16 contract
-    *    stays exact rather than latently divergent). */
-  private def hexHalves(side: DataFrame, idCol: String, cols: Seq[String],
-                        suffix: String, strict: Boolean): DataFrame = {
-    def hi(c: String) = conv(substring(col(c), 1, 8), 16, 10).cast("long")
-    def lo(c: String) = conv(substring(col(c), 9, 8), 16, 10).cast("long")
-    val valid = cols.map(c => length(col(c)) === 16)
-    side.where(if (strict) valid.reduce(_ && _) else valid.reduce(_ || _))
-      .select(col(idCol).as(s"id_$suffix") +:
-        cols.zipWithIndex.flatMap { case (c, i) =>
-          if (strict) Seq(hi(c).as(s"h${i}hi_$suffix"),
-            lo(c).as(s"h${i}lo_$suffix"))
-          else Seq(when(length(col(c)) === 16, hi(c)).as(s"h${i}hi_$suffix"),
-            when(length(col(c)) === 16, lo(c)).as(s"h${i}lo_$suffix"))
-        }: _*)
-  }
-
-  /** Multi-CHANNEL banded Hamming near-dups — the cross-RATE audio
-    * serving op (VERDICT r19 #4): each hex column is one FIXED-rate
-    * projection of the recording ([[graft.ops.Multimodal.xrateTargets]]),
-    * two recordings pair when ANY channel's 64-bit distance fits the
-    * cut, and the reported `hamming` is the min over channels. Unlike
-    * [[hammingNearDups64Cross]] (base banded against VARIANT columns —
-    * the image-rotation geometry, where a rotated copy's plain hash
-    * matches the other image's rotation hash), the rate channels are
-    * DISTINCT feature spaces: comparing a 4 kHz projection against a
-    * 6 kHz projection is meaningless, so banding and confirm both stay
-    * same-channel. Pigeonhole completeness holds per channel — if
-    * channel c's distance is ≤ maxHamming < bands, one of c's bands
-    * matches exactly — so the union of per-channel candidates is
-    * complete for the min-over-channels cut. Candidate volume is
-    * |channels| banded self-joins over committed 8-byte keys; the
-    * confirm is a codegen'd `least` chain, no re-decode. A channel that
-    * is sentinel (too-short projection) on either side contributes a
-    * NULL distance the `least` skips — the pair still reports on any
-    * channel both sides carry ([[hexHalves]]' mixed-sentinel rule). */
-  def hammingNearDups64Multi(sigs: DataFrame, idCol: String,
-                             hexCols: Seq[String], maxHamming: Int,
-                             bands: Int = 8): DataFrame = {
+    * Sentinels: a channel pair gives a distance only when both hashes are
+    * 16 hex chars; otherwise its distance is NULL and the `least` skips
+    * it (Spark and DuckDB `least` both ignore NULLs), so a corrupt or
+    * too-short hash never pairs, while a row still pairs on any channel
+    * both sides carry.
+    *
+    * Pairs: without `corpus`, `sigs` self-joins and the left row is the
+    * one with the smaller id (`id_a < id_b`); with `corpus`, `sigs` is a
+    * batch probed against it, giving directional batch→corpus pairs with
+    * differing ids, and the corpus never self-joins. Either way the
+    * result is (id_a, id_b, hamming ≤ maxHamming), each pair once.
+    *
+    * Complete for maxHamming < bands by pigeonhole: if H(a.x, b.y) ≤ d,
+    * the two hashes differ in at most d of the `bands` disjoint hex
+    * chunks, so one chunk matches exactly and the pair meets in that
+    * band's bucket of channel (x, y)'s join — banding is pure blocking,
+    * never a recall trade. All channels share ONE band join keyed by
+    * (channel, band, hex-substring key), and each banded row carries its
+    * side's hash halves, so the distance is computed on the candidate
+    * row itself, with no confirm join. */
+  def hammingNearDups64(sigs: DataFrame, idCol: String,
+                        channels: Seq[(String, String)], maxHamming: Int,
+                        bands: Int = 8,
+                        corpus: Option[DataFrame] = None): DataFrame = {
+    require(channels.nonEmpty, "need at least one hash channel")
     require(maxHamming >= 0 && maxHamming < bands,
       s"banding is complete only for maxHamming < bands, " +
         s"got $maxHamming >= $bands")
-    require(hexCols.nonEmpty, "need at least one hash channel")
-    val cand = hexCols.map { c =>
-      val a = banded64(sigs, idCol, c, bands, "a")
-        .select(col("band"), col("key"), col("id_a"))
-      val b = banded64(sigs, idCol, c, bands, "b")
-        .select(col("band"), col("key"), col("id_b"))
-      a.join(b, Seq("band", "key")).where(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"))
-    }.reduce(_ unionAll _).distinct()
-    val dmin = hexCols.indices.map { i =>
-      bit_count(col(s"h${i}hi_a").bitwiseXOR(col(s"h${i}hi_b"))) +
-        bit_count(col(s"h${i}lo_a").bitwiseXOR(col(s"h${i}lo_b")))
-    }.reduce(least(_, _))
-    cand.join(hexHalves(sigs, idCol, hexCols, "a", strict = false),
-        Seq("id_a"))
-      .join(hexHalves(sigs, idCol, hexCols, "b", strict = false),
-        Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        dmin.cast("long").as("hamming"))
-      .where(col("hamming") <= maxHamming)
-  }
-
-
-  /** One side of the 64-bit banded join: band keys are hex substrings,
-    * the hash rides as two 32-bit halves (see [[hammingNearDups64]]). */
-  private def banded64(sigs: DataFrame, idCol: String, hexCol: String,
-                       bands: Int, suffix: String): DataFrame = {
     require(bands > 0 && 16 % bands == 0,
       s"bands must divide the 16 hex chars evenly, got $bands")
     val chunkHex = 16 / bands
-    val s = sigs.where(length(col(hexCol)) === 16)
-      .select(col(idCol).as(s"id_$suffix"),
-        conv(substring(col(hexCol), 1, 8), 16, 10).cast("long")
-          .as(s"hi_$suffix"),
-        conv(substring(col(hexCol), 9, 8), 16, 10).cast("long")
-          .as(s"lo_$suffix"),
-        col(hexCol).as("hx"))
-    val chunks = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        substring(col("hx"), b * chunkHex + 1, chunkHex).as("key"))
+    val hashes = channels.flatMap { case (x, y) => Seq(x, y) }.distinct
+    // side `sfx`'s half of hash `h` starting at hex char `from` (1 or 9)
+    def half(h: String, from: Int, sfx: String) =
+      s"h${hashes.indexOf(h)}_${from}_$sfx"
+    // one side of the band join: for each channel, the band keys of that
+    // channel's hash on this side (NULL unless 16 hex chars, so a
+    // sentinel never joins), plus the id and every hash's halves
+    def banded(side: DataFrame, end: ((String, String)) => String,
+               sfx: String) = {
+      val keys = for ((pair, ch) <- channels.zipWithIndex;
+                      c = end(pair); b <- 0 until bands) yield
+        struct(lit(ch).as("ch"), lit(b).as("band"),
+          when(length(col(c)) === 16,
+            substring(col(c), b * chunkHex + 1, chunkHex)).as("key"))
+      val halves = for (h <- hashes; from <- Seq(1, 9)) yield
+        when(length(col(h)) === 16,
+          conv(substring(col(h), from, 8), 16, 10).cast("long"))
+          .as(half(h, from, sfx))
+      side.select((col(idCol).as(s"id_$sfx") +: halves) :+
+          explode(array(keys: _*)).as("k"): _*)
+        .select(col("k.ch").as("ch"), col("k.band").as("band"),
+          col("k.key").as("key"), col("*"))
+        .drop("k")
     }
-    s.select(col(s"id_$suffix"), col(s"hi_$suffix"), col(s"lo_$suffix"),
-        explode(array(chunks: _*)).as("c"))
-      .select(col("c.band").as("band"), col("c.key").as("key"),
-        col(s"id_$suffix"), col(s"hi_$suffix"), col(s"lo_$suffix"))
+    def hamming(x: String, y: String) =
+      bit_count(col(half(x, 1, "a")).bitwiseXOR(col(half(y, 1, "b")))) +
+        bit_count(col(half(x, 9, "a")).bitwiseXOR(col(half(y, 9, "b"))))
+    val keep =
+      if (corpus.isEmpty) col("id_a") < col("id_b")
+      else col("id_a") =!= col("id_b")
+    banded(sigs, _._1, "a")
+      .join(banded(corpus.getOrElse(sigs), _._2, "b"), Seq("ch", "band", "key"))
+      .where(keep)
+      .select(col("id_a"), col("id_b"),
+        channels.map { case (x, y) => hamming(x, y) }.reduce(least(_, _))
+          .cast("long").as("hamming"))
+      .where(col("hamming") <= maxHamming)
+      .distinct()
   }
-
-  private def hamming64(x: String, y: String): Column =
-    (bit_count(col(s"hi_$x").bitwiseXOR(col(s"hi_$y"))) +
-      bit_count(col(s"lo_$x").bitwiseXOR(col(s"lo_$y"))))
-      .cast("long").as("hamming")
 }

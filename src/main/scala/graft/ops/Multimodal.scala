@@ -458,7 +458,7 @@ object Multimodal {
     * fixture generator supplies analytic ground truth by running
     * literally this function over its formula). A ROTATED re-encode's
     * four-rotation multiset equals the original's, so the minima agree
-    * EXACTLY — the r17-audio-resample robustness pattern applied to the
+    * EXACTLY — the audio-resample robustness pattern applied to the
     * image family's commonest missed dup (phone shots re-encoded
     * portrait/landscape).
     *
@@ -466,11 +466,11 @@ object Multimodal {
     * rotations (any Hamming-0 re-encode of a rotated copy); a rotation
     * COMPOSED with an edit can flip which rotation attains the minimum,
     * so the near+rotated composite needs the 4-way cross distance —
-    * SERVED since r19 by [[graft.ops.Dedup.hammingNearDups64Cross]]
-    * (the plain hash banded against all four per-rotation hashes, which
-    * the committed store carries as columns; the genrotn_00 fixture is
-    * generator-REQUIRED to sit past the min-pick at canonical Hamming
-    * ≥ 7 yet within the 4-way distance).
+    * served by [[graft.ops.Dedup.hammingNearDups64]] over base×rotation
+    * channels (the plain hash banded against all four per-rotation
+    * hashes, which the committed store carries as columns; the
+    * genrotn_00 fixture is generator-REQUIRED to sit past the min-pick
+    * at canonical Hamming ≥ 7 yet within the 4-way distance).
     * Block sums do NOT survive rotation when dims aren't multiples of 8
     * (floor boundaries reflect inexactly), so each rotation hashes its
     * own grid view rather than remapping block sums. */

@@ -5103,82 +5103,135 @@ object PipelineQueries {
        |       count(*) OVER (PARTITION BY ahash_hex)::BIGINT AS group_size
        |FROM m ORDER BY name""".stripMargin
 
-  /** Perceptual-hash image NEAR-dup pairs (r14 VERDICT #3 — the last
-    * pipeline pillar dedup didn't reach): decode → aHash64 → the SAME
-    * banded Hamming blocking the text SimHash family uses
-    * ([[graft.ops.Dedup.hammingNearDups64]]; 8 bands × 8 bits, complete
-    * for the distance-6 cut by pigeonhole). Catches re-encoded /
-    * re-rendered images a byte digest or exact-hash group
+  /** The live rows of the committed image hash store
+    * ([[graft.ops.Indexes.ensureImageHashIndex]]): the ImageIO decode —
+    * the expensive pass — runs once per corpus fingerprint, and the
+    * near-dup queries read 16 bytes per hash of committed state. */
+  private def imageSigs(s: SparkSession): DataFrame =
+    graft.ops.Stores.live(s,
+      graft.ops.Indexes.ensureImageHashIndex(s, imageFixtureDir), "name")
+
+  /** The one body of the media near-dup pair queries:
+    * [[graft.ops.Dedup.hammingNearDups64]] over store rows at the
+    * distance-6 cut, 8 bands × 8 bits. Without `batch` the result is the
+    * (name_a < name_b) pairs; with it the rows matching `batch` probe the
+    * rest — the daily-ingest question "does my new batch duplicate
+    * anything I already have?" — as (name_new, name_old), and the
+    * standing corpus never self-joins. */
+  private def storeNearDups(sigs: DataFrame, channels: Seq[(String, String)],
+                            batch: Option[Column] = None): DataFrame = {
+    val (a, b) =
+      if (batch.isEmpty) ("name_a", "name_b") else ("name_new", "name_old")
+    Dedup.hammingNearDups64(batch.fold(sigs)(sigs.where), "name", channels,
+        maxHamming = 6, bands = 8, corpus = batch.map(p => sigs.where(!p)))
+      .select(col("id_a").as(a), col("id_b").as(b), col("hamming"))
+      .orderBy(col(a), col(b))
+  }
+
+  /** DuckDB 64-bit hex Hamming of `x` vs `y`: the popcounts of the two
+    * 32-bit halves' xor, summed. `br1` is the break before each second
+    * xor operand, `br2` the break before the `+`. */
+  private def duckHam(x: String, y: String, br1: String, br2: String): String =
+    s"bit_count(xor(('0x' || substr($x, 1, 8))::BIGINT,$br1('0x' || substr($y, 1, 8))::BIGINT))" +
+      s"$br2+ bit_count(xor(('0x' || substr($x, 9, 8))::BIGINT,$br1('0x' || substr($y, 9, 8))::BIGINT))"
+
+  /** [[duckHam]] of column `c` on tables `a`/`b`, parenthesised, over four
+    * lines indented by `ind`. */
+  private def duckHamLines(c: String, ind: Int): String =
+    s"(${duckHam(s"a.$c", s"b.$c", "\n" + " " * (ind + 16), "\n" + " " * ind)})"
+
+  /** The manifest CTE body of the near-dup oracles. */
+  private def duckManifest(manifest: String, cols: String,
+                           where: String): String =
+    s"""SELECT name, $cols
+       |           FROM read_parquet('$manifest/*.parquet')
+       |           WHERE $where""".stripMargin
+
+  /** Brute-force pair oracle: every pair of manifest rows `m` joined
+    * `on`, with distance expression `dist` (tables `a`/`b`), kept within
+    * Hamming 6. */
+  private def duckPairsSql(m: String, dist: String,
+                           names: (String, String) = ("name_a", "name_b"),
+                           on: String = " ON a.name < b.name"): String = {
+    val (a, b) = names
+    s"""WITH m AS ($m),
+       |p AS (SELECT a.name AS $a, b.name AS $b,
+       |        $dist::BIGINT AS hamming
+       |      FROM m a JOIN m b$on)
+       |SELECT $a, $b, hamming FROM p
+       |WHERE hamming <= 6 ORDER BY $a, $b""".stripMargin
+  }
+
+  /** [[duckPairsSql]] over one plain hash column `c`; `filter` extends
+    * the manifest's WHERE. */
+  private def duckPlainPairsSql(manifest: String, c: String,
+                                filter: String = ""): String =
+    duckPairsSql(duckManifest(manifest, c, s"len($c) = 16$filter"),
+      duckHamLines(c, 7))
+
+  /** The incremental plain oracle: batch rows (`a`, matched by `on`)
+    * against the standing rows (`b`) over hash column `c`. */
+  private def duckIncrSql(manifest: String, c: String, on: String): String =
+    s"""WITH m AS (${duckManifest(manifest, c, s"len($c) = 16")})
+       |SELECT a.name AS name_new, b.name AS name_old,
+       |       ${duckHamLines(c, 6)}::BIGINT AS hamming
+       |FROM m a JOIN m b
+       |  ON $on
+       |WHERE ${duckHamLines(c, 5)} <= 6
+       |ORDER BY name_new, name_old""".stripMargin
+
+  /** The dup-cluster oracle over hash column `c`: brute-forced pairs
+    * closed with a recursive reach CTE, each name labelled by its
+    * cluster's min name and size (singletons report themselves at 1). */
+  private def duckClustersSql(manifest: String, c: String): String =
+    s"""WITH RECURSIVE
+       |m AS (SELECT name, $c
+       |      FROM read_parquet('$manifest/*.parquet')
+       |      WHERE len($c) = 16),
+       |p AS (SELECT a.name AS name_a, b.name AS name_b
+       |      FROM m a JOIN m b ON a.name < b.name
+       |      WHERE ${duckHamLines(c, 11)} <= 6),
+       |sym AS (SELECT name_a AS s, name_b AS d FROM p
+       |        UNION SELECT name_b, name_a FROM p),
+       |reach(s, d) AS (
+       |  SELECT s, d FROM sym
+       |  UNION
+       |  SELECT r.s, y.d FROM reach r JOIN sym y ON r.d = y.s),
+       |comp AS (SELECT s AS name, least(s, min(d)) AS dup_rep
+       |         FROM reach GROUP BY s),
+       |sizes AS (SELECT dup_rep, count(*)::BIGINT AS cluster_size
+       |          FROM comp GROUP BY dup_rep)
+       |SELECT m.name AS name, coalesce(c.dup_rep, m.name) AS dup_rep,
+       |       coalesce(z.cluster_size, 1)::BIGINT AS cluster_size
+       |FROM m LEFT JOIN comp c ON m.name = c.name
+       |LEFT JOIN sizes z ON c.dup_rep = z.dup_rep
+       |ORDER BY m.name""".stripMargin
+
+  /** Perceptual-hash image NEAR-dup pairs: decode → aHash64 → the same
+    * banded Hamming blocking the text SimHash family uses. Catches
+    * re-encoded / re-rendered images a byte digest or exact-hash group
     * (q_image_phash) cannot: the fixture's real chart PNGs pair at
     * Hamming 4 and 6 while their bytes share nothing. The oracle never
     * runs a decoder OR the banding — it brute-forces all pairs over the
     * analytic manifest's frozen hashes, so the blocking's completeness
     * is hash-verified, not assumed. */
-  /** Served from the COMMITTED hash store
-    * ([[graft.ops.Indexes.ensureImageHashIndex]]): the ImageIO decode —
-    * the expensive pass — runs once per corpus fingerprint; the banded
-    * near-dup join reads 16 bytes/image of committed state, the 100 TB
-    * shape (decode-once, serve-many). */
   def imageNearDups(s: SparkSession, d: String): DataFrame =
-    graft.ops.Dedup.hammingNearDups64(
-        graft.ops.Stores.live(s,
-          graft.ops.Indexes.ensureImageHashIndex(s, imageFixtureDir), "name"),
-        "name", "ahash_hex", maxHamming = 6, bands = 8)
-      .select(col("id_a").as("name_a"), col("id_b").as("name_b"),
-        col("hamming"))
-      .orderBy(col("name_a"), col("name_b"))
+    storeNearDups(imageSigs(s), Seq("ahash_hex" -> "ahash_hex"))
 
-  val imageNearDupsSql: String =
-    s"""WITH m AS (SELECT name, ahash_hex
-       |           FROM read_parquet('$imageManifestPath/*.parquet')
-       |           WHERE len(ahash_hex) = 16),
-       |p AS (SELECT a.name AS name_a, b.name AS name_b,
-       |        (bit_count(xor(('0x' || substr(a.ahash_hex, 1, 8))::BIGINT,
-       |                       ('0x' || substr(b.ahash_hex, 1, 8))::BIGINT))
-       |       + bit_count(xor(('0x' || substr(a.ahash_hex, 9, 8))::BIGINT,
-       |                       ('0x' || substr(b.ahash_hex, 9, 8))::BIGINT)))::BIGINT AS hamming
-       |      FROM m a JOIN m b ON a.name < b.name)
-       |SELECT name_a, name_b, hamming FROM p
-       |WHERE hamming <= 6 ORDER BY name_a, name_b""".stripMargin
+  val imageNearDupsSql: String = duckPlainPairsSql(imageManifestPath, "ahash_hex")
 
-  /** INCREMENTAL image near-dup — the daily-ingest question for the
-    * image corpus ("does my new batch duplicate anything I already
-    * have?"): the batch's hashes banded-joined against the committed
-    * store, never a corpus self-join ([[graft.ops.Dedup
-    * .hammingNearDups64Incr]]; the q_containment_incr shape for
+  /** INCREMENTAL image near-dup (the q_containment_incr shape for
     * images). The fixture split simulates it: the genv_* re-encodes
     * arrive as the batch, the rest is the standing corpus — each
     * variant must pair with its original at Hamming 0, and nothing
     * else within 6. Oracle: the same split brute-forced over the
     * frozen manifest. */
-  def imageNearDupsIncr(s: SparkSession, d: String): DataFrame = {
-    val sigs = graft.ops.Stores.live(s,
-      graft.ops.Indexes.ensureImageHashIndex(s, imageFixtureDir), "name")
-    graft.ops.Dedup.hammingNearDups64Incr(
-        sigs.where(col("name").startsWith("genv_")),
-        sigs.where(!col("name").startsWith("genv_")),
-        "name", "ahash_hex", maxHamming = 6, bands = 8)
-      .select(col("id_new").as("name_new"), col("id_old").as("name_old"),
-        col("hamming"))
-      .orderBy(col("name_new"), col("name_old"))
-  }
+  def imageNearDupsIncr(s: SparkSession, d: String): DataFrame =
+    storeNearDups(imageSigs(s), Seq("ahash_hex" -> "ahash_hex"),
+      Some(col("name").startsWith("genv_")))
 
-  val imageNearDupsIncrSql: String =
-    s"""WITH m AS (SELECT name, ahash_hex
-       |           FROM read_parquet('$imageManifestPath/*.parquet')
-       |           WHERE len(ahash_hex) = 16)
-       |SELECT a.name AS name_new, b.name AS name_old,
-       |       (bit_count(xor(('0x' || substr(a.ahash_hex, 1, 8))::BIGINT,
-       |                      ('0x' || substr(b.ahash_hex, 1, 8))::BIGINT))
-       |      + bit_count(xor(('0x' || substr(a.ahash_hex, 9, 8))::BIGINT,
-       |                      ('0x' || substr(b.ahash_hex, 9, 8))::BIGINT)))::BIGINT AS hamming
-       |FROM m a JOIN m b
-       |  ON starts_with(a.name, 'genv_') AND NOT starts_with(b.name, 'genv_')
-       |WHERE (bit_count(xor(('0x' || substr(a.ahash_hex, 1, 8))::BIGINT,
-       |                     ('0x' || substr(b.ahash_hex, 1, 8))::BIGINT))
-       |     + bit_count(xor(('0x' || substr(a.ahash_hex, 9, 8))::BIGINT,
-       |                     ('0x' || substr(b.ahash_hex, 9, 8))::BIGINT))) <= 6
-       |ORDER BY name_new, name_old""".stripMargin
+  val imageNearDupsIncrSql: String = duckIncrSql(imageManifestPath, "ahash_hex",
+    "starts_with(a.name, 'genv_') AND NOT starts_with(b.name, 'genv_')")
 
   /** Gradient-sign (dHash) image near-dup pairs — the brightness-robust
     * twin of [[imageNearDups]], served from the SAME committed store
@@ -5191,26 +5244,9 @@ object PipelineQueries {
     * appears HERE and only here. Oracle: brute force over the
     * manifest's frozen dhash_hex. */
   def imageNearDupsDhash(s: SparkSession, d: String): DataFrame =
-    graft.ops.Dedup.hammingNearDups64(
-        graft.ops.Stores.live(s,
-          graft.ops.Indexes.ensureImageHashIndex(s, imageFixtureDir), "name"),
-        "name", "dhash_hex", maxHamming = 6, bands = 8)
-      .select(col("id_a").as("name_a"), col("id_b").as("name_b"),
-        col("hamming"))
-      .orderBy(col("name_a"), col("name_b"))
+    storeNearDups(imageSigs(s), Seq("dhash_hex" -> "dhash_hex"))
 
-  val imageNearDupsDhashSql: String =
-    s"""WITH m AS (SELECT name, dhash_hex
-       |           FROM read_parquet('$imageManifestPath/*.parquet')
-       |           WHERE len(dhash_hex) = 16),
-       |p AS (SELECT a.name AS name_a, b.name AS name_b,
-       |        (bit_count(xor(('0x' || substr(a.dhash_hex, 1, 8))::BIGINT,
-       |                       ('0x' || substr(b.dhash_hex, 1, 8))::BIGINT))
-       |       + bit_count(xor(('0x' || substr(a.dhash_hex, 9, 8))::BIGINT,
-       |                       ('0x' || substr(b.dhash_hex, 9, 8))::BIGINT)))::BIGINT AS hamming
-       |      FROM m a JOIN m b ON a.name < b.name)
-       |SELECT name_a, name_b, hamming FROM p
-       |WHERE hamming <= 6 ORDER BY name_a, name_b""".stripMargin
+  val imageNearDupsDhashSql: String = duckPlainPairsSql(imageManifestPath, "dhash_hex")
 
   /** ROTATION-robust image near-dup pairs — the third fingerprint off
     * the same committed store ([[graft.ops.Multimodal
@@ -5222,141 +5258,80 @@ object PipelineQueries {
     * resample twin, for rotation. Oracle: brute force over the
     * manifest's analytic rhash_hex. */
   def imageNearDupsRotated(s: SparkSession, d: String): DataFrame =
-    graft.ops.Dedup.hammingNearDups64(
-        graft.ops.Stores.live(s,
-          graft.ops.Indexes.ensureImageHashIndex(s, imageFixtureDir), "name"),
-        "name", "rhash_hex", maxHamming = 6, bands = 8)
-      .select(col("id_a").as("name_a"), col("id_b").as("name_b"),
-        col("hamming"))
-      .orderBy(col("name_a"), col("name_b"))
+    storeNearDups(imageSigs(s), Seq("rhash_hex" -> "rhash_hex"))
 
-  val imageNearDupsRotatedSql: String =
-    s"""WITH m AS (SELECT name, rhash_hex
-       |           FROM read_parquet('$imageManifestPath/*.parquet')
-       |           WHERE len(rhash_hex) = 16),
-       |p AS (SELECT a.name AS name_a, b.name AS name_b,
-       |        (bit_count(xor(('0x' || substr(a.rhash_hex, 1, 8))::BIGINT,
-       |                       ('0x' || substr(b.rhash_hex, 1, 8))::BIGINT))
-       |       + bit_count(xor(('0x' || substr(a.rhash_hex, 9, 8))::BIGINT,
-       |                       ('0x' || substr(b.rhash_hex, 9, 8))::BIGINT)))::BIGINT AS hamming
-       |      FROM m a JOIN m b ON a.name < b.name)
-       |SELECT name_a, name_b, hamming FROM p
-       |WHERE hamming <= 6 ORDER BY name_a, name_b""".stripMargin
+  val imageNearDupsRotatedSql: String = duckPlainPairsSql(imageManifestPath, "rhash_hex")
 
-  /** ROTATION+EDIT composite image near-dups — the 4-WAY CROSS-DISTANCE
-    * probe (r18 VERDICT #2): a pair matches when either image's PLAIN
-    * aHash sits within Hamming 6 of ANY of the other's four per-rotation
-    * aHashes, which the committed store carries as columns
-    * ([[graft.ops.Dedup.hammingNearDups64Cross]] — base hash banded
-    * against every rotation's bands, pigeonhole-complete per direction,
-    * exact min-distance confirm unrolled in codegen). This is the
-    * distance the min-pick canonical column cannot answer: the fixture's
-    * genrotn_00 (a 90°-rotated copy of a synthetic original WITH a
-    * one-band brightness edit) is generator-REQUIRED to sit at canonical
-    * Hamming ≥ 7 from its original — the min-pick FLIPS, so
+  /** The 4-way cross distance of the rotation probes: the plain aHash
+    * against each of the four per-rotation aHashes (identity included),
+    * in both directions — the store carries the rotations as columns. */
+  private val rotationChannels: Seq[(String, String)] =
+    Seq("ahash_hex", "r90_hex", "r180_hex", "r270_hex")
+      .flatMap(v => Seq("ahash_hex" -> v, v -> "ahash_hex")).distinct
+
+  /** The rotation oracles: the 7-term least over the manifest's frozen
+    * per-rotation hashes, for pairs `names` joined `on`. */
+  private def duckRotSql(names: (String, String), on: String): String = {
+    val terms = (("a.ahash_hex", "b.ahash_hex") +:
+      Seq("a" -> "b", "b" -> "a").flatMap { case (x, y) =>
+        Seq("r90_hex", "r180_hex", "r270_hex").map(v => (s"$x.ahash_hex", s"$y.$v"))
+      }).map { case (x, y) => s"(${duckHam(x, y, " ", " ")})" }
+    duckPairsSql(
+      duckManifest(imageManifestPath, "ahash_hex, r90_hex, r180_hex, r270_hex",
+        "len(ahash_hex) = 16"),
+      terms.mkString("least(", ",\n          ", ")"), names, on)
+  }
+
+  /** ROTATION+EDIT composite image near-dups — the 4-way cross-distance
+    * probe: a pair matches when either image's PLAIN aHash sits within
+    * Hamming 6 of ANY of the other's four per-rotation aHashes. This is
+    * the distance the min-pick canonical column cannot answer: the
+    * fixture's genrotn_00 (a 90°-rotated copy of a synthetic original
+    * WITH a one-band brightness edit) is generator-REQUIRED to sit at
+    * canonical Hamming ≥ 7 from its original — the min-pick FLIPS, so
     * q_image_near_dups_rotated provably misses it — while its 4-way
     * distance is ≤ 6, so this query finds it. Identity is among the
     * variants, so the result SUPERSETS the plain near-dup pairs. Oracle:
     * brute force over the manifest's frozen per-rotation hashes with the
     * identical 7-term least. */
   def imageNearDupsRotNear(s: SparkSession, d: String): DataFrame =
-    graft.ops.Dedup.hammingNearDups64Cross(
-        graft.ops.Stores.live(s,
-          graft.ops.Indexes.ensureImageHashIndex(s, imageFixtureDir), "name"),
-        "name", "ahash_hex",
-        Seq("ahash_hex", "r90_hex", "r180_hex", "r270_hex"),
-        maxHamming = 6, bands = 8)
-      .select(col("id_a").as("name_a"), col("id_b").as("name_b"),
-        col("hamming"))
-      .orderBy(col("name_a"), col("name_b"))
+    storeNearDups(imageSigs(s), rotationChannels)
 
-  val imageNearDupsRotNearSql: String = {
-    def dd(x: String, y: String) =
-      s"(bit_count(xor(('0x' || substr($x, 1, 8))::BIGINT, ('0x' || substr($y, 1, 8))::BIGINT))" +
-        s" + bit_count(xor(('0x' || substr($x, 9, 8))::BIGINT, ('0x' || substr($y, 9, 8))::BIGINT)))"
-    val terms = Seq(
-      dd("a.ahash_hex", "b.ahash_hex"),
-      dd("a.ahash_hex", "b.r90_hex"), dd("a.ahash_hex", "b.r180_hex"),
-      dd("a.ahash_hex", "b.r270_hex"),
-      dd("b.ahash_hex", "a.r90_hex"), dd("b.ahash_hex", "a.r180_hex"),
-      dd("b.ahash_hex", "a.r270_hex")).mkString(",\n          ")
-    s"""WITH m AS (SELECT name, ahash_hex, r90_hex, r180_hex, r270_hex
-       |           FROM read_parquet('$imageManifestPath/*.parquet')
-       |           WHERE len(ahash_hex) = 16),
-       |p AS (SELECT a.name AS name_a, b.name AS name_b,
-       |        least($terms)::BIGINT AS hamming
-       |      FROM m a JOIN m b ON a.name < b.name)
-       |SELECT name_a, name_b, hamming FROM p
-       |WHERE hamming <= 6 ORDER BY name_a, name_b""".stripMargin
-  }
+  val imageNearDupsRotNearSql: String =
+    duckRotSql(("name_a", "name_b"), " ON a.name < b.name")
 
   /** INCREMENTAL rotation+edit composite probe — the daily-ingest twin
-    * of [[imageNearDupsRotNear]] ([[graft.ops.Dedup
-    * .hammingNearDups64CrossIncr]]): the genv_* re-encodes arrive as the
-    * batch and probe the standing corpus under the 4-WAY cross distance,
+    * of [[imageNearDupsRotNear]]: the genv_* re-encodes arrive as the
+    * batch and probe the standing corpus under the 4-way cross distance,
     * so a landing image that is a ROTATED (or rotated-and-edited) copy
     * of standing content pairs where the plain incremental probe
     * (q_image_near_dups_incr) is blind — the fixture pins it: genv_00's
     * plain hash sits within 1 of genrot_00's UN-rotation variant, a
-    * cross-orientation batch/corpus dup only this probe reports. The
-    * corpus side never self-joins. Oracle: the same split brute-forced
-    * over the manifest's frozen per-rotation hashes with the identical
-    * 7-term least. */
-  def imageNearDupsRotIncr(s: SparkSession, d: String): DataFrame = {
-    val sigs = graft.ops.Stores.live(s,
-      graft.ops.Indexes.ensureImageHashIndex(s, imageFixtureDir), "name")
-    graft.ops.Dedup.hammingNearDups64CrossIncr(
-        sigs.where(col("name").startsWith("genv_")),
-        sigs.where(!col("name").startsWith("genv_")),
-        "name", "ahash_hex",
-        Seq("ahash_hex", "r90_hex", "r180_hex", "r270_hex"),
-        maxHamming = 6, bands = 8)
-      .select(col("id_new").as("name_new"), col("id_old").as("name_old"),
-        col("hamming"))
-      .orderBy(col("name_new"), col("name_old"))
-  }
+    * cross-orientation batch/corpus dup only this probe reports. Oracle:
+    * the same split brute-forced over the manifest's frozen per-rotation
+    * hashes with the identical 7-term least. */
+  def imageNearDupsRotIncr(s: SparkSession, d: String): DataFrame =
+    storeNearDups(imageSigs(s), rotationChannels,
+      Some(col("name").startsWith("genv_")))
 
-  val imageNearDupsRotIncrSql: String = {
-    def dd(x: String, y: String) =
-      s"(bit_count(xor(('0x' || substr($x, 1, 8))::BIGINT, ('0x' || substr($y, 1, 8))::BIGINT))" +
-        s" + bit_count(xor(('0x' || substr($x, 9, 8))::BIGINT, ('0x' || substr($y, 9, 8))::BIGINT)))"
-    val terms = Seq(
-      dd("a.ahash_hex", "b.ahash_hex"),
-      dd("a.ahash_hex", "b.r90_hex"), dd("a.ahash_hex", "b.r180_hex"),
-      dd("a.ahash_hex", "b.r270_hex"),
-      dd("b.ahash_hex", "a.r90_hex"), dd("b.ahash_hex", "a.r180_hex"),
-      dd("b.ahash_hex", "a.r270_hex")).mkString(",\n          ")
-    s"""WITH m AS (SELECT name, ahash_hex, r90_hex, r180_hex, r270_hex
-       |           FROM read_parquet('$imageManifestPath/*.parquet')
-       |           WHERE len(ahash_hex) = 16),
-       |p AS (SELECT a.name AS name_new, b.name AS name_old,
-       |        least($terms)::BIGINT AS hamming
-       |      FROM m a JOIN m b
-       |        ON starts_with(a.name, 'genv_') AND NOT starts_with(b.name, 'genv_'))
-       |SELECT name_new, name_old, hamming FROM p
-       |WHERE hamming <= 6 ORDER BY name_new, name_old""".stripMargin
-  }
+  val imageNearDupsRotIncrSql: String = duckRotSql(("name_new", "name_old"),
+    "\n        ON starts_with(a.name, 'genv_') AND NOT starts_with(b.name, 'genv_')")
 
-  /** Image DUP CLUSTERS: the near-dup pair set closed into connected
-    * components through the SAME distributed pointer-jumping machinery
-    * text dedup uses ([[graft.ops.Dedup.connectedComponents]] over
-    * 64-bit name IDENTITY ids ([[graft.ops.TextOps.nodeId64]] — a
-    * collision here merges two unrelated dup clusters, so cluster
-    * identity gets the full 64-bit birthday margin), then each
-    * cluster labeled by its min-name representative with its size;
-    * singleton images report themselves at size 1, so the output is the
-    * complete dedup-decision panel for the image corpus. The oracle
-    * brute-forces pairs from the frozen manifest and closes them with a
-    * recursive reach CTE — neither the decoder, the banding, nor the
-    * pointer jumping is trusted, only reproduced. */
-  def imageDupClusters(s: SparkSession, d: String): DataFrame = {
-    val sigs = graft.ops.Stores.live(s,
-      graft.ops.Indexes.ensureImageHashIndex(s, imageFixtureDir), "name")
-    val pairs = graft.ops.Dedup.hammingNearDups64(
-      sigs, "name", "ahash_hex", maxHamming = 6, bands = 8)
-    val ids = sigs.where(length(col("ahash_hex")) === 16)
+  /** The dup-cluster panel over plain hash column `hashCol`: the
+    * near-dup pair set closed into connected components through the SAME
+    * distributed pointer-jumping machinery text dedup uses
+    * ([[graft.ops.Dedup.connectedComponents]] over 64-bit name IDENTITY
+    * ids ([[graft.ops.TextOps.nodeId64]] — a collision here merges two
+    * unrelated dup clusters, so cluster identity gets the full 64-bit
+    * birthday margin)), then each cluster labeled by its min-name
+    * representative with its size; singletons report themselves at
+    * size 1, so the output is the complete dedup-decision panel. */
+  private def dupClusters(sigs: DataFrame, hashCol: String): DataFrame = {
+    val pairs = Dedup.hammingNearDups64(
+      sigs, "name", Seq(hashCol -> hashCol), maxHamming = 6, bands = 8)
+    val ids = sigs.where(length(col(hashCol)) === 16)
       .select(col("name"), TextOps.nodeId64(col("name")).as("node"))
-    val cc = graft.ops.Dedup.connectedComponents(
+    val cc = Dedup.connectedComponents(
       pairs.select(TextOps.nodeId64(col("id_a")).as("doc_a"),
         TextOps.nodeId64(col("id_b")).as("doc_b")))
     val members = ids.join(cc, ids("node") === cc("doc_id"))
@@ -5378,32 +5353,14 @@ object PipelineQueries {
       .orderBy(col("name"))
   }
 
-  val imageDupClustersSql: String =
-    s"""WITH RECURSIVE
-       |m AS (SELECT name, ahash_hex
-       |      FROM read_parquet('$imageManifestPath/*.parquet')
-       |      WHERE len(ahash_hex) = 16),
-       |p AS (SELECT a.name AS name_a, b.name AS name_b
-       |      FROM m a JOIN m b ON a.name < b.name
-       |      WHERE (bit_count(xor(('0x' || substr(a.ahash_hex, 1, 8))::BIGINT,
-       |                           ('0x' || substr(b.ahash_hex, 1, 8))::BIGINT))
-       |           + bit_count(xor(('0x' || substr(a.ahash_hex, 9, 8))::BIGINT,
-       |                           ('0x' || substr(b.ahash_hex, 9, 8))::BIGINT))) <= 6),
-       |sym AS (SELECT name_a AS s, name_b AS d FROM p
-       |        UNION SELECT name_b, name_a FROM p),
-       |reach(s, d) AS (
-       |  SELECT s, d FROM sym
-       |  UNION
-       |  SELECT r.s, y.d FROM reach r JOIN sym y ON r.d = y.s),
-       |comp AS (SELECT s AS name, least(s, min(d)) AS dup_rep
-       |         FROM reach GROUP BY s),
-       |sizes AS (SELECT dup_rep, count(*)::BIGINT AS cluster_size
-       |          FROM comp GROUP BY dup_rep)
-       |SELECT m.name AS name, coalesce(c.dup_rep, m.name) AS dup_rep,
-       |       coalesce(z.cluster_size, 1)::BIGINT AS cluster_size
-       |FROM m LEFT JOIN comp c ON m.name = c.name
-       |LEFT JOIN sizes z ON c.dup_rep = z.dup_rep
-       |ORDER BY m.name""".stripMargin
+  /** Image DUP CLUSTERS ([[dupClusters]] over the aHash). The oracle
+    * brute-forces pairs from the frozen manifest and closes them with a
+    * recursive reach CTE — neither the decoder, the banding, nor the
+    * pointer jumping is trusted, only reproduced. */
+  def imageDupClusters(s: SparkSession, d: String): DataFrame =
+    dupClusters(imageSigs(s), "ahash_hex")
+
+  val imageDupClustersSql: String = duckClustersSql(imageManifestPath, "ahash_hex")
 
   /** Committed audio fixture (see graft.tools.GenAudioFixture): 12
     * formula-generated 16-bit PCM WAVs with analytic ground truth. */
@@ -5412,25 +5369,25 @@ object PipelineQueries {
   val audioManifestPath: String = sys.env.getOrElse("SPARK_GRAFT_AUDIO_MANIFEST",
     "/root/repo/fixtures/audio_manifest.parquet")
 
-  /** REGISTERED equivalence for the STREAM-MAINTAINED image store
-    * (r15/r16 carried ask #8 — promoting the EventStreamsSpec CDC
-    * assertion into a CORRECTNESS row, the q_dedup_components_distributed
-    * precedent): drive [[graft.streaming.EventStreams.imageHashCdcStream]]
-    * over the committed fixture with a DETERMINISTIC change script —
-    * adds split across two micro-batches, a delete landing with the
-    * second, a stream STOP, a further delete landing while the stream is
-    * DOWN, and a checkpoint restart to drain it — then serve the
-    * near-dup probe from the maintained store. The oracle knows nothing
-    * of streams: it brute-forces the pairs of (all adds − all deletes)
-    * from the frozen manifest, so a hash match proves maintained-store
-    * serving == survivor-rebuild truth, across a restart, every round. */
-  /** The shared stream-equivalence harness (self-review: the image and
-    * audio twins differed only in fixture dir, stream constructor, hash
-    * column, and delete names — one lifecycle script, two payloads):
-    * land half the fixture as adds, drain; land the rest plus the first
-    * delete in one mixed batch, drain, STOP; land the second delete
-    * while the stream is DOWN; restart from the checkpoint, drain; then
-    * serve the banded near-dup probe from the maintained store. */
+  /** The live rows of the committed audio hash store
+    * ([[graft.ops.Indexes.ensureAudioHashIndex]]): decode-once,
+    * serve-many. */
+  private def audioSigs(s: SparkSession): DataFrame =
+    graft.ops.Stores.live(s,
+      graft.ops.Indexes.ensureAudioHashIndex(s, audioFixtureDir), "name")
+
+  /** REGISTERED equivalence for the STREAM-MAINTAINED hash stores (the
+    * EventStreamsSpec CDC assertion promoted into a CORRECTNESS row, the
+    * q_dedup_components_distributed precedent). One lifecycle script,
+    * two payloads (fixture dir, stream constructor, hash column, delete
+    * names): land half the fixture as adds, drain; land the rest plus
+    * the first delete in one mixed batch, drain, STOP; land the second
+    * delete while the stream is DOWN; restart from the checkpoint,
+    * drain; then serve the banded near-dup probe from the maintained
+    * store. The oracle knows nothing of streams: it brute-forces the
+    * pairs of (all adds − all deletes) from the frozen manifest, so a
+    * hash match proves maintained-store serving == survivor-rebuild
+    * truth, across a restart, every round. */
   private def storeStreamEquiv(s: SparkSession, fixtureDir: String,
       hashCol: String, deleteDuring: String, deleteDown: String,
       stream: (DataFrame, String, String) =>
@@ -5461,11 +5418,8 @@ object PipelineQueries {
     q1.processAllAvailable(); q1.stop()
     land(Seq("delete" -> deleteDown)) // lands while the stream is DOWN
     val q2 = start(); q2.processAllAvailable(); q2.stop()
-    graft.ops.Dedup.hammingNearDups64(graft.ops.Stores.live(s, store, "name"),
-        "name", hashCol, maxHamming = 6, bands = 8)
-      .select(col("id_a").as("name_a"), col("id_b").as("name_b"),
-        col("hamming"))
-      .orderBy(col("name_a"), col("name_b"))
+    storeNearDups(graft.ops.Stores.live(s, store, "name"),
+      Seq(hashCol -> hashCol))
   }
 
   def imageStoreStreamEquiv(s: SparkSession, d: String): DataFrame =
@@ -5473,19 +5427,8 @@ object PipelineQueries {
       deleteDuring = "gen_00.png", deleteDown = "genv_01.png",
       stream = graft.streaming.EventStreams.imageHashCdcStream)
 
-  val imageStoreStreamEquivSql: String =
-    s"""WITH m AS (SELECT name, ahash_hex
-       |           FROM read_parquet('$imageManifestPath/*.parquet')
-       |           WHERE len(ahash_hex) = 16
-       |             AND name NOT IN ('gen_00.png', 'genv_01.png')),
-       |p AS (SELECT a.name AS name_a, b.name AS name_b,
-       |        (bit_count(xor(('0x' || substr(a.ahash_hex, 1, 8))::BIGINT,
-       |                       ('0x' || substr(b.ahash_hex, 1, 8))::BIGINT))
-       |       + bit_count(xor(('0x' || substr(a.ahash_hex, 9, 8))::BIGINT,
-       |                       ('0x' || substr(b.ahash_hex, 9, 8))::BIGINT)))::BIGINT AS hamming
-       |      FROM m a JOIN m b ON a.name < b.name)
-       |SELECT name_a, name_b, hamming FROM p
-       |WHERE hamming <= 6 ORDER BY name_a, name_b""".stripMargin
+  val imageStoreStreamEquivSql: String = duckPlainPairsSql(imageManifestPath,
+    "ahash_hex", "\n             AND name NOT IN ('gen_00.png', 'genv_01.png')")
 
   /** [[imageStoreStreamEquiv]] for the AUDIO store — the same
     * deterministic script over [[graft.streaming.EventStreams
@@ -5497,20 +5440,8 @@ object PipelineQueries {
       deleteDuring = "gen_00.wav", deleteDown = "genq_00.wav",
       stream = graft.streaming.EventStreams.audioHashCdcStream)
 
-
-  val audioStoreStreamEquivSql: String =
-    s"""WITH m AS (SELECT name, ehash_hex
-       |           FROM read_parquet('$audioManifestPath/*.parquet')
-       |           WHERE len(ehash_hex) = 16
-       |             AND name NOT IN ('gen_00.wav', 'genq_00.wav')),
-       |p AS (SELECT a.name AS name_a, b.name AS name_b,
-       |        (bit_count(xor(('0x' || substr(a.ehash_hex, 1, 8))::BIGINT,
-       |                       ('0x' || substr(b.ehash_hex, 1, 8))::BIGINT))
-       |       + bit_count(xor(('0x' || substr(a.ehash_hex, 9, 8))::BIGINT,
-       |                       ('0x' || substr(b.ehash_hex, 9, 8))::BIGINT)))::BIGINT AS hamming
-       |      FROM m a JOIN m b ON a.name < b.name)
-       |SELECT name_a, name_b, hamming FROM p
-       |WHERE hamming <= 6 ORDER BY name_a, name_b""".stripMargin
+  val audioStoreStreamEquivSql: String = duckPlainPairsSql(audioManifestPath,
+    "ehash_hex", "\n             AND name NOT IN ('gen_00.wav', 'genq_00.wav')")
 
   /** REAL audio decode end-to-end: binaryFile scan → per-partition
     * javax.sound decode → exact PCM amplitude sums, verified against the
@@ -5535,8 +5466,7 @@ object PipelineQueries {
     * serve-many. The oracle never runs a decoder: ground-truth hashes
     * come from the generator formula's analytic manifest. */
   def audioPHash(s: SparkSession, d: String): DataFrame = {
-    val ph = graft.ops.Stores.live(s,
-      graft.ops.Indexes.ensureAudioHashIndex(s, audioFixtureDir), "name")
+    val ph = audioSigs(s)
     ph.join(ph.groupBy(col("ehash_hex"))
         .agg(min(col("name")).as("dup_rep"), count(lit(1)).as("group_size")),
       Seq("ehash_hex"))
@@ -5555,37 +5485,19 @@ object PipelineQueries {
 
   /** Audio NEAR-dup pairs: the committed store's fingerprints through
     * the SAME payload-agnostic banded Hamming blocking the image and
-    * SimHash families use ([[graft.ops.Dedup.hammingNearDups64]];
-    * 8 bands × 8 bits, pigeonhole-complete for the distance-6 cut).
-    * Catches the fixture's engineered gene_00 edit (two time blocks
-    * transposed — Hamming 2 from its original, invisible to any exact
-    * hash) alongside the distance-0 volume/rename pairs. The oracle
-    * brute-forces ALL pairs over the manifest's frozen hashes, so the
-    * blocking's completeness is hash-verified, not assumed. */
+    * SimHash families use. Catches the fixture's engineered gene_00 edit
+    * (two time blocks transposed — Hamming 2 from its original,
+    * invisible to any exact hash) alongside the distance-0
+    * volume/rename pairs. The oracle brute-forces ALL pairs over the
+    * manifest's frozen hashes, so the blocking's completeness is
+    * hash-verified, not assumed. */
   def audioNearDups(s: SparkSession, d: String): DataFrame =
-    graft.ops.Dedup.hammingNearDups64(
-        graft.ops.Stores.live(s,
-          graft.ops.Indexes.ensureAudioHashIndex(s, audioFixtureDir), "name"),
-        "name", "ehash_hex", maxHamming = 6, bands = 8)
-      .select(col("id_a").as("name_a"), col("id_b").as("name_b"),
-        col("hamming"))
-      .orderBy(col("name_a"), col("name_b"))
+    storeNearDups(audioSigs(s), Seq("ehash_hex" -> "ehash_hex"))
 
-  val audioNearDupsSql: String =
-    s"""WITH m AS (SELECT name, ehash_hex
-       |           FROM read_parquet('$audioManifestPath/*.parquet')
-       |           WHERE len(ehash_hex) = 16),
-       |p AS (SELECT a.name AS name_a, b.name AS name_b,
-       |        (bit_count(xor(('0x' || substr(a.ehash_hex, 1, 8))::BIGINT,
-       |                       ('0x' || substr(b.ehash_hex, 1, 8))::BIGINT))
-       |       + bit_count(xor(('0x' || substr(a.ehash_hex, 9, 8))::BIGINT,
-       |                       ('0x' || substr(b.ehash_hex, 9, 8))::BIGINT)))::BIGINT AS hamming
-       |      FROM m a JOIN m b ON a.name < b.name)
-       |SELECT name_a, name_b, hamming FROM p
-       |WHERE hamming <= 6 ORDER BY name_a, name_b""".stripMargin
+  val audioNearDupsSql: String = duckPlainPairsSql(audioManifestPath, "ehash_hex")
 
-  /** RESAMPLE-ROBUST audio near-dup pairs (r17 VERDICT #4): the same
-    * banded Hamming blocking, but over the CANONICAL-RATE fingerprint
+  /** RESAMPLE-ROBUST audio near-dup pairs: the same banded Hamming
+    * blocking, but over the CANONICAL-RATE fingerprint
     * ([[graft.ops.Multimodal.energyHash64Canonical]] — every recording
     * power-of-2 frame-decimated into the [4000, 8000) Hz band before
     * hashing). The fixture's gend_* files are 22.05 kHz-style re-encodes
@@ -5599,34 +5511,22 @@ object PipelineQueries {
     * oracle brute-forces all pairs over the manifest's analytic
     * canonical hashes. */
   def audioNearDupsResampled(s: SparkSession, d: String): DataFrame =
-    graft.ops.Dedup.hammingNearDups64(
-        graft.ops.Stores.live(s,
-          graft.ops.Indexes.ensureAudioHashIndex(s, audioFixtureDir), "name"),
-        "name", "cehash_hex", maxHamming = 6, bands = 8)
-      .select(col("id_a").as("name_a"), col("id_b").as("name_b"),
-        col("hamming"))
-      .orderBy(col("name_a"), col("name_b"))
+    storeNearDups(audioSigs(s), Seq("cehash_hex" -> "cehash_hex"))
 
   val audioNearDupsResampledSql: String =
-    s"""WITH m AS (SELECT name, cehash_hex
-       |           FROM read_parquet('$audioManifestPath/*.parquet')
-       |           WHERE len(cehash_hex) = 16),
-       |p AS (SELECT a.name AS name_a, b.name AS name_b,
-       |        (bit_count(xor(('0x' || substr(a.cehash_hex, 1, 8))::BIGINT,
-       |                       ('0x' || substr(b.cehash_hex, 1, 8))::BIGINT))
-       |       + bit_count(xor(('0x' || substr(a.cehash_hex, 9, 8))::BIGINT,
-       |                       ('0x' || substr(b.cehash_hex, 9, 8))::BIGINT)))::BIGINT AS hamming
-       |      FROM m a JOIN m b ON a.name < b.name)
-       |SELECT name_a, name_b, hamming FROM p
-       |WHERE hamming <= 6 ORDER BY name_a, name_b""".stripMargin
+    duckPlainPairsSql(audioManifestPath, "cehash_hex")
 
-  /** CROSS-RATE + edit audio near-dup pairs (VERDICT r19 #4): the banded
-    * blocking over the committed store's FIXED-RATE fingerprints
-    * ([[graft.ops.Multimodal.energyHash64AtRate]] at 4 kHz and 6 kHz,
-    * served same-channel by [[graft.ops.Dedup.hammingNearDups64Multi]]
-    * with the min-over-channels distance). The power-of-2 canonical
-    * family composes only along factor-2 chains — the fixture's genx_01
-    * (a 16 kHz re-encode of the 44.1 kHz genx_00 plus a block-transpose
+  /** The fixed-rate channels of the cross-rate probes
+    * ([[graft.ops.Multimodal.energyHash64AtRate]] at 4 kHz and 6 kHz):
+    * distinct feature spaces, so each compares only with itself. */
+  private val xrateChannels: Seq[(String, String)] =
+    Seq("x4k_hex" -> "x4k_hex", "x6k_hex" -> "x6k_hex")
+
+  /** CROSS-RATE + edit audio near-dup pairs: the banded blocking over
+    * the committed store's fixed-rate fingerprints with the
+    * min-over-channels distance. The power-of-2 canonical family
+    * composes only along factor-2 chains — the fixture's genx_01 (a
+    * 16 kHz re-encode of the 44.1 kHz genx_00 plus a block-transpose
     * edit) is generator-REQUIRED to sit at canonical Hamming ≥ 7
     * (canonical rates 5512 vs 4000: different streams, so
     * q_audio_near_dups_resampled provably misses it) yet within x4k
@@ -5636,178 +5536,70 @@ object PipelineQueries {
     * manifest's frozen analytic hashes — blocking completeness is
     * hash-verified, not assumed. */
   def audioNearDupsXrate(s: SparkSession, d: String): DataFrame =
-    graft.ops.Dedup.hammingNearDups64Multi(
-        graft.ops.Stores.live(s,
-          graft.ops.Indexes.ensureAudioHashIndex(s, audioFixtureDir), "name"),
-        "name", Seq("x4k_hex", "x6k_hex"), maxHamming = 6, bands = 8)
-      .select(col("id_a").as("name_a"), col("id_b").as("name_b"),
-        col("hamming"))
-      .orderBy(col("name_a"), col("name_b"))
+    storeNearDups(audioSigs(s), xrateChannels)
 
-  /** The CASE-guarded 64-bit hex Hamming fragment of the multi-channel
-    * oracles (tables `a`/`b`): NULL when either side's channel is
-    * sentinel, which `least()` skips in BOTH engines — the ANY-shared-
-    * channel contract. ONE definition (session-close review: the two
-    * xrate oracles carried verbatim copies of the one fragment the
-    * whole mixed-sentinel story rests on — the [[graft.functions.Md5Bucket]]
-    * extraction's rationale, applied to the oracle side). */
+  /** The CASE-guarded 64-bit hex Hamming of the multi-channel oracles
+    * (tables `a`/`b`): NULL when either side's channel is sentinel,
+    * which `least()` skips in BOTH engines — the any-shared-channel
+    * contract. */
   private def duckHexHamming(c: String): String =
-    s"""(CASE WHEN len(a.$c) = 16 AND len(b.$c) = 16 THEN
-       |          bit_count(xor(('0x' || substr(a.$c, 1, 8))::BIGINT,
-       |              ('0x' || substr(b.$c, 1, 8))::BIGINT))
-       |        + bit_count(xor(('0x' || substr(a.$c, 9, 8))::BIGINT,
-       |              ('0x' || substr(b.$c, 9, 8))::BIGINT)) END)""".stripMargin
+    s"(CASE WHEN len(a.$c) = 16 AND len(b.$c) = 16 THEN\n          " +
+      duckHam(s"a.$c", s"b.$c", "\n" + " " * 14, "\n" + " " * 8) + " END)"
 
-  val audioNearDupsXrateSql: String = {
-    def d(c: String) = duckHexHamming(c)
-    s"""WITH m AS (SELECT name, xr4k_hex, xr6k_hex
-       |           FROM read_parquet('$audioManifestPath/*.parquet')
-       |           WHERE len(xr4k_hex) = 16 OR len(xr6k_hex) = 16),
-       |p AS (SELECT a.name AS name_a, b.name AS name_b,
-       |        least(${d("xr4k_hex")},
-       |              ${d("xr6k_hex")})::BIGINT AS hamming
-       |      FROM m a JOIN m b ON a.name < b.name)
-       |SELECT name_a, name_b, hamming FROM p
-       |WHERE hamming <= 6 ORDER BY name_a, name_b""".stripMargin
-  }
+  /** The cross-rate oracles: the CASE-guarded min over the manifest's
+    * frozen fixed-rate hashes; `batch` adds the batch flag column. */
+  private def duckXrateSql(names: (String, String), on: String,
+                           batch: String = ""): String =
+    duckPairsSql(
+      duckManifest(audioManifestPath, s"xr4k_hex, xr6k_hex$batch",
+        "len(xr4k_hex) = 16 OR len(xr6k_hex) = 16"),
+      s"least(${duckHexHamming("xr4k_hex")},\n" +
+        s"              ${duckHexHamming("xr6k_hex")})", names, on)
+
+  val audioNearDupsXrateSql: String =
+    duckXrateSql(("name_a", "name_b"), " ON a.name < b.name")
 
   /** INCREMENTAL cross-rate audio near-dup — [[audioNearDupsXrate]]'s
-    * daily-ingest twin ([[graft.ops.Dedup.hammingNearDups64MultiIncr]]:
-    * per-channel batch×corpus banding, ANY-channel min confirm, the
-    * corpus never self-joins). The fixture split lands the engineered
+    * daily-ingest twin. The fixture split lands the engineered
     * re-encodes as the batch: genx_01 (the 16 kHz+edit composite — the
     * canonical family's provable miss) and genxs_01 (the mixed-sentinel
     * re-master, pairing via its only comparable channel) must both be
     * reported against their standing-corpus originals. Oracle: the same
     * split brute-forced over the frozen manifest with the identical
     * CASE-guarded min. */
-  def audioNearDupsXrateIncr(s: SparkSession, d: String): DataFrame = {
-    val sigs = graft.ops.Stores.live(s,
-      graft.ops.Indexes.ensureAudioHashIndex(s, audioFixtureDir), "name")
-    val isBatch = col("name").startsWith("genx_01") ||
-      col("name").startsWith("genxs_01")
-    graft.ops.Dedup.hammingNearDups64MultiIncr(
-        sigs.where(isBatch), sigs.where(!isBatch),
-        "name", Seq("x4k_hex", "x6k_hex"), maxHamming = 6, bands = 8)
-      .select(col("id_new").as("name_new"), col("id_old").as("name_old"),
-        col("hamming"))
-      .orderBy(col("name_new"), col("name_old"))
-  }
+  def audioNearDupsXrateIncr(s: SparkSession, d: String): DataFrame =
+    storeNearDups(audioSigs(s), xrateChannels,
+      Some(col("name").startsWith("genx_01") ||
+        col("name").startsWith("genxs_01")))
 
-  val audioNearDupsXrateIncrSql: String = {
-    def d(c: String) = duckHexHamming(c)
-    s"""WITH m AS (SELECT name, xr4k_hex, xr6k_hex,
-       |             (starts_with(name, 'genx_01')
-       |              OR starts_with(name, 'genxs_01')) AS is_batch
-       |           FROM read_parquet('$audioManifestPath/*.parquet')
-       |           WHERE len(xr4k_hex) = 16 OR len(xr6k_hex) = 16),
-       |p AS (SELECT a.name AS name_new, b.name AS name_old,
-       |        least(${d("xr4k_hex")},
-       |              ${d("xr6k_hex")})::BIGINT AS hamming
-       |      FROM m a JOIN m b ON a.is_batch AND NOT b.is_batch)
-       |SELECT name_new, name_old, hamming FROM p
-       |WHERE hamming <= 6 ORDER BY name_new, name_old""".stripMargin
-  }
+  val audioNearDupsXrateIncrSql: String =
+    duckXrateSql(("name_new", "name_old"), " ON a.is_batch AND NOT b.is_batch",
+      ",\n             (starts_with(name, 'genx_01')" +
+        "\n              OR starts_with(name, 'genxs_01')) AS is_batch")
 
-  /** INCREMENTAL audio near-dup — the daily-ingest question for the
-    * audio corpus: the batch's fingerprints banded-joined against the
-    * committed store, never a corpus self-join ([[graft.ops.Dedup
-    * .hammingNearDups64Incr]]). The fixture split simulates it: the
+  /** INCREMENTAL audio near-dup. The fixture split simulates it: the
     * engineered variants (genv_* re-masters, genr_* renames, the
     * gene_00 edit) arrive as the batch, the originals are the standing
     * corpus. Oracle: the same split brute-forced over the frozen
     * manifest. */
-  def audioNearDupsIncr(s: SparkSession, d: String): DataFrame = {
-    val sigs = graft.ops.Stores.live(s,
-      graft.ops.Indexes.ensureAudioHashIndex(s, audioFixtureDir), "name")
-    val isBatch = col("name").startsWith("genv_") ||
-      col("name").startsWith("genr_") || col("name").startsWith("gene_")
-    graft.ops.Dedup.hammingNearDups64Incr(
-        sigs.where(isBatch), sigs.where(!isBatch),
-        "name", "ehash_hex", maxHamming = 6, bands = 8)
-      .select(col("id_new").as("name_new"), col("id_old").as("name_old"),
-        col("hamming"))
-      .orderBy(col("name_new"), col("name_old"))
-  }
+  def audioNearDupsIncr(s: SparkSession, d: String): DataFrame =
+    storeNearDups(audioSigs(s), Seq("ehash_hex" -> "ehash_hex"),
+      Some(col("name").startsWith("genv_") ||
+        col("name").startsWith("genr_") || col("name").startsWith("gene_")))
 
-  val audioNearDupsIncrSql: String =
-    s"""WITH m AS (SELECT name, ehash_hex
-       |           FROM read_parquet('$audioManifestPath/*.parquet')
-       |           WHERE len(ehash_hex) = 16)
-       |SELECT a.name AS name_new, b.name AS name_old,
-       |       (bit_count(xor(('0x' || substr(a.ehash_hex, 1, 8))::BIGINT,
-       |                      ('0x' || substr(b.ehash_hex, 1, 8))::BIGINT))
-       |      + bit_count(xor(('0x' || substr(a.ehash_hex, 9, 8))::BIGINT,
-       |                      ('0x' || substr(b.ehash_hex, 9, 8))::BIGINT)))::BIGINT AS hamming
-       |FROM m a JOIN m b
-       |  ON (starts_with(a.name, 'genv_') OR starts_with(a.name, 'genr_')
-       |      OR starts_with(a.name, 'gene_'))
-       | AND NOT (starts_with(b.name, 'genv_') OR starts_with(b.name, 'genr_')
-       |          OR starts_with(b.name, 'gene_'))
-       |WHERE (bit_count(xor(('0x' || substr(a.ehash_hex, 1, 8))::BIGINT,
-       |                     ('0x' || substr(b.ehash_hex, 1, 8))::BIGINT))
-       |     + bit_count(xor(('0x' || substr(a.ehash_hex, 9, 8))::BIGINT,
-       |                     ('0x' || substr(b.ehash_hex, 9, 8))::BIGINT))) <= 6
-       |ORDER BY name_new, name_old""".stripMargin
+  val audioNearDupsIncrSql: String = duckIncrSql(audioManifestPath, "ehash_hex",
+    """(starts_with(a.name, 'genv_') OR starts_with(a.name, 'genr_')
+      |      OR starts_with(a.name, 'gene_'))
+      | AND NOT (starts_with(b.name, 'genv_') OR starts_with(b.name, 'genr_')
+      |          OR starts_with(b.name, 'gene_'))""".stripMargin)
 
-  /** Audio DUP CLUSTERS — [[imageDupClusters]] for sound: the near-dup
-    * pair set closed into connected components (distributed pointer
-    * jumping over 64-bit name-identity ids), each cluster labeled by
-    * its min-name representative with its size; singletons report
-    * themselves at size 1. The complete dedup-decision panel for the
-    * audio corpus; the oracle closes brute-forced pairs with a
-    * recursive reach CTE. */
-  def audioDupClusters(s: SparkSession, d: String): DataFrame = {
-    val sigs = graft.ops.Stores.live(s,
-      graft.ops.Indexes.ensureAudioHashIndex(s, audioFixtureDir), "name")
-    val pairs = graft.ops.Dedup.hammingNearDups64(
-      sigs, "name", "ehash_hex", maxHamming = 6, bands = 8)
-    val ids = sigs.where(length(col("ehash_hex")) === 16)
-      .select(col("name"), TextOps.nodeId64(col("name")).as("node"))
-    val cc = graft.ops.Dedup.connectedComponents(
-      pairs.select(TextOps.nodeId64(col("id_a")).as("doc_a"),
-        TextOps.nodeId64(col("id_b")).as("doc_b")))
-    val members = ids.join(cc, ids("node") === cc("doc_id"))
-      .select(col("name"), col("rep"))
-    val reps = members.groupBy(col("rep"))
-      .agg(min(col("name")).as("canon_rep"),
-        count(lit(1)).as("cluster_size"))
-    val clustered = members.join(reps, Seq("rep"))
-      .select(col("name"),
-        col("canon_rep").as("dup_rep"), col("cluster_size"))
-    ids.select(col("name")).join(clustered, Seq("name"), "left_outer")
-      .select(col("name"),
-        coalesce(col("dup_rep"), col("name")).as("dup_rep"),
-        coalesce(col("cluster_size"), lit(1L)).as("cluster_size"))
-      .orderBy(col("name"))
-  }
+  /** Audio DUP CLUSTERS — [[imageDupClusters]] for sound
+    * ([[dupClusters]] over the energy hash); the oracle closes
+    * brute-forced pairs with a recursive reach CTE. */
+  def audioDupClusters(s: SparkSession, d: String): DataFrame =
+    dupClusters(audioSigs(s), "ehash_hex")
 
-  val audioDupClustersSql: String =
-    s"""WITH RECURSIVE
-       |m AS (SELECT name, ehash_hex
-       |      FROM read_parquet('$audioManifestPath/*.parquet')
-       |      WHERE len(ehash_hex) = 16),
-       |p AS (SELECT a.name AS name_a, b.name AS name_b
-       |      FROM m a JOIN m b ON a.name < b.name
-       |      WHERE (bit_count(xor(('0x' || substr(a.ehash_hex, 1, 8))::BIGINT,
-       |                           ('0x' || substr(b.ehash_hex, 1, 8))::BIGINT))
-       |           + bit_count(xor(('0x' || substr(a.ehash_hex, 9, 8))::BIGINT,
-       |                           ('0x' || substr(b.ehash_hex, 9, 8))::BIGINT))) <= 6),
-       |sym AS (SELECT name_a AS s, name_b AS d FROM p
-       |        UNION SELECT name_b, name_a FROM p),
-       |reach(s, d) AS (
-       |  SELECT s, d FROM sym
-       |  UNION
-       |  SELECT r.s, y.d FROM reach r JOIN sym y ON r.d = y.s),
-       |comp AS (SELECT s AS name, least(s, min(d)) AS dup_rep
-       |         FROM reach GROUP BY s),
-       |sizes AS (SELECT dup_rep, count(*)::BIGINT AS cluster_size
-       |          FROM comp GROUP BY dup_rep)
-       |SELECT m.name AS name, coalesce(c.dup_rep, m.name) AS dup_rep,
-       |       coalesce(z.cluster_size, 1)::BIGINT AS cluster_size
-       |FROM m LEFT JOIN comp c ON m.name = c.name
-       |LEFT JOIN sizes z ON c.dup_rep = z.dup_rep
-       |ORDER BY m.name""".stripMargin
+  val audioDupClustersSql: String = duckClustersSql(audioManifestPath, "ehash_hex")
 
   /** REAL image RESIZE end-to-end ([[graft.ops.Multimodal.resizeImages]]):
     * binaryFile scan → decode → integer 2×2 box-filter downsample → exact

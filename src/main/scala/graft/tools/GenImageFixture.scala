@@ -275,7 +275,8 @@ object GenImageFixture {
     //       PROVABLY misses the pair (the stated rotAHash64Canonical
     //       boundary, now a generator-REQUIRED fixture);
     //   (c) 4-way cross distance ≤ 6 to its original — the
-    //       hammingNearDups64Cross probe provably finds it;
+    //       cross-distance probe (Dedup.hammingNearDups64 over the
+    //       base×rotation channels) provably finds it;
     //   (d) dHash Hamming ≥ 7 from every other image — the dhash query
     //       stays unchanged too.
     val compositeSearchPool = synthetic ++ rotated ++ rampPair ++ real

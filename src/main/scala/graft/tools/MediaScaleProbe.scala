@@ -134,17 +134,17 @@ object MediaScaleProbe {
       val imgSigs = graft.ops.Stores.live(spark, imgIdx, "name")
       val audSigs = graft.ops.Stores.live(spark, audIdx, "name")
       probe("image_near_dups", () => graft.ops.Dedup.hammingNearDups64(
-        imgSigs, "name", "ahash_hex", 6, 8).count())
-      probe("image_near_dups_incr", () => graft.ops.Dedup.hammingNearDups64Incr(
-        imgSigs.where(col("name").startsWith("genv_")),
-        imgSigs.where(!col("name").startsWith("genv_")),
-        "name", "ahash_hex", 6, 8).count())
+        imgSigs, "name", Seq("ahash_hex" -> "ahash_hex"), 6, 8).count())
+      probe("image_near_dups_incr", () => graft.ops.Dedup.hammingNearDups64(
+        imgSigs.where(col("name").startsWith("genv_")), "name",
+        Seq("ahash_hex" -> "ahash_hex"), 6, 8,
+        corpus = Some(imgSigs.where(!col("name").startsWith("genv_")))).count())
       probe("audio_near_dups", () => graft.ops.Dedup.hammingNearDups64(
-        audSigs, "name", "ehash_hex", 6, 8).count())
-      probe("audio_near_dups_incr", () => graft.ops.Dedup.hammingNearDups64Incr(
-        audSigs.where(col("name").startsWith("genv_")),
-        audSigs.where(!col("name").startsWith("genv_")),
-        "name", "ehash_hex", 6, 8).count())
+        audSigs, "name", Seq("ehash_hex" -> "ehash_hex"), 6, 8).count())
+      probe("audio_near_dups_incr", () => graft.ops.Dedup.hammingNearDups64(
+        audSigs.where(col("name").startsWith("genv_")), "name",
+        Seq("ehash_hex" -> "ehash_hex"), 6, 8,
+        corpus = Some(audSigs.where(!col("name").startsWith("genv_")))).count())
     }
 
     println("\n| op | small s | big s | ratio |")

@@ -177,6 +177,22 @@ class DedupSpec extends AnyFunSuite {
     assert(pairs.contains((0L, 1L)))
   }
 
+  test("simhash banding rejects parameters it cannot serve completely") {
+    // one flipped bit in each of the four 15-bit chunks: distance 4, and
+    // no chunk in common under 4 bands
+    val base = 0x0123456789abcdeL
+    val flipped = base ^ (1L << 0) ^ (1L << 15) ^ (1L << 30) ^ (1L << 45)
+    val sigs = Seq((0L, base), (1L, flipped)).toDF("doc_id", "simhash")
+    for ((maxH, bands) <- Seq((4, 4), (5, 4), (1, 0), (1, 61)))
+      intercept[IllegalArgumentException] {
+        Dedup.simhashNearDupsFromSigs(sigs, maxH, bands)
+      }
+    // with one more band a chunk matches, so the distance-4 pair is found
+    val pairs = Dedup.simhashNearDupsFromSigs(sigs, maxHamming = 4, bands = 5)
+      .as[(Long, Long, Int)].collect().toSeq
+    assert(pairs === Seq((0L, 1L, 4)))
+  }
+
   test("NULL text: MinHash and SimHash see the SAME document universe") {
     // A NULL-text doc must normalize to '' on every dedup path — before the
     // fix, explode of a null words array silently dropped it from simhash

@@ -1033,11 +1033,11 @@ class EventStreamsSpec extends AnyFunSuite {
       val pw = graft.ops.Dedup.hammingNearDups64(
           live.toSeq.sorted.map(n => (n, fixture(n))).toDF("name", "content")
             .transform(d => graft.ops.Multimodal.imagePHashesNamed(d).toDF()),
-          "name", "ahash_hex", 6, 8)
+          "name", Seq("ahash_hex" -> "ahash_hex"), 6, 8)
         .collect().map(r => (r.getString(0), r.getString(1))).toSet
       val pg = graft.ops.Dedup.hammingNearDups64(
           graft.ops.Stores.live(spark, store, "name"),
-          "name", "ahash_hex", 6, 8)
+          "name", Seq("ahash_hex" -> "ahash_hex"), 6, 8)
         .collect().map(r => (r.getString(0), r.getString(1))).toSet
       assert(pg === pw, s"$clue (pairs)")
     }
@@ -1099,11 +1099,11 @@ class EventStreamsSpec extends AnyFunSuite {
       val pw = graft.ops.Dedup.hammingNearDups64(
           live.toSeq.sorted.map(n => (n, fixture(n))).toDF("name", "content")
             .transform(d => graft.ops.Multimodal.audioPHashesNamed(d).toDF()),
-          "name", "ehash_hex", 6, 8)
+          "name", Seq("ehash_hex" -> "ehash_hex"), 6, 8)
         .collect().map(r => (r.getString(0), r.getString(1))).toSet
       val pg = graft.ops.Dedup.hammingNearDups64(
           graft.ops.Stores.live(spark, store, "name"),
-          "name", "ehash_hex", 6, 8)
+          "name", Seq("ehash_hex" -> "ehash_hex"), 6, 8)
         .collect().map(r => (r.getString(0), r.getString(1))).toSet
       assert(pg === pw, s"$clue (pairs)")
     }

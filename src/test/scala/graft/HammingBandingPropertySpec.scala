@@ -33,32 +33,67 @@ class HammingBandingPropertySpec extends AnyFunSuite {
     noise <- Gen.listOfN(20, Gen.choose(Long.MinValue, Long.MaxValue))
   } yield bases ++ variants ++ noise
 
-  private def brute(sigs: Seq[(String, Long)], maxH: Int) =
-    (for {
-      i <- sigs.indices; j <- (i + 1) until sigs.length
-      d = java.lang.Long.bitCount(sigs(i)._2 ^ sigs(j)._2).toLong
-      if d <= maxH
-    } yield {
-      val (a, b) =
-        if (sigs(i)._1 < sigs(j)._1) (sigs(i)._1, sigs(j)._1)
-        else (sigs(j)._1, sigs(i)._1)
-      (a, b, d)
-    }).toSet
+  /** The generator's hashes plus rotated near-copies: a few hashes come
+    * back rotated by 16·k bits with a few flips — the shape of a rotated
+    * image re-encode — so the cross distance pairs rows the plain
+    * distance keeps apart. */
+  private val rotSigsGen: Gen[List[Long]] = for {
+    hs <- sigsGen
+    copies <- Gen.listOfN(10, for {
+      h <- Gen.oneOf(hs)
+      k <- Gen.choose(1, 3)
+      nFlips <- Gen.choose(0, 4)
+      bits <- Gen.listOfN(nFlips, Gen.choose(0, 63))
+    } yield bits.foldLeft(java.lang.Long.rotateLeft(h, 16 * k))((x, i) => x ^ (1L << i)))
+  } yield hs ++ copies
+
+  /** Each row carries its hash and the hash's three 16-bit rotations,
+    * one hex column each — the image store's per-rotation columns. */
+  private val hexCols = Seq("ahash_hex", "r90_hex", "r180_hex", "r270_hex")
+  private val plain = Seq("ahash_hex" -> "ahash_hex")
+  private val cross =
+    hexCols.flatMap(v => Seq("ahash_hex" -> v, v -> "ahash_hex")).distinct
+
+  private def rows(hs: Seq[Long]): Seq[(String, Seq[Long])] =
+    hs.zipWithIndex.map { case (h, i) =>
+      f"s$i%04d" -> (0 to 3).map(k => java.lang.Long.rotateLeft(h, 16 * k))
+    }
+
+  private def frame(rs: Seq[(String, Seq[Long])]) =
+    rs.map { case (n, v) =>
+      (n, f"${v(0)}%016x", f"${v(1)}%016x", f"${v(2)}%016x", f"${v(3)}%016x")
+    }.toDF("name" +: hexCols: _*)
+
+  /** Brute force: min over `channels` of H(left's x, right's y) for each
+    * (left, right) pair, kept within maxH. */
+  private def brute(pairs: Seq[((String, Seq[Long]), (String, Seq[Long]))],
+                    channels: Seq[(String, String)], maxH: Int) =
+    pairs.map { case ((a, ha), (b, hb)) =>
+      (a, b, channels.map { case (x, y) =>
+        java.lang.Long.bitCount(ha(hexCols.indexOf(x)) ^ hb(hexCols.indexOf(y)))
+      }.min.toLong)
+    }.filter(_._3 <= maxH).toSet
+
+  private def triples(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
+
+  private val cases = Seq(("plain", sigsGen, plain), ("cross", rotSigsGen, cross))
 
   test("banded == brute force for every maxHamming < bands (self-join)") {
-    for (seed <- 1L to 5L) {
-      val hs = sample(sigsGen, seed).distinct
-      val sigs = hs.zipWithIndex.map { case (h, i) => (f"s$i%04d", h) }
-      val df = sigs.map { case (n, h) => (n, f"$h%016x") }
-        .toDF("name", "ahash_hex")
+    var crossOnly = 0
+    for ((label, gen, channels) <- cases; seed <- 1L to 5L) {
+      val rs = rows(sample(gen, seed).distinct)
       val bands = sample(Gen.oneOf(2, 4, 8, 16), seed + 50)
       val maxH = sample(Gen.choose(0, bands - 1), seed + 90)
-      val got = Dedup.hammingNearDups64(df, "name", "ahash_hex", maxH, bands)
-        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-        .toSet
-      assert(got === brute(sigs, maxH),
-        s"seed=$seed bands=$bands maxH=$maxH")
+      val got = triples(
+        Dedup.hammingNearDups64(frame(rs), "name", channels, maxH, bands))
+      val pairs =
+        for (i <- rs.indices; j <- (i + 1) until rs.length) yield (rs(i), rs(j))
+      val want = brute(pairs, channels, maxH)
+      assert(got === want, s"$label seed=$seed bands=$bands maxH=$maxH")
+      if (label == "cross") crossOnly += want.size - brute(pairs, plain, maxH).size
     }
+    assert(crossOnly > 0, "the rotated copies must pair under the cross distance only")
   }
 
   test("multi-channel banded == min-over-channels brute force; mixed sentinels pair on the shared channel") {
@@ -71,9 +106,8 @@ class HammingBandingPropertySpec extends AnyFunSuite {
       val df = sigs.map { case (n, h1, h2) => (n, f"$h1%016x", f"$h2%016x") }
         .toDF("name", "x1", "x2")
       val maxH = sample(Gen.choose(0, 7), seed + 90)
-      val got = Dedup.hammingNearDups64Multi(df, "name", Seq("x1", "x2"), maxH)
-        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-        .toSet
+      val got = triples(
+        Dedup.hammingNearDups64(df, "name", Seq("x1" -> "x1", "x2" -> "x2"), maxH))
       val want = (for {
         i <- sigs.indices; j <- (i + 1) until sigs.length
         d = math.min(
@@ -84,9 +118,9 @@ class HammingBandingPropertySpec extends AnyFunSuite {
       assert(got === want, s"seed=$seed maxH=$maxH")
     }
 
-    // the mixed-sentinel contract (self-review r20 second pass): a row
-    // comparable on ONE channel still pairs on that channel; rows with
-    // no shared comparable channel never pair
+    // the mixed-sentinel contract: a row comparable on ONE channel still
+    // pairs on that channel; rows with no shared comparable channel never
+    // pair
     val h = 0x0123456789abcdefL
     val k = 0x00ff00ff00ff00ffL
     val df = Seq(
@@ -94,8 +128,8 @@ class HammingBandingPropertySpec extends AnyFunSuite {
       ("b", f"$h%016x", f"$k%016x"), // both channels
       ("c", "", f"$k%016x")           // channel-2 only
     ).toDF("name", "x1", "x2")
-    val got = Dedup.hammingNearDups64Multi(df, "name", Seq("x1", "x2"), 6)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
+    val got = triples(
+      Dedup.hammingNearDups64(df, "name", Seq("x1" -> "x1", "x2" -> "x2"), 6))
     assert(got === Set(("a", "b", 0L), ("b", "c", 0L)),
       s"mixed-sentinel pairs must report on the shared channel only: $got")
   }
@@ -111,10 +145,8 @@ class HammingBandingPropertySpec extends AnyFunSuite {
         xs.map { case (n, h1, h2) => (n, f"$h1%016x", f"$h2%016x") }
           .toDF("name", "x1", "x2")
       val maxH = sample(Gen.choose(0, 7), seed + 90)
-      val got = Dedup.hammingNearDups64MultiIncr(
-          frame(batch), frame(corpus), "name", Seq("x1", "x2"), maxH)
-        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-        .toSet
+      val got = triples(Dedup.hammingNearDups64(frame(batch), "name",
+        Seq("x1" -> "x1", "x2" -> "x2"), maxH, corpus = Some(frame(corpus))))
       val want = (for {
         (bn, b1, b2) <- batch; (cn, c1, c2) <- corpus
         d = math.min(java.lang.Long.bitCount(b1 ^ c1),
@@ -133,31 +165,25 @@ class HammingBandingPropertySpec extends AnyFunSuite {
       ("c1", f"$h%016x", ""),          // no shared channel with the batch
       ("c2", f"$h%016x", f"$k%016x")  // pairs via channel 2
     ).toDF("name", "x1", "x2")
-    val got = Dedup.hammingNearDups64MultiIncr(
-        batch, corpus, "name", Seq("x1", "x2"), 6)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
+    val got = triples(Dedup.hammingNearDups64(batch, "name",
+      Seq("x1" -> "x1", "x2" -> "x2"), 6, corpus = Some(corpus)))
     assert(got === Set(("n", "c2", 0L)),
       s"directional mixed-sentinel must pair only on the shared channel: $got")
   }
 
   test("incremental banded == brute force restricted to batch×corpus") {
-    for (seed <- 11L to 14L) {
-      val hs = sample(sigsGen, seed).distinct
-      val sigs = hs.zipWithIndex.map { case (h, i) => (f"s$i%04d", h) }
-      val (batch, corpus) = sigs.partition(_._1.stripPrefix("s").toInt % 5 == 0)
-      def frame(xs: Seq[(String, Long)]) =
-        xs.map { case (n, h) => (n, f"$h%016x") }.toDF("name", "ahash_hex")
+    var crossOnly = 0
+    for ((label, gen, channels) <- cases; seed <- 11L to 14L) {
+      val rs = rows(sample(gen, seed).distinct)
+      val (batch, corpus) = rs.partition(_._1.stripPrefix("s").toInt % 5 == 0)
       val maxH = sample(Gen.choose(0, 7), seed + 90)
-      val got = Dedup.hammingNearDups64Incr(
-          frame(batch), frame(corpus), "name", "ahash_hex", maxH)
-        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-        .toSet
-      val want = (for {
-        (bn, bh) <- batch; (cn, ch) <- corpus
-        d = java.lang.Long.bitCount(bh ^ ch).toLong
-        if d <= maxH
-      } yield (bn, cn, d)).toSet
-      assert(got === want, s"seed=$seed maxH=$maxH")
+      val got = triples(Dedup.hammingNearDups64(frame(batch), "name",
+        channels, maxH, corpus = Some(frame(corpus))))
+      val pairs = for (b <- batch; c <- corpus) yield (b, c)
+      val want = brute(pairs, channels, maxH)
+      assert(got === want, s"$label seed=$seed maxH=$maxH")
+      if (label == "cross") crossOnly += want.size - brute(pairs, plain, maxH).size
     }
+    assert(crossOnly > 0, "the rotated copies must pair under the cross distance only")
   }
 }

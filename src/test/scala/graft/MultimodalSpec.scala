@@ -192,7 +192,8 @@ class MultimodalSpec extends AnyFunSuite {
     graft.ops.Stores.tombstone(p1,
       Seq("genv_00.png").toDF("name"), "name")
     val pairs = Dedup.hammingNearDups64(
-        graft.ops.Stores.live(spark, p1, "name"), "name", "ahash_hex", 6, 8)
+        graft.ops.Stores.live(spark, p1, "name"), "name",
+        Seq("ahash_hex" -> "ahash_hex"), 6, 8)
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(pairs.nonEmpty)
     assert(!pairs.exists(p => p._1 == "genv_00.png" || p._2 == "genv_00.png"),
@@ -624,7 +625,8 @@ class MultimodalSpec extends AnyFunSuite {
     graft.ops.Stores.tombstone(p1,
       Seq("genv_00.wav").toDF("name"), "name")
     val pairs = Dedup.hammingNearDups64(
-        graft.ops.Stores.live(spark, p1, "name"), "name", "ehash_hex", 6, 8)
+        graft.ops.Stores.live(spark, p1, "name"), "name",
+        Seq("ehash_hex" -> "ehash_hex"), 6, 8)
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(pairs.nonEmpty)
     assert(!pairs.exists(p => p._1 == "genv_00.wav" || p._2 == "genv_00.wav"),
