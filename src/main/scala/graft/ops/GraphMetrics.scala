@@ -33,25 +33,45 @@ import graft.engine.Stage
   *    self-join on the pivot, closing-edge semi-join against the edge
   *    set. No driver state; nothing collects.
   *  - Label propagation (and BFS, and the k-core peel) run on the
-  *    [[GraphLoop]] co-partitioned RDD harness since r21: per round one
+  *    [[GraphLoop]] co-partitioned RDD harness: per round one
   *    shuffle-free message pass over the grouped adjacency with in-pass
   *    vote combining, plus one ≤|V|-row combine shuffle — the Pregel
-  *    lowering without the DataFrame loop's per-round re-optimization,
-  *    exchanges and codegen (the hitsFp measurement).
+  *    lowering without a DataFrame loop's per-round re-optimization,
+  *    exchanges and codegen.
   *
   * Cuts and block lifetime: [[graft.engine.Stage]].
   */
 object GraphMetrics {
+  import GraphLoop.{checkIters, checkSeeds}
 
   /** Canonical undirected distinct edge set (u < v) from a directed edge
     * list; self-loops dropped (they cannot participate in a triangle and
-    * would corrupt degrees). */
-  private def undirect(edges: DataFrame): DataFrame =
-    edges
-      .select(least(col("src"), col("dst")).cast("long").as("u"),
-        greatest(col("src"), col("dst")).cast("long").as("v"))
+    * would corrupt degrees). With `maxWeight` the rows keep a `w_fp`
+    * column, each pair canonicalized to the MAX over its directed
+    * duplicates (over a kNN graph both directions carry the same
+    * quantized cosine, so max is the identity; for asymmetric inputs it
+    * is a stated deterministic choice). */
+  private def undirect(edges: DataFrame, maxWeight: Boolean = false): DataFrame = {
+    val w = if (maxWeight) Seq(col("w_fp").cast("long").as("w_fp")) else Nil
+    val uv = edges
+      .select(least(col("src"), col("dst")).cast("long").as("u") +:
+        greatest(col("src"), col("dst")).cast("long").as("v") +: w: _*)
       .where(col("u") =!= col("v"))
-      .distinct()
+    if (maxWeight) uv.groupBy(col("u"), col("v")).agg(max(col("w_fp")).as("w_fp"))
+    else uv.distinct()
+  }
+
+  /** Both directions of every canonical (u, v[, w_fp]) pair as
+    * (src, dst[, w_fp]) from ONE pass — a union of two selects would
+    * execute `und`'s derivation twice. */
+  private def bothWays(und: DataFrame): DataFrame = {
+    val w = und.columns.filter(_ == "w_fp").toSeq
+    und.select(explode(array(
+        struct(col("u").as("src") +: col("v").as("dst") +: w.map(col): _*),
+        struct(col("v").as("src") +: col("u").as("dst") +: w.map(col): _*)))
+        .as("e"))
+      .select(("src" +: "dst" +: w).map(c => col(s"e.$c").as(c)): _*)
+  }
 
   /** Per-node (node, deg, tri, lcc_fp) over the UNDIRECTED version of
     * `edges` (src, dst): `tri` = number of triangles through the node,
@@ -105,50 +125,6 @@ object GraphMetrics {
           .otherwise(lit(0L)).as("lcc_fp"))
   }
 
-  /** Canonical undirected weighted edges: (u < v, w) with the weight of
-    * a pair canonicalized to the MAX over its directed duplicates (over
-    * a kNN graph both directions carry the same quantized cosine, so
-    * max is the identity; for asymmetric inputs it is a stated
-    * deterministic choice). Non-positive weights dropped — they carry no
-    * vote and could zero a node's weight sum. */
-  private def undirectWeighted(edges: DataFrame): DataFrame =
-    edges.where(col("w_fp") > 0)
-      .select(least(col("src"), col("dst")).cast("long").as("u"),
-        greatest(col("src"), col("dst")).cast("long").as("v"),
-        col("w_fp").cast("long").as("w"))
-      .where(col("u") =!= col("v"))
-      .groupBy(col("u"), col("v")).agg(max(col("w")).as("w"))
-
-  /** [[labelPropagation]]'s similarity-weighted twin: votes carry the
-    * edge's INTEGER weight (1e-6-quantized cosine, the
-    * [[PageRank.pprWeightedFp]] convention), so a barely-similar
-    * neighbour casts a barely-there vote — the semantics community
-    * detection over a similarity graph actually wants. Weight sums are
-    * exact integer additions (fold-order-free), ties break to the
-    * smallest label; equal weights degenerate to exactly the unweighted
-    * variant (spec-pinned). `edges`: (src, dst, w_fp). */
-  def labelPropagationWeighted(edges: DataFrame, iters: Int): DataFrame = {
-    require(iters >= 1 && iters <= 16, s"1 <= iters <= 16, got $iters")
-    val spark = edges.sparkSession
-    import spark.implicits._
-    // both directions from ONE pass over the canonical pairs (the r20
-    // textrank lesson: union branches execute their input twice)
-    val und = undirectWeighted(edges)
-    val sym = und.select(explode(array(
-        struct(col("u").as("src"), col("v").as("dst"), col("w")),
-        struct(col("v").as("src"), col("u").as("dst"), col("w")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"),
-        col("e.w").as("w_fp"))
-    // co-partitioned RDD loop (r21 OPT — [[GraphLoop]] scaladoc): one
-    // message pass + one ≤|V| combine shuffle per round; vote sums and
-    // the (max votes, smallest label) argmax are the identical integer
-    // fold (spec pins distributed == sequential reference)
-    val g = GraphLoop.buildWeighted(sym)
-    var labels = GraphLoop.initVector(g.nodes, n => n)
-    for (_ <- 1 to iters) labels = GraphLoop.voteRoundWeighted(g, labels)
-    Stage.cut(labels.toDF("node", "label"), release = g.release())
-  }
-
   /** Synchronous label propagation over the UNDIRECTED version of
     * `edges`, exactly `iters` rounds from the identity labelling
     * (label = node id). Per round every node adopts its neighbours'
@@ -157,23 +133,17 @@ object GraphMetrics {
     * replayable (synchronous LPA can oscillate on bipartite structure;
     * fixed rounds ARE the contract, as with [[PageRank.pageRankFp]]).
     * Isolated nodes cannot occur (every node comes from an edge).
+    * Over (src, dst, w_fp) edges votes carry the pair's INTEGER weight,
+    * so a barely-similar neighbour casts a barely-there vote — the
+    * semantics community detection over a similarity graph wants; equal
+    * weights degenerate to exactly the unweighted run (spec-pinned).
     * Returns (node, label). */
   def labelPropagation(edges: DataFrame, iters: Int): DataFrame = {
-    require(iters >= 1 && iters <= 16, s"1 <= iters <= 16, got $iters")
+    checkIters(iters)
     val spark = edges.sparkSession
     import spark.implicits._
-    // both directions from ONE pass (a message crosses every undirected
-    // edge both ways; the r20 textrank lesson keeps it single-execution)
-    val und = undirect(edges)
-    val sym = und.select(explode(array(
-        struct(col("u").as("src"), col("v").as("dst")),
-        struct(col("v").as("src"), col("u").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    // co-partitioned RDD loop (r21 OPT — [[GraphLoop]] scaladoc): the
-    // vote count + (max count, smallest label) argmax run as one in-pass
-    // combine + one ≤|V| shuffle per round; integer folds identical to
-    // the DataFrame loop's, spec-pinned against the sequential reference
-    val g = GraphLoop.build(sym)
+    val g = GraphLoop.build(bothWays(
+      undirect(edges, maxWeight = edges.columns.contains("w_fp"))))
     var labels = GraphLoop.initVector(g.nodes, n => n)
     for (_ <- 1 to iters) labels = GraphLoop.voteRound(g, labels)
     Stage.cut(labels.toDF("node", "label"), release = g.release())
@@ -195,15 +165,15 @@ object GraphMetrics {
     * driver state, linear lineage. */
   def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 2 && k <= 64, s"2 <= k <= 64, got $k")
-    require(rounds >= 1 && rounds <= 16, s"1 <= rounds <= 16, got $rounds")
+    checkIters(rounds, "rounds")
     val spark = edges.sparkSession
     import spark.implicits._
-    // co-partitioned RDD peel (r21 OPT — [[GraphLoop]] scaladoc): per
-    // round one degree reduceByKey plus two partitionBy+zip keep-filters
-    // (u side, then v side) against the SAME keep set — synchronous
-    // removal, exactly the DF semi-join pair's semantics; degree counts
-    // are integer folds, so the surviving subgraph is bit-identical
-    // (spec pins distributed == sequential reference).
+    // co-partitioned RDD peel ([[GraphLoop]] scaladoc): per round one
+    // degree reduceByKey plus two partitionBy+zip keep-filters (u side,
+    // then v side) against the SAME keep set — synchronous removal, the
+    // oracle's semi-join pair; degree counts are integer folds, so the
+    // surviving subgraph is bit-identical (spec pins distributed ==
+    // sequential reference).
     val e0: org.apache.spark.rdd.RDD[(Long, Long)] =
       undirect(edges).as[(Long, Long)].rdd
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -310,20 +280,10 @@ object GraphMetrics {
     * Scale: per round one co-partitioned message pass + one ≤|V| min
     * combine — the [[GraphLoop]] shape. */
   def bfsHops(edges: DataFrame, seeds: Seq[Long], rounds: Int): DataFrame = {
-    require(rounds >= 1 && rounds <= 16, s"1 <= rounds <= 16, got $rounds")
-    require(seeds.nonEmpty && seeds.size <= 1024,
-      s"seed panel must be 1..1024 literals, got ${seeds.size}")
-    require(seeds.distinct.size == seeds.size, "duplicate seeds")
+    checkIters(rounds, "rounds"); checkSeeds(seeds)
     val spark = edges.sparkSession
     import spark.implicits._
-    val und = undirect(edges)
-    val sym = und.select(explode(array(
-        struct(col("u").as("src"), col("v").as("dst")),
-        struct(col("v").as("src"), col("u").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    // co-partitioned RDD loop (r21 OPT — [[GraphLoop]] scaladoc); min
-    // relaxation is order-free, results bit-identical to the DF loop's
-    val g = GraphLoop.build(sym)
+    val g = GraphLoop.build(bothWays(undirect(edges)))
     val seedSet = seeds.toSet
     var dist = GraphLoop.initVector(g.nodes,
       n => if (seedSet(n)) 0L else BfsInf)
@@ -388,8 +348,8 @@ object GraphMetrics {
     degrees(e)
   }
 
-  /** Host-side sequential twin of [[labelPropagationWeighted]] (spec
-    * cross-check only; ≤ 0-weight edges dropped, duplicate pairs
+  /** Host-side sequential twin of the weighted [[labelPropagation]]
+    * (spec cross-check only; ≤ 0-weight edges dropped, duplicate pairs
     * canonicalized to max weight — matching the operator). */
   def referenceLabelPropagationWeighted(edges: Seq[(Long, Long, Long)],
                                         iters: Int): Map[Long, Long] = {

@@ -21,19 +21,14 @@ import graft.engine.Stage
   * is bit-identical everywhere, so a 5-round run replays exactly as 5
   * unrolled CTEs in DuckDB.
   *
-  * Scale design (since r21 all walks run on the [[GraphLoop]]
-  * co-partitioned RDD harness — the hitsFp treatment, measured 2.3× on
-  * q_hits in r20): the grouped adjacency is hash-partitioned and
+  * Scale design: every walk runs on the [[GraphLoop]] co-partitioned
+  * RDD harness — the grouped adjacency is hash-partitioned and
   * materialized ONCE; each round is one shuffle-free zipPartitions
-  * message pass over it (the per-source integer share computed once, map-
-  * side combined by destination in the same pass) plus one reduceByKey
-  * that moves ≤|V| pre-combined rows per partition — the same message/
-  * combine shape GraphX/Pregel lowers to, with no driver-resident state
-  * at any point (ranks never collect; the driver holds a few scalars).
-  * Partition count follows the measured edge count (~500k edges per
-  * partition, capped at defaultParallelism — the r20 rule: smaller
-  * partitions quadruple task overhead for zero wall win; at cluster
-  * scale the parallelism cap binds).
+  * message pass over it (the integer share map-side combined by
+  * destination in the same pass) plus one reduceByKey that moves ≤|V|
+  * pre-combined rows per partition — the same message/combine shape
+  * GraphX/Pregel lowers to, with no driver-resident state at any point
+  * (ranks never collect; the driver holds a few scalars).
   * Dangling nodes cannot exist in a symmetric graph (every node listed has
   * an out-edge); for directed inputs their mass is dropped, which only
   * rescales ranks uniformly — documented rather than redistributed, to
@@ -43,44 +38,57 @@ import graft.engine.Stage
   * returning ([[graft.engine.Stage]] block-lifetime contract).
   */
 object PageRank {
+  import GraphLoop.{checkIters, checkSeeds}
 
-  /** The shared damped-walk loop, since r21 on the co-partitioned RDD
-    * harness ([[GraphLoop]]) — the hitsFp treatment applied to every
-    * unweighted walk: per round ONE zipPartitions message pass (share
-    * `div(rank, outdeg)` computed once per source over the grouped
-    * adjacency, in-pass map-side combine keyed by destination) plus one
-    * ≤|V|-rows-per-partition reduceByKey, instead of the DataFrame
-    * loop's per-round re-optimization + 2-3 exchanges + codegen. The
-    * integer recurrence is unchanged (all values non-negative, so Scala
-    * `/` ≡ SQL `div`; sums commute), so results stay bit-identical —
-    * PageRankSpec pins distributed == sequential reference, and the
-    * unrolled-CTE oracles replay untouched.
-    * The returned frame is cut ([[graft.engine.Stage]]). */
-  private def runDamped(edges: DataFrame, iters: Int, dampNum: Long,
-                        dampDen: Long,
-                        mk: GraphLoop.Graph => (Long => Long, Long => Long),
-                        dedupEdges: Boolean = false)
-      : DataFrame = {
+  /** The one damped walk behind [[pageRankFp]], [[pprFp]] and
+    * [[pprBatchFp]]: ranks ride as one per-node vector of P panel values,
+    * so each round's message pass touches every edge ONCE and the combine
+    * shuffle moves ≤|V| rows of P longs — the panel dimension costs
+    * arithmetic, not extra join/shuffle machinery. Empty `panels` is the
+    * uniform walk (P = 1, teleport to every node, base `scale / |V|`);
+    * otherwise panel p teleports to its seeds only (base
+    * `scale / |seeds_p|`). Over `w_fp` edges the shares are weighted
+    * ([[GraphLoop.build]]) and `maxWfp` guards overflow: the share
+    * numerator r · w ≤ scale · maxWfp must fit in a Long. Returns
+    * (panel_id, node, rank_fp) when `batch`, else (node, rank_fp) of the
+    * single panel; the frame is cut ([[graft.engine.Stage]]). */
+  private def walk(edges: DataFrame, panels: Seq[(Long, Seq[Long])],
+                   iters: Int, scale: Long, dampNum: Long, dampDen: Long,
+                   dedupEdges: Boolean = false, maxWfp: Long = 1000000L,
+                   batch: Boolean = false): DataFrame = {
+    checkIters(iters)
+    require(dampNum > 0 && dampNum < dampDen, s"0 < dampNum < dampDen")
+    panels.foreach { case (_, ss) => checkSeeds(ss) }
     val spark = edges.sparkSession
     import spark.implicits._
     val g = GraphLoop.build(edges, dedupEdges)
-    val (r0, tp) = mk(g)
-    var ranks = GraphLoop.initVector(g.nodes, r0)
+    if (g.weighted) {
+      require(maxWfp > 0 && scale <= Long.MaxValue / maxWfp,
+        s"scale * maxWfp must fit in Long: $scale * $maxWfp")
+      require(g.maxW <= maxWfp,
+        s"edge weight ${g.maxW} exceeds maxWfp=$maxWfp — raise maxWfp (and " +
+          s"check scale * maxWfp still fits in Long) or re-quantize the weights")
+    }
+    val sizes = if (panels.isEmpty) {
+      require(g.nCount > 0, "pageRankFp: empty graph")
+      Array(g.nCount)
+    } else panels.map(_._2.size.toLong).toArray
+    val bases = sizes.map(scale / _)
+    val tps = bases.map(b => ((dampDen - dampNum) * b) / dampDen)
+    val seedSets = panels.map(_._2.toSet).toArray
+    // the per-node vector of `v`, gated to each panel's seeds
+    val seeded: Array[Long] => Long => Array[Long] = v => n => Array.tabulate(
+      v.length)(p => if (seedSets.isEmpty || seedSets(p)(n)) v(p) else 0L)
+    var ranks = GraphLoop.initVector(g.nodes, seeded(bases))
     for (_ <- 1 to iters)
-      ranks = GraphLoop.dampedRound(g, ranks, tp, dampNum, dampDen)
-    Stage.cut(ranks.toDF("node", "rank_fp"), release = g.release())
-  }
-
-  private def checkIters(iters: Int): Unit =
-    require(iters >= 1 && iters <= 16, s"1 <= iters <= 16, got $iters")
-
-  private def checkDamp(dampNum: Long, dampDen: Long): Unit =
-    require(dampNum > 0 && dampNum < dampDen, s"0 < dampNum < dampDen")
-
-  private def checkSeeds(seeds: Seq[Long]): Unit = {
-    require(seeds.nonEmpty && seeds.size <= 1024,
-      s"seed panel must be 1..1024 literals, got ${seeds.size}")
-    require(seeds.distinct.size == seeds.size, "duplicate seeds")
+      ranks = GraphLoop.dampedRound(g, ranks, seeded(tps), dampNum, dampDen)
+    val pIds = panels.map(_._1).toArray
+    Stage.cut(
+      if (batch) ranks.flatMap { case (n, rv) =>
+        Iterator.range(0, rv.length).map(p => (pIds(p), n, rv(p)))
+      }.toDF("panel_id", "node", "rank_fp")
+      else ranks.map { case (n, rv) => (n, rv(0)) }.toDF("node", "rank_fp"),
+      release = g.release())
   }
 
   /** `edges`: deduplicated directed (src, dst) pairs — or, with
@@ -92,167 +100,46 @@ object PageRank {
     * fixed rounds ARE the contract, so two engines can replay it). */
   def pageRankFp(edges: DataFrame, iters: Int, scale: Long = 1000000000000L,
                  dampNum: Long = 85L, dampDen: Long = 100L,
-                 dedupEdges: Boolean = false): DataFrame = {
-    checkIters(iters); checkDamp(dampNum, dampDen)
-    runDamped(edges, iters, dampNum, dampDen, g => {
-      val n = g.nCount
-      require(n > 0, "pageRankFp: empty graph")
-      val base = scale / n
-      val teleport = ((dampDen - dampNum) * base) / dampDen
-      (_ => base, _ => teleport)
-    }, dedupEdges)
-  }
+                 dedupEdges: Boolean = false): DataFrame =
+    walk(edges, Nil, iters, scale, dampNum, dampDen, dedupEdges)
 
   /** PERSONALIZED PageRank (random walk with restart): teleport mass flows
     * only to `seeds`, so rank concentrates in the seed set's graph
     * neighbourhood. Over a kNN similarity graph this is SEED-SET
     * EXPANSION — "find documents like these curated ones" — the curation
     * primitive behind quality-propagation pipelines, here with the same
-    * integer recurrence (and therefore the same hash-verifiability and
-    * per-round |E|-join + |V|-agg cost) as [[pageRankFp]]. The seed panel
-    * is a bounded literal riding in the plan (an `isin`), never a driver
-    * loop. Seeds absent from the graph contribute nothing (their teleport
-    * mass targets a node that has no edges and no output row) — callers
-    * seed from the corpus the graph was built over. */
+    * integer recurrence (and therefore the same hash-verifiability) as
+    * [[pageRankFp]]. Seeds absent from the graph contribute nothing (their
+    * teleport mass targets a node that has no edges and no output row) —
+    * callers seed from the corpus the graph was built over.
+    *
+    * Over (src, dst, w_fp) edges this is the WEIGHTED walk: each node's
+    * rank distributes over its out-edges proportionally to the edge
+    * weight, so over a kNN graph with cosine-derived weights the walk
+    * follows SIMILARITY MASS — a barely-similar neighbour receives a
+    * barely-there share. share = (rank · w) div Σw; `maxWfp` bounds the
+    * weights and fails LOUDLY when exceeded, because a silent overflow
+    * would corrupt every downstream rank. Equal weights degenerate to
+    * exactly the unweighted walk (floor(r·w/(w·k)) ≡ floor(r/k) —
+    * spec-pinned). */
   def pprFp(edges: DataFrame, seeds: Seq[Long], iters: Int,
             scale: Long = 1000000000000L, dampNum: Long = 85L,
-            dampDen: Long = 100L): DataFrame = {
-    checkIters(iters); checkDamp(dampNum, dampDen); checkSeeds(seeds)
-    val base = scale / seeds.size
-    val teleport = ((dampDen - dampNum) * base) / dampDen
-    val seedSet = seeds.toSet
-    runDamped(edges, iters, dampNum, dampDen, _ =>
-      (n => if (seedSet(n)) base else 0L,
-       n => if (seedSet(n)) teleport else 0L))
-  }
-
-  /** WEIGHTED personalized walk over a similarity graph: each node's rank
-    * distributes over its out-edges proportionally to the edge weight —
-    * over a kNN graph with cosine-derived weights the walk follows
-    * SIMILARITY MASS, not just connectivity, which is the semantics
-    * seed-expansion actually wants (a barely-similar neighbour should
-    * receive a barely-there share).
-    *
-    * `edges`: (src, dst, w_fp) with INTEGER weights; rows with w_fp ≤ 0
-    * are dropped up front (they carry no mass, and keeping them could
-    * zero a node's weight sum — the one divide-by-zero shape). share =
-    * (rank · w) div Σw — exact in Long provided scale · max(w_fp) < 2^63;
-    * `maxWfp` is verified against the materialized edges with one cheap
-    * fold and fails LOUDLY, because a silent overflow here would
-    * corrupt every downstream rank. Equal weights degenerate to exactly
-    * [[pprFp]] (floor(r·w/(w·k)) ≡ floor(r/k) — spec-pinned). Since r21
-    * the per-edge share runs in [[GraphLoop.dampedRoundWeighted]]'s
-    * primitive loop — the per-edge work that kept this walk on the flat
-    * DataFrame join in r20 (an interpreted HOF) is two integer ops per
-    * edge on the RDD harness. */
-  def pprWeightedFp(edges: DataFrame, seeds: Seq[Long], iters: Int,
-                    scale: Long = 1000000000000L, dampNum: Long = 85L,
-                    dampDen: Long = 100L, maxWfp: Long = 1000000L): DataFrame = {
-    checkIters(iters); checkDamp(dampNum, dampDen); checkSeeds(seeds)
-    require(maxWfp > 0 && scale <= Long.MaxValue / maxWfp,
-      s"scale * maxWfp must fit in Long: $scale * $maxWfp")
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val g = GraphLoop.buildWeighted(edges.where(col("w_fp") > 0))
-    require(g.maxW <= maxWfp,
-      s"edge weight ${g.maxW} exceeds maxWfp=$maxWfp — raise maxWfp (and " +
-        s"check scale * maxWfp still fits in Long) or re-quantize the weights")
-    val base = scale / seeds.size
-    val teleport = ((dampDen - dampNum) * base) / dampDen
-    val seedSet = seeds.toSet
-    var ranks = GraphLoop.initVector(g.nodes,
-      n => if (seedSet(n)) base else 0L)
-    for (_ <- 1 to iters)
-      ranks = GraphLoop.dampedRoundWeighted(g, ranks,
-        n => if (seedSet(n)) teleport else 0L, dampNum, dampDen)
-    Stage.cut(ranks.toDF("node", "rank_fp"), release = g.release())
-  }
+            dampDen: Long = 100L, maxWfp: Long = 1000000L): DataFrame =
+    walk(edges, Seq(0L -> seeds), iters, scale, dampNum, dampDen,
+      maxWfp = maxWfp)
 
   /** [[pprFp]]'s many-panels twin — the walk family's batch column: P
-    * seed panels expand in ONE walk over a single edge materialization.
-    * Since r21 ranks ride as one per-node Array of P panel values on the
-    * [[GraphLoop]] harness, so each round's message pass touches every
-    * edge ONCE (P integer shares per source in the same probe) and the
-    * combine shuffle moves ≤|V| rows of P longs — the panel dimension
-    * costs arithmetic, not extra join/shuffle machinery; still linear in
-    * the (loudly capped, ≤ 16) panel count, with the edge store and
-    * adjacency read ONCE instead of per panel, no driver loop, no
-    * per-panel job. Per-panel output is bit-identical to a [[pprFp]] run
-    * with that panel (same integer recurrence — spec-pinned). */
+    * seed panels (≤ 16, loudly capped) expand in ONE walk over a single
+    * edge materialization, with no driver loop and no per-panel job.
+    * Per-panel output is bit-identical to a [[pprFp]] run with that panel
+    * (the same integer recurrence — spec-pinned, weighted too). */
   def pprBatchFp(edges: DataFrame, panels: Seq[(Long, Seq[Long])], iters: Int,
                  scale: Long = 1000000000000L, dampNum: Long = 85L,
                  dampDen: Long = 100L): DataFrame = {
-    checkIters(iters); checkDamp(dampNum, dampDen)
     require(panels.nonEmpty && panels.size <= 16,
       s"1 <= |panels| <= 16, got ${panels.size}")
     require(panels.map(_._1).distinct.size == panels.size, "duplicate panel ids")
-    panels.foreach { case (_, ss) => checkSeeds(ss) }
-    val spark = edges.sparkSession
-    import spark.implicits._
-    // VECTORIZED batch walk (r21 OPT): ranks ride as one Array[Long] of
-    // per-panel values per NODE, so every round's message pass and
-    // shuffle handle ≤|V| rows of P longs instead of |P|·|V| keyed rows —
-    // the panel dimension costs P integer ops inside the same probe, not
-    // P times the join/shuffle machinery. Per-panel arithmetic is the
-    // identical recurrence (PageRankSpec pins batch == per-panel pprFp).
-    val np = panels.size
-    val pIds = panels.map(_._1).toArray
-    val bases = panels.map(p => scale / p._2.size).toArray
-    val tps = bases.map(b => ((dampDen - dampNum) * b) / dampDen)
-    val seedSets: Array[Set[Long]] = panels.map(_._2.toSet).toArray
-    val g = GraphLoop.build(edges)
-    var ranks: org.apache.spark.rdd.RDD[(Long, Array[Long])] =
-      g.nodes.mapPartitions(_.map { case (n, _) =>
-        (n, Array.tabulate(np)(p => if (seedSets(p)(n)) bases(p) else 0L))
-      }, preservesPartitioning = true)
-    for (_ <- 1 to iters) {
-      val msgs = g.adj.zipPartitions(ranks) { (aIt, rIt) =>
-        val rm = new scala.collection.mutable.LongMap[Array[Long]]()
-        rIt.foreach(kv => rm.update(kv._1, kv._2))
-        val acc = new scala.collection.mutable.LongMap[Array[Long]]()
-        aIt.foreach { case (s, ds) =>
-          val rv = rm.getOrElse(s, null)
-          if (rv != null) {
-            val c = new Array[Long](np)
-            var any = false
-            var p = 0
-            while (p < np) {
-              c(p) = rv(p) / ds.length; if (c(p) != 0L) any = true; p += 1
-            }
-            if (any) {
-              var i = 0
-              while (i < ds.length) {
-                val a = acc.getOrElseUpdate(ds(i), new Array[Long](np))
-                var q = 0
-                while (q < np) { a(q) += c(q); q += 1 }
-                i += 1
-              }
-            }
-          }
-        }
-        acc.iterator
-      }
-      val agg = msgs.reduceByKey(g.part, (a, b) => {
-        var p = 0
-        while (p < np) { a(p) += b(p); p += 1 }
-        a
-      })
-      ranks = g.nodes.zipPartitions(agg, preservesPartitioning = true) {
-        (nIt, mIt) =>
-          val mm = new scala.collection.mutable.LongMap[Array[Long]]()
-          mIt.foreach(kv => mm.update(kv._1, kv._2))
-          nIt.map { case (n, _) =>
-            val m = mm.getOrElse(n, null)
-            (n, Array.tabulate(np) { p =>
-              val mv = if (m == null) 0L else m(p)
-              (if (seedSets(p)(n)) tps(p) else 0L) + dampNum * mv / dampDen
-            })
-          }
-      }
-    }
-    Stage.cut(ranks.flatMap { case (n, rv) =>
-      Iterator.range(0, np).map(p => (pIds(p), n, rv(p)))
-    }.toDF("panel_id", "node", "rank_fp"), release = g.release())
+    walk(edges, panels, iters, scale, dampNum, dampDen, batch = true)
   }
 
   /** Host-side sequential twin of [[pprFp]] (spec cross-check only). */
@@ -262,8 +149,8 @@ object PageRank {
     referencePprWeightedFp(edges.map { case (s, d) => (s, d, 1L) }, seeds,
       iters, scale, dampNum, dampDen)
 
-  /** Host-side sequential twin of [[pprWeightedFp]] (spec cross-check
-    * only; w ≤ 0 edges dropped, matching the operator). */
+  /** Host-side sequential twin of the weighted [[pprFp]] (spec
+    * cross-check only; w ≤ 0 edges dropped, matching the operator). */
   def referencePprWeightedFp(edges: Seq[(Long, Long, Long)], seeds: Seq[Long],
                              iters: Int, scale: Long = 1000000000000L,
                              dampNum: Long = 85L, dampDen: Long = 100L)
@@ -348,27 +235,21 @@ object PageRank {
     import spark.implicits._
     // edPairs feeds FOUR downstream builds (count, bySrc, byDst, the
     // nodes union) — persisted so the DataFrame scan + cast runs once,
-    // not once per build (ADVICE r14); released with the loop caches.
+    // not once per build; released with the loop caches.
     val edPairs = edges
       .select(col("src").cast("long"), col("dst").cast("long"))
       .as[(Long, Long)].rdd
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // partition count sized from the MATERIALIZED edge count (the
-    // connected-components rule: ~500k edges per partition, capped at
-    // defaultParallelism) — neither the source's file count (a compact
-    // store would pin the loop to a few cores) nor a blanket full-width
-    // spread (per-round work this small pays more in task overhead than
-    // it gains)
-    val eCount = edPairs.count()
-    val part = new org.apache.spark.HashPartitioner(
-      math.max(1, math.min(spark.sparkContext.defaultParallelism,
-        (eCount / 500000L + 1L).toInt)))
+    // partition count sized from the MATERIALIZED edge count, not the
+    // source's file count (a compact store would pin the loop to a few
+    // cores): the GraphLoop partitioning rule
+    val part = GraphLoop.partitioner(spark.sparkContext, edPairs.count())
     val bySrc = edPairs.partitionBy(part)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val byDst = edPairs.map(_.swap).partitionBy(part)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // node set derived from the two ALREADY-PARTITIONED edge lists
-    // (r20 OPT): partition i of bySrc/byDst holds exactly the edges
+    // node set derived from the two ALREADY-PARTITIONED edge lists:
+    // partition i of bySrc/byDst holds exactly the edges
     // whose key hashes to i, so a per-partition key-set union IS the
     // global distinct — no distinct shuffle, no extra partitionBy
     // (preservesPartitioning keeps `part`, which is exact here: the
@@ -395,7 +276,7 @@ object PageRank {
     // value scale div N), so the L1 ≤ scale invariant holds from round 0
     // and EVERY per-node Long sum in the loop is ≤ scale unconditionally
     // — the first-round in-degree bound the un-normalized uniform start
-    // needed is gone (ADVICE r14). Results are bit-identical to the
+    // needed is gone. Results are bit-identical to the
     // uniform-`scale` start (and to [[referenceHitsFp]]'s): with a
     // uniform start, round-1 raw values share the constant factor c and
     // floor((a·c)/(b·c)) = floor(a/b), so the first normalization —
@@ -410,7 +291,7 @@ object PageRank {
     // also FORCES raw into its cache, so each half-round materializes
     // exactly once; the caches release after the output materializes).
     //
-    // FUSED HALF-ROUND (r20 OPT, guide §2.3/§2.4): both inputs are
+    // FUSED HALF-ROUND: both inputs are
     // hash-partitioned by `part`, so the equi-join needs no shuffle —
     // but `RDD.join` still paid per-row Tuple2 allocation + boxing for
     // every edge, and the separate map + reduceByKey re-materialized the
@@ -455,7 +336,7 @@ object PageRank {
     }
     // densify to the full node set (zero-raw nodes never appear in the
     // reduceByKey streams) and exit to the DataFrame surface. Same fused
-    // co-partitioned shape as the half-rounds (r20 OPT): all three
+    // co-partitioned shape as the half-rounds: all three
     // vectors ride `part`, so one zipPartitions replaces two
     // leftOuterJoins (and their Option allocation per node).
     val out = nodes.zipPartitions(auth, hub) { (nIt, aIt, hIt) =>

@@ -2347,6 +2347,20 @@ object PipelineQueries {
        |                           ORDER BY cos DESC, vec_b ASC) <= 3
        |ORDER BY vec_a, cos DESC, vec_b""".stripMargin
 
+  /** The committed top-3 kNN graph as (src, dst, w_fp) edges, `w_fp` the
+    * cosine quantized to a 1e-6 integer weight with negatives clamped to
+    * 0 (the graph walks' weight column). Unweighted callers select
+    * (src, dst), which prunes the weight away. */
+  private def knnEdges(s: SparkSession, d: String): DataFrame = {
+    val emb = embeddings(s, d)
+    val b = Similarity.scaledBandBits(corpusCount(emb))
+    graft.engine.Tables.parquetCached(s,
+        graft.ops.Indexes.ensureKnnGraph(s, emb, d, j = 3, bBits = b))
+      .select(col("vec_a").as("src"), col("vec_b").as("dst"),
+        round(greatest(col("cos"), lit(0.0)) * lit(1e6), 0).cast("long")
+          .as("w_fp"))
+  }
+
   /** Seed-set expansion by personalized PageRank over the COMMITTED kNN
     * graph ([[graft.ops.PageRank.pprFp]]): teleport restarts at 3 seed
     * documents, 5 integer rounds, top-20 non-seed nodes — "find vectors
@@ -2354,13 +2368,9 @@ object PipelineQueries {
     * replays the whole chain (banding → top-3 graph → seeded integer
     * recurrence), so the expansion set is hash-verified end to end. */
   def pprExpand(s: SparkSession, d: String): DataFrame = {
-    val emb = embeddings(s, d)
-    val b = Similarity.scaledBandBits(corpusCount(emb))
-    val graphPath = graft.ops.Indexes.ensureKnnGraph(s, emb, d, j = 3, bBits = b)
-    val edges = graft.engine.Tables.parquetCached(s, graphPath)
-      .select(col("vec_a").as("src"), col("vec_b").as("dst"))
     val seeds = Seq(0L, 1L, 2L)
-    graft.ops.PageRank.pprFp(edges, seeds, iters = 5)
+    graft.ops.PageRank.pprFp(knnEdges(s, d).select("src", "dst"), seeds,
+        iters = 5)
       .where(!col("node").isin(seeds: _*) && col("rank_fp") > 0)
       .orderBy(col("rank_fp").desc, col("node").asc).limit(20)
   }
@@ -2389,23 +2399,15 @@ object PipelineQueries {
        |ORDER BY rank_fp DESC, node ASC LIMIT 20""".stripMargin
   }
 
-  /** SIMILARITY-WEIGHTED seed expansion ([[graft.ops.PageRank
-    * .pprWeightedFp]]): the [[pprExpand]] walk with each hop's share
-    * proportional to the kNN edge's cosine (quantized to 1e-6 integer
-    * weights, negatives clamped to 0 and dropped) — the walk follows
+  /** SIMILARITY-WEIGHTED seed expansion ([[graft.ops.PageRank.pprFp]]
+    * over [[knnEdges]]' weights): the [[pprExpand]] walk with each hop's
+    * share proportional to the kNN edge's cosine — the walk follows
     * similarity MASS, so a barely-similar neighbour receives a
     * barely-there share. Same seeds, same oracle-replayed chain; only the
     * share arithmetic differs, and it stays exact integer division. */
   def pprWeighted(s: SparkSession, d: String): DataFrame = {
-    val emb = embeddings(s, d)
-    val b = Similarity.scaledBandBits(corpusCount(emb))
-    val graphPath = graft.ops.Indexes.ensureKnnGraph(s, emb, d, j = 3, bBits = b)
-    val edges = graft.engine.Tables.parquetCached(s, graphPath)
-      .select(col("vec_a").as("src"), col("vec_b").as("dst"),
-        round(greatest(col("cos"), lit(0.0)) * lit(1e6), 0).cast("long")
-          .as("w_fp"))
     val seeds = Seq(0L, 1L, 2L)
-    graft.ops.PageRank.pprWeightedFp(edges, seeds, iters = 5)
+    graft.ops.PageRank.pprFp(knnEdges(s, d), seeds, iters = 5)
       .where(!col("node").isin(seeds: _*) && col("rank_fp") > 0)
       .orderBy(col("rank_fp").desc, col("node").asc).limit(20)
   }
@@ -2447,16 +2449,12 @@ object PipelineQueries {
     * (spec-pinned), and the oracle unrolls all 5 rounds with panel_id
     * threaded through every CTE. */
   def pprBatch(s: SparkSession, d: String): DataFrame = {
-    val emb = embeddings(s, d)
-    val b = Similarity.scaledBandBits(corpusCount(emb))
-    val graphPath = graft.ops.Indexes.ensureKnnGraph(s, emb, d, j = 3, bBits = b)
-    val edges = graft.engine.Tables.parquetCached(s, graphPath)
-      .select(col("vec_a").as("src"), col("vec_b").as("dst"))
     val panels = Seq((0L, Seq(0L, 1L, 2L)), (1L, Seq(3L, 4L)), (2L, Seq(5L)))
     import s.implicits._
     val seedPairs = broadcast(panels
       .flatMap { case (p, ss) => ss.map(p -> _) }.toDF("panel_id", "node"))
-    val ranks = graft.ops.PageRank.pprBatchFp(edges, panels, iters = 5)
+    val ranks = graft.ops.PageRank.pprBatchFp(
+        knnEdges(s, d).select("src", "dst"), panels, iters = 5)
       .where(col("rank_fp") > 0)
       .join(seedPairs, Seq("panel_id", "node"), "left_anti")
     graft.plans.GroupedTopK.topK(ranks, Seq("panel_id"),
@@ -2532,12 +2530,7 @@ object PipelineQueries {
     * the oracle enumerates in plain id order — the triangle SET is
     * orientation-independent, so every row hash-verifies. */
   def triangleCount(s: SparkSession, d: String): DataFrame = {
-    val emb = embeddings(s, d)
-    val b = Similarity.scaledBandBits(corpusCount(emb))
-    val graphPath = graft.ops.Indexes.ensureKnnGraph(s, emb, d, j = 3, bBits = b)
-    val edges = graft.engine.Tables.parquetCached(s, graphPath)
-      .select(col("vec_a").as("src"), col("vec_b").as("dst"))
-    graft.ops.GraphMetrics.triangleStats(edges)
+    graft.ops.GraphMetrics.triangleStats(knnEdges(s, d).select("src", "dst"))
       .orderBy(col("tri").desc, col("node").asc).limit(50)
   }
 
@@ -2568,12 +2561,8 @@ object PipelineQueries {
     * communities suffice. The oracle unrolls all 4 synchronous rounds, so
     * the final labelling — not just the sizes — is what's replayed. */
   def labelProp(s: SparkSession, d: String): DataFrame = {
-    val emb = embeddings(s, d)
-    val b = Similarity.scaledBandBits(corpusCount(emb))
-    val graphPath = graft.ops.Indexes.ensureKnnGraph(s, emb, d, j = 3, bBits = b)
-    val edges = graft.engine.Tables.parquetCached(s, graphPath)
-      .select(col("vec_a").as("src"), col("vec_b").as("dst"))
-    graft.ops.GraphMetrics.labelPropagation(edges, iters = 4)
+    graft.ops.GraphMetrics.labelPropagation(
+        knnEdges(s, d).select("src", "dst"), iters = 4)
       .groupBy("label").agg(count(lit(1)).as("members"))
       .orderBy(col("members").desc, col("label").asc).limit(20)
   }
@@ -2609,12 +2598,8 @@ object PipelineQueries {
     * core). The oracle unrolls all 4 rounds, so the surviving subgraph
     * itself is hash-verified. */
   def kcore(s: SparkSession, d: String): DataFrame = {
-    val emb = embeddings(s, d)
-    val b = Similarity.scaledBandBits(corpusCount(emb))
-    val graphPath = graft.ops.Indexes.ensureKnnGraph(s, emb, d, j = 3, bBits = b)
-    val edges = graft.engine.Tables.parquetCached(s, graphPath)
-      .select(col("vec_a").as("src"), col("vec_b").as("dst"))
-    graft.ops.GraphMetrics.kCore(edges, k = 3, rounds = 4)
+    graft.ops.GraphMetrics.kCore(knnEdges(s, d).select("src", "dst"), k = 3,
+        rounds = 4)
       .orderBy(col("deg").desc, col("node").asc).limit(50)
   }
 
@@ -2641,20 +2626,13 @@ object PipelineQueries {
   }
 
   /** [[labelProp]]'s similarity-weighted twin ([[graft.ops.GraphMetrics
-    * .labelPropagationWeighted]]): votes carry the kNN edge's
-    * 1e-6-quantized cosine (the q_ppr_weighted weight convention), so
+    * .labelPropagation]] over [[knnEdges]]' weights): votes carry the kNN
+    * edge's quantized cosine, so
     * communities form along similarity MASS, not bare adjacency. Same
     * 4 unrolled rounds in the oracle; integer weight sums keep every
     * round fold-order-free. */
   def labelPropWeighted(s: SparkSession, d: String): DataFrame = {
-    val emb = embeddings(s, d)
-    val b = Similarity.scaledBandBits(corpusCount(emb))
-    val graphPath = graft.ops.Indexes.ensureKnnGraph(s, emb, d, j = 3, bBits = b)
-    val edges = graft.engine.Tables.parquetCached(s, graphPath)
-      .select(col("vec_a").as("src"), col("vec_b").as("dst"),
-        round(greatest(col("cos"), lit(0.0)) * lit(1e6), 0).cast("long")
-          .as("w_fp"))
-    graft.ops.GraphMetrics.labelPropagationWeighted(edges, iters = 4)
+    graft.ops.GraphMetrics.labelPropagation(knnEdges(s, d), iters = 4)
       .groupBy("label").agg(count(lit(1)).as("members"))
       .orderBy(col("members").desc, col("label").asc).limit(20)
   }
@@ -2698,12 +2676,7 @@ object PipelineQueries {
     * and floor division agree there, one of the few places the two
     * engines' integer `div` semantics could silently diverge). */
   def graphSummaryQ(s: SparkSession, d: String): DataFrame = {
-    val emb = embeddings(s, d)
-    val b = Similarity.scaledBandBits(corpusCount(emb))
-    val graphPath = graft.ops.Indexes.ensureKnnGraph(s, emb, d, j = 3, bBits = b)
-    val edges = graft.engine.Tables.parquetCached(s, graphPath)
-      .select(col("vec_a").as("src"), col("vec_b").as("dst"))
-    graft.ops.GraphMetrics.graphSummary(edges)
+    graft.ops.GraphMetrics.graphSummary(knnEdges(s, d).select("src", "dst"))
   }
 
   val graphSummarySql: String =
@@ -2743,12 +2716,8 @@ object PipelineQueries {
     * fold-order-free, so the Bellman-Ford rounds replay exactly as
     * unrolled CTEs. */
   def bfsHops(s: SparkSession, d: String): DataFrame = {
-    val emb = embeddings(s, d)
-    val b = Similarity.scaledBandBits(corpusCount(emb))
-    val graphPath = graft.ops.Indexes.ensureKnnGraph(s, emb, d, j = 3, bBits = b)
-    val edges = graft.engine.Tables.parquetCached(s, graphPath)
-      .select(col("vec_a").as("src"), col("vec_b").as("dst"))
-    graft.ops.GraphMetrics.bfsHops(edges, Seq(0L, 1L, 2L), rounds = 4)
+    graft.ops.GraphMetrics.bfsHops(knnEdges(s, d).select("src", "dst"),
+        Seq(0L, 1L, 2L), rounds = 4)
       .groupBy("hops").agg(count(lit(1)).as("nodes"))
       .orderBy(col("hops").asc)
   }
@@ -5387,39 +5356,45 @@ object PipelineQueries {
     * store. The oracle knows nothing of streams: it brute-forces the
     * pairs of (all adds − all deletes) from the frozen manifest, so a
     * hash match proves maintained-store serving == survivor-rebuild
-    * truth, across a restart, every round. */
+    * truth, across a restart, every round. The pairs are collected into a
+    * local frame, then the three scratch dirs are deleted. */
   private def storeStreamEquiv(s: SparkSession, fixtureDir: String,
       hashCol: String, deleteDuring: String, deleteDown: String,
       stream: (DataFrame, String, String) =>
         org.apache.spark.sql.streaming.StreamingQuery): DataFrame = {
     import org.apache.spark.sql.types._
     import s.implicits._
-    val landing = java.nio.file.Files.createTempDirectory("sse_l").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("sse_c").toString
-    val store = java.nio.file.Files.createTempDirectory("sse_s").toString + "/idx"
-    val schema = StructType(Seq(StructField("op", StringType),
-      StructField("name", StringType), StructField("content", BinaryType)))
-    val files = new java.io.File(fixtureDir).listFiles().sortBy(_.getName)
-    val bytes = files.map(f =>
-      f.getName -> java.nio.file.Files.readAllBytes(f.toPath)).toMap
-    val names = files.map(_.getName).toSeq
-    def land(rows: Seq[(String, String)]): Unit =
-      rows.map { case (op, n) =>
-          (op, n, if (op == "add") bytes(n) else null)
-        }.toDF("op", "name", "content").coalesce(1)
-        .write.mode("append").parquet(landing)
-    def start() = stream(
-      s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(landing), store, ckpt)
-    val (h1, h2) = names.splitAt(names.size / 2)
-    land(h1.map("add" -> _))
-    val q1 = start(); q1.processAllAvailable()
-    land(h2.map("add" -> _) ++ Seq("delete" -> deleteDuring))
-    q1.processAllAvailable(); q1.stop()
-    land(Seq("delete" -> deleteDown)) // lands while the stream is DOWN
-    val q2 = start(); q2.processAllAvailable(); q2.stop()
-    storeNearDups(graft.ops.Stores.live(s, store, "name"),
-      Seq(hashCol -> hashCol))
+    val dirs = Seq("sse_l", "sse_c", "sse_s")
+      .map(java.nio.file.Files.createTempDirectory(_))
+    val (landing, ckpt, store) =
+      (dirs(0).toString, dirs(1).toString, s"${dirs(2)}/idx")
+    try {
+      val schema = StructType(Seq(StructField("op", StringType),
+        StructField("name", StringType), StructField("content", BinaryType)))
+      val files = new java.io.File(fixtureDir).listFiles().sortBy(_.getName)
+      val bytes = files.map(f =>
+        f.getName -> java.nio.file.Files.readAllBytes(f.toPath)).toMap
+      val names = files.map(_.getName).toSeq
+      def land(rows: Seq[(String, String)]): Unit =
+        rows.map { case (op, n) =>
+            (op, n, if (op == "add") bytes(n) else null)
+          }.toDF("op", "name", "content").coalesce(1)
+          .write.mode("append").parquet(landing)
+      def start() = stream(
+        s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+          .parquet(landing), store, ckpt)
+      val (h1, h2) = names.splitAt(names.size / 2)
+      land(h1.map("add" -> _))
+      val q1 = start(); q1.processAllAvailable()
+      land(h2.map("add" -> _) ++ Seq("delete" -> deleteDuring))
+      q1.processAllAvailable(); q1.stop()
+      land(Seq("delete" -> deleteDown)) // lands while the stream is DOWN
+      val q2 = start(); q2.processAllAvailable(); q2.stop()
+      val out = storeNearDups(graft.ops.Stores.live(s, store, "name"),
+        Seq(hashCol -> hashCol))
+      s.createDataFrame(java.util.Arrays.asList(out.collect(): _*), out.schema)
+        .orderBy("name_a", "name_b")
+    } finally dirs.foreach(CoreQueries.deleteTempTree)
   }
 
   def imageStoreStreamEquiv(s: SparkSession, d: String): DataFrame =

@@ -1139,20 +1139,22 @@ class EventStreamsSpec extends AnyFunSuite {
     val isTarget = col("source") === "tgt"
     val dir = java.nio.file.Files.createTempDirectory("dsir_mms").toString
     val store = s"$dir/model"
+    val mdir = s"$dir/manifest"
     val b1 = Seq((0L, "tgt", "the quick brown fox jumps over the lazy dog"),
       (10L, "raw", "zzz9 qqq8 vvv7 kkk6 jjj5 xxx4 yyy3 www2 uuu1"))
     val b2 = Seq((1L, "tgt", "a quick brown fox runs past the lazy dog"),
       (11L, "raw", "quick brown fox and lazy dog again and again"))
     val in = MemoryStream[(Long, String, String)]
-    val q = EventStreams.dsirModelMaintenanceStream(
-      in.toDF().toDF("doc_id", "source", "text"), isTarget, store, s"$dir/ck")
+    val q = EventStreams.dsirModelMaintenanceStreamFenced(
+      in.toDF().toDF("doc_id", "source", "text"), isTarget, store, mdir,
+      s"$dir/ck")
     in.addData(b1); q.processAllAvailable()
     // model state A: batch-1 counts only — score a probe doc under it
     val probe = Seq((100L, "raw", "the quick brown fox jumps over the lazy dog"))
     val gin = MemoryStream[(Long, String, String)]
     val out = s"$dir/gated"
-    val gq = EventStreams.dsirGateStreamLive(
-      gin.toDF().toDF("doc_id", "source", "text"), store,
+    val gq = EventStreams.dsirGateStreamLiveFenced(
+      gin.toDF().toDF("doc_id", "source", "text"), mdir,
       minWeightQ = Long.MinValue, out, s"$dir/gck")
     gin.addData(probe); gq.processAllAvailable()
     val sA = spark.read.parquet(out).where(col("batch_id") === 0)
@@ -1169,10 +1171,24 @@ class EventStreamsSpec extends AnyFunSuite {
     val full = graft.ops.Selection.dsirModel(
       (b1 ++ b2).toDF("doc_id", "source", "text"), isTarget)
     assert(graft.ops.Indexes.readDsirModel(spark, store).toSeq === full.toSeq)
+    // ... and is what the manifest serves the gate
+    assert(graft.ops.Indexes.readDsirModel(spark,
+      graft.ops.Stores.currentGeneration(spark, mdir).get).toSeq === full.toSeq)
     // and the final gate score is the batch scorer's under that model
     assert(sB === graft.ops.Selection.dsirScoredStateless(
       probe.toDF("doc_id", "source", "text"), full)
       .select(col("s")).as[Long].head())
+  }
+
+  test("store stream equivalence leaves no scratch dirs behind") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def sse(): Set[String] =
+      tmp.list().filter(_.startsWith("sse_")).toSet
+    val before = sse()
+    val pairs = graft.queries.PipelineQueries.imageStoreStreamEquiv(spark, "")
+      .collect()
+    assert(pairs.nonEmpty, "the served pairs must outlive the scratch dirs")
+    assert(sse() -- before === Set.empty[String])
   }
 
   test("fenced dsir gate never reads a half-landed append; compaction flips atomically") {

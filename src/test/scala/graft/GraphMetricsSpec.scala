@@ -153,7 +153,7 @@ class GraphMetricsSpec extends AnyFunSuite {
   }
 
   private def wlpa(edges: Seq[(Long, Long, Long)], iters: Int): Map[Long, Long] =
-    GraphMetrics.labelPropagationWeighted(edges.toDF("src", "dst", "w_fp"), iters)
+    GraphMetrics.labelPropagation(edges.toDF("src", "dst", "w_fp"), iters)
       .as[(Long, Long)].collect().toMap
 
   test("wlpa: a heavy edge outvotes two light ones") {

@@ -71,13 +71,24 @@ class PageRankSpec extends AnyFunSuite {
     val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L), (3L, 4L), (4L, 3L),
       (4L, 5L), (5L, 4L), (1L, 5L))
     val panels = Seq((0L, Seq(1L)), (1L, Seq(3L, 5L)), (2L, Seq(2L, 4L, 999L)))
-    val got = PageRank.pprBatchFp(edges.toDF("src", "dst"), panels, iters = 5)
-      .as[(Long, Long, Long)].collect()
-      .groupBy(_._1).view.mapValues(_.map(r => r._2 -> r._3).toMap).toMap
+    def batch(df: org.apache.spark.sql.DataFrame) =
+      PageRank.pprBatchFp(df, panels, iters = 5)
+        .as[(Long, Long, Long)].collect()
+        .groupBy(_._1).view.mapValues(_.map(r => r._2 -> r._3).toMap).toMap
+    val got = batch(edges.toDF("src", "dst"))
     panels.foreach { case (p, ss) =>
       val single = PageRank.pprFp(edges.toDF("src", "dst"), ss, iters = 5)
         .as[(Long, Long)].collect().toMap
       assert(got(p) === single, s"panel $p")
+    }
+    // the same panels over w_fp edges (two of them non-positive, dropped):
+    // each panel is exactly the sequential weighted walk
+    val w = edges.zip(Seq(900000L, 100000L, 0L, 500000L, 600000L, 300000L,
+      200000L, 700000L, -5L)).map { case ((s, d), wt) => (s, d, wt) }
+    val gotW = batch(w.toDF("src", "dst", "w_fp"))
+    panels.foreach { case (p, ss) =>
+      assert(gotW(p) === PageRank.referencePprWeightedFp(w, ss, iters = 5),
+        s"weighted panel $p")
     }
   }
 
@@ -156,7 +167,7 @@ class PageRankSpec extends AnyFunSuite {
   test("weighted ppr: distributed equals sequential; zero-weight edges dropped") {
     val edges = Seq((1L, 2L, 900000L), (2L, 1L, 900000L), (1L, 3L, 100000L),
       (3L, 1L, 500000L), (3L, 4L, 0L), (4L, 3L, 600000L))
-    val got = PageRank.pprWeightedFp(
+    val got = PageRank.pprFp(
         edges.toDF("src", "dst", "w_fp"), Seq(1L), iters = 5)
       .as[(Long, Long)].collect().toMap
     val want = PageRank.referencePprWeightedFp(edges, Seq(1L), iters = 5)
@@ -170,7 +181,7 @@ class PageRankSpec extends AnyFunSuite {
     val w = unw.map { case (s, d) => (s, d, 777L) }
     val a = PageRank.pprFp(unw.toDF("src", "dst"), Seq(1L, 4L), iters = 5)
       .as[(Long, Long)].collect().toMap
-    val b = PageRank.pprWeightedFp(w.toDF("src", "dst", "w_fp"),
+    val b = PageRank.pprFp(w.toDF("src", "dst", "w_fp"),
         Seq(1L, 4L), iters = 5)
       .as[(Long, Long)].collect().toMap
     assert(a === b) // floor(r*w/(w*k)) == floor(r/k) exactly
@@ -178,11 +189,19 @@ class PageRankSpec extends AnyFunSuite {
 
   test("weighted ppr: oversized weight fails loudly, never overflows silently") {
     val e = intercept[IllegalArgumentException] {
-      PageRank.pprWeightedFp(
+      PageRank.pprFp(
         Seq((1L, 2L, 2000000L), (2L, 1L, 1L)).toDF("src", "dst", "w_fp"),
         Seq(1L), iters = 2)
     }
     assert(e.getMessage.contains("exceeds maxWfp"))
+  }
+
+  test("graph build: dedup over weighted edges fails loudly") {
+    val e = intercept[IllegalArgumentException] {
+      PageRank.pageRankFp(Seq((1L, 2L, 5L), (2L, 1L, 5L))
+        .toDF("src", "dst", "w_fp"), iters = 2, dedupEdges = true)
+    }
+    assert(e.getMessage.contains("dedup applies to unweighted"))
   }
 
   test("weighted ppr query: bounded rows, non-seed, ordered, positive") {
